@@ -323,9 +323,24 @@ def _route(
     fabricate rows the reference never inserts, and a foreign topic
     create would permanently shift every subsequent topic id. Suffix
     match keeps the '.' separator so MsgInsertWorkerPayload does not
-    swallow its Bulk variant."""
+    swallow its Bulk variant. No suffixes routes nothing. The literals are
+    inlined into SQL string literals; _check_route_literals keeps quotes
+    out of them."""
+    if not suffixes:
+        return msgs.filter("false")
     cond = " OR ".join(f"endswith(type, '.{s}')" for s in suffixes)
     return msgs.filter(f"startswith(type, '{prefix}') AND ({cond})")
+
+
+def _check_route_literals(*specs: tuple) -> None:
+    """Raise ValueError for a route literal that would break out of the
+    SQL string literal _route inlines it into."""
+    for prefix, suffixes in specs:
+        for lit in (prefix, *suffixes):
+            if any(c in lit for c in "'\"\\"):
+                raise ValueError(
+                    f"route literal {lit!r} contains a quote or backslash"
+                )
 
 
 # Route specs as (prefix, suffixes) data — the SINGLE source of truth for
@@ -358,6 +373,11 @@ REPUTER_SINGLE_ROUTE = (
     ("MsgInsertReputerPayload", "InsertReputerPayloadRequest"),
 )
 REPUTER_BULK_ROUTE = ("/emissions.v1", ("MsgInsertBulkReputerPayload",))
+_check_route_literals(
+    TOPIC_ROUTE, REGISTER_ROUTE, SEND_ROUTE, FUND_ROUTE,
+    WORKER_SINGLE_ROUTE, WORKER_BULK_ROUTE,
+    REPUTER_SINGLE_ROUTE, REPUTER_BULK_ROUTE,
+)
 
 
 def _route_spec(msgs: DataFrame, spec: tuple) -> DataFrame:

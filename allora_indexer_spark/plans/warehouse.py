@@ -1176,8 +1176,10 @@ def _append_data(
 # key with this batch" (max existing prune value < batch span lo) and
 # skip the anti-join probe entirely — the caught-up streaming case, where
 # every batch's heights are strictly new. None = file has rows but no
-# usable stats (no proof; caller falls back to the join).
-_FOOTER_MAX_CACHE: dict = {}
+# usable stats (no proof; caller falls back to the join). Keyed by table
+# path, then file identity; each walk of a table keeps only the entries
+# of its live files, so folds and compactions do not leave dead keys.
+_FOOTER_MAX_CACHE: dict[str, dict] = {}
 
 # Footer-walk bound: past this many live files the proof is skipped and
 # the pruned anti-join runs as before (maintenance folds keep streaming
@@ -1188,30 +1190,32 @@ _FOOTER_PROBE_MAX_FILES = 512
 _NO_PROOF = object()
 
 
-def _table_data_files(path: str) -> list | None:
+def _table_data_files(path: str) -> list[str]:
     """Live .parquet files of the table at ``path`` (manifest data dirs
-    when a manifest exists, else the plain dir) — None when unreadable."""
+    when a manifest exists, else the plain dir)."""
     m = _manifest_read(path)
     roots = (
         [os.path.join(path, d) for d in m["data"].values()]
         if m is not None
         else [path]
     )
+    return [f for r in roots for f in data_files_under(r)]
+
+
+def data_files_under(root: str) -> list[str]:
+    """``root`` itself when it is a file, else every .parquet file below
+    it (partition subdirectories included), skipping ``_``/``.``
+    directories as Spark's file index does."""
+    if os.path.isfile(root):
+        return [root]
     out = []
-    try:
-        for r in roots:
-            if os.path.isfile(r):
-                out.append(r)
-                continue
-            for dirpath, dirs, files in os.walk(r):
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                out.extend(
-                    os.path.join(dirpath, f)
-                    for f in files
-                    if f.endswith(".parquet")
-                )
-    except OSError:
-        return None
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        out.extend(
+            os.path.join(dirpath, f)
+            for f in sorted(files)
+            if f.endswith(".parquet")
+        )
     return out
 
 
@@ -1223,21 +1227,25 @@ def _prune_max_from_footers(path: str, pc: str):
     import pyarrow.parquet as pq
 
     files = _table_data_files(path)
-    if files is None or len(files) > _FOOTER_PROBE_MAX_FILES:
+    if len(files) > _FOOTER_PROBE_MAX_FILES:
         return _NO_PROOF
-    best = None
+    keys = []
     for f in files:
         try:
             st = os.stat(f)
         except OSError:
             return _NO_PROOF
-        key = (f, st.st_size, st.st_mtime_ns)
-        if key in _FOOTER_MAX_CACHE:
-            v = _FOOTER_MAX_CACHE[key]
+        keys.append((f, st.st_size, st.st_mtime_ns))
+    seen = _FOOTER_MAX_CACHE.get(path, {})
+    cache = _FOOTER_MAX_CACHE[path] = {k: seen[k] for k in keys if k in seen}
+    best = None
+    for key in keys:
+        if key in cache:
+            v = cache[key]
         else:
             v = None
             try:
-                md = pq.ParquetFile(f).metadata
+                md = pq.ParquetFile(key[0]).metadata
                 idx = {
                     md.schema.column(i).name: i
                     for i in range(md.num_columns)
@@ -1256,7 +1264,7 @@ def _prune_max_from_footers(path: str, pc: str):
                         v = s.max if v is None else max(v, s.max)
             except Exception:
                 v = _NO_PROOF
-            _FOOTER_MAX_CACHE[key] = v
+            cache[key] = v
         if v is _NO_PROOF:
             return _NO_PROOF
         if v is not None:

@@ -535,20 +535,24 @@ TABLE_FKS: dict[str, list[tuple[list[str], str, list[str]]]] = {
 # an inline `from_json(col, '<ddl>')` needs the schema as DDL text. The
 # conversion goes through the JVM's own StructType.toDDL — the StructType
 # object above stays the single source of truth — and is cached per
-# schema object, so it costs two py4j calls once per process.
+# schema object, so it costs two py4j calls once per process. The entry
+# holds the schema itself: an id() is only unique while its object lives,
+# so a cache that let the schema die could hand a later schema, allocated
+# at the same address, the dead one's DDL.
 # ---------------------------------------------------------------------------
 
-_DDL_CACHE: dict[int, str] = {}
+_DDL_CACHE: dict[int, tuple[StructType, str]] = {}
 
 
 def ddl(spark, schema: StructType) -> str:
     """DDL text of ``schema`` (e.g. "`a` STRING, `b` BIGINT"), suitable
     for inline SQL ``from_json``. Cached per schema object identity."""
-    out = _DDL_CACHE.get(id(schema))
-    if out is None:
-        jdt = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
-            schema.json()
-        )
-        out = jdt.toDDL()
-        _DDL_CACHE[id(schema)] = out
+    hit = _DDL_CACHE.get(id(schema))
+    if hit is not None:
+        return hit[1]
+    jdt = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
+        schema.json()
+    )
+    out = jdt.toDDL()
+    _DDL_CACHE[id(schema)] = (schema, out)
     return out

@@ -37,26 +37,25 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # (path, size, mtime) signature is the metastore analog (guide §6 "file
 # listing is cached per session"); a rewritten file changes the
 # signature and re-infers, so staleness is impossible. Schemas are
-# METADATA — every query still scans the parquet data itself.
-_SCHEMA_CACHE: dict = {}
+# METADATA — every query still scans the parquet data itself. One entry
+# per source path: a changed file set replaces its path's entry.
+_SCHEMA_CACHE: dict[str, tuple[tuple, object]] = {}
 
 
 def _plain_signature(path: str) -> tuple | None:
     """(relpath, size, mtime_ns) of every data file under a plain parquet
-    source — None when unreadable (caller then skips the cache)."""
+    source, partition subdirectories included — None when unreadable
+    (caller then skips the cache)."""
+    from allora_indexer_spark.plans.warehouse import data_files_under
+
+    out = []
     try:
-        if os.path.isfile(path):
-            st = os.stat(path)
-            return ((path, st.st_size, st.st_mtime_ns),)
-        out = []
-        for e in sorted(os.listdir(path)):
-            if e.startswith(("_", ".")):
-                continue
-            st = os.stat(os.path.join(path, e))
-            out.append((e, st.st_size, st.st_mtime_ns))
-        return tuple(out)
+        for f in data_files_under(path):
+            st = os.stat(f)
+            out.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
     except OSError:
         return None
+    return tuple(out)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -82,13 +81,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = _read_manifest_data(spark, path, m)
     else:
         sig = _plain_signature(path)
-        cached = _SCHEMA_CACHE.get((path, sig)) if sig is not None else None
-        if cached is not None:
-            df = spark.read.schema(cached).parquet(path)
+        cached = _SCHEMA_CACHE.get(path)
+        if cached is not None and cached[0] == sig:
+            df = spark.read.schema(cached[1]).parquet(path)
         else:
             df = spark.read.parquet(path)
             if sig is not None:
-                _SCHEMA_CACHE[(path, sig)] = df.schema
+                _SCHEMA_CACHE[path] = (sig, df.schema)
     df = df.drop(_BUCKET_COL)
     # Parquet TIMESTAMP(NANOS) columns arrive as long nanos (see session.py);
     # truncate to micros exactly like DuckDB's scan does.

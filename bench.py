@@ -30,7 +30,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 
 from allora_indexer_spark.registry import all_queries
-from allora_indexer_spark.session import get_spark
+from allora_indexer_spark.session import codegen_counts, get_spark
 
 HEADLINE = [
     "q01_pricing_summary",
@@ -120,13 +120,18 @@ def main() -> None:
     _noop(registry["q01_pricing_summary"].fn(spark, sf_dir))
 
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    # classes compiled per headline rep: the deterministic counter behind
+    # the codegen-cache sizing (session.CODEGEN_CACHE_ENTRIES)
+    codegen_compiles: list[int] = []
     for _ in range(REPS):
         loadavg_per_rep.append([round(x, 2) for x in os.getloadavg()])
+        compiled0 = codegen_counts(spark)[0]
         for name in HEADLINE:
             fn = registry[name].fn
             t0 = time.perf_counter()
             _noop(fn(spark, sf_dir))
             samples[name].append(time.perf_counter() - t0)
+        codegen_compiles.append(codegen_counts(spark)[0] - compiled0)
 
     timings = {n: round(statistics.median(s), 3) for n, s in samples.items()}
 
@@ -240,6 +245,7 @@ def main() -> None:
                 "stream_batch_p90_ms": stream_p90,
                 "stream_batches": len(lat_ms),
                 "reps": REPS,
+                "codegen_compiles": codegen_compiles,
                 "ingest_reps": INGEST_REPS,
                 "queries": timings,
                 "iqr": iqr,

@@ -852,3 +852,25 @@ def test_unpivot_value_bundle_is_single_pass(spark, fixture_dir):
     )
     scans = plan.count("Scan json")
     assert scans <= 4, f"bundle_values re-fans the feed: {scans} scans"
+
+
+def test_route_without_suffixes_routes_nothing(spark):
+    msgs = spark.createDataFrame(
+        [("/emissions.v9.MsgRegister",)], "type string"
+    )
+    assert ingest._route(msgs, prefix="/emissions.v").count() == 0
+    assert ingest._route(msgs, "MsgRegister").count() == 1
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [
+        ("/emissions.v", ("MsgRegister", "Msg') OR ('1")),
+        ("/emissions.v' OR '", ("MsgRegister",)),
+        ("/emissions.v", ('Msg"Register',)),
+    ],
+)
+def test_route_literals_with_quotes_are_rejected(spec):
+    with pytest.raises(ValueError, match="quote"):
+        ingest._check_route_literals(spec)
+
