@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from allora_indexer_spark.operators.similarity import _dot, _norm2
-from allora_indexer_spark.plans.warehouse import read_dir
+from allora_indexer_spark.plans.warehouse import append_dir, read_dir
 from allora_indexer_spark.registry import query
 from allora_indexer_spark.tables import load_table, pin, pin_lazy
 
@@ -112,7 +112,12 @@ def build_ivf_index(
     """Train the coarse quantizer and write the clustered corpus +
     centroid table. ``emb`` needs (vec_id, embedding ARRAY<FLOAT>).
     ``fit_fraction`` < 1 fits k-means on a sample — at corpus scale the
-    quantizer needs only a representative sample, never the full data."""
+    quantizer needs only a representative sample, never the full data.
+
+    The corpus is a manifest table from its build on (cell-partitioned
+    version dirs), so :func:`append_to_ivf_index` adds versions beside
+    the built rows. A rebuild replaces the whole table, as the overwrite
+    of the centroid table does."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -124,9 +129,9 @@ def build_ivf_index(
     assigned = model.transform(feats).select(
         "vec_id", "embedding", F.col("prediction").alias("cell")
     )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_dir, "corpus")
-    )
+    corpus_dir = os.path.join(index_dir, "corpus")
+    shutil.rmtree(corpus_dir, ignore_errors=True)
+    append_dir(assigned, corpus_dir, ["cell"])
     cents = spark.createDataFrame(
         [
             (i, [float(x) for x in c])
@@ -161,7 +166,6 @@ def query_ivf_index(
     The candidate join keys on the corpus' PARTITION column with a
     broadcast probe side — exactly the shape Spark's dynamic partition
     pruning turns into directory-level skipping of unprobed cells."""
-    # manifest-aware: the append-grown corpus may have been compacted
     corpus = read_dir(spark, os.path.join(index_dir, "corpus"))
     cents = spark.read.parquet(os.path.join(index_dir, "centroids"))
     probes = _probe_cells(queries, cents, n_probe)
@@ -507,8 +511,6 @@ def append_to_ivf_index(
             .distinct()
         )
         novel = assigned.join(existing, "vec_id", "left_anti")
-        # manifest-aware: keeps the incremental add correct across an
-        # out-of-band compact() of the corpus dir
         _append_data(novel, corpus_dir, ["cell"])
 
 

@@ -121,8 +121,8 @@ class PosixManifestStorage:
     :meth:`history_age_ref` / :meth:`delete_history`."""
 
     def read_current(self, path: str) -> dict | None:
-        """The live manifest of a manifest-layout table, or None for a
-        plain parquet directory / missing table."""
+        """The live manifest of the table at ``path``, or None when the
+        path holds no table."""
         cur = os.path.join(path, _CURRENT_FILE)
         if not os.path.isfile(cur):
             return None

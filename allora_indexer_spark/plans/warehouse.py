@@ -38,11 +38,7 @@ from allora_indexer_spark.plans.storage import (  # noqa: F401 — re-exports
     _atomic_write_json,
     _cas_section,
 )
-from allora_indexer_spark.schemas import (
-    ENUM_DOMAINS,
-    KEY_DERIVATIONS,
-    TABLE_KEYS,
-)
+from allora_indexer_spark.schemas import ENUM_DOMAINS, TABLE_KEYS
 
 # The storage-backend seam (plans/storage.py): every `_CURRENT` read and
 # every publish/flip goes through this object. Default is the POSIX
@@ -72,9 +68,12 @@ STORAGE = PosixManifestStorage()
 # readers see either the old or the new manifest in full, never a mix, and
 # no data is ever copied, linked, or moved for a carry. Everything is
 # plain files + one atomic single-object write — the layout works the same
-# on POSIX and on object stores (S3-style single-PUT atomicity), unlike
-# the symlink+hardlink flip it replaces (reference semantic parity: the
-# store-agnostic ON CONFLICT upsert, /root/reference/db.go:1118-1185).
+# on POSIX and on object stores (S3-style single-PUT atomicity; reference
+# semantic parity: the store-agnostic ON CONFLICT upsert, the reference's
+# db.go:1118-1185). It is the ONLY layout: every table and
+# store is a manifest table from its first write (append tables hold one
+# data entry per appended version instead of key buckets), so there is
+# one commit path — the `_CURRENT` CAS publish — for all of them.
 # WRITERS additionally serialize per table through `_table_lock` (reads
 # never lock) — see the lock note below.
 # Underscore-prefixed names are invisible to Spark's file listing, so a
@@ -146,22 +145,19 @@ _LOCK_TIMEOUT_SEC = 3600.0
 # mode an object-store deployment runs in, where flock does not exist
 # and `_publish_manifest`'s conditional flip becomes a conditional PUT
 # (If-Match on `_CURRENT`'s ETag). Correctness contract in "none" mode:
-# lost updates on MANIFEST-layout tables are prevented by the version
-# check; the one-time legacy migrations (plain dir / symlink layout →
-# manifest) are NOT concurrency-safe without the mutex and should be
-# run once under "flock" (or single-writer) before going lock-free;
-# and writers SKIP their piggybacked GC (see _gc_after_publish) — space
-# reclamation is vacuum()-only, run quiesced or with `grace` sized
-# above the longest in-flight write.
+# lost updates are prevented by the version check — table creation
+# included, since a table's first manifest is a CAS against "no
+# manifest" — and writers SKIP their piggybacked GC (see
+# _gc_after_publish): space reclamation is vacuum()-only, run quiesced
+# or with `grace` sized above the longest in-flight write.
 LOCK_MODE = "flock"
 
 
 @contextlib.contextmanager
 def _table_lock(path: str, timeout: float | None = None):
     # The lock lives BESIDE the table (`<path>.__lock` in the parent), so
-    # acquiring it never has to create or touch the table dir itself —
-    # which may legitimately be a symlink (legacy layout), dangling
-    # (crashed migration), or not exist yet (first write).
+    # acquiring it never has to create or touch the table dir itself,
+    # which does not exist yet before the table's first write.
     #
     # Mutual exclusion is kernel flock(2) on the lock file, NOT the
     # file's existence: the kernel releases the lock the instant the
@@ -212,8 +208,8 @@ def _table_path(root: str, name: str) -> str:
 
 
 def _manifest_read(path: str) -> dict | None:
-    """The live manifest of a manifest-layout table, or None for a plain
-    parquet directory / missing table. Delegates to the STORAGE seam."""
+    """The live manifest of the table at ``path``, or None when the path
+    holds no table. Delegates to the STORAGE seam."""
     return STORAGE.read_current(path)
 
 
@@ -229,11 +225,17 @@ def _data_dirs(path: str, manifest: dict) -> list[str]:
     ]
 
 
-# How many times a public writer redoes its read-merge-publish cycle on
-# conflict before giving up loudly. Conflicts are impossible under
-# LOCK_MODE="flock" and rare under "none" (two writers racing the same
-# table), so a small bound suffices.
-_CAS_RETRIES = 8
+# Backoff of a public writer that lost a CAS race (LOCK_MODE="none";
+# under "flock" conflicts are impossible). The pause doubles per lost
+# attempt, from _CAS_BACKOFF_SEC up to _CAS_BACKOFF_MAX_SEC, with equal
+# jitter (each pause is U(0.5, 1) x the nominal delay), and the writer
+# gives up loudly once the next pause would end past _CAS_DEADLINE_SEC
+# from its first attempt. A deadline, not an attempt count: a writer on
+# a hot table keeps its turn as long as rivals keep committing, while a
+# fixed count of short sleeps gave up after ~0.85 s.
+_CAS_BACKOFF_SEC = 0.02
+_CAS_BACKOFF_MAX_SEC = 2.0
+_CAS_DEADLINE_SEC = 60.0
 
 
 def _publish_manifest(path: str, manifest: dict, expect=_ANY) -> None:
@@ -274,16 +276,20 @@ def _publish_manifest(path: str, manifest: dict, expect=_ANY) -> None:
 def _retry_cas(fn):
     """Run a writer's read-merge-publish cycle, redoing it (against the
     freshly-flipped manifest) when another writer's publish wins the CAS.
-    The backoff is jittered: two symmetric lock-free writers with equal
-    cycle times would otherwise collide in lockstep across every attempt
-    and fail spuriously."""
-    for attempt in range(_CAS_RETRIES):
+    The backoff is exponential and jittered (see _CAS_BACKOFF_SEC): two
+    symmetric lock-free writers with equal cycle times would otherwise
+    collide in lockstep across every attempt and fail spuriously."""
+    give_up = time.monotonic() + _CAS_DEADLINE_SEC
+    delay = _CAS_BACKOFF_SEC
+    while True:
         try:
             return fn()
         except ManifestConflictError:
-            if attempt == _CAS_RETRIES - 1:
+            pause = delay * random.uniform(0.5, 1.0)
+            if time.monotonic() + pause > give_up:
                 raise
-            time.sleep(0.02 * (attempt + 1) * random.uniform(0.5, 1.5))
+            time.sleep(pause)
+            delay = min(2 * delay, _CAS_BACKOFF_MAX_SEC)
 
 
 def _footer_row_count(d: str) -> int:
@@ -303,244 +309,11 @@ def _footer_row_count(d: str) -> int:
     return total
 
 
-def _plain_parquet_count(path: str) -> int:
-    """Parquet-file count of a plain (pre-manifest) table dir, hive
-    subdirs included — the PLAIN_CONVERT_FILES trigger probe. Bounded:
-    only ever called while the dir is below ~the threshold (conversion
-    fires the moment it crosses), so the walk touches O(threshold)
-    entries."""
-    n = 0
-    for dirpath, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        n += sum(f.endswith(".parquet") for f in files)
-    return n
-
-
 def _exists(path: str) -> bool:
-    if _manifest_read(path) is not None:
-        return True
-    if os.path.islink(path):
-        return True  # legacy symlink-flip layout (pre-manifest revision)
-    if not os.path.isdir(path):
-        return False
-    for entry in os.listdir(path):
-        # plain parquet dir, an unlinked legacy bucket layout, or any
-        # hive-partitioned plain dir (`topic_id=N/`, `cell=3/`, ... —
-        # write_partitioned's recommended per-key layout): a root whose
-        # only data lives under partition subdirs MUST still count as
-        # existing, else write_insert_if_absent skips its probe and
-        # every at-least-once replay re-admits already-written keys
-        if entry.endswith(".parquet") or "=" in entry:
-            return True
-    return False
-
-
-def _staging_dirs(path: str) -> list[str]:
-    """Leftover migration staging dirs (`.{name}__mstage_*`) beside a
-    table path, newest-mtime first."""
-    parent, name = os.path.split(os.path.normpath(path))
-    prefix = f".{name}__mstage_"
-    if not os.path.isdir(parent):
-        return []
-    out = [
-        os.path.join(parent, d)
-        for d in os.listdir(parent)
-        if d.startswith(prefix)
-    ]
-
-    def mtime(d: str) -> float:
-        # a rival process sweeping the same stale staging can delete it
-        # between listdir and stat (LOCK_MODE="none" has no exclusion);
-        # a vanished dir sorts oldest and is skipped by the caller
-        try:
-            return os.path.getmtime(d)
-        except OSError:
-            return 0.0
-
-    out.sort(key=lambda d: -mtime(d))
-    return out
-
-
-def _move_aside_plain_entries(path: str) -> str:
-    """One-time plain-dir → manifest conversion helper: move EVERY
-    pre-manifest entry of the table root — parquet files, `_SUCCESS`,
-    checksum droppings, AND hive partition subdirectories (`bucket=XX/`,
-    `topic_id=N/` — a plain table is not guaranteed flat) — into a
-    grace-retained ``_versions/legacy_*`` dir. Moving only root-level
-    parquet would leave partition dirs orphaned at the root forever: never
-    GC'd (the GC walks only `_versions/`), doubling storage, and visible
-    to stray direct root reads as a stale snapshot. Internal manifest
-    entries stay put."""
-    keep = {_VERSIONS_DIR, _MANIFESTS_DIR, _CURRENT_FILE}
-    aside = os.path.join(path, _VERSIONS_DIR, "legacy_" + uuid.uuid4().hex[:8])
-    os.makedirs(aside, exist_ok=True)
-    for f in list(os.listdir(path)):
-        if f in keep:
-            continue
-        os.rename(os.path.join(path, f), os.path.join(aside, f))
-    _touch_tree_top(aside)
-    return aside
-
-
-def _sweep_legacy_leftovers(path: str) -> None:
-    """Repair a plain-dir conversion that crashed between the manifest
-    flip and the move-aside: leftover plain root entries (parquet files /
-    hive dirs that predate the manifest) are invisible to manifest
-    readers but live outside the GC walk — sweep them into a
-    grace-retained legacy dir. No-op when the root is clean. Called by
-    every converter (_compact_locked, _write_keep_one_locked) so
-    whichever writer touches the table next heals it."""
-    if not os.path.isdir(path):
-        return
-    leftovers = [
-        f
-        for f in os.listdir(path)
-        if f not in (_VERSIONS_DIR, _MANIFESTS_DIR, _CURRENT_FILE)
-        and (f.endswith(".parquet") or "=" in f)
-    ]
-    if leftovers:
-        _move_aside_plain_entries(path)
-
-
-def _touch_tree_top(d: str) -> None:
-    """Restart the GC grace clock on a renamed-in dir AND its immediate
-    children: os.rename preserves the children's old mtimes, and
-    _gc_versions ages entries INSIDE version dirs, so touching only the
-    dir would leave its contents immediately reap-eligible."""
-    os.utime(d)
-    for entry in os.listdir(d):
-        try:
-            os.utime(os.path.join(d, entry))
-        except OSError:
-            pass
-
-
-def _migrate_symlink_table(
-    spark: SparkSession,
-    path: str,
-    meta_file: str = "_upsert_meta.json",
-    meta_keys: tuple[str, ...] = ("buckets", "keys"),
-) -> None:
-    """One-time in-place conversion of a legacy symlink-flip table (the
-    layout a previous revision of this module wrote: the table path is a
-    symlink to a sibling ``.{name}__v<hex>`` version dir holding
-    ``_kb=N`` hive dirs plus a meta json) into the manifest layout.
-    Without this, ``_exists`` would miss the table and the first
-    post-upgrade upsert would publish a manifest containing only its own
-    batch — silently dropping every pre-upgrade row. Parameterized on the
-    meta filename/keys so non-warehouse stores on the same layout (the
-    streaming heavy-hitter store's ``_hh_meta.json`` with
-    n_total/last_batch) migrate through the same code path.
-
-    Crash safety: the COMPLETE new table (data version, `_manifests/`,
-    `_CURRENT`) is staged in a sibling ``.{name}__mstage_*`` dir before
-    anything is moved; the legacy version dirs (symlink target FIRST, so
-    any interruption past the first move leaves the symlink dangling —
-    an unambiguous migration-in-progress marker) are renamed into the
-    staging's ``_versions/legacy_*``, then the symlink is removed and the
-    staging renamed into place. Every crash point is recoverable: a
-    dangling symlink or missing path beside a staged `_CURRENT` resumes
-    the swap; a crash before any move leaves the legacy table fully
-    intact (the orphan staging, which holds only redundant copies, is
-    discarded on the next attempt). At no point can a writer observe a
-    half-table: until the final rename the path is either the legacy
-    symlink or absent-with-complete-staging, both recognized here before
-    any writer consults ``_exists``."""
-    staged = [
-        s
-        for s in _staging_dirs(path)
-        if os.path.isfile(os.path.join(s, _CURRENT_FILE))
-    ]
-    dangling = os.path.islink(path) and not os.path.exists(path)
-    if staged and (dangling or not os.path.lexists(path)):
-        # resume a crashed swap: the newest fully-staged layout wins
-        if os.path.lexists(path):
-            os.remove(path)
-        os.rename(staged[0], path)
-        for s in _staging_dirs(path):
-            shutil.rmtree(s, ignore_errors=True)
-        # sweep legacy version dirs the crashed attempt had not yet moved
-        # — otherwise they sit beside the table forever (the GC walks
-        # only _versions/, and the table is no longer a symlink so no
-        # later migration ever looks at them again)
-        parent, name = os.path.split(os.path.normpath(path))
-        for d in os.listdir(parent):
-            if d.startswith(f".{name}__v"):
-                aside = os.path.join(
-                    path, _VERSIONS_DIR, "legacy_" + uuid.uuid4().hex[:8]
-                )
-                os.rename(os.path.join(parent, d), aside)
-                _touch_tree_top(aside)
-        _touch_tree_top(os.path.join(path, _VERSIONS_DIR))
-        return
-    if not os.path.islink(path):
-        # migration already completed (or never needed): sweep any
-        # staging dirs a finished/abandoned attempt left beside the
-        # table — left in place, a stale COMPLETE staging would be
-        # resurrected as the live table by the resume branch above if
-        # the table dir were ever removed externally
-        if os.path.exists(path):
-            for s in _staging_dirs(path):
-                shutil.rmtree(s, ignore_errors=True)
-        return
-    # discard stagings of attempts that crashed before moving anything —
-    # the symlink target is intact, so they hold only redundant copies
-    for s in _staging_dirs(path):
-        shutil.rmtree(s, ignore_errors=True)
-    target = os.path.realpath(path)
-    meta: dict = {}
-    mf = os.path.join(target, meta_file)
-    if os.path.isfile(mf):
-        with open(mf) as fh:
-            meta = json.load(fh)
-    df = spark.read.parquet(path)  # hive-infers _kb from the version dir
-    bucketed = _BUCKET_COL in df.columns
-    parent, name = os.path.split(os.path.normpath(path))
-    staging = os.path.join(
-        parent, f".{name}__mstage_" + uuid.uuid4().hex[:8]
-    )
-    ver = _new_version_id()
-    verdir = os.path.join(staging, _VERSIONS_DIR, ver)
-    writer = df.write.mode("overwrite")
-    if bucketed:
-        writer = writer.partitionBy(_BUCKET_COL)
-    writer.parquet(verdir)  # eager: legacy files fully read before any move
-    if bucketed:
-        data = {
-            d.split("=", 1)[1]: os.path.join(_VERSIONS_DIR, ver, d)
-            for d in os.listdir(verdir)
-            if d.startswith(_BUCKET_COL + "=")
-        }
-    else:
-        data = {"all": os.path.join(_VERSIONS_DIR, ver)}
-    manifest: dict = {"version": ver, "data": data}
-    if bucketed:
-        manifest["schema"] = _schema_json(df)
-    for k in meta_keys:
-        if k in meta:
-            manifest[k] = meta[k]
-    _publish_manifest(staging, manifest)  # staging is now a complete table
-    prefix = f".{name}__v"
-    # realpath-normalized: a symlinked parent component (/tmp on some
-    # systems) would otherwise list the target under a second spelling
-    # and the duplicate rename would raise mid-swap
-    siblings = {
-        os.path.realpath(os.path.join(parent, d))
-        for d in os.listdir(parent)
-        if d.startswith(prefix)
-    }
-    siblings.add(target)  # target may live outside the naming scheme
-    # symlink target first: once it moves, the dangling link marks the
-    # migration in progress and the recovery branch above can finish it
-    for s in sorted(siblings, key=lambda s: s != target):
-        aside = os.path.join(
-            staging, _VERSIONS_DIR, "legacy_" + uuid.uuid4().hex[:8]
-        )
-        os.rename(s, aside)
-        _touch_tree_top(aside)  # rename keeps OLD mtimes; restart grace clock
-    os.remove(path)
-    os.rename(staging, path)
-    _gc_versions(path, keep={os.path.join(path, _VERSIONS_DIR, ver)})
+    """Whether ``path`` holds a table. Every table and store the engine
+    writes is a manifest table from its first write, so a path without
+    `_CURRENT` holds none."""
+    return _manifest_read(path) is not None
 
 
 def _schema_json(df: DataFrame) -> str:
@@ -718,9 +491,10 @@ def _gc_versions(
             continue  # whole version dir referenced: nothing inside may go
         try:
             # the version dir's own mtime, captured BEFORE any deletion
-            # below bumps it, joins the grace check: os.rename preserves
-            # children's old mtimes, so a freshly moved-aside legacy dir
-            # must shield its stale-mtime contents through the window
+            # below bumps it, joins the grace check: a rename keeps the
+            # children's old mtimes (Spark's job commit renames task
+            # files into place), so the dir shields them through the
+            # window
             vdir_mtime = os.path.getmtime(vdir)
         except OSError:
             continue
@@ -763,13 +537,15 @@ def _gc_versions(
             continue
 
 
-def _read_meta(path: str) -> dict:
-    """Bucket meta of an upsert table: {'buckets': N, 'keys': [...]} —
-    sourced from the live manifest."""
-    m = _manifest_read(path)
-    if not m:
-        return {}
-    return {k: m[k] for k in ("buckets", "keys") if k in m}
+def _pinned_schema(manifest: dict):
+    """The logical schema a manifest pins, as a StructType (None for a
+    manifest that records none — the heavy-hitter store's)."""
+    sj = manifest.get("schema")
+    if not sj:
+        return None
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(sj))
 
 
 def _read_manifest_data(
@@ -780,21 +556,16 @@ def _read_manifest_data(
     the logical schema wants; writers that need `_kb` recompute it from
     the manifest's keys — bit-identical by construction.
 
-    Bucketed (upsert) manifests carry the table's logical schema, written
-    at publish time: pinning it here (a) skips footer sampling at plan
+    Manifests carry the table's logical schema, written (and widened) at
+    publish time: pinning it here (a) skips footer sampling at plan
     time — one less listing+read round-trip per query against a
     many-versioned table — and (b) makes schema evolution safe under
-    plain ``read_table``: buckets carried by reference from an older,
+    plain ``read_table``: data dirs carried by reference from an older,
     narrower version read back with typed nulls for the newer columns
     instead of silently steering inference to whichever file was sampled
     first."""
     dirs = _data_dirs(path, manifest)
-    sj = manifest.get("schema")
-    schema = None
-    if sj:
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(sj))
+    schema = _pinned_schema(manifest)
     if len(dirs) > 1 and any(_has_hive_entries(d) for d in dirs):
         # a single multi-root read refuses mixed / multiple partitioned
         # roots even under an explicit schema — union per dir, pinning
@@ -814,12 +585,7 @@ def _has_hive_entries(d: str) -> bool:
         return False
 
 
-def _union_dirs(
-    spark: SparkSession,
-    dirs: list[str],
-    merge_schema: bool = False,
-    schema=None,
-) -> DataFrame:
+def _union_dirs(spark: SparkSession, dirs: list[str], schema=None) -> DataFrame:
     """Per-dir read + unionByName for manifests whose data dirs a single
     multi-root read refuses: hive-partitioned version dirs (compact()
     with partition_cols) mixed with plain append dirs, or several
@@ -829,50 +595,40 @@ def _union_dirs(
     most ~APPEND_MANIFEST_WARN dirs between compactions, and AQE
     coalesces the per-dir scans."""
 
-    def reader():
-        r = spark.read
-        if schema is not None:
-            r = r.schema(schema)
-        elif merge_schema:
-            r = r.option("mergeSchema", "true")
-        return r
-
-    out = reader().parquet(dirs[0])
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    out = reader.parquet(dirs[0])
     for d in dirs[1:]:
-        out = out.unionByName(
-            reader().parquet(d), allowMissingColumns=True
-        )
+        out = out.unionByName(reader.parquet(d), allowMissingColumns=True)
     return out
 
 
 def read_dir(spark: SparkSession, path: str) -> DataFrame:
-    """Manifest-aware read of a standalone table DIRECTORY (streaming
-    stores — rollups, ledgers, pair sets — that live outside a warehouse
-    root): the manifest's file set when the dir has been compacted, a
-    plain parquet read otherwise. Every reader of a dir that is also fed
-    by :func:`_append_data` must come through here — a root read of a
+    """Read of a standalone table DIRECTORY (streaming stores — rollups,
+    ledgers, pair sets — and the ANN corpus, which live outside a
+    warehouse root): the live manifest's file set. A root read of a
     manifest dir sees nothing (underscore entries are invisible to
-    Spark's listing)."""
+    Spark's listing), so every reader of such a dir comes through here.
+    Raises FileNotFoundError when the path holds no table."""
     m = _manifest_read(path)
-    if m is not None:
-        return _read_manifest_data(spark, path, m)
-    return spark.read.parquet(path)
+    if m is None:
+        raise FileNotFoundError(f"{path}: no table (no {_CURRENT_FILE})")
+    return _read_manifest_data(spark, path, m)
 
 
 def append_dir(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    """Manifest-aware append to a standalone table directory — the public
-    face of :func:`_append_data` for streaming stores, keeping append
-    semantics correct across ``compact()`` runs."""
+    """Append to a standalone table directory under its writer lock — the
+    public face of :func:`_append_data` for streaming stores (the first
+    append creates the table)."""
     with _table_lock(path):
         _append_data(df, path, partition_by)
 
 
 def table_exists(root: str, name: str) -> bool:
-    """Whether the table has any readable layout (manifest, legacy
-    symlink, or plain parquet dir). The existence probe callers need to
-    distinguish "table not created yet" from "read FAILED" — wrapping
+    """Whether the table exists, i.e. has a live manifest (every table is
+    a manifest table from its first write). The existence probe callers
+    need to distinguish "table not created yet" from "read FAILED" — wrapping
     :func:`read_table` in a bare ``except Exception`` conflates the two,
     and a transient manifest/FS error then silently masquerades as an
     empty table (the streaming topic-id continuity bug class: batch-local
@@ -881,15 +637,12 @@ def table_exists(root: str, name: str) -> bool:
 
 
 def read_table(spark: SparkSession, root: str, name: str) -> DataFrame:
-    """Read a table, pinning manifest tables to the CURRENT version: the
-    manifest is loaded once here, so the query's file listing references
-    the version data dirs directly — a flip mid-query cannot yank files
-    out from under running tasks (grace-period GC keeps them alive)."""
-    path = _table_path(root, name)
-    m = _manifest_read(path)
-    if m is not None:
-        return _read_manifest_data(spark, path, m).drop(_BUCKET_COL)
-    return spark.read.parquet(path).drop(_BUCKET_COL)
+    """Read a table, pinned to its CURRENT version: the manifest is loaded
+    once here, so the query's file listing references the version data
+    dirs directly — a flip mid-query cannot yank files out from under
+    running tasks (grace-period GC keeps them alive). Raises
+    FileNotFoundError for a table that does not exist."""
+    return read_dir(spark, _table_path(root, name)).drop(_BUCKET_COL)
 
 
 # Preferred range-pruning column per key set: the ingest-monotone one.
@@ -910,8 +663,8 @@ def _keyed_default_range_by(path: str, columns) -> list[str] | None:
     """The probe-preserving layout default, single-sourced for compact
     AND fold: a KEYED append table with no chosen layout range-clusters
     on its monotone probe column — guarded on the column actually being
-    present (a legacy dump or a transform() repair may lack it; the old
-    flat rewrite must keep working there, not crash mid-conversion)."""
+    present (a table evolved without it keeps the flat rewrite instead
+    of crashing mid-maintenance)."""
     name = os.path.basename(path.rstrip("/"))
     if name in TABLE_KEYS:
         pc = _prune_col(TABLE_KEYS[name])
@@ -942,19 +695,6 @@ def existing_keys_in_range(
     pc = _prune_col(keys)
     lo, hi = span if span is not None else df.agg(F.min(pc), F.max(pc)).collect()[0]
     probe = read_table(spark, root, name)
-    # read-side key migration (schemas.KEY_DERIVATIONS): a warehouse
-    # written before a key column existed lacks it (AnalysisException on
-    # the select below), and a mixed old/new plain dir can sample the new
-    # schema and surface the old files' key as NULL — NULL keys vacate
-    # the anti-join and replays re-admit rows. Derive absent keys, and
-    # coalesce-present ones over the derivation so both shapes heal.
-    for col, expr in KEY_DERIVATIONS.get(name, {}).items():
-        if col not in probe.columns:
-            probe = probe.withColumn(col, F.expr(expr))
-        else:
-            probe = probe.withColumn(
-                col, F.coalesce(F.col(col), F.expr(expr))
-            )
     if lo is not None:
         probe = probe.filter(F.col(pc).between(F.lit(lo), F.lit(hi)))
     return probe.select(*keys).distinct()
@@ -986,20 +726,6 @@ AUTO_FOLD_ON_APPEND = True
 # restore fold+warn-only behavior (an operator-scheduled major window).
 AUTO_COMPACT_FACTOR = 4
 
-# The same autovacuum property for tables that were NEVER compacted: all
-# of the maintenance above keys off the manifest, and a plain parquet
-# dir only becomes a manifest table through its first compact() — so a
-# from-birth streaming table with no operator accumulates small files
-# forever with NO maintenance at all. Once a KEYED table's plain dir
-# exceeds this many parquet files, the append converts it inline (one
-# compact — O(table), but the table is at most this many small files
-# young, and it happens once per table lifetime). Scoped to
-# schemas.TABLE_KEYS tables: standalone operator stores (ANN corpus,
-# streaming ledgers) choose their own layouts and cadences, and a bare
-# conversion would flatten e.g. a cell-partitioned corpus. 0/None
-# disables.
-PLAIN_CONVERT_FILES = 64
-
 
 def _append_data(
     df: DataFrame,
@@ -1007,16 +733,17 @@ def _append_data(
     partition_by: list[str] | None = None,
     expect=_ANY,
 ) -> None:
-    """Append rows to a table, manifest-aware. A plain parquet directory
-    gets a plain ``mode("append")``; a table that has been converted to
-    the manifest layout (``compact()`` does that to streaming-append
-    tables) instead publishes the appended rows AS A NEW VERSION — the new
-    files land under ``_versions/<ver>/`` and the next manifest carries
-    every previous data dir by reference plus the new one. Appending at
-    the table root of a manifest table would make the rows permanently
-    invisible (``read_table`` reads only the manifest's dirs) — the silent
-    data-loss bug this helper exists to prevent. Empty batches publish
-    nothing (streaming replays are the common case).
+    """Append rows to a table AS A NEW VERSION: the new files land under
+    ``_versions/<ver>/`` and the next manifest carries every previous
+    data dir by reference plus the new one.
+
+    First write: on a path with no table yet, the same publish creates
+    it. The table's first manifest is a CAS against "no manifest"
+    (``expect=None``) and pins the batch's schema, so two writers
+    creating one table race like any other two publishes. It is
+    published even for an EMPTY batch, which is how precreating a table
+    from an empty frame creates it. Later empty batches publish nothing
+    (streaming replays are the common case).
 
     CAS: the version dir is written ONCE; a publish that loses the race
     (LOCK_MODE="none") only re-reads the manifest and re-points — pure
@@ -1026,55 +753,35 @@ def _append_data(
     was based on (None = "table had no manifest"); the publish is then a
     single attempt whose ManifestConflictError propagates, and the
     caller redoes the probe — appending under a fresh manifest here
-    would silently re-admit keys the winner just landed. Plain (non-
-    manifest) directories have no CAS at all: lock-free idempotent
-    writers must convert to the manifest layout (one compact()) first."""
-    m = _manifest_read(path)
-    if m is None:
-        if expect not in (_ANY, None):
-            raise ManifestConflictError(
-                f"{path}: manifest {expect!r} disappeared under a writer"
-            )
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        if (
-            AUTO_FOLD_ON_APPEND
-            and PLAIN_CONVERT_FILES
-            and os.path.basename(path.rstrip("/")) in TABLE_KEYS
-            and _plain_parquet_count(path) > PLAIN_CONVERT_FILES
-        ):
-            # one-time inline conversion to the manifest layout (see
-            # PLAIN_CONVERT_FILES): applies the keyed range_by default,
-            # so the table emerges clustered AND under auto-maintenance
-            _retry_cas(lambda: _compact_locked(df.sparkSession, path))
-        return
+    would silently re-admit keys the winner just landed."""
     ver = _new_version_id()
     verdir = os.path.join(path, _VERSIONS_DIR, ver)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(verdir)
-    if _footer_row_count(verdir) == 0:
-        # fully-deduped replay (streaming's common case): no version
-        # churn. Emptiness is decided AFTER the one write job from the
-        # landed files' parquet footers — a driver-local metadata read —
-        # instead of a df.isEmpty() pre-probe, which would execute the
-        # batch's whole plan (anti-join shuffles run to completion even
-        # under limit 1) a second time on every 5 s micro-batch. "All
-        # keys already present" cannot be invalidated by a concurrent
-        # publish (rows are only ever added), so no CAS check is needed.
-        shutil.rmtree(verdir, ignore_errors=True)
-        return
+    # Emptiness is decided AFTER the one write job from the landed files'
+    # parquet footers — a driver-local metadata read — instead of a
+    # df.isEmpty() pre-probe, which would execute the batch's whole plan
+    # (anti-join shuffles run to completion even under limit 1) a second
+    # time on every 5 s micro-batch.
+    empty = _footer_row_count(verdir) == 0
 
-    def publish() -> int:
+    def publish() -> int | None:
         cur = _manifest_read(path)
-        if cur is None:  # manifest tables never revert to plain dirs
-            raise ManifestConflictError(f"{path}: manifest disappeared")
-        data = dict(cur["data"])  # every prior dir carried by reference
+        if cur is None and expect not in (_ANY, None):
+            raise ManifestConflictError(
+                f"{path}: manifest {expect!r} disappeared under a writer"
+            )
+        if cur is not None and empty:
+            # fully-deduped replay (streaming's common case): no version
+            # churn. "All keys already present" cannot be invalidated by
+            # a concurrent publish (rows are only ever added), so no CAS
+            # check is needed.
+            return None
+        manifest = dict(cur or {})
+        data = dict(manifest.get("data", {}))  # prior dirs by reference
         data[ver] = os.path.join(_VERSIONS_DIR, ver)
-        manifest = dict(cur)
         manifest.update(
             {
                 "version": ver,
@@ -1082,20 +789,26 @@ def _append_data(
                 # pin (and widen) the logical schema: reads then never
                 # depend on footer sampling order or hive partition-value
                 # inference
-                "schema": _merged_schema_json(cur.get("schema"), df),
+                "schema": _merged_schema_json(manifest.get("schema"), df),
             }
         )
+        basis = cur["version"] if cur is not None else None
         _publish_manifest(
-            path,
-            manifest,
-            expect=cur["version"] if expect is _ANY else expect,
+            path, manifest, expect=basis if expect is _ANY else expect
         )
         return len(data)
 
-    n_entries = _retry_cas(publish) if expect is _ANY else publish()
+    try:
+        n_entries = _retry_cas(publish) if expect is _ANY else publish()
+    except ManifestConflictError:
+        shutil.rmtree(verdir, ignore_errors=True)  # never referenced
+        raise
+    if n_entries is None:
+        shutil.rmtree(verdir, ignore_errors=True)
+        return
     _gc_after_publish(path, keep={verdir})
     if n_entries > APPEND_MANIFEST_WARN:
-        # every append on a compacted table adds one data-map entry, one
+        # every append adds one data-map entry, one
         # version dir, and one manifest-history file; left unchecked the
         # manifest itself becomes the small-file problem (O(appends) live
         # entries, O(appends^2) cumulative history bytes, and a GC walk
@@ -1191,15 +904,12 @@ _NO_PROOF = object()
 
 
 def _table_data_files(path: str) -> list[str]:
-    """Live .parquet files of the table at ``path`` (manifest data dirs
-    when a manifest exists, else the plain dir)."""
+    """Live .parquet files of the table at ``path`` (its manifest's data
+    dirs; none when the path holds no table)."""
     m = _manifest_read(path)
-    roots = (
-        [os.path.join(path, d) for d in m["data"].values()]
-        if m is not None
-        else [path]
-    )
-    return [f for r in roots for f in data_files_under(r)]
+    if m is None:
+        return []
+    return [f for r in _data_dirs(path, m) for f in data_files_under(r)]
 
 
 def data_files_under(root: str) -> list[str]:
@@ -1304,17 +1014,13 @@ def write_insert_if_absent(
             basis = _manifest_read(path)
             basis_ver = basis["version"] if basis is not None else None
             out = batch
-            if _exists(path) and not _span_proves_absent(key_span):
+            if basis is not None and not _span_proves_absent(key_span):
                 probe = existing_keys_in_range(
                     spark, batch, root, name, span=key_span
                 )
                 # the equi-join reorders output columns KEYS-FIRST; select
                 # the batch's order back so every appended file carries
-                # the same column order as the table-creating write — a
-                # mixed-order plain dir makes the read's column order
-                # depend on which footer gets listed first (values are
-                # name-resolved and were always correct; the order was
-                # nondeterministic)
+                # the same column order as the table-creating write
                 out = batch.join(probe, keys, "left_anti").select(
                     batch.columns
                 )
@@ -1396,9 +1102,9 @@ def write_keep_one(
     table version BY REFERENCE — the new manifest keeps pointing at the
     older version's bucket path, no copy, link, or move. Publishing is one
     atomic single-file replace of `_CURRENT` (see the layout note at the
-    top of this module) — portable to object stores, unlike the
-    symlink+hardlink flip it replaces. A legacy un-bucketed table is
-    converted in one full rewrite on its first upsert, then stays
+    top of this module) — portable to object stores. A table whose
+    manifest is not bucketed (one created by appends or a restore) is
+    rewritten into the bucketed layout by its first upsert, then stays
     incremental. On Delta this whole function is MERGE WHEN MATCHED
     UPDATE."""
     with _table_lock(_table_path(root, name)):
@@ -1421,13 +1127,7 @@ def _write_keep_one_locked(
 ) -> None:
     keys = TABLE_KEYS[name]
     path = _table_path(root, name)
-    _migrate_symlink_table(spark, path)  # no-op unless pre-manifest layout
     manifest = _manifest_read(path)
-    if manifest is not None:
-        # heal a conversion that crashed after its flip (see the
-        # post-publish move-aside below / _compact_locked's twin)
-        _sweep_legacy_leftovers(path)
-    exists = manifest is not None or _exists(path)
     if num_buckets is None:
         num_buckets = UPSERT_BUCKET_COUNTS.get(name, UPSERT_BUCKETS)
     if manifest is not None:
@@ -1439,9 +1139,9 @@ def _write_keep_one_locked(
     verdir = os.path.join(path, _VERSIONS_DIR, ver)
 
     # Incremental upserts need a manifest whose data map is keyed by
-    # bucket id; anything else (a plain dir, or the {"all": ...} / mixed
-    # manifests compact()/appends publish on non-upsert tables) takes the
-    # one-time full-rewrite migration below and stays incremental after.
+    # bucket id; the {"all": ...} / per-version manifests that compact()
+    # and appends publish take the one-time full rewrite below and stay
+    # incremental after.
     bucketed_manifest = (
         manifest is not None
         and "buckets" in manifest
@@ -1449,20 +1149,12 @@ def _write_keep_one_locked(
     )
 
     if not bucketed_manifest:
-        # fresh table, or one-time migration of a legacy plain directory /
-        # non-bucketed manifest into the bucketed layout
+        # fresh table, or one-time rewrite of a non-bucketed manifest
+        # into the bucketed layout
         merged = batch
-        aside = None
         if manifest is not None:
             merged = (
                 _read_manifest_data(spark, path, manifest)
-                .drop(_BUCKET_COL)
-                .withColumn(_BUCKET_COL, _bucket_expr(keys, num_buckets))
-                .unionByName(batch)
-            )
-        elif exists:
-            merged = (
-                spark.read.parquet(path)
                 .drop(_BUCKET_COL)
                 .withColumn(_BUCKET_COL, _bucket_expr(keys, num_buckets))
                 .unionByName(batch)
@@ -1487,24 +1179,7 @@ def _write_keep_one_locked(
             },
             expect=manifest["version"] if manifest is not None else None,
         )
-        if manifest is None and exists:
-            # move the legacy entries aside AFTER the manifest flip,
-            # never before (same dance as _compact_locked): a crash
-            # between move-aside and publish would leave a table with no
-            # manifest AND no root files, which _exists reads as "never
-            # created" — the next upsert would then publish only its own
-            # batch and GC would reap the stranded legacy data (silent
-            # total loss). Post-flip the root entries are invisible to
-            # manifest readers, so a crash here only strands them; the
-            # _sweep_legacy_leftovers call at the top of this function
-            # (and _compact_locked's) reclaims them on the next write.
-            # Rename keeps inodes: a reader holding open handles is
-            # unaffected. The aside dir is pinned in this write's
-            # keep-set and freshly touched so a zero-grace GC cannot
-            # reap it from under an in-flight reader of the legacy
-            # layout.
-            aside = _move_aside_plain_entries(path)
-        _gc_after_publish(path, keep={verdir} | ({aside} if aside else set()))
+        _gc_after_publish(path, keep={verdir})
         return
 
     affected = sorted(
@@ -1521,15 +1196,9 @@ def _write_keep_one_locked(
     ]
     merged = batch
     if existing_dirs:
-        reader = spark.read
-        if manifest.get("schema"):
-            from pyspark.sql.types import StructType
-
-            reader = reader.schema(
-                StructType.fromJson(json.loads(manifest["schema"]))
-            )
         existing = (
-            reader.parquet(*existing_dirs)
+            spark.read.schema(_pinned_schema(manifest))
+            .parquet(*existing_dirs)
             .drop(_BUCKET_COL)
             .withColumn(_BUCKET_COL, _bucket_expr(keys, num_buckets))
         )
@@ -1565,12 +1234,12 @@ def seed_manifest_store(
     recorded ``layout`` (so automatic folds keep the clustering the
     operator chose, exactly as a compact() would have recorded), and any
     ``extra`` app-level manifest keys (e.g. the rollup ledger's
-    content_key_encoding) all flip together. This is the single seeding
-    mechanism for stores that must be manifest tables FROM THEIR FIRST
-    ROW (rollup ledgers, near-dup signature/pairs stores): a multi-step
-    seed (plain write, then compact, then stamp) has crash windows that
-    leave a plain dir a lock-free rival can race, or a manifest missing
-    its markers. No-op if the store already has a manifest. A lost seed
+    content_key_encoding) all flip together. It is the first-write
+    publish of :func:`_append_data` for stores whose first manifest must
+    carry more than data and schema (rollup ledgers, near-dup
+    signature/pairs stores): a later stamp would leave a window with a
+    manifest missing its markers. No-op if the store already has a
+    manifest. A lost seed
     CAS reclaims its own version dir before retrying (a seed-loser dir
     is invisible to GC — no _gc_after_publish runs on the early-return
     path)."""
@@ -1687,26 +1356,14 @@ def diff_table_versions(
 
         # a side whose changed buckets are all NEW on the other side
         # prunes to zero dirs — a zero-path parquet read is an error, so
-        # stand in a typed empty relation (its rows all diff as
-        # added/removed, which is exactly right). Built from the pinned
-        # schema when recorded — no file listing; the full-manifest
-        # limit(0) fallback only for pre-schema manifests.
+        # stand in a typed empty relation built from the pinned schema
+        # (its rows all diff as added/removed, which is exactly right)
         def _side(mm: dict, pruned: dict) -> DataFrame:
             if pruned:
                 return _read_manifest_data(
                     spark, path, dict(mm, data=pruned)
                 ).drop(_BUCKET_COL)
-            if mm.get("schema"):
-                from pyspark.sql.types import StructType
-
-                return spark.createDataFrame(
-                    [], StructType.fromJson(json.loads(mm["schema"]))
-                )
-            return (
-                _read_manifest_data(spark, path, mm)
-                .drop(_BUCKET_COL)
-                .limit(0)
-            )
+            return spark.createDataFrame([], _pinned_schema(mm))
 
         o = _side(om, om_pruned)
         n = _side(nm, nm_pruned)
@@ -1949,9 +1606,13 @@ def bootstrap_from_snapshot(
     snapshots ROOT carrying a `latest` pointer file (the reference's
     latest-object indirection, process_s3.go:90-111) — resolved here.
     Existing tables are left untouched so a restart after a partial
-    bootstrap is safe. A snapshot of an upsert table (its dir carries a
-    `_CURRENT` manifest) restores into the bucketed manifest layout so
-    the first post-restore upsert stays O(batch)."""
+    bootstrap is safe: each table is restored by one manifest publish,
+    so it either exists in full or not at all. A snapshot table may be a
+    manifest table (what :func:`publish_snapshot` writes) or a plain
+    parquet dir from outside the engine. An upsert table's snapshot
+    (its manifest carries bucket meta) restores into the bucketed layout
+    so the first post-restore upsert stays O(batch); every other table
+    restores through the first-write publish of :func:`_append_data`."""
     snapshot_root = resolve_snapshot_root(snapshot_root)
     os.makedirs(warehouse_root, exist_ok=True)
     restored = []
@@ -1965,22 +1626,15 @@ def bootstrap_from_snapshot(
         if _exists(dst):
             continue
         src_manifest = _manifest_read(src)
-        if src_manifest is not None and not (
-            "buckets" in src_manifest and "keys" in src_manifest
+        df = (
+            _read_manifest_data(spark, src, src_manifest)
+            if src_manifest is not None
+            else spark.read.parquet(src)
+        ).drop(_BUCKET_COL)
+        if src_manifest is not None and {"buckets", "keys"} <= set(
+            src_manifest
         ):
-            # manifest snapshot of a NON-upsert table (compact()'s
-            # {"all": ...} layout carries no bucket meta): restore as a
-            # plain parquet dir — the append writers handle it from there
-            _read_manifest_data(spark, src, src_manifest).drop(
-                _BUCKET_COL
-            ).write.mode("overwrite").parquet(dst)
-            restored.append(name)
-            continue
-        if src_manifest is not None:
             meta = {k: src_manifest[k] for k in ("buckets", "keys")}
-            df = _read_manifest_data(spark, src, src_manifest).drop(
-                _BUCKET_COL
-            )
             ver = _new_version_id()
             verdir = os.path.join(dst, _VERSIONS_DIR, ver)
             (
@@ -2004,26 +1658,12 @@ def bootstrap_from_snapshot(
                     "schema": _schema_json(df),
                     **meta,
                 },
+                expect=None,
             )
         else:
-            spark.read.parquet(src).write.mode("overwrite").parquet(dst)
+            _append_data(df, dst, expect=None)
         restored.append(name)
     return restored
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Hive-style partitioned layout writer — the Spark analog of the
-    reference's topic_id secondary indexes (sql-migrations/v0.5.1/
-    202409242000*.sql:7-43): at 100 TB a filter on the partition column
-    prunes whole directories before any I/O happens, which is what an
-    index buys Postgres. Use for the per-topic fact tables (scores,
-    rewards, inferences) where topic_id is the dominant predicate."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
 def compact(
@@ -2032,7 +1672,6 @@ def compact(
     target_partitions: int | None = None,
     partition_cols: list[str] | None = None,
     cluster_by: list[str] | None = None,
-    transform=None,
     lock_timeout: float | None = None,
     range_by: list[str] | None = None,
 ) -> None:
@@ -2043,10 +1682,9 @@ def compact(
     partition count (repartition by the layout key when given, so files
     align with bucket pruning). Publishing is the same atomic `_CURRENT`
     manifest flip as the upsert writer, so readers racing a compaction
-    always see a full table; a plain parquet directory is converted to the
-    manifest layout on its first compaction (its old files are moved
-    aside and GC'd after the grace period). Run out-of-band, like
-    VACUUM/OPTIMIZE.
+    always see a full table; the replaced files are GC'd after the grace
+    period. Raises FileNotFoundError for a path that holds no table. Run
+    out-of-band, like VACUUM/OPTIMIZE.
 
     ``partition_cols`` lays files out as hive directories — directory-
     level pruning, but hive partition-VALUE inference types the column on
@@ -2056,14 +1694,6 @@ def compact(
     row-group min/max stats prune almost as well with none of the
     inference hazard — prefer it for string-typed layout keys (the LSH
     signature store's hex bucket). Mutually exclusive.
-
-    ``transform`` (optional ``DataFrame -> DataFrame``) is applied to the
-    table content before the rewrite — the repair hook for converting a
-    LEGACY layout whose read needs normalization (e.g. re-padding a hive
-    bucket column that partition-value inference mistyped: the plain-dir
-    read here predates any manifest schema pin, so inference is
-    unavoidable on the first conversion and only the caller knows the
-    intended type).
 
     ``range_by`` RANGE-partitions on the key and sorts within each
     partition, so every output FILE covers a disjoint key span — the
@@ -2108,7 +1738,7 @@ def compact(
         _retry_cas(
             lambda: _compact_locked(
                 spark, path, target_partitions, partition_cols, cluster_by,
-                transform, range_by,
+                range_by,
             )
         )
 
@@ -2119,7 +1749,6 @@ def _compact_locked(
     target_partitions: int | None = None,
     partition_cols: list[str] | None = None,
     cluster_by: list[str] | None = None,
-    transform=None,
     range_by: list[str] | None = None,
 ) -> None:
     # the explicit empty list is the layout-clearing sentinel (flatten +
@@ -2128,19 +1757,11 @@ def _compact_locked(
     partition_cols = partition_cols or None
     cluster_by = cluster_by or None
     range_by = range_by or None
-    _migrate_symlink_table(spark, path)  # no-op unless pre-manifest layout
     manifest = _manifest_read(path)
-    if manifest is not None:
-        # repair a conversion that crashed between the manifest flip and
-        # the move-aside (shared with _write_keep_one_locked)
-        _sweep_legacy_leftovers(path)
-    meta = _read_meta(path)
-    if manifest is not None:
-        df = _read_manifest_data(spark, path, manifest)
-    else:
-        df = spark.read.parquet(path)
-    if transform is not None:
-        df = transform(df)
+    if manifest is None:
+        raise FileNotFoundError(f"{path}: no table (no {_CURRENT_FILE})")
+    meta = {k: manifest[k] for k in ("buckets", "keys") if k in manifest}
+    df = _read_manifest_data(spark, path, manifest)
     if meta and _BUCKET_COL not in df.columns:
         df = df.withColumn(
             _BUCKET_COL, _bucket_expr(meta["keys"], meta["buckets"])
@@ -2156,14 +1777,14 @@ def _compact_locked(
         # range-clustering on its monotone probe column — the layout
         # the idempotent writer's range-pruned anti-join depends on
         # (see compact()'s range_by note)
-        lay = (manifest.get("layout") or {}) if manifest is not None else {}
+        lay = manifest.get("layout") or {}
         if lay:
             partition_cols = lay.get("partition_by")
             cluster_by = lay.get("cluster_by")
             range_by = lay.get("range_by")
         else:
             range_by = _keyed_default_range_by(path, df.columns)
-    if target_partitions is None and manifest is not None:
+    if target_partitions is None:
         # an omitted target_partitions resolves from the recorded
         # layout's sizing WHATEVER columns were passed — a maintenance
         # compact, and equally an operator re-cluster that left sizing
@@ -2213,7 +1834,7 @@ def _compact_locked(
     # placement exists to prevent.
     m = {
         k: v
-        for k, v in (manifest or {}).items()
+        for k, v in manifest.items()
         if k not in ("version", "data", "schema", "layout")
     }
     m.update({"version": ver, "data": data})
@@ -2221,9 +1842,7 @@ def _compact_locked(
         m.update(meta)
     # compaction changes files, never content: carry the pinned logical
     # schema forward (or establish it from the compacted output)
-    m["schema"] = _merged_schema_json(
-        manifest.get("schema") if manifest is not None else None, out
-    )
+    m["schema"] = _merged_schema_json(manifest.get("schema"), out)
     # record the table's file LAYOUT so maintenance that runs without
     # the caller's arguments (the auto-fold in _append_data) keeps the
     # clustering/partitioning the operator chose — a bucket-clustered
@@ -2253,25 +1872,10 @@ def _compact_locked(
         }
     elif reset_layout:
         pass  # operator flattened the table: drop the recorded layout
-    elif manifest is not None and "layout" in manifest:
+    elif "layout" in manifest:
         m["layout"] = manifest["layout"]
-    _publish_manifest(
-        path, m,
-        expect=manifest["version"] if manifest is not None else None,
-    )
-    aside = None
-    if manifest is None and os.path.isdir(path):
-        # one-time conversion of a plain dir (same dance as
-        # write_keep_one) — AFTER the manifest flip, never before: a
-        # crash between move-aside and publish would leave a table with
-        # no manifest AND no root files, which _exists reads as "never
-        # created" (the idempotent writer would then re-admit every key
-        # and the streaming topic numbering would restart — data loss).
-        # Post-flip the root entries are invisible to manifest readers,
-        # so a crash here only strands them; the sweep at the top of
-        # this function reclaims the leftovers on the next compact.
-        aside = _move_aside_plain_entries(path)
-    _gc_after_publish(path, keep={verdir} | ({aside} if aside else set()))
+    _publish_manifest(path, m, expect=manifest["version"])
+    _gc_after_publish(path, keep={verdir})
 
 
 def fold_appends(
@@ -2289,8 +1893,7 @@ def fold_appends(
     O(deltas since last fold), never O(table), which is what makes a
     per-N-batches cadence affordable when the base holds a 100 TB store
     (a full :func:`compact` there re-writes everything). Returns False
-    for a plain (non-manifest) directory — callers convert those with
-    one full ``compact()`` first — and True otherwise, including the
+    for a path that holds no table and True otherwise, including the
     nothing-to-fold case. Same atomic `_CURRENT` flip; a crash leaves
     the previous manifest live."""
     if sum(map(bool, (partition_by, cluster_by, range_by))) > 1:
@@ -2359,28 +1962,13 @@ def _fold_appends_locked(
     deltas = {k: rel for k, rel in m["data"].items() if k not in carried}
     if len(deltas) < 2:
         return True  # manifest-managed and already folded tight
-    # Read the deltas under the manifest's PINNED schema when one is
-    # recorded: _append_data widens it on every append, so it covers all
-    # deltas, and pinning also fixes hive partition-value TYPES — folding
-    # a partition_by append table whose values look numeric with per-root
-    # inference would retype them ('04' -> int 4) in the fold output, the
-    # exact corruption compact()'s docstring defends against. mergeSchema
-    # remains only as the fallback for pre-schema manifests.
-    ddirs = _data_dirs(path, dict(m, data=deltas))
-    sj = m.get("schema")
-    schema = None
-    if sj:
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(sj))
-    if len(ddirs) > 1 and any(_has_hive_entries(d) for d in ddirs):
-        df = _union_dirs(
-            spark, ddirs, merge_schema=schema is None, schema=schema
-        )
-    elif schema is not None:
-        df = spark.read.schema(schema).parquet(*ddirs)
-    else:
-        df = spark.read.option("mergeSchema", "true").parquet(*ddirs)
+    # The deltas read under the manifest's PINNED schema: _append_data
+    # widens it on every append, so it covers all deltas, and pinning
+    # also fixes hive partition-value TYPES — folding a partition_by
+    # append table whose values look numeric with per-root inference
+    # would retype them ('04' -> int 4) in the fold output, the exact
+    # corruption compact()'s docstring defends against.
+    df = _read_manifest_data(spark, path, dict(m, data=deltas))
     if want_keyed_default:
         range_by = _keyed_default_range_by(path, df.columns)
     if partition_by:
@@ -2460,89 +2048,25 @@ def vacuum(
         _gc_versions(path, retain=retain, grace=grace)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed table layout for co-located joins: rows are hash-bucketed
-    on ``bucket_cols`` at WRITE time, so any join or aggregation keyed on
-    those columns reads matching buckets side-by-side with NO Exchange —
-    the shuffle that dominates a 100 TB fact-fact join is paid once at
-    ingest and amortized over every subsequent query. Both sides must use
-    the same bucket count; ``sort_cols`` additionally pre-sorts inside each
-    bucket file so a sort-merge join skips its Sort. Bucketing requires the
-    metastore (saveAsTable), unlike the path-based writers above — at
-    deployment this is the analog of the reference relying on Postgres
-    btree indexes for its hot joins (sql-migrations/v0.5.1/
-    202409242000*.sql), except the layout also removes the network cost."""
-    writer = (
-        df.write.mode(mode)
-        .format("parquet")
-        .bucketBy(num_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def write_range_sorted(
-    df: DataFrame,
-    path: str,
-    order_col: str,
-    num_files: int,
-    mode: str = "overwrite",
-) -> None:
-    """Range-partitioned, sorted time-series layout: rows are range-split
-    on ``order_col`` (each output file owns a disjoint interval) and sorted
-    inside each file, so parquet min/max page stats make a time-range
-    predicate skip every non-overlapping file/row-group — the layout a
-    hypertable keeps per chunk. Combine with ``compact`` for maintenance;
-    use for block_info/events where height/time predicates dominate."""
-    (
-        df.repartitionByRange(num_files, F.col(order_col))
-        .sortWithinPartitions(order_col)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def evolve_append(
     spark: SparkSession, df: DataFrame, root: str, name: str
 ) -> None:
     """K8 schema evolution (isColumnExist/addColumn, /root/reference/
     db.go:1688-1708) the lake-table way: an append whose batch carries NEW
-    columns widens the table — existing files simply lack the column and
-    read back as nulls under mergeSchema; a batch MISSING known columns is
-    padded with typed nulls so files stay union-compatible. No ALTER, no
-    rewrite, no downtime; on Delta this is mergeSchema=true on write.
-    Manifest-aware: on a compacted table the widened batch is published
-    as a new version (:func:`_append_data`), never a root-path append."""
+    columns widens the schema its manifest pins (every append does, see
+    :func:`_merged_schema_json`), so older versions' files read back
+    with the column as null; a batch MISSING known columns is padded
+    with typed nulls from that pinned schema. No ALTER, no rewrite, no
+    downtime; on Delta this is mergeSchema=true on write."""
     path = _table_path(root, name)
     with _table_lock(path):
-        if _exists(path):
-            current = read_table_evolved(spark, root, name).schema
-            for field in current.fields:
-                if field.name not in df.columns:
-                    df = df.withColumn(
-                        field.name, F.lit(None).cast(field.dataType)
-                    )
+        m = _manifest_read(path)
+        for field in _pinned_schema(m).fields if m is not None else ():
+            if field.name not in df.columns:
+                df = df.withColumn(
+                    field.name, F.lit(None).cast(field.dataType)
+                )
         _append_data(df, path)
-
-
-def read_table_evolved(spark: SparkSession, root: str, name: str) -> DataFrame:
-    """Read a table whose files may predate newer columns (mergeSchema)."""
-    path = _table_path(root, name)
-    m = _manifest_read(path)
-    if m is not None:
-        dirs = _data_dirs(path, m)
-        if len(dirs) > 1 and any(_has_hive_entries(d) for d in dirs):
-            return _union_dirs(spark, dirs, merge_schema=True)
-        return spark.read.option("mergeSchema", "true").parquet(*dirs)
-    return spark.read.option("mergeSchema", "true").parquet(path)
 
 
 def table_ddl(
@@ -2677,44 +2201,14 @@ def integrity_report(
     return out
 
 
-def schema_diff(
-    spark: SparkSession, root: str, name: str, batch: DataFrame
-) -> dict[str, list[str]]:
-    """Schema-drift preflight for K8 evolution: what would change if
-    ``batch`` were appended to table ``name``? Returns {'added': [...],
-    'missing': [...], 'retyped': ['col: old -> new', ...]} against the
-    table's current (merged) schema. ``evolve_append`` applies additions
-    and pads misses silently by design; this is the observability hook a
-    pipeline calls first when drift should page a human instead — the
-    lake twin of the reference's isColumnExist probe
-    (/root/reference/db.go:1688-1708) surfaced as a report instead of an
-    auto-ALTER."""
-    path = _table_path(root, name)
-    if not _exists(path):
-        return {"added": sorted(batch.columns), "missing": [], "retyped": []}
-    current = {
-        f.name: f.dataType for f in read_table_evolved(spark, root, name).schema.fields
-        if f.name != _BUCKET_COL
-    }
-    incoming = {f.name: f.dataType for f in batch.schema.fields}
-    return {
-        "added": sorted(set(incoming) - set(current)),
-        "missing": sorted(set(current) - set(incoming)),
-        "retyped": sorted(
-            f"{c}: {current[c].simpleString()} -> {incoming[c].simpleString()}"
-            for c in set(current) & set(incoming)
-            if current[c] != incoming[c]
-        ),
-    }
-
-
 def table_health(root: str) -> list[dict]:
     """File-layout health report per table: file count, total bytes, mean
     file size, and retained version count — the numbers that decide when
     to run ``compact`` (streaming ingest's many tiny appends are the
     classic small-file problem; a mean file size far below the HDFS/S3
     sweet spot means scans are paying per-file open cost). Pure local
-    metadata walk — no Spark job, safe to run from a cron."""
+    metadata walk — no Spark job, safe to run from a cron. Directories
+    without a manifest hold no table and are skipped."""
     out = []
     if not os.path.isdir(root):
         return out
@@ -2723,9 +2217,10 @@ def table_health(root: str) -> list[dict]:
         if name.startswith((".", "_")) or not os.path.isdir(path):
             continue
         m = _manifest_read(path)
-        roots = _data_dirs(path, m) if m is not None else [path]
+        if m is None:
+            continue
         n_files, n_bytes = 0, 0
-        for r in roots:
+        for r in _data_dirs(path, m):
             for dirpath, _, files in os.walk(r):
                 for f in files:
                     if f.endswith(".parquet"):
@@ -2738,7 +2233,7 @@ def table_health(root: str) -> list[dict]:
                             pass
         if n_files == 0:
             continue
-        n_entries = len(m["data"]) if m is not None else 0
+        n_entries = len(m["data"])
         # count history through the STORAGE seam — an os.listdir here
         # would always see 0 on a non-POSIX backend (silencing the
         # lock-free needs_vacuum flag this report exists to raise) and
@@ -2751,11 +2246,7 @@ def table_health(root: str) -> list[dict]:
         n_versions = len(_version_paths(path))
         # bucketed upsert manifests hold exactly `buckets` entries by
         # construction — growth-by-append only afflicts append manifests
-        bucketed = (
-            m is not None
-            and "buckets" in m
-            and all(k.isdigit() for k in m["data"])
-        )
+        bucketed = "buckets" in m and all(k.isdigit() for k in m["data"])
         # probe-pruning status for KEYED append tables: the idempotent
         # writer's anti-join probe stays O(batch) only while min/max
         # stats on the prune column actually skip files.
@@ -2774,7 +2265,7 @@ def table_health(root: str) -> list[dict]:
         probe_pruning = None
         if name in TABLE_KEYS and not bucketed:
             pc = _prune_col(TABLE_KEYS[name])
-            lay = (m.get("layout") or {}) if m is not None else {}
+            lay = m.get("layout") or {}
             laid = (
                 lay.get("range_by")
                 or lay.get("cluster_by")
@@ -2783,7 +2274,7 @@ def table_health(root: str) -> list[dict]:
             )
             covered = pc in laid
             base_rewritten = covered and lay.get("by", "compact") == "compact"
-            has_all = m is not None and "all" in m["data"]
+            has_all = "all" in m["data"]
             if not has_all:
                 probe_pruning = "natural"
             elif base_rewritten:

@@ -417,8 +417,6 @@ TABLE_KEYS: dict[str, list[str]] = {
     # addr_key = coalesce(address, pub_key): the table holds BOTH
     # address rows and reputer-bundle pubkey-only rows (address NULL,
     # process_tx.go:202/252), and natural keys must be non-null.
-    # Pre-upgrade warehouses (key was ['address']) lack the column —
-    # KEY_DERIVATIONS below is the read-side migration path.
     "addresses": ["addr_key"],
     "worker_registrations": ["message_height", "message_id", "topic_id"],
     "transfers": ["message_height", "message_id"],
@@ -444,21 +442,6 @@ TABLE_KEYS: dict[str, list[str]] = {
     "topic_forecasting_scores": ["topic_id", "height_tx"],
     "ecosystem_token_mint": ["height_tx", "block_height"],
     "reward_current_block_emission": ["height_tx", "block_height"],
-}
-
-
-# Read-side derivations for natural-key columns that were introduced
-# AFTER their table first shipped (the online-migration analog of the
-# reference's addColumn, db.go:1699-1708). A warehouse written before the
-# key change lacks the column entirely — and a half-migrated plain dir can
-# sample the NEW schema and read the old files' key as NULL — so probes
-# must derive the key from the source columns instead of failing with
-# AnalysisException (or worse: NULL keys silently vacate the idempotent
-# anti-join and every replayed row re-admits). Expressions are ANSI SQL
-# over the table's own columns; warehouse.existing_keys_in_range applies
-# them as coalesce(key, derivation) so mixed old/new file sets heal too.
-KEY_DERIVATIONS: dict[str, dict[str, str]] = {
-    "addresses": {"addr_key": "coalesce(address, pub_key)"},
 }
 
 

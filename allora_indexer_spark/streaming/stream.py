@@ -591,20 +591,17 @@ def _check_ledger_encoding(ledger_manifest: dict, ledger_dir: str) -> None:
             "content_key encoding — replayed batches would never match "
             "them and re-append already-applied partials (silent double "
             "counting). Rebuild the rollup + ledger + checkpoint together "
-            "from the feed, or, if this store is KNOWN to be written by "
-            "the current encoding (it merely predates the marker), stamp "
-            "it with stamp_ledger_encoding()."
+            "from the feed."
         )
 
 
 def _seed_ledger(empty_df: DataFrame, ledger_dir: str) -> None:
     """Create a brand-new ledger as ONE atomic manifest publish that
     already carries the encoding marker — seed data, pinned schema, and
-    CONTENT_KEY_ENCODING flip together. (The first cut seeded in three
-    steps — empty write, compact, stamp — and a crash between the last
-    two left a marker-less manifest that hard-failed every retry; the
-    shared warehouse.seed_manifest_store is that lesson made mechanism,
-    and the near-dup sig/pairs stores seed through the same one.)"""
+    CONTENT_KEY_ENCODING flip together through
+    warehouse.seed_manifest_store (as the near-dup sig/pairs stores are
+    seeded), so no crash can leave a ledger manifest without its
+    marker."""
     from allora_indexer_spark.plans.warehouse import seed_manifest_store
 
     seed_manifest_store(
@@ -612,36 +609,6 @@ def _seed_ledger(empty_df: DataFrame, ledger_dir: str) -> None:
         ledger_dir,
         extra={"content_key_encoding": CONTENT_KEY_ENCODING},
     )
-
-
-def stamp_ledger_encoding(ledger_dir: str) -> None:
-    """Operator escape hatch: stamp the CURRENT content_key encoding into
-    an existing ledger manifest (a store that predates the marker but is
-    known to be written by the current encoding). New ledgers are stamped
-    atomically at seed time; this is only for adopting pre-marker stores."""
-    from allora_indexer_spark.plans.warehouse import (
-        _manifest_read,
-        _new_version_id,
-        _publish_manifest,
-        _retry_cas,
-        _table_lock,
-    )
-
-    def once() -> None:
-        m = _manifest_read(ledger_dir)
-        if m is None:
-            raise FileNotFoundError(
-                f"{ledger_dir}: not a manifest table — pre-manifest plain "
-                "ledgers cannot be adopted (their rollup's encoding is "
-                "unknowable); rebuild rollup + ledger + checkpoint"
-            )
-        mm = dict(m)
-        mm["version"] = _new_version_id()
-        mm["content_key_encoding"] = CONTENT_KEY_ENCODING
-        _publish_manifest(ledger_dir, mm, expect=m["version"])
-
-    with _table_lock(ledger_dir):
-        _retry_cas(once)
 
 
 def start_continuous_rollup(
@@ -678,8 +645,8 @@ def start_continuous_rollup(
     (warehouse.py) folds old partials into one row per window out-of-band.
 
     Scale: the ledger anti-join is a shuffle join pruned to the batch's
-    key range (with the ledger written by ``write_range_sorted``, that
-    range filter becomes file-level skipping), and the duplicate-partial
+    key range (with the ledger compacted ``range_by`` the key, that range
+    filter becomes file-level skipping), and the duplicate-partial
     probe reads only this batch's windows — per-batch cost tracks batch
     size, not total history. In the full pipeline the events fact table
     plays the ledger's role, so the extra storage is only the standalone
@@ -691,17 +658,12 @@ def start_continuous_rollup(
     ledger_dir = rollup_dir + "_keys"
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        # the LEDGER must be a manifest table from its first row: a plain
-        # parquet append can crash with a SUBSET of the batch's keys
-        # visible, and a partially-visible ledger changes the retry's
+        # the LEDGER's appends are atomic version flips (all keys or
+        # none): a partially-visible ledger would change the retry's
         # novel set — its content_key then differs and the remainder
-        # double-counts into the rollup. A manifest append is an atomic
-        # version flip (all keys or none), which closes that window; a
-        # pre-existing PLAIN ledger fails loudly below (its rollup's
-        # content_key encoding is unknowable — see CONTENT_KEY_ENCODING).
-        # (The rollup dir needs no such guard: its rows are
-        # per-window and the (window_start, content_key) anti-join
-        # already absorbs a partially-visible partial append.)
+        # double-counts into the rollup. A directory at the ledger path
+        # with no manifest fails loudly below (its rollup's content_key
+        # encoding is unknowable — see CONTENT_KEY_ENCODING).
         ledger_manifest = wh._manifest_read(ledger_dir)
         if ledger_manifest is None:
             if os.path.isdir(ledger_dir):
@@ -709,8 +671,7 @@ def start_continuous_rollup(
                 # (commit "streaming-store atomicity") and the encoding
                 # marker — whether its rollup's content keys match the
                 # current encoding is unknowable, and guessing wrong
-                # double-counts. Same loud contract as the legacy
-                # heavy-hitter store with no meta file.
+                # double-counts.
                 raise RuntimeError(
                     f"{ledger_dir}: pre-manifest plain ledger — its "
                     "rollup's content_key encoding is unknowable (see "
@@ -719,26 +680,6 @@ def start_continuous_rollup(
                 )
             # one atomic publish: seed data + schema + encoding marker
             _seed_ledger(batch_df.select(key_col).limit(0), ledger_dir)
-        elif (
-            ledger_manifest.get("content_key_encoding") is None
-            and wh.read_dir(spark, ledger_dir).isEmpty()
-        ):
-            # marker-less but EMPTY manifest ledger: a pre-marker seed
-            # (or its crash remnant) that never recorded a key under ANY
-            # encoding — stamping is provably safe, and the atomic seed
-            # above means no new ones can arise. NON-empty marker-less
-            # ledgers still fail below, and genuinely cannot be
-            # auto-adopted: manifest seeding predates the v2 encoding by
-            # several commits (seeding landed with the v1 delimiter-
-            # joined content_key; element-wise v2 and the marker each
-            # shipped later), so a marker-less store's rollup may be
-            # fingerprinted under EITHER encoding and the values are
-            # indistinguishable (both are xxhash64 longs). Guessing
-            # wrong silently double-counts; the error names the operator
-            # decision: stamp_ledger_encoding() for stores known to be
-            # written by v2-era code, rebuild for v1-era or unknown ones
-            # (see README "Upgrading a continuous rollup").
-            stamp_ledger_encoding(ledger_dir)
         else:
             _check_ledger_encoding(ledger_manifest, ledger_dir)
         # null-key rows are quarantined unconditionally (they could not be
@@ -755,16 +696,13 @@ def start_continuous_rollup(
         novel = base
         part_cached = None
         try:
-            if os.path.isdir(ledger_dir):
-                lo, hi = base.agg(
-                    F.min(key_col), F.max(key_col)
-                ).collect()[0]
-                if lo is None:
-                    return  # batch had no keyed rows at all
-                seen = wh.read_dir(spark, ledger_dir).filter(
-                    F.col(key_col).between(lo, hi)
-                )
-                novel = base.join(seen, [key_col], "left_anti").persist()
+            lo, hi = base.agg(F.min(key_col), F.max(key_col)).collect()[0]
+            if lo is None:
+                return  # batch had no keyed rows at all
+            seen = wh.read_dir(spark, ledger_dir).filter(
+                F.col(key_col).between(lo, hi)
+            )
+            novel = base.join(seen, [key_col], "left_anti").persist()
             # each partial carries a content hash of the exact key set it
             # aggregates; appending is anti-joined on (window, content
             # hash), so a retried batch (crash between the two writes
@@ -795,7 +733,7 @@ def start_continuous_rollup(
                     "sum_value",
                 )
             )
-            if os.path.isdir(rollup_dir):
+            if wh._exists(rollup_dir):
                 part_cached = part.persist()
                 wlo, whi = part_cached.agg(
                     F.min("window_start"), F.max("window_start")
@@ -814,9 +752,6 @@ def start_continuous_rollup(
                     part = part_cached.join(
                         done, ["window_start", "content_key"], "left_anti"
                     )
-            # manifest-aware: the docstring's out-of-band compact()
-            # converts these dirs to the manifest layout, after which a
-            # root append would be invisible to the reads above
             wh.append_dir(part, rollup_dir)
             wh.append_dir(novel.select(key_col), ledger_dir)
         finally:
@@ -1004,45 +939,11 @@ def start_incremental_near_dup(
       fold), and when the accumulated fold tiers exceed the manifest
       bound a full bucket-clustered ``compact()`` resets them — the LSM
       minor/major split, so per-batch overhead stays flat over an
-      unbounded run. Reads and appends are manifest-aware, so the stream
-      keeps working across compactions; a pre-manifest hive-partitioned
-      store (the layout an earlier revision wrote) is converted on the
-      first batch, re-padding bucket values that hive partition-value
-      inference mistyped.
+      unbounded run. Reads and appends go through the stores'
+      manifests, so the stream keeps working across compactions.
     """
 
     from allora_indexer_spark.plans import warehouse as wh
-
-    def _convert_legacy_hive_store() -> None:
-        """One-time repair+conversion of a pre-manifest sig store laid
-        out as bucket=XX hive dirs: flat manifest appends beside hive
-        dirs would make the root unreadable (conflicting directory
-        structures), so convert BEFORE the first append. The transform
-        re-pads the bucket column: hive inference types an all-digit
-        root as int ('04' -> 4), and the 2-hex-char format makes the
-        zero-padded string the exact inverse. The select list is built
-        from the STORE's own columns (df.columns inside the transform),
-        never the current batch's — projecting to batch columns would
-        silently drop any column a past pipeline revision persisted and
-        raise on one the store predates."""
-        if wh._manifest_read(sig_dir) is not None:
-            return
-        if not os.path.isdir(sig_dir) or not any(
-            e.startswith("bucket=") for e in os.listdir(sig_dir)
-        ):
-            return
-        wh.compact(
-            spark,
-            sig_dir,
-            target_partitions=1,
-            cluster_by=["bucket"],
-            transform=lambda df: df.select(
-                *[c for c in df.columns if c != "bucket"],
-                F.lpad(F.col("bucket").cast("string"), 2, "0").alias(
-                    "bucket"
-                ),
-            ),
-        )
 
     source = (
         spark.readStream.schema("doc_id LONG, text STRING")
@@ -1059,7 +960,6 @@ def start_incremental_near_dup(
             sig_dir,
             threshold,
             compact_every,
-            convert_legacy=_convert_legacy_hive_store,
         )
 
     return (
@@ -1078,7 +978,6 @@ def _merge_near_dup_batch(
     sig_dir: str,
     threshold: float,
     compact_every: int | None,
-    convert_legacy=None,
     signature_fn=None,
     verify_fn=None,
     carry_cols: tuple[str, ...] = ("s",),
@@ -1135,20 +1034,13 @@ def _merge_near_dup_batch(
     bands = cached
     pairs_cached = None
     try:
-        if convert_legacy is not None:
-            convert_legacy()
-        # the signature store must be a manifest table from its first
-        # row (same rule as the rollup ledger): a plain parquet append
-        # can crash with a SUBSET of a doc's band rows visible, and the
-        # retry's doc_id anti-join then drops the WHOLE doc — its
-        # missing bands are never written, and every future near-dup
-        # colliding only on those bands is silently never emitted. A
-        # manifest append is an atomic version flip (all bands or none).
+        # the signature store's appends are atomic version flips (all of
+        # a doc's bands or none): a partially-visible doc would be
+        # dropped WHOLE by the retry's doc_id anti-join, and its missing
+        # bands never written. The store is seeded with its recorded
+        # layout in one atomic publish (same mechanism as the rollup
+        # ledger), so automatic folds keep it bucket-clustered.
         if wh._manifest_read(sig_dir) is None:
-            # one atomic publish (schema + recorded layout together) —
-            # the exact mechanism the rollup ledger seeds through; the
-            # old two-step (plain empty append, then compact) left a
-            # crash window where a lock-free rival raced a plain dir
             wh.seed_manifest_store(
                 cached.limit(0),
                 sig_dir,
@@ -1160,21 +1052,18 @@ def _merge_near_dup_batch(
                 extra=seed_extra,
             )
         store = None
-        if os.path.isdir(sig_dir):
-            buckets = [
-                r[0]
-                for r in bands.select("bucket").distinct().collect()
-            ]  # bounded: <= 256 two-hex-char values
-            if buckets:
-                store = wh.read_dir(spark, sig_dir).filter(
-                    F.col("bucket").isin(buckets)
-                )
-                # drop re-delivered docs entirely (they are not new)
-                known = store.select("doc_id").distinct()
-                bands = bands.join(known, ["doc_id"], "left_anti")
-        # allowMissingColumns both ways: a converted legacy store may
-        # carry columns a past pipeline revision persisted (the
-        # lossless conversion keeps them), and the batch may carry
+        buckets = [
+            r[0] for r in bands.select("bucket").distinct().collect()
+        ]  # bounded: <= 256 two-hex-char values
+        if buckets:
+            store = wh.read_dir(spark, sig_dir).filter(
+                F.col("bucket").isin(buckets)
+            )
+            # drop re-delivered docs entirely (they are not new)
+            known = store.select("doc_id").distinct()
+            bands = bands.join(known, ["doc_id"], "left_anti")
+        # allowMissingColumns both ways: the store may carry columns a
+        # past pipeline revision persisted, and the batch may carry
         # columns the store predates — either side pads with nulls;
         # the candidate join only touches (band_id, bh, doc_id, s)
         other = (
@@ -1199,14 +1088,9 @@ def _merge_near_dup_batch(
             .dropDuplicates(["doc_a", "doc_b"])
         )
         pairs = verify_fn(cand)
-        # manifest-seed the pairs store too: pairs appends are per-pair
-        # idempotent (the (doc_a, doc_b) anti-join), so partial
-        # visibility self-heals — but a PLAIN pairs dir accumulates one
-        # file set per batch forever with no maintenance at all (the
-        # per-batch 'done' probe then lists an O(#batches) file set).
-        # With a manifest + recorded range_by layout, _append_data's
-        # auto-fold/escalation keep it bounded and the doc_a range probe
-        # file-prunes.
+        # seed the pairs store with a recorded range_by layout, so
+        # _append_data's auto-fold/escalation keep it bounded AND
+        # doc_a-clustered: the per-batch doc_a range probe file-prunes.
         if wh._manifest_read(pairs_dir) is None:
             wh.seed_manifest_store(
                 pairs.limit(0),
@@ -1217,21 +1101,18 @@ def _merge_near_dup_batch(
                     "by": "compact",
                 },
             )
-        if os.path.isdir(pairs_dir):
-            pairs = pairs_cached = pairs.persist()
-            lo, hi = pairs.agg(
-                F.min("doc_a"), F.max("doc_a")
-            ).collect()[0]
-            if lo is not None:
-                done = (
-                    wh.read_dir(spark, pairs_dir)
-                    .filter(F.col("doc_a").between(lo, hi))
-                    .select("doc_a", "doc_b")
-                )
-                pairs = pairs.join(done, ["doc_a", "doc_b"], "left_anti")
-        # manifest-aware: after a compaction the live file set is
-        # manifest-listed, and a root append would be invisible to
-        # the manifest reads above. The store keeps `bucket` as a
+        pairs = pairs_cached = pairs.persist()
+        lo, hi = pairs.agg(
+            F.min("doc_a"), F.max("doc_a")
+        ).collect()[0]
+        if lo is not None:
+            done = (
+                wh.read_dir(spark, pairs_dir)
+                .filter(F.col("doc_a").between(lo, hi))
+                .select("doc_a", "doc_b")
+            )
+            pairs = pairs.join(done, ["doc_a", "doc_b"], "left_anti")
+        # The store keeps `bucket` as a
         # DATA column (cluster_by, never hive partition_by): hive
         # partition-value inference would silently retype an
         # all-digit hex root ('04' -> int 4), breaking the probe's
@@ -1247,36 +1128,22 @@ def _merge_near_dup_batch(
             # fold the per-batch file sets back down — incremental
             # (O(deltas since last fold), the base signature set is
             # carried by reference, which matters when the store
-            # holds a corpus-sized signature history); the first
-            # cadence hit converts the plain dir with one full
-            # compact. Same atomic-flip machinery as the warehouse
-            # tables, so a crash mid-fold leaves the previous store
-            # intact.
-            if not wh.fold_appends(
-                spark, sig_dir, cluster_by=["bucket"]
-            ):
+            # holds a corpus-sized signature history). Same atomic-flip
+            # machinery as the warehouse tables, so a crash mid-fold
+            # leaves the previous store intact.
+            wh.fold_appends(spark, sig_dir, cluster_by=["bucket"])
+            m = wh._manifest_read(sig_dir)
+            if len(m["data"]) > wh.APPEND_MANIFEST_WARN:
+                # fold tiers accumulated past the manifest bound: run
+                # the occasional FULL compact that resets them (the LSM
+                # major compaction — acting on the same signal
+                # table_health reports)
                 wh.compact(
                     spark,
                     sig_dir,
-                    target_partitions=1,
+                    target_partitions=max(1, len(m["data"]) // 8),
                     cluster_by=["bucket"],
                 )
-            else:
-                m = wh._manifest_read(sig_dir)
-                if (
-                    m is not None
-                    and len(m["data"]) > wh.APPEND_MANIFEST_WARN
-                ):
-                    # fold tiers accumulated past the manifest bound:
-                    # run the occasional FULL compact that resets
-                    # them (the LSM major compaction — acting on the
-                    # same signal table_health reports)
-                    wh.compact(
-                        spark,
-                        sig_dir,
-                        target_partitions=max(1, len(m["data"]) // 8),
-                        cluster_by=["bucket"],
-                    )
     finally:
         cached.unpersist()
         if pairs_cached is not None:
@@ -1490,38 +1357,6 @@ def start_incremental_hash_near_dup(
 # ---------------------------------------------------------------------------
 
 
-def _migrate_legacy_hh_store(spark: SparkSession, store_dir: str) -> None:
-    """One-time migration of a pre-manifest heavy-hitter store (symlink-flip
-    layout: the store path is a symlink to a version dir holding the
-    (token, cnt) parquet plus ``_hh_meta.json`` with n_total/last_batch)
-    onto the manifest layout. Without this, the first post-upgrade
-    micro-batch would read no manifest, reset n_total/last_batch to
-    defaults, and merge without the accumulated counts — silently
-    breaking both the no-false-negative superset guarantee and replay
-    idempotence (batch ids below the lost high-water mark would re-merge
-    and double-count). Delegates to the warehouse's shared staged
-    migration, parameterized on the store's meta file, so counts and the
-    batch watermark ride into the manifest in the same crash-safe swap; a
-    legacy store MISSING its meta file raises instead of resetting."""
-
-    from allora_indexer_spark.plans.warehouse import _migrate_symlink_table
-
-    if os.path.islink(store_dir) and os.path.exists(store_dir):
-        meta = os.path.join(os.path.realpath(store_dir), "_hh_meta.json")
-        if not os.path.isfile(meta):
-            raise RuntimeError(
-                f"{store_dir}: legacy heavy-hitter store has no "
-                "_hh_meta.json — refusing to merge (counts and the "
-                "batch_id high-water mark would silently reset)"
-            )
-    _migrate_symlink_table(
-        spark,
-        store_dir,
-        meta_file="_hh_meta.json",
-        meta_keys=("n_total", "last_batch"),
-    )
-
-
 def _merge_heavy_hitter_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -1705,7 +1540,6 @@ def _merge_heavy_hitter_batch(
             _gc_after_publish(store_dir, keep={verdir})
 
         with _table_lock(store_dir):
-            _migrate_legacy_hh_store(spark, store_dir)
             _retry_cas(merge_once)
     finally:
         counts.unpersist()
@@ -1760,20 +1594,8 @@ def streaming_frequent_tokens(
     from allora_indexer_spark.plans.warehouse import (
         _manifest_read,
         _read_manifest_data,
-        _table_lock,
     )
 
-
-    if os.path.islink(store_dir) or not os.path.exists(store_dir):
-        # Legacy symlink store, or a migration that crashed mid-swap
-        # (path absent, complete staging beside it): the one-time
-        # migration/resume MUTATES the store — take the writer lock so it
-        # cannot interleave with a concurrent merge's own (locked)
-        # migration. A store that simply never existed no-ops here and
-        # falls through to the FileNotFoundError below. The steady-state
-        # read path never locks.
-        with _table_lock(store_dir):
-            _migrate_legacy_hh_store(spark, store_dir)
     manifest = _manifest_read(store_dir)
     if manifest is None:
         raise FileNotFoundError(store_dir)

@@ -62,9 +62,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    # manifest-aware: a source that has been adopted into the warehouse
-    # manifest layout (appends/compactions — e.g. a production embeddings
-    # corpus) keeps its files under _versions/, which a plain parquet
+    # manifest-aware: a source written by the engine's own writers (a
+    # manifest table — e.g. a production embeddings corpus grown by
+    # appends) keeps its files under _versions/, which a plain parquet
     # read cannot see. The manifest probe is a driver-local JSON read and
     # falls back to the plain parquet read — pushdown on plain sources is
     # untouched. The internal _kb bucket column of a bucket-converted

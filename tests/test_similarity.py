@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from allora_indexer_spark.plans import warehouse
 from allora_indexer_spark.registry import all_queries
 
 
@@ -67,8 +68,12 @@ def test_persisted_ivf_index_matches_inline_and_prunes_partitions(
     emb = load_table(spark, sf_dir, "embeddings")
     idx = str(tmp_path / "ivf")
     ann_index.build_ivf_index(spark, emb, idx)
+    corpus_dir = os.path.join(idx, "corpus")
+    m = warehouse._manifest_read(corpus_dir)
     assert any(
-        d.startswith("cell=") for d in os.listdir(os.path.join(idx, "corpus"))
+        d.startswith("cell=")
+        for r in warehouse._data_dirs(corpus_dir, m)
+        for d in os.listdir(r)
     ), "corpus is not cell-partitioned"
 
     queries = emb.filter(F.col("vec_id") < 5).select(
@@ -250,13 +255,13 @@ def test_ivf_incremental_append(spark, sf_dir, tmp_path):
     )
     import os
 
-    corpus = spark.read.parquet(os.path.join(idx, "corpus"))
-    assert corpus.count() == emb.count()
+    corpus_dir = os.path.join(idx, "corpus")
+    assert warehouse.read_dir(spark, corpus_dir).count() == emb.count()
     # replay: appending the same batch again must add nothing
     ann_index.append_to_ivf_index(
         spark, emb.filter(F.col("vec_id") >= 400), idx
     )
-    assert corpus.count() == emb.count()
+    assert warehouse.read_dir(spark, corpus_dir).count() == emb.count()
 
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -341,7 +346,7 @@ def test_ivf_append_dedups_within_batch(spark, sf_dir, tmp_path):
     ann_index.append_to_ivf_index(spark, dup_batch, idx)
     import os
 
-    corpus = spark.read.parquet(os.path.join(idx, "corpus"))
+    corpus = warehouse.read_dir(spark, os.path.join(idx, "corpus"))
     assert corpus.count() == emb.count()
     assert (
         corpus.groupBy("vec_id").count().filter("count > 1").count() == 0
@@ -384,13 +389,12 @@ def test_manifest_corpus_fingerprint_is_version_keyed(spark, tmp_path, monkeypat
     from pyspark.sql import functions as F
 
     from allora_indexer_spark.operators import ann_index
-    from allora_indexer_spark.plans import warehouse
 
     sfd = str(tmp_path / "sf")
     os.makedirs(sfd)
     corpus = os.path.join(sfd, "embeddings.parquet")
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    emb.write.parquet(corpus)
+    warehouse.append_dir(emb, corpus)
     warehouse.compact(spark, corpus, target_partitions=1)
     assert warehouse._manifest_read(corpus) is not None
 

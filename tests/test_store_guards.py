@@ -9,10 +9,6 @@
 3. The heavy-hitter reset guard records EMPTY in-window batches too, and
    treats a replayed batch 0 with no recorded fingerprint on a non-empty
    store as a suspected checkpoint reset.
-4. Read-side natural-key migration: a pre-upgrade `addresses` table
-   without `addr_key` still dedups idempotently via the derived key
-   (schemas.KEY_DERIVATIONS), instead of AnalysisException or NULL-key
-   re-admission.
 """
 
 from __future__ import annotations
@@ -106,19 +102,23 @@ def test_rollup_rejects_mismatched_or_missing_encoding(spark, tmp_path):
         q.stop()
         raise RuntimeError(q.exception() or "stream succeeded unexpectedly")
 
-    # the operator escape hatch re-adopts a store KNOWN to be current
-    stream.stamp_ledger_encoding(ledger)
+    # the recovery the error names: rebuild rollup + ledger + checkpoint
+    # together from the feed
+    import shutil
+
+    for d in (rollup, ledger, str(tmp_path / "ckpt")):
+        shutil.rmtree(d)
+    _run_rollup(spark, feed, rollup, str(tmp_path / "ckpt"))
     assert (
         _manifest_read(ledger)["content_key_encoding"]
         == stream.CONTENT_KEY_ENCODING
     )
-    _run_rollup(spark, feed, rollup, str(tmp_path / "ckpt2"))
     total = (
         stream.read_rollup(spark, rollup)
         .agg(F.sum("n_events"))
         .collect()[0][0]
     )
-    assert total == 20  # replay after re-stamp did not double-count
+    assert total == 20
 
 
 def test_rollup_rejects_pre_manifest_plain_ledger(spark, tmp_path):
@@ -229,56 +229,6 @@ def test_heavy_hitter_batch0_without_fp_is_suspect(spark, tmp_path):
     assert _manifest_read(store)["n_total"] == before
 
 
-def test_legacy_addresses_without_addr_key_dedups_via_derivation(
-    spark, tmp_path
-):
-    """Pre-upgrade addresses table (natural key was ['address'], no
-    addr_key column): the idempotent writer must derive addr_key =
-    coalesce(address, pub_key) on the probe side and anti-join correctly,
-    not raise AnalysisException or re-admit every row."""
-    root = str(tmp_path / "wh")
-    legacy = spark.createDataFrame(
-        [
-            ("allo1aaa", None, 5),
-            (None, "pubkey-b", 6),
-        ],
-        "address string, pub_key string, height long",
-    )
-    # legacy layout: plain parquet dir WITHOUT addr_key
-    legacy.write.parquet(f"{root}/addresses")
-
-    batch = spark.createDataFrame(
-        [
-            ("allo1aaa", None, 7),   # duplicate of legacy row 1
-            (None, "pubkey-b", 8),   # duplicate of legacy row 2
-            ("allo1ccc", None, 9),   # genuinely new
-        ],
-        "address string, pub_key string, height long",
-    ).withColumn("addr_key", F.coalesce("address", "pub_key"))
-
-    warehouse.write_insert_if_absent(spark, batch, root, "addresses")
-    # mergeSchema: the mixed old/new plain dir would otherwise sample ONE
-    # footer's schema nondeterministically — this read is test plumbing,
-    # the probe path under test derives the key itself
-    got = spark.read.option("mergeSchema", "true").parquet(
-        f"{root}/addresses"
-    )
-    # the two legacy-duplicate rows were anti-joined away
-    keys = sorted(
-        r[0]
-        for r in got.select(
-            F.coalesce("addr_key", "address", "pub_key")
-        ).collect()
-    )
-    assert keys == ["allo1aaa", "allo1ccc", "pubkey-b"]
-
-    # replay of the same batch is still a no-op (post-migration mixed
-    # old/new file set: old files read addr_key as NULL under the merged
-    # schema — the coalesce-over-derivation heals that too)
-    warehouse.write_insert_if_absent(spark, batch, root, "addresses")
-    assert got.count() == 3
-
-
 def test_fk_levels_empty_and_seed_is_atomic(spark, tmp_path):
     """Review fixes: an empty tables dict is a no-op (not max()-on-empty);
     the ledger seed is ONE atomic publish already carrying the encoding
@@ -299,40 +249,6 @@ def test_fk_levels_empty_and_seed_is_atomic(spark, tmp_path):
     first = STORAGE.read_history(versions[-1][0])
     assert first["content_key_encoding"] == stream.CONTENT_KEY_ENCODING
     assert m["content_key_encoding"] == stream.CONTENT_KEY_ENCODING
-
-
-def test_empty_markerless_ledger_is_auto_stamped(spark, tmp_path):
-    """A marker-less manifest ledger with ZERO rows (a pre-marker seed or
-    its crash remnant) never recorded a key under any encoding — the next
-    batch adopts it by stamping instead of hard-failing."""
-    from allora_indexer_spark.plans.warehouse import (
-        _new_version_id,
-        _publish_manifest,
-    )
-
-    feed = str(tmp_path / "feed")
-    rollup = str(tmp_path / "rollup")
-    ledger = rollup + "_keys"
-    # simulate the r11 crash remnant: seed, then strip the marker
-    stream._seed_ledger(
-        spark.createDataFrame([], "event_id LONG"), ledger
-    )
-    m = _manifest_read(ledger)
-    stripped = {k: v for k, v in m.items() if k != "content_key_encoding"}
-    stripped["version"] = _new_version_id()
-    _publish_manifest(ledger, stripped, expect=m["version"])
-    assert _manifest_read(ledger).get("content_key_encoding") is None
-
-    _mk_feed(spark, 0, 10).write.mode("append").parquet(feed)
-    _run_rollup(spark, feed, rollup, str(tmp_path / "ckpt"))
-    assert (
-        _manifest_read(ledger)["content_key_encoding"]
-        == stream.CONTENT_KEY_ENCODING
-    )
-    total = (
-        stream.read_rollup(spark, rollup).agg(F.sum("n_events")).collect()[0][0]
-    )
-    assert total == 10
 
 
 def test_heavy_hitter_one_batch_store_retry_is_benign(spark, tmp_path):
@@ -360,22 +276,20 @@ def test_heavy_hitter_one_batch_store_retry_is_benign(spark, tmp_path):
     assert _manifest_read(store)["n_total"] == 4
 
 
-def test_load_table_reads_manifest_layout_sources(spark, tmp_path):
-    """tables.load_table must see a source that was adopted into the
-    manifest layout (plain reads see only underscore entries) — the whole
-    registry, not just the index builder, stays manifest-aware."""
+def test_load_table_reads_manifest_layout_sources(spark, tmp_path, sf_dir):
+    """tables.load_table must see a source written by the engine's own
+    writers, i.e. a manifest table (plain reads see only underscore
+    entries) — the whole registry, not just the index builder, reads
+    both plain and manifest sources."""
     import shutil
 
     from allora_indexer_spark.tables import load_table
 
     sfd = str(tmp_path / "sf")
-    import os
-
-    os.makedirs(sfd)
-    src = "/root/testdata/sf0.001/embeddings.parquet"
+    src = f"{sf_dir}/embeddings.parquet"
     dst = f"{sfd}/embeddings.parquet"
-    spark.read.parquet(src).write.parquet(dst)
-    n_plain = load_table(spark, sfd, "embeddings").count()
+    n_plain = load_table(spark, sf_dir, "embeddings").count()
+    warehouse.append_dir(spark.read.parquet(src), dst)
     warehouse.compact(spark, dst, target_partitions=1)
     assert _manifest_read(dst) is not None
     assert load_table(spark, sfd, "embeddings").count() == n_plain

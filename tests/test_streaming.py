@@ -645,71 +645,6 @@ def test_streaming_heavy_hitters_guarantees_and_replay(spark, tmp_path):
     assert report2 == report
 
 
-def test_heavy_hitter_store_migrates_legacy_symlink_layout(spark, tmp_path):
-    """A pre-manifest heavy-hitter store (symlink to a dir of (token, cnt)
-    parquet + `_hh_meta.json`) must migrate — preserving counts, n_total,
-    and the batch_id high-water mark — before any merge. Otherwise the
-    first post-upgrade batch would silently reset the store: counts gone,
-    replayed batch ids re-merged (double counting), superset guarantee
-    broken."""
-    import json
-    import os
-
-    from allora_indexer_spark.plans.warehouse import _manifest_read
-
-    store = str(tmp_path / "hh_store")
-    verdir = str(tmp_path / ".hh_store__v0")
-    spark.createDataFrame(
-        [("the", 50), ("cat", 30)], "token string, cnt long"
-    ).coalesce(1).write.parquet(verdir)
-    with open(os.path.join(verdir, "_hh_meta.json"), "w") as fh:
-        json.dump({"n_total": 100, "last_batch": 4}, fh)
-    os.symlink(verdir, store)
-
-    support = 0.2
-    replay = spark.createDataFrame(
-        [(1, "the the the the the")], "doc_id long, text string"
-    )
-    # a replayed batch at the legacy high-water mark must be a no-op
-    stream._merge_heavy_hitter_batch(spark, replay, 4, store, support)
-    m = _manifest_read(store)
-    assert m is not None
-    assert m["n_total"] == 100 and m["last_batch"] == 4
-    assert not os.path.islink(store)
-    got = {
-        r["token"]: r["cnt_lb"]
-        for r in stream.streaming_frequent_tokens(
-            spark, store, support
-        ).collect()
-    }
-    assert got == {"the": 50, "cat": 30}
-
-    # a NEW batch merges on top of the migrated counts
-    fresh = spark.createDataFrame(
-        [(2, "the the the the the")], "doc_id long, text string"
-    )
-    stream._merge_heavy_hitter_batch(spark, fresh, 5, store, support)
-    m2 = _manifest_read(store)
-    assert m2["n_total"] == 105 and m2["last_batch"] == 5
-    got = {
-        r["token"]: r["cnt_lb"]
-        for r in stream.streaming_frequent_tokens(
-            spark, store, support
-        ).collect()
-    }
-    assert got["the"] == 55
-
-    # a legacy store MISSING its meta file refuses loudly, never resets
-    store2 = str(tmp_path / "hh2")
-    verdir2 = str(tmp_path / ".hh2__v0")
-    spark.createDataFrame(
-        [("x", 5)], "token string, cnt long"
-    ).write.parquet(verdir2)
-    os.symlink(verdir2, store2)
-    with pytest.raises(RuntimeError, match="_hh_meta"):
-        stream._merge_heavy_hitter_batch(spark, fresh, 0, store2, support)
-
-
 def test_incremental_near_dup_store_compaction_keeps_probing(spark, tmp_path):
     """The signature store stays correct ACROSS compactions: appends and
     probes are manifest-aware, so a batch arriving after a compact() still
@@ -857,95 +792,6 @@ def test_continuous_rollup_survives_compaction(spark, tmp_path):
         )
     }
     assert got == want
-
-
-def test_incremental_near_dup_converts_legacy_hive_store(spark, tmp_path):
-    """Upgrade path: a pre-manifest signature store laid out as bucket=XX
-    hive dirs must convert on the first post-upgrade batch — otherwise
-    flat manifest appends beside hive dirs make the root unreadable and
-    wedge the stream. Conversion must also repair the bucket TYPE: an
-    all-digit hive root is inferred int ('04' -> 4), and the store's
-    2-hex-char format makes zero-padding the exact inverse."""
-    import os
-
-    from allora_indexer_spark.operators.dedup import banded_signatures
-    from allora_indexer_spark.plans import warehouse
-
-    docs_dir = tmp_path / "docs"
-    docs_dir.mkdir()
-    pairs_dir = str(tmp_path / "pairs")
-    sig_dir = str(tmp_path / "sigs")
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    legacy = banded_signatures(
-        spark.createDataFrame([(1, base)], "doc_id LONG, text STRING")
-    ).withColumn("bucket", F.substring("bh", 1, 2))
-    # a column only a PAST pipeline revision persisted: the one-time
-    # conversion must keep it (select list built from the store's own
-    # schema, never projected to the current batch's columns)
-    legacy = legacy.withColumn("legacy_tag", F.lit("v0"))
-    legacy.write.partitionBy("bucket").parquet(sig_dir)
-
-    # post-upgrade batch: a near-dup of the legacy doc must pair via the
-    # CONVERTED store, and the store must be manifest-listed afterwards
-    spark.createDataFrame(
-        [(10, base.replace("kappa", "lambda"))], "doc_id LONG, text STRING"
-    ).coalesce(1).write.parquet(str(docs_dir / "b0"))
-    q = stream.start_incremental_near_dup(
-        spark, str(docs_dir), pairs_dir, sig_dir, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(300)
-    assert warehouse._manifest_read(sig_dir) is not None
-    assert not any(e.startswith("bucket=") for e in os.listdir(sig_dir))
-    pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in warehouse.read_dir(spark, pairs_dir).collect()
-    }
-    assert (1, 10) in pairs, "legacy signatures lost in conversion"
-    store = warehouse.read_dir(spark, sig_dir)
-    assert dict(store.dtypes)["bucket"] == "string"
-    assert "legacy_tag" in store.columns, "conversion dropped a store column"
-    assert {
-        r["legacy_tag"]
-        for r in store.filter("doc_id = 1").select("legacy_tag").collect()
-    } == {"v0"}
-    # a further batch appends + reads cleanly against the converted store
-    spark.createDataFrame(
-        [(20, "one two three four five six seven eight")],
-        "doc_id LONG, text STRING",
-    ).coalesce(1).write.parquet(str(docs_dir / "b1"))
-    q = stream.start_incremental_near_dup(
-        spark, str(docs_dir), pairs_dir, sig_dir, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(300)
-    assert (
-        warehouse.read_dir(spark, sig_dir)
-        .select("doc_id")
-        .distinct()
-        .count()
-        == 3
-    )
-
-    # all-digit legacy root: inference types bucket int; the conversion's
-    # zero-padding restores the exact original hex-pair strings
-    sig2 = str(tmp_path / "sigs2")
-    legacy.withColumn("bucket", F.lit("04")).write.partitionBy(
-        "bucket"
-    ).parquet(sig2)
-    q = stream.start_incremental_near_dup(
-        spark,
-        str(docs_dir),
-        str(tmp_path / "pairs2"),
-        sig2,
-        str(tmp_path / "ckpt2"),
-    )
-    q.awaitTermination(300)
-    s2 = warehouse.read_dir(spark, sig2)
-    assert dict(s2.dtypes)["bucket"] == "string"
-    got = {
-        r["bucket"]
-        for r in s2.filter("doc_id = 1").select("bucket").distinct().collect()
-    }
-    assert got == {"04"}, f"bucket mistyped/mispadded: {got}"
 
 
 def test_incremental_near_dup_tiny_docs_never_grow_store(spark, tmp_path):

@@ -123,12 +123,6 @@ def test_lockfree_concurrent_upserts_no_lost_update(spark, tmp_path, monkeypatch
     flip from wholesale-dropping the first writer's buckets."""
     monkeypatch.setattr(warehouse, "LOCK_MODE", "none")
     root = str(tmp_path / "wh")
-    # seed the manifest table before going concurrent (the one-time
-    # plain->manifest conversion is documented single-writer)
-    warehouse.write_keep_one(
-        spark, _mk_scores(spark, [(0, 0, "inferer", "seed", 1, 0.0)]),
-        root, "scores", _score_order(),
-    )
     errors: list[Exception] = []
 
     def writer(wid: int) -> None:
@@ -157,7 +151,7 @@ def test_lockfree_concurrent_upserts_no_lost_update(spark, tmp_path, monkeypatch
         r["height"]
         for r in warehouse.read_table(spark, root, "scores").collect()
     )
-    assert got == [0] + list(range(101, 105)) + list(range(201, 205)), got
+    assert got == list(range(101, 105)) + list(range(201, 205)), got
 
 
 def test_lockfree_concurrent_inserts_stay_idempotent(spark, tmp_path, monkeypatch):
@@ -176,9 +170,7 @@ def test_lockfree_concurrent_inserts_stay_idempotent(spark, tmp_path, monkeypatc
             F.concat(F.lit("hash"), F.col("id")).alias("block_hash"),
         )
 
-    # seed + convert to manifest layout single-writer
     warehouse.write_insert_if_absent(spark, blocks(0, 10), root, "block_info")
-    warehouse.compact(spark, os.path.join(root, "block_info"), 1)
 
     errors: list[Exception] = []
 
@@ -203,6 +195,113 @@ def test_lockfree_concurrent_inserts_stay_idempotent(spark, tmp_path, monkeypatc
     out = warehouse.read_table(spark, root, "block_info")
     assert out.count() == 45
     assert out.select("height").distinct().count() == 45
+
+
+def _blocks(spark, lo, hi):
+    from pyspark.sql import functions as F
+
+    return spark.range(lo, hi).select(
+        F.col("id").alias("height"),
+        F.concat(F.lit("hash"), F.col("id")).alias("block_hash"),
+    )
+
+
+def test_table_creation_is_a_cas(spark, tmp_path, monkeypatch):
+    """Two writers create the same missing table lock-free: the rival's
+    first publish lands inside the first writer's creation window
+    (injected deterministically through the in-memory backend). The
+    table's first manifest is a CAS against "no manifest", so the loser
+    redoes its probe against the winner's table — both batches' keys land
+    exactly once, and the parent chain holds both versions."""
+    from allora_indexer_spark.plans import storage
+
+    st = storage.InMemoryManifestStorage()
+    monkeypatch.setattr(warehouse, "STORAGE", st)
+    monkeypatch.setattr(warehouse, "LOCK_MODE", "none")
+    root = str(tmp_path / "wh")
+    path = os.path.join(root, "block_info")
+
+    def rival():
+        warehouse.write_insert_if_absent(
+            spark, _blocks(spark, 4, 10), root, "block_info"
+        )
+
+    st.interleave = rival
+    warehouse.write_insert_if_absent(
+        spark, _blocks(spark, 0, 6), root, "block_info"
+    )
+    heights = sorted(
+        r["height"]
+        for r in warehouse.read_table(spark, root, "block_info").collect()
+    )
+    assert heights == list(range(10)), heights
+    rival_m, mine = st.history(path)
+    assert rival_m["parent"] is None
+    assert mine["parent"] == rival_m["version"]
+    assert warehouse._manifest_read(path)["version"] == mine["version"]
+
+
+def test_cas_retry_outlasts_a_run_of_lost_races(spark, tmp_path, monkeypatch):
+    """A lock-free writer whose first 12 publishes each lose to a rival
+    still lands: the backoff between attempts grows exponentially and the
+    writer keeps retrying until a deadline, not for a fixed attempt
+    count (8 attempts with ~0.85 s of sleep in total gave up here)."""
+    from allora_indexer_spark.plans import storage
+
+    st = storage.InMemoryManifestStorage()
+    monkeypatch.setattr(warehouse, "STORAGE", st)
+    monkeypatch.setattr(warehouse, "LOCK_MODE", "none")
+    root = str(tmp_path / "wh")
+    path = os.path.join(root, "scores")
+    warehouse.write_keep_one(
+        spark, _mk_scores(spark, [(1, 1, "inferer", "a", 10, 1.0)]),
+        root, "scores", _score_order(),
+    )
+    rivals: list[str] = []
+
+    def rival():
+        cur = st.read_current(path)
+        rivals.append(f"rival{len(rivals)}")
+        st.publish(
+            path,
+            dict(cur, version=rivals[-1]),
+            expect=cur["version"],
+        )
+        if len(rivals) < 12:
+            st.interleave = rival  # re-arm: the next attempt loses too
+
+    # record the writer's backoff instead of sleeping it; other threads
+    # (Spark's py4j machinery) keep the real sleep
+    delays: list[float] = []
+    writer, real_sleep = threading.current_thread(), time.sleep
+
+    def sleep(sec: float) -> None:
+        if threading.current_thread() is writer:
+            delays.append(sec)
+        else:
+            real_sleep(sec)
+
+    st.interleave = rival
+    with monkeypatch.context() as mp:
+        mp.setattr(time, "sleep", sleep)
+        warehouse.write_keep_one(
+            spark, _mk_scores(spark, [(2, 1, "inferer", "b", 11, 2.0)]),
+            root, "scores", _score_order(),
+        )
+
+    assert len(rivals) == 12 and len(delays) == 12
+    heights = sorted(
+        r["height"]
+        for r in warehouse.read_table(spark, root, "scores").collect()
+    )
+    assert heights == [1, 2]
+    assert st.history(path)[-1]["parent"] == rivals[-1]
+    # exponential: each pause is at least the previous one until the
+    # cap, and the run ends far above where it started
+    uncapped = [d for d in delays if d < warehouse._CAS_BACKOFF_MAX_SEC / 2]
+    assert all(a <= b for a, b in zip(uncapped, uncapped[1:])), delays
+    assert delays[-1] > 20 * delays[0], delays
+    assert sum(delays) < warehouse._CAS_DEADLINE_SEC
 
 
 # ---------------------------------------------------------------------------
@@ -333,7 +432,7 @@ def test_auto_fold_keeps_append_manifest_bounded(spark, tmp_path, monkeypatch):
     base = spark.createDataFrame(
         [(1, "04"), (2, "0a")], "id long, bucket string"
     )
-    base.write.parquet(path)
+    warehouse.append_dir(base, path)
     warehouse.compact(
         spark, path, target_partitions=1, cluster_by=["bucket"]
     )

@@ -66,33 +66,11 @@ def test_snapshot_bootstrap(spark, fixture_dir, tmp_path):
         assert warehouse.read_table(spark, wh, name).count() == tables[name].count()
 
 
-def test_partitioned_layout_prunes(spark, tmp_path):
-    """write_partitioned lays out one directory per key value, and a filter
-    on the key scans only its directory (partition pruning visible in the
-    plan's file listing)."""
-    from allora_indexer_spark.plans import warehouse
-
-    df = spark.range(100).withColumn(
-        "topic_id", (F.col("id") % 4).cast("int")
-    )
-    path = str(tmp_path / "scores_p")
-    warehouse.write_partitioned(df, path, ["topic_id"])
-    import os
-
-    dirs = sorted(d for d in os.listdir(path) if d.startswith("topic_id="))
-    assert dirs == ["topic_id=0", "topic_id=1", "topic_id=2", "topic_id=3"]
-    pruned = spark.read.parquet(path).filter(F.col("topic_id") == 2)
-    assert pruned.count() == 25
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or "topic_id=2" in plan
-
-
 def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
     """Many tiny appends → compact() → few LIVE files, identical data.
-    Compaction converts the plain dir to the manifest layout: the live
-    file set is whatever `_CURRENT` references (read via read_table, the
-    API carrying that contract — a root listing is not the read path),
-    the root holds no parquet and no symlinks."""
+    The live file set is whatever `_CURRENT` references (read via
+    read_table, the API carrying that contract — a root listing is not
+    the read path), and the root holds no parquet."""
     import os
 
     from allora_indexer_spark.plans import warehouse
@@ -100,15 +78,12 @@ def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
     root = str(tmp_path)
     path = str(tmp_path / "tiny")
     for i in range(10):  # simulate 10 micro-batch appends
-        spark.range(i * 10, (i + 1) * 10).repartition(4).write.mode(
-            "append"
-        ).parquet(path)
-    n_files_before = sum(
-        1 for f in os.listdir(path) if f.endswith(".parquet")
-    )
+        warehouse.append_dir(
+            spark.range(i * 10, (i + 1) * 10).repartition(4), path
+        )
+    n_files_before = len(warehouse._table_data_files(path))
     assert n_files_before >= 30
     warehouse.compact(spark, path, target_partitions=2)
-    assert not os.path.islink(path)
     assert os.path.isfile(os.path.join(path, "_CURRENT"))
     assert not any(f.endswith(".parquet") for f in os.listdir(path))
     m = warehouse._manifest_read(path)
@@ -127,39 +102,6 @@ def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
     assert total == sum(range(100))
 
 
-def test_range_sorted_layout_has_disjoint_file_ranges(spark, tmp_path):
-    """write_range_sorted: per-file [min,max] intervals of the order column
-    must not overlap — the precondition for file-level skipping on range
-    predicates."""
-    import os
-
-    from allora_indexer_spark.plans import warehouse
-
-    df = spark.range(10_000).select(
-        F.col("id").alias("height"), (F.col("id") * 2).alias("v")
-    )
-    path = str(tmp_path / "ranged")
-    warehouse.write_range_sorted(df, path, "height", num_files=8)
-
-    files = [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    ]
-    assert len(files) == 8
-    spans = sorted(
-        tuple(
-            spark.read.parquet(f)
-            .agg(F.min("height"), F.max("height"))
-            .collect()[0]
-        )
-        for f in files
-    )
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 < lo2, "file ranges overlap"
-    assert spark.read.parquet(path).count() == 10_000
-
-
 def test_schema_evolution_append(spark, tmp_path):
     """evolve_append: a new column appears with nulls for history; a batch
     missing a known column is padded — the addColumn/isColumnExist analog
@@ -174,14 +116,14 @@ def test_schema_evolution_append(spark, tmp_path):
         [(3, "c", True)], "id LONG, name STRING, is_active BOOLEAN"
     )
     warehouse.evolve_append(spark, v2, root, "topics_v")
-    got = warehouse.read_table_evolved(spark, root, "topics_v")
+    got = warehouse.read_table(spark, root, "topics_v")
     assert set(got.columns) == {"id", "name", "is_active"}
     vals = {r["id"]: r["is_active"] for r in got.collect()}
     assert vals == {1: None, 2: None, 3: True}
     # narrower batch: is_active padded with typed null
     v3 = spark.createDataFrame([(4, "d")], "id LONG, name STRING")
     warehouse.evolve_append(spark, v3, root, "topics_v")
-    got = warehouse.read_table_evolved(spark, root, "topics_v")
+    got = warehouse.read_table(spark, root, "topics_v")
     assert got.count() == 4
     assert got.filter("id = 4").collect()[0]["is_active"] is None
 
@@ -413,37 +355,6 @@ def test_keep_one_upsert_rewrites_only_affected_buckets(spark, tmp_path):
     assert warehouse.read_table(spark, root, "scores").count() == 20_000
 
 
-def test_keep_one_migrates_legacy_plain_table(spark, tmp_path):
-    """A pre-bucketing plain parquet dir (e.g. an old snapshot restore)
-    converts to the versioned bucket layout on its first upsert, keeping
-    every row and the keep-latest contract."""
-    import os
-
-    root = str(tmp_path / "wh")
-    legacy = str(tmp_path / "wh" / "scores")
-    base = _mk_scores(
-        spark,
-        [(1, 1, "inferer", "x", 10, 1.0), (2, 2, "inferer", "y", 20, 2.0)],
-    )
-    base.write.mode("overwrite").parquet(legacy)
-    assert warehouse._manifest_read(legacy) is None
-    batch = _mk_scores(spark, [(1, 1, "inferer", "x", 99, 9.0)])
-    warehouse.write_keep_one(spark, batch, root, "scores", _score_order())
-    # converted in place to the bucketed manifest layout: a live
-    # `_CURRENT` carrying the bucket meta, bucket-keyed data map, no
-    # symlinks, and no parquet left at the table root
-    m = warehouse._manifest_read(legacy)
-    assert m is not None
-    assert m["keys"] == warehouse.TABLE_KEYS["scores"]
-    assert m["buckets"] == warehouse.UPSERT_BUCKETS
-    assert all(k.isdigit() for k in m["data"])
-    _assert_no_symlinks(legacy)
-    assert not any(f.endswith(".parquet") for f in os.listdir(legacy))
-    t = warehouse.read_table(spark, root, "scores").orderBy("height")
-    got = [(r["height"], r["height_tx"], r["value"]) for r in t.collect()]
-    assert got == [(1, 99, 9.0), (2, 20, 2.0)]
-
-
 def test_version_swap_is_atomic_for_concurrent_readers(spark, tmp_path):
     """r3 verdict #6: a reader racing compact()/write_keep_one() must never
     see a missing or half-swapped table. The old rename-away/rmtree dance
@@ -492,37 +403,6 @@ def test_version_swap_is_atomic_for_concurrent_readers(spark, tmp_path):
         t.join()
     assert not errors, f"concurrent reader failed: {errors[:1]}"
     assert warehouse.read_table(spark, root, "scores").count() == 5_000
-
-
-def test_legacy_migration_keeps_renamed_original(spark, tmp_path, monkeypatch):
-    """The migration rename preserves the legacy dir's OLD mtime; without
-    the explicit keep-set pin + grace-clock touch, a zero-grace GC would
-    reap the moved-aside original from under an in-flight reader the
-    instant the manifest flips."""
-    import os
-
-    monkeypatch.setattr(warehouse, "_GC_GRACE_SEC", 0.0)
-    root = str(tmp_path / "wh")
-    legacy = str(tmp_path / "wh" / "scores")
-    _mk_scores(spark, [(1, 1, "inferer", "x", 10, 1.0)]).write.parquet(legacy)
-    os.utime(legacy, (1, 1))  # ancient table, far past any grace period
-    warehouse.write_keep_one(
-        spark,
-        _mk_scores(spark, [(2, 2, "inferer", "y", 20, 2.0)]),
-        root,
-        "scores",
-        _score_order(),
-    )
-    assert warehouse._manifest_read(legacy) is not None
-    # both the new version AND the moved-aside original survive the GC
-    versions = warehouse._version_paths(legacy)
-    assert len(versions) == 2
-    asides = [v for v in versions if os.path.basename(v).startswith("legacy_")]
-    assert len(asides) == 1
-    assert any(
-        f.endswith(".parquet") for f in os.listdir(asides[0])
-    ), "original parquet files must survive in the moved-aside dir"
-    assert warehouse.read_table(spark, root, "scores").count() == 2
 
 
 def test_version_gc_deletes_expired_and_keeps_live(spark, tmp_path, monkeypatch):
@@ -579,8 +459,8 @@ def test_keep_one_respects_per_table_bucket_count(spark, tmp_path):
         warehouse._order_cols(warehouse.UPSERT_ORDER["last_commit_values"]),
     )
     path = os.path.join(root, "last_commit_values")
-    assert warehouse._read_meta(path)["buckets"] == 4
     m = warehouse._manifest_read(path)
+    assert m["buckets"] == 4
     assert m["data"] and all(int(b) < 4 for b in m["data"])
     # and a follow-up write keeps honoring the manifest's count, not the
     # caller default
@@ -598,45 +478,6 @@ def test_keep_one_respects_per_table_bucket_count(spark, tmp_path):
     m2 = warehouse._manifest_read(path)
     assert m2["buckets"] == 4
     assert all(int(b) < 4 for b in m2["data"])
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-located join: two tables bucketed on the same key with the same
-    bucket count must sort-merge join with NO shuffle Exchange — the
-    write-once/join-many layout that removes the dominant cost of a
-    fact-fact join at scale."""
-    import uuid
-
-    suffix = uuid.uuid4().hex[:8]
-    t1, t2 = f"bk_orders_{suffix}", f"bk_cust_{suffix}"
-    orders = spark.range(0, 10_000).selectExpr(
-        "id AS o_orderkey", "id % 500 AS o_custkey", "id * 1.5 AS o_total"
-    )
-    cust = spark.range(0, 500).selectExpr(
-        "id AS c_custkey", "concat('c', id) AS c_name"
-    )
-    try:
-        warehouse.write_bucketed(orders, t1, ["o_custkey"], 4)
-        warehouse.write_bucketed(cust, t2, ["c_custkey"], 4)
-        joined = (
-            spark.table(t1)
-            .hint("merge")  # force SMJ so a broadcast can't mask the layout
-            .join(
-                spark.table(t2),
-                F.col("o_custkey") == F.col("c_custkey"),
-            )
-            .groupBy("c_name")
-            .agg(F.sum("o_total").alias("total"))
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        before_agg_exchange = plan.split("HashAggregate")[-1]
-        assert "SortMergeJoin" in plan
-        # the join itself reads buckets in place — no Exchange below it
-        assert "Exchange" not in before_agg_exchange
-        assert joined.count() == 500
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t1}")
-        spark.sql(f"DROP TABLE IF EXISTS {t2}")
 
 
 def test_time_travel_read_and_version_diff(spark, tmp_path, monkeypatch):
@@ -743,13 +584,14 @@ def test_integrity_report_flags_injected_violations(
     bad = base.filter(F.col("violations") > 0).collect()
     assert bad == [], f"fresh warehouse not clean: {bad}"
 
-    # corrupt 1: duplicate block_info natural key (bypassing the K1 writer)
-    one = spark.read.parquet(os.path.join(root, "block_info")).limit(1)
-    one.write.mode("append").parquet(os.path.join(root, "block_info"))
+    # corrupt 1: duplicate block_info natural key (a raw append bypassing
+    # the K1 writer's anti-join)
+    one = warehouse.read_table(spark, root, "block_info").limit(1)
+    warehouse.append_dir(one, os.path.join(root, "block_info"))
     # corrupt 2: an inferences row pointing at a message that doesn't exist
     # (cast to the table's OWN column types: appending a wider type would
     # make parquet schema inference file-order-dependent)
-    inf = spark.read.parquet(os.path.join(root, "inferences"))
+    inf = warehouse.read_table(spark, root, "inferences")
     types = dict(inf.dtypes)
     orphan = (
         inf.limit(1)
@@ -760,7 +602,7 @@ def test_integrity_report_flags_injected_violations(
             "message_id", F.lit(999_999_000_000).cast(types["message_id"])
         )
     )
-    orphan.write.mode("append").parquet(os.path.join(root, "inferences"))
+    warehouse.append_dir(orphan, os.path.join(root, "inferences"))
 
     report = {
         (r["table"], r["check"]): r["violations"]
@@ -774,29 +616,6 @@ def test_integrity_report_flags_injected_violations(
         ("block_info", "key_unique"),
         ("inferences", "fk_orphans:messages"),
     }
-
-
-def test_schema_diff_reports_drift_without_writing(spark, tmp_path):
-    """schema_diff must report added/missing/retyped columns against the
-    evolved table schema and leave the table untouched."""
-    root = str(tmp_path / "wh")
-    base = _mk_scores(
-        spark, [(1, 1, "inferer", "x", 10, 1.0)]
-    )
-    warehouse.write_insert_if_absent(spark, base, root, "scores")
-    batch = (
-        base.drop("value")
-        .withColumn("value", F.lit("oops"))  # double -> string
-        .withColumn("confidence", F.lit(0.9))  # new column
-        .drop("address")  # missing column
-    )
-    d = warehouse.schema_diff(spark, root, "scores", batch)
-    assert d["added"] == ["confidence"]
-    assert d["missing"] == ["address"]
-    assert d["retyped"] == ["value: double -> string"]
-    # read-only: the table still has one row and its original schema
-    t = warehouse.read_table(spark, root, "scores")
-    assert t.count() == 1 and "confidence" not in t.columns
 
 
 def test_table_health_reports_files_and_versions(spark, tmp_path):
@@ -822,108 +641,16 @@ def test_table_health_reports_files_and_versions(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Layout migrations (legacy symlink-flip / non-bucketed manifest) and the
-# append-manifest compaction-cadence contract
+# Non-bucketed manifest → bucketed upsert, and the append-manifest
+# compaction-cadence contract
 # ---------------------------------------------------------------------------
 
 
-def test_symlink_table_migration_preserves_rows_and_meta(spark, tmp_path):
-    """A pre-manifest symlink-flip table (path = symlink to a sibling
-    `.{name}__v*` dir of `_kb=` hive dirs + `_upsert_meta.json`) converts
-    to the manifest layout on its first upsert: every pre-upgrade row
-    survives, the bucket meta carries over, keep-latest holds, and the
-    legacy version dir is moved under `_versions/` (grace-retained for
-    in-flight readers), never left dangling in the parent."""
-    import json as _json
-    import os
-
-    root = str(tmp_path / "wh")
-    os.makedirs(root)
-    path = os.path.join(root, "scores")
-    verdir = os.path.join(root, ".scores__v0abc")
-    keys = warehouse.TABLE_KEYS["scores"]
-    base = _mk_scores(
-        spark,
-        [(1, 1, "inferer", "x", 10, 1.0), (2, 2, "inferer", "y", 20, 2.0)],
-    )
-    (
-        base.withColumn("_kb", warehouse._bucket_expr(keys, 8))
-        .write.partitionBy("_kb")
-        .parquet(verdir)
-    )
-    with open(os.path.join(verdir, "_upsert_meta.json"), "w") as fh:
-        _json.dump({"buckets": 8, "keys": keys}, fh)
-    os.symlink(verdir, path)
-
-    batch = _mk_scores(spark, [(1, 1, "inferer", "x", 99, 9.0)])
-    warehouse.write_keep_one(spark, batch, root, "scores", _score_order())
-    m = warehouse._manifest_read(path)
-    assert m is not None
-    assert m["buckets"] == 8 and m["keys"] == keys
-    assert all(k.isdigit() for k in m["data"])
-    assert not os.path.islink(path)
-    _assert_no_symlinks(path)
-    assert not os.path.exists(verdir), "legacy dir must move under _versions"
-    t = warehouse.read_table(spark, root, "scores").orderBy("height")
-    got = [(r["height"], r["height_tx"], r["value"]) for r in t.collect()]
-    assert got == [(1, 99, 9.0), (2, 20, 2.0)]
-
-
-@pytest.mark.parametrize("dangling", [True, False])
-def test_symlink_migration_crash_recovery(spark, tmp_path, dangling):
-    """A migration that died after staging the complete new layout but
-    before the final swap leaves either a dangling symlink (data already
-    moved into staging) or no table path at all (symlink removed, rename
-    pending). The next write must RESUME the swap — not silently treat
-    the table as fresh and publish a manifest of only its own batch (the
-    permanent-data-loss window the staged design closes)."""
-    import os
-
-    root = str(tmp_path / "wh")
-    os.makedirs(root)
-    path = os.path.join(root, "scores")
-    keys = warehouse.TABLE_KEYS["scores"]
-    base = _mk_scores(spark, [(1, 1, "inferer", "x", 10, 1.0)])
-    # what _migrate_symlink_table stages before its swap: a complete
-    # manifest table in a sibling .scores__mstage_* dir
-    staging = os.path.join(root, ".scores__mstage_deadbeef")
-    ver = "vdeadbeef001"
-    verdir = os.path.join(staging, "_versions", ver)
-    (
-        base.withColumn("_kb", warehouse._bucket_expr(keys, 8))
-        .write.partitionBy("_kb")
-        .parquet(verdir)
-    )
-    data = {
-        d.split("=", 1)[1]: os.path.join("_versions", ver, d)
-        for d in os.listdir(verdir)
-        if d.startswith("_kb=")
-    }
-    warehouse._publish_manifest(
-        staging, {"version": ver, "buckets": 8, "keys": keys, "data": data}
-    )
-    if dangling:
-        os.symlink(os.path.join(root, ".scores__v_gone"), path)
-
-    # the next upsert recovers the staged table, then lands its batch
-    batch = _mk_scores(spark, [(1, 1, "inferer", "x", 99, 9.0)])
-    warehouse.write_keep_one(spark, batch, root, "scores", _score_order())
-    assert not os.path.islink(path)
-    m = warehouse._manifest_read(path)
-    assert m is not None and m["buckets"] == 8
-    got = [
-        (r["height"], r["height_tx"], r["value"])
-        for r in warehouse.read_table(spark, root, "scores").collect()
-    ]
-    assert got == [(1, 99, 9.0)]
-    assert not os.path.exists(staging)
-
-
 def test_compacted_plain_table_upsert_migrates_to_buckets(spark, tmp_path):
-    """compact() on a plain dir publishes the {"all": ...} manifest; the
-    first upsert after that must do the one-time full rewrite into the
-    bucketed layout — keeping every row and the keep-latest contract —
-    and stay incremental from then on."""
+    """compact() on an append-created table publishes the {"all": ...}
+    manifest; the first upsert after that must do the one-time full
+    rewrite into the bucketed layout — keeping every row and the
+    keep-latest contract — and stay incremental from then on."""
     import os
 
     root = str(tmp_path / "wh")
@@ -933,7 +660,7 @@ def test_compacted_plain_table_upsert_migrates_to_buckets(spark, tmp_path):
         spark,
         [(1, 1, "inferer", "x", 10, 1.0), (2, 2, "inferer", "y", 20, 2.0)],
     )
-    base.write.parquet(path)
+    warehouse.append_dir(base, path)
     warehouse.compact(spark, path, target_partitions=1)
     m = warehouse._manifest_read(path)
     assert m is not None and "buckets" not in m  # the {"all": ...} layout
@@ -1198,7 +925,7 @@ def test_fold_appends_uses_pinned_schema_for_hive_deltas(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "04"), (2, "10")], "id long, p string"
     )
-    base.write.parquet(path)  # plain, p stays a typed data column
+    warehouse.append_dir(base, path)  # p stays a typed data column
     warehouse.compact(spark, path, target_partitions=1)
     m = warehouse._manifest_read(path)
     assert m is not None and "schema" in m
@@ -1230,44 +957,6 @@ def test_fold_appends_uses_pinned_schema_for_hive_deltas(spark, tmp_path):
     assert dirs == ["p=04", "p=07"], dirs
 
 
-def test_completed_migration_sweeps_stale_staging(spark, tmp_path):
-    """A COMPLETE staging dir orphaned beside a healthy (non-symlink)
-    manifest table must be swept by the next write: left in place, an
-    external removal of the table dir would make the resume branch
-    resurrect the stale staging as the live table."""
-    import os
-
-    root = str(tmp_path / "wh")
-    warehouse.write_keep_one(
-        spark,
-        _mk_scores(spark, [(1, 1, "inferer", "x", 10, 1.0)]),
-        root,
-        "scores",
-        _score_order(),
-    )
-    path = os.path.join(root, "scores")
-    # a stale but COMPLETE staging (carries _CURRENT) beside the table
-    staging = os.path.join(root, ".scores__mstage_stale01")
-    os.makedirs(staging)
-    warehouse._publish_manifest(
-        staging, {"version": "vstale", "buckets": 8,
-                  "keys": warehouse.TABLE_KEYS["scores"], "data": {}}
-    )
-    warehouse.write_keep_one(
-        spark,
-        _mk_scores(spark, [(1, 1, "inferer", "x", 20, 2.0)]),
-        root,
-        "scores",
-        _score_order(),
-    )
-    assert not os.path.exists(staging), "stale staging must be swept"
-    got = [
-        (r["height"], r["height_tx"])
-        for r in warehouse.read_table(spark, root, "scores").collect()
-    ]
-    assert got == [(1, 20)]
-
-
 def test_resolve_snapshot_root_rejects_empty_pointer(tmp_path):
     """An empty `latest` pointer is a corrupt publish, not 'no pointer':
     silently resolving to the snapshots root would make bootstrap read
@@ -1293,72 +982,6 @@ def _lcv_df(spark, n=3, start=0):
         "cast(id + 100 as int) as height_tx",
         "cast(id + 100 as int) as height",
     )
-
-
-def test_keep_one_legacy_conversion_is_crash_safe(spark, tmp_path):
-    """The plain-dir -> bucketed-manifest conversion must flip the
-    manifest BEFORE moving legacy entries aside (same dance as
-    _compact_locked): the old order left a crash window in which the
-    table had no manifest AND no root files — _exists read it as 'never
-    created' and the stranded legacy data was GC-reaped (silent total
-    loss). Post-fix: (a) after a conversion the manifest exists and the
-    legacy entries live under _versions/legacy_*; (b) a table found in
-    the crashed-after-flip state (manifest + stray root entries) is
-    healed by the next upsert's leftover sweep."""
-    import os
-
-    root = str(tmp_path / "wh")
-    name = "last_commit_values"
-    path = os.path.join(root, name)
-    # legacy PLAIN table: rows written straight to the root
-    _lcv_df(spark, 3).write.mode("overwrite").parquet(path)
-    assert warehouse._manifest_read(path) is None
-    warehouse.write_keep_one(
-        spark, _lcv_df(spark, 2, start=3), root, name,
-        [F.desc("height_tx"), F.desc("height")],
-    )
-    assert warehouse._manifest_read(path) is not None
-    # root holds only manifest internals; legacy data moved aside
-    stray = [
-        f for f in os.listdir(path)
-        if f not in ("_versions", "_manifests", "_CURRENT")
-    ]
-    assert stray == []
-    assert any(
-        d.startswith("legacy_")
-        for d in os.listdir(os.path.join(path, "_versions"))
-    )
-    assert warehouse.read_table(spark, root, name).count() == 5
-    # crashed-after-flip state: stray plain entries beside a live manifest
-    with open(os.path.join(path, "leftover.parquet"), "wb") as fh:
-        fh.write(b"not really parquet")
-    warehouse.write_keep_one(
-        spark, _lcv_df(spark, 1, start=5), root, name,
-        [F.desc("height_tx"), F.desc("height")],
-    )
-    assert not os.path.exists(os.path.join(path, "leftover.parquet"))
-    assert warehouse.read_table(spark, root, name).count() == 6
-
-
-def test_exists_sees_hive_partitioned_plain_dir(spark, tmp_path):
-    """A plain table whose ONLY data lives under hive partition subdirs
-    (write_partitioned's recommended per-key layout) must count as
-    existing: _exists returning False here made write_insert_if_absent
-    skip its probe, so every at-least-once replay re-admitted keys."""
-    import os
-
-    root = str(tmp_path / "wh")
-    path = os.path.join(root, "inferences")
-    df = spark.range(3).selectExpr(
-        "cast(id + 100 as int) as message_height",
-        "id as message_id",
-        "cast(id as int) as bundle_idx",
-        "cast(id as int) as topic_id",
-    )
-    df.write.mode("overwrite").partitionBy("topic_id").parquet(path)
-    # root now holds only _SUCCESS + topic_id=N/ dirs
-    assert warehouse._exists(path)
-    assert warehouse.table_exists(root, "inferences")
 
 
 def test_read_table_version_works_on_seam_backend(

@@ -317,90 +317,24 @@ def test_autofold_hint_creates_no_layout_record(
 
 
 def test_keyed_default_guards_on_missing_prune_column(spark, tmp_path):
-    """A TABLE_KEYS-named plain dir whose files LACK the prune column
-    (legacy dump, or a transform() repair that renames it) must still
-    bare-compact as a flat rewrite — the pre-default behavior — instead
-    of crashing on an unresolved range column."""
+    """A TABLE_KEYS-named table whose files LACK the prune column (a
+    store written under that name by other code) must still bare-compact
+    as a flat rewrite instead of crashing on an unresolved range
+    column."""
     root = str(tmp_path)
     path = os.path.join(root, "scores")
-    spark.range(100).selectExpr(
-        "id AS other_key", "CAST(id AS DOUBLE) AS value"
-    ).write.parquet(path)
+    W.append_dir(
+        spark.range(100).selectExpr(
+            "id AS other_key", "CAST(id AS DOUBLE) AS value"
+        ),
+        path,
+    )
     W.compact(spark, path, target_partitions=2)  # must not raise
     m = W._manifest_read(path)
     assert m is not None and "layout" not in m
     assert spark.read.parquet(
         os.path.join(path, m["data"]["all"])
     ).count() == 100
-
-
-def test_plain_keyed_table_autoconverts_to_manifest(
-    spark, tmp_path, monkeypatch
-):
-    """A KEYED table that was never compacted must not accumulate plain
-    small files forever: every other maintenance hook (auto-fold, the
-    inline-major escalation) keys off the manifest, which a plain dir
-    only gets from its first compact(). Past PLAIN_CONVERT_FILES parquet
-    files the append converts inline — the table emerges range-clustered
-    and under auto-maintenance with NO operator action, and the
-    idempotent-writer contract survives the conversion."""
-    monkeypatch.setattr(W, "PLAIN_CONVERT_FILES", 4)
-    root = str(tmp_path)
-    path = os.path.join(root, "scores")
-    for b in range(8):
-        W.write_insert_if_absent(spark, _scores_batch(spark, b), root, "scores")
-    m = W._manifest_read(path)
-    assert m is not None, "plain dir never auto-converted"
-    assert m.get("layout", {}).get("range_by") == ["height"]
-    (h,) = [r for r in W.table_health(root) if r["table"] == "scores"]
-    assert h["probe_pruning"] == "clustered"
-    assert W.read_table(spark, root, "scores").count() == 8 * 500
-    # replaying an old batch across the conversion stays effectively-once
-    W.write_insert_if_absent(spark, _scores_batch(spark, 3), root, "scores")
-    out = W.read_table(spark, root, "scores")
-    assert out.count() == 8 * 500
-    assert out.select("height").distinct().count() == 8 * 500
-
-
-def test_conversion_crash_after_flip_leaves_table_live_and_repairs(
-    spark, tmp_path, monkeypatch
-):
-    """Plain->manifest conversion publishes the manifest BEFORE moving
-    the root files aside: a crash between the two must leave a LIVE
-    table (pre-fix the order was reversed, and a crash window left no
-    manifest and no root files — _exists read the table as never
-    created, so the idempotent writer re-admitted every key and
-    streaming topic numbering restarted: data loss). The stranded root
-    entries are then reclaimed by the repair sweep on the next compact."""
-    root = str(tmp_path)
-    path = os.path.join(root, "scores")
-    for b in range(3):
-        W.write_insert_if_absent(spark, _scores_batch(spark, b), root, "scores")
-
-    real_move = W._move_aside_plain_entries
-
-    def boom(p):
-        raise RuntimeError("simulated crash at move-aside")
-
-    monkeypatch.setattr(W, "_move_aside_plain_entries", boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        W.compact(spark, path, target_partitions=2)
-    # the flip already landed: table exists and reads whole, root files
-    # stranded but invisible to manifest readers (no double count)
-    assert W.table_exists(root, "scores")
-    assert W.read_table(spark, root, "scores").count() == 1500
-    assert any(
-        f.endswith(".parquet") for f in os.listdir(path)
-    ), "fixture lost its stranded root files"
-    monkeypatch.setattr(W, "_move_aside_plain_entries", real_move)
-    # next compact sweeps the leftovers into a grace-retained legacy dir
-    W.compact(spark, path, target_partitions=2)
-    assert not any(f.endswith(".parquet") for f in os.listdir(path))
-    assert any(
-        d.startswith("legacy_")
-        for d in os.listdir(os.path.join(path, W._VERSIONS_DIR))
-    )
-    assert W.read_table(spark, root, "scores").count() == 1500
 
 
 def test_escalated_major_keeps_hive_shape_of_recordless_store(

@@ -1,8 +1,8 @@
 """Round-9 hardening of the manifest/CAS seam: unified `_CURRENT`
 serialization (the _ANY path goes through `_cas_section` too), the
 parent-pointer manifest linearization behind `list_versions`, vacuum-only
-GC in lock-free mode, the footer-based empty-append probe, the compact()
-layout-clearing sentinel, and the tolerant staging-dir sweep.
+GC in lock-free mode, the footer-based empty-append probe, and the
+compact() layout-clearing sentinel.
 
 Reference semantic throughout: Postgres serializes the reference's writers
 for free (ON CONFLICT inside transactions, /root/reference/db.go:1118-1185)
@@ -187,7 +187,7 @@ def test_lockfree_writers_skip_piggyback_gc(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(warehouse, "_GC_GRACE_SEC", 0.0)
     monkeypatch.setattr(warehouse, "LOCK_MODE", "none")
     path = str(tmp_path / "store")
-    spark.createDataFrame([(1,)], "id long").write.parquet(path)
+    warehouse.append_dir(spark.createDataFrame([(1,)], "id long"), path)
     warehouse.compact(spark, path, target_partitions=1)
     # a rival's in-flight (unpublished, unreferenced) version, already
     # older than the zero grace
@@ -218,7 +218,7 @@ def test_flock_mode_still_gcs_on_publish(spark, tmp_path, monkeypatch):
     into it."""
     monkeypatch.setattr(warehouse, "_GC_GRACE_SEC", 0.0)
     path = str(tmp_path / "store")
-    spark.createDataFrame([(1,)], "id long").write.parquet(path)
+    warehouse.append_dir(spark.createDataFrame([(1,)], "id long"), path)
     warehouse.compact(spark, path, target_partitions=1)
     orphan = os.path.join(path, warehouse._VERSIONS_DIR, "v_orphan")
     os.makedirs(orphan)
@@ -238,7 +238,9 @@ def test_empty_append_publishes_nothing(spark, tmp_path):
     manifest table — decided from the written files' footers, not an
     extra isEmpty() job."""
     path = str(tmp_path / "store")
-    spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(path)
+    warehouse.append_dir(
+        spark.createDataFrame([(1, "a")], "id long, v string"), path
+    )
     warehouse.compact(spark, path, target_partitions=1)
     before = warehouse._manifest_read(path)
     n_vers = len(warehouse._version_paths(path))
@@ -269,9 +271,10 @@ def test_compact_empty_list_clears_recorded_layout(spark, tmp_path):
     subsequent auto-folds stop re-clustering deltas; plain compact (None)
     keeps carrying the layout forward."""
     path = str(tmp_path / "store")
-    spark.createDataFrame(
-        [(1, "04"), (2, "0a")], "id long, bucket string"
-    ).write.parquet(path)
+    warehouse.append_dir(
+        spark.createDataFrame([(1, "04"), (2, "0a")], "id long, bucket string"),
+        path,
+    )
     warehouse.compact(spark, path, target_partitions=1, cluster_by=["bucket"])
     assert warehouse._manifest_read(path)["layout"]["cluster_by"] == ["bucket"]
     # plain compact: layout persists (the documented default)
@@ -291,30 +294,3 @@ def test_compact_empty_list_clears_recorded_layout(spark, tmp_path):
     assert "layout" in warehouse._manifest_read(path)
     warehouse.compact(spark, path, target_partitions=1, partition_cols=[])
     assert "layout" not in warehouse._manifest_read(path)
-
-
-# ---------------------------------------------------------------------------
-# Tolerant staging-dir sweep
-# ---------------------------------------------------------------------------
-
-
-def test_staging_dirs_tolerates_concurrent_delete(tmp_path, monkeypatch):
-    """A rival process sweeping the same stale staging between listdir
-    and stat must not crash an unrelated write."""
-    base = tmp_path / "wh"
-    base.mkdir()
-    (base / ".t__mstage_aa").mkdir()
-    (base / ".t__mstage_bb").mkdir()
-    victim = str(base / ".t__mstage_aa")
-    real = os.path.getmtime
-
-    def racing(p):
-        if os.path.normpath(p) == os.path.normpath(victim):
-            raise FileNotFoundError(p)
-        return real(p)
-
-    monkeypatch.setattr(os.path, "getmtime", racing)
-    got = warehouse._staging_dirs(str(base / "t"))
-    assert set(got) == {victim, str(base / ".t__mstage_bb")}
-    # the vanished dir sorts oldest (last)
-    assert got[-1] == victim

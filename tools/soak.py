@@ -125,10 +125,7 @@ def soak_append(spark, root: str, n_batches: int, rows_per_batch: int) -> dict:
     from allora_indexer_spark.plans import warehouse as wh
 
     path = os.path.join(root, "block_info")
-    # seed + convert to manifest layout (documented first step for
-    # lock-free/maintained tables)
     wh.write_insert_if_absent(spark, _mk_blocks(spark, 0, rows_per_batch), root, "block_info")
-    wh.compact(spark, path, target_partitions=1)
 
     times: list[float] = []
     series: list[dict] = []
