@@ -2205,9 +2205,9 @@ def q99s_rollup_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the hourly aggregate collapses the fact table ~10^3-10^4× at
     the FIRST exchange (map-side partials absorb the volume); the daily
     and weekly re-aggregations then shuffle only rollup-grain rows. At
-    100 TB the hourly level is what you'd persist (write_partitioned) and
-    the day/week levels are near-free derived views — refreshing a late
-    hour touches one hour partition, not the week."""
+    100 TB the hourly level is what you'd persist (append_dir with a
+    partition_by) and the day/week levels are near-free derived views —
+    refreshing a late hour touches one hour partition, not the week."""
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hour_start")

@@ -264,8 +264,12 @@ def _publish_manifest(path: str, manifest: dict, expect=_ANY) -> None:
 
     The check-observe-stamp-flip itself lives behind the STORAGE seam
     (plans/storage.py) — POSIX by default, conditional-PUT on an object
-    store; this wrapper only adds the per-process created/seq stamps."""
+    store; this wrapper only adds the per-process created/seq stamps,
+    and refuses a table's first publish (``expect=None``) over plain
+    parquet data (:func:`_refuse_plain_dir`)."""
     global _write_seq
+    if expect is None:
+        _refuse_plain_dir(path)
     _write_seq += 1
     manifest = dict(manifest)
     manifest["created"] = time.time()
@@ -314,6 +318,47 @@ def _exists(path: str) -> bool:
     writes is a manifest table from its first write, so a path without
     `_CURRENT` holds none."""
     return _manifest_read(path) is not None
+
+
+class PlainDirectoryError(RuntimeError):
+    """A table's first write found plain parquet data at its path."""
+
+
+def _refuse_plain_dir(path: str) -> None:
+    """Refuse to create a table over plain parquet data. Before every
+    table was a manifest table from its first write, insert-if-absent
+    tables and rollups started as plain dirs; a first manifest published
+    over one hides its rows from every reader, and the anti-join probe
+    then re-admits them (and topic ids restart at 1). The check runs only
+    on a table's first publish; a manifest table's root holds nothing
+    but underscore entries."""
+    try:
+        entries = os.listdir(path)
+    except FileNotFoundError:
+        return
+    plain = sorted(
+        e for e in entries
+        if not e.startswith(("_", ".")) and (e.endswith(".parquet") or "=" in e)
+    )
+    if plain:
+        raise PlainDirectoryError(
+            f"{path}: holds plain parquet data ({len(plain)} entries, e.g. "
+            f"{plain[0]!r}) but no {_CURRENT_FILE}, so it is not a table. "
+            "A first write here would hide those rows. Re-ingest into a "
+            "fresh path, or convert the dir in place with compact() from a "
+            "release that still read plain dirs, then retry."
+        )
+
+
+def _discard_refused_write(path: str, verdir: str) -> None:
+    """Leave a refused plain dir as it was: remove the refused write's
+    version dir and the `_versions/` dir it created, if nothing else is
+    in it."""
+    shutil.rmtree(verdir, ignore_errors=True)
+    try:
+        os.rmdir(os.path.join(path, _VERSIONS_DIR))
+    except OSError:
+        pass
 
 
 def _schema_json(df: DataFrame) -> str:
@@ -803,6 +848,9 @@ def _append_data(
     except ManifestConflictError:
         shutil.rmtree(verdir, ignore_errors=True)  # never referenced
         raise
+    except PlainDirectoryError:
+        _discard_refused_write(path, verdir)
+        raise
     if n_entries is None:
         shutil.rmtree(verdir, ignore_errors=True)
         return
@@ -1168,17 +1216,21 @@ def _write_keep_one_locked(
             for d in os.listdir(verdir)
             if d.startswith(_BUCKET_COL + "=")
         }
-        _publish_manifest(
-            path,
-            {
-                "version": ver,
-                "buckets": num_buckets,
-                "keys": keys,
-                "data": data,
-                "schema": _schema_json(result),
-            },
-            expect=manifest["version"] if manifest is not None else None,
-        )
+        try:
+            _publish_manifest(
+                path,
+                {
+                    "version": ver,
+                    "buckets": num_buckets,
+                    "keys": keys,
+                    "data": data,
+                    "schema": _schema_json(result),
+                },
+                expect=manifest["version"] if manifest is not None else None,
+            )
+        except PlainDirectoryError:
+            _discard_refused_write(path, verdir)
+            raise
         _gc_after_publish(path, keep={verdir})
         return
 
@@ -1264,6 +1316,9 @@ def seed_manifest_store(
             _publish_manifest(path, m, expect=None)
         except ManifestConflictError:
             shutil.rmtree(verdir, ignore_errors=True)
+            raise
+        except PlainDirectoryError:
+            _discard_refused_write(path, verdir)
             raise
 
     with _table_lock(path):

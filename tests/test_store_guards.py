@@ -9,11 +9,14 @@
 3. The heavy-hitter reset guard records EMPTY in-window batches too, and
    treats a replayed batch 0 with no recorded fingerprint on a non-empty
    store as a suspected checkpoint reset.
+4. A table's first write refuses a path that already holds plain
+   parquet data instead of publishing a manifest over it.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
@@ -134,6 +137,86 @@ def test_rollup_rejects_pre_manifest_plain_ledger(spark, tmp_path):
     with pytest.raises(Exception, match="pre-manifest plain ledger"):
         q.awaitTermination(120)
         raise RuntimeError(q.exception() or "stream succeeded unexpectedly")
+
+
+def _plain_entries(path):
+    return sorted(e for e in os.listdir(path) if not e.startswith("."))
+
+
+def test_plain_dir_at_table_path_refuses_first_write(spark, tmp_path):
+    """A plain parquet dir at a table path (how earlier releases started
+    every insert-if-absent table) is not a table, and it must not become
+    one silently: a first-write manifest would hide its rows from every
+    reader and from the anti-join. The insert, the upsert and the
+    precreation all raise and leave the dir exactly as it was."""
+    root = str(tmp_path / "wh")
+    losses = os.path.join(root, "networklosses")
+    rows = spark.range(0, 6).select(
+        F.col("id").alias("height_tx"),
+        F.col("id").alias("height"),
+        (F.col("id") % 3).alias("topic_id"),
+        F.col("id").cast("double").alias("value"),
+    )
+    rows.coalesce(1).write.parquet(losses)
+    scores = os.path.join(root, "scores")
+    score_rows = rows.select(
+        "height_tx", "height", "topic_id",
+        F.lit("t").alias("type"),
+        F.concat(F.lit("addr"), F.col("height")).alias("address"),
+        F.col("value").alias("value_raw"),
+    )
+    score_rows.coalesce(1).write.parquet(scores)
+    before = {p: _plain_entries(p) for p in (losses, scores)}
+
+    with pytest.raises(warehouse.PlainDirectoryError, match="plain parquet"):
+        warehouse.write_insert_if_absent(spark, rows, root, "networklosses")
+    with pytest.raises(warehouse.PlainDirectoryError, match="plain parquet"):
+        warehouse.write_keep_one(
+            spark, score_rows, root, "scores", [F.col("height_tx").desc()]
+        )
+    with pytest.raises(warehouse.PlainDirectoryError, match="plain parquet"):
+        stream.precreate_event_tables(spark, root)
+
+    for p, entries in before.items():
+        assert _manifest_read(p) is None
+        assert _plain_entries(p) == entries
+        assert spark.read.parquet(p).count() == 6
+    # the refusal is per table: precreation still created the others
+    assert warehouse.table_exists(root, "events")
+
+
+def test_rollup_refuses_plain_rollup_beside_manifest_ledger(spark, tmp_path):
+    """Earlier releases seeded the ledger as a manifest store but wrote
+    the rollup as a plain dir. The marker check passes on such a pair, so
+    the rollup's first manifest would hide every earlier partial while
+    the ledger still anti-joins their keys (a silent undercount). The
+    batch fails before either store changes."""
+    import shutil
+
+    feed = str(tmp_path / "feed")
+    rollup = str(tmp_path / "rollup")
+    ledger = rollup + "_keys"
+    ckpt = str(tmp_path / "ckpt")
+    _mk_feed(spark, 0, 10).write.mode("append").parquet(feed)
+    _run_rollup(spark, feed, rollup, ckpt)
+    staged = str(tmp_path / "plain_rollup")
+    warehouse.read_dir(spark, rollup).write.parquet(staged)
+    shutil.rmtree(rollup)
+    os.rename(staged, rollup)
+    before = _plain_entries(rollup)
+    ledger_ver = _manifest_read(ledger)["version"]
+
+    _mk_feed(spark, 10, 20).write.mode("append").parquet(feed)
+    q = stream.start_continuous_rollup(spark, feed, FEED_SCHEMA, rollup, ckpt)
+    with pytest.raises(Exception, match="plain parquet data"):
+        q.awaitTermination(120)
+        raise RuntimeError(q.exception() or "stream succeeded unexpectedly")
+
+    assert _plain_entries(rollup) == before
+    assert _manifest_read(rollup) is None
+    assert _manifest_read(ledger)["version"] == ledger_ver
+    total = spark.read.parquet(rollup).agg(F.sum("n_events")).collect()[0][0]
+    assert total == 10
 
 
 def test_compact_carries_app_manifest_keys(spark, tmp_path):
