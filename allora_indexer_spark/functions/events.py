@@ -12,13 +12,18 @@ tests/test_event_filter.py:
 - numeric values equal to Infinity/NaN (case-insensitive) are rejected
   before decimal parsing (isInvalidNumericValue, db.go:1715-1717).
 
-Everything is a Column expression — JVM-side, codegen-friendly.
+Every helper takes the SQL text of its input column and returns SQL text
+— JVM-side, codegen-friendly. The ingest builders batch a whole
+projection into ONE selectExpr call: each F.col()/F.when() Column
+construction costs a separate py4j round trip (~2-5 ms on a busy
+driver), and Column-built builders paid ~4 s of pure driver-side plan
+construction per 23-table pass (guide §7.3 "planning time itself can
+become the bottleneck"). A Column caller wraps a helper in ``F.expr``;
+the tests evaluate these exact strings, so the reference cases run
+against the code ingest executes.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # Base-type whitelist → event family (process_events.go:49-61).
 EVENT_WHITELIST: dict[str, str] = {
@@ -38,61 +43,8 @@ EVENT_WHITELIST: dict[str, str] = {
 INVALID_TYPE = "invalid"
 
 
-def base_event_type(event_type: Column) -> Column:
-    """`emissions.v2.EventScoresSet` → `EventScoresSet`; no dot → 'invalid'."""
-    parts = F.split(event_type, r"\.")
-    return F.when(
-        F.size(parts) > 1, F.element_at(parts, -1)
-    ).otherwise(F.lit(INVALID_TYPE))
-
-
-def is_whitelisted(event_type: Column) -> Column:
-    return base_event_type(event_type).isin(*EVENT_WHITELIST.keys())
-
-
-def event_family(event_type: Column) -> Column:
-    """Route an event type to its processing family (db.go:707-732);
-    non-whitelisted types map to NULL (getItem on a missing key)."""
-    mapping = F.create_map(
-        *[F.lit(x) for kv in EVENT_WHITELIST.items() for x in kv]
-    )
-    return mapping.getItem(base_event_type(event_type))
-
-
-def is_reputer_last_commit(event_type: Column) -> Column:
-    """Worker vs reputer last-commit split (isReputerLastCommitEvent,
-    db.go:676-678): prefix 'emissions.v' + suffix 'EventReputerLastCommitSet'."""
-    return event_type.startswith("emissions.v") & event_type.endswith(
-        "EventReputerLastCommitSet"
-    )
-
-
-def is_invalid_numeric(value: Column) -> Column:
-    """Reject Infinity/NaN (case-insensitive substring match, db.go:1715-1717)."""
-    lowered = F.lower(value)
-    return lowered.contains("infinity") | lowered.contains("nan")
-
-
-def strip_quotes(value: Column) -> Column:
-    """Attribute values arrive JSON-encoded; scalars are quoted
-    (`"\\"1\\""`). Mirror of strings.Trim(v, '"') (db.go:866 et al.)."""
-    return F.regexp_replace(value, '^"|"$', "")
-
-
-# ---------------------------------------------------------------------------
-# SQL-string twins (round 17): the ingest builders batch their whole
-# projection into ONE selectExpr call — each F.col()/F.when() Column
-# construction costs a separate py4j round trip (~2-5 ms on a busy
-# driver), and the 23-table fan-out was paying ~4 s of pure driver-side
-# plan construction per pass (guide §7.3 "planning time itself can
-# become the bottleneck"). The Column forms above stay for tests and
-# external callers; each twin is the same expression as SQL text, so a
-# semantics change in one without the other fails the pinned
-# tests/test_event_filter.py parity cases.
-# ---------------------------------------------------------------------------
-
-
 def base_event_type_sql(c: str) -> str:
+    """`emissions.v2.EventScoresSet` → `EventScoresSet`; no dot → 'invalid'."""
     return (
         f"CASE WHEN size(split({c}, '\\\\.')) > 1 "
         f"THEN element_at(split({c}, '\\\\.'), -1) "
@@ -106,11 +58,15 @@ def is_whitelisted_sql(c: str) -> str:
 
 
 def event_family_sql(c: str) -> str:
+    """Route an event type to its processing family (db.go:707-732);
+    non-whitelisted types map to NULL (a map lookup of a missing key)."""
     pairs = ", ".join(f"'{k}', '{v}'" for k, v in EVENT_WHITELIST.items())
     return f"map({pairs})[{base_event_type_sql(c)}]"
 
 
 def is_reputer_last_commit_sql(c: str) -> str:
+    """Worker vs reputer last-commit split (isReputerLastCommitEvent,
+    db.go:676-678): prefix 'emissions.v' + suffix 'EventReputerLastCommitSet'."""
     return (
         f"(startswith({c}, 'emissions.v') "
         f"AND endswith({c}, 'EventReputerLastCommitSet'))"
@@ -118,22 +74,17 @@ def is_reputer_last_commit_sql(c: str) -> str:
 
 
 def is_invalid_numeric_sql(c: str) -> str:
+    """Reject Infinity/NaN (case-insensitive substring match, db.go:1715-1717)."""
     return f"(contains(lower({c}), 'infinity') OR contains(lower({c}), 'nan'))"
 
 
 def strip_quotes_sql(c: str) -> str:
+    """Attribute values arrive JSON-encoded; scalars are quoted
+    (`"\\"1\\""`). Mirror of strings.Trim(v, '"') (db.go:866 et al.)."""
     return f'regexp_replace({c}, \'^"|"$\', \'\')'
 
 
 def attrs_to_map_sql(c: str) -> str:
-    return (
-        f"map_from_entries(filter({c}, (e, i) -> "
-        f"NOT exists(slice({c}, i + 2, size({c})), "
-        f"later -> later.key = e.key)))"
-    )
-
-
-def attrs_to_map(attrs: Column) -> Column:
     """[{key,value}] → map<key,value> (E6 attribute pivot entry point).
 
     Duplicate keys keep the LAST occurrence — the reference's attribute
@@ -143,11 +94,8 @@ def attrs_to_map(attrs: Column) -> Column:
     one such event into a permanent batch poison pill (the checkpoint
     retries the same batch forever). The dedup is a tiny per-event
     O(n_attrs^2) filter, entirely JVM-side."""
-    deduped = F.filter(
-        attrs,
-        lambda e, i: ~F.exists(
-            F.slice(attrs, i + F.lit(2), F.size(attrs)),
-            lambda later: later.getField("key") == e.getField("key"),
-        ),
+    return (
+        f"map_from_entries(filter({c}, (e, i) -> "
+        f"NOT exists(slice({c}, i + 2, size({c})), "
+        f"later -> later.key = e.key)))"
     )
-    return F.map_from_entries(deduped)

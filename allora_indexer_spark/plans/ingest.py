@@ -35,18 +35,11 @@ from pyspark.sql import functions as F
 
 from allora_indexer_spark import schemas
 from allora_indexer_spark.functions.events import (
-    EVENT_WHITELIST,
-    attrs_to_map,
     attrs_to_map_sql,
-    base_event_type,
-    event_family,
     event_family_sql,
-    is_invalid_numeric,
     is_invalid_numeric_sql,
-    is_reputer_last_commit,
     is_reputer_last_commit_sql,
     is_whitelisted_sql,
-    strip_quotes,
     strip_quotes_sql,
 )
 
@@ -63,21 +56,12 @@ DECODER_EPOCHS = [
 ]
 
 
-def decoder_version(height: Column) -> Column:
-    # Build the when/otherwise chain ascending so the HIGHEST bound ends up
-    # outermost — the reference picks the highest matching epoch
-    # (execute.go:88-98), e.g. height 1600000 → v0.6.0, not v0.3.0.
-    expr = F.lit(DECODER_EPOCHS[-1][1])
-    for bound, version in reversed(DECODER_EPOCHS[:-1]):
-        expr = F.when(height >= bound, version).otherwise(expr)
-    return expr
-
-
 def decoder_version_sql(height: str) -> str:
-    """SQL-text twin of :func:`decoder_version` (round 17 — the builders
-    batch their projections into single selectExpr calls, see
-    functions/events.py's twins note). CASE arms are emitted highest
-    bound first, which is exactly the when-chain's outermost-wins order."""
+    """The decoder epoch label of ``height`` (a SQL expression), as SQL
+    text: the reference picks the highest matching epoch
+    (execute.go:88-98), e.g. height 1600000 → v0.6.0, not v0.3.0, so the
+    CASE arms are emitted highest bound first. Column callers wrap it in
+    ``F.expr``."""
     arms = " ".join(
         f"WHEN {height} >= {bound} THEN '{version}'"
         for bound, version in DECODER_EPOCHS[:-1]
@@ -127,7 +111,7 @@ def with_versioned_parse(
     # ``data``/``version`` are Column objects from the caller; everything
     # else is batched as SQL text (round 17 — one selectExpr per step
     # instead of one withColumn per schema + one F.coalesce per field,
-    # see functions/events.py's SQL-twins note)
+    # see functions/events.py's module note)
     tmp = [f"__parse_{i}" for i in range(len(by_schema))]
     parse_step = df.select(
         "*",
@@ -200,7 +184,7 @@ def read_block_results(spark: SparkSession, path: str) -> DataFrame:
 def block_info(blocks: DataFrame) -> DataFrame:
     """19 header columns (createBlockInfoTableSQL, db.go:178-201). One
     selectExpr call — the whole projection crosses py4j once (round 17,
-    see functions/events.py's SQL-twins note)."""
+    see functions/events.py's module note)."""
     return blocks.selectExpr(
         "block_id.hash AS block_hash",
         "block_id.part_set_header.total AS block_total_parts",
@@ -324,63 +308,17 @@ def _route(
     create would permanently shift every subsequent topic id. Suffix
     match keeps the '.' separator so MsgInsertWorkerPayload does not
     swallow its Bulk variant. No suffixes routes nothing. The literals are
-    inlined into SQL string literals; _check_route_literals keeps quotes
-    out of them."""
+    inlined into SQL string literals; schemas._check_route_literals keeps
+    quotes out of them."""
     if not suffixes:
         return msgs.filter("false")
     cond = " OR ".join(f"endswith(type, '.{s}')" for s in suffixes)
     return msgs.filter(f"startswith(type, '{prefix}') AND ({cond})")
 
 
-def _check_route_literals(*specs: tuple) -> None:
-    """Raise ValueError for a route literal that would break out of the
-    SQL string literal _route inlines it into."""
-    for prefix, suffixes in specs:
-        for lit in (prefix, *suffixes):
-            if any(c in lit for c in "'\"\\"):
-                raise ValueError(
-                    f"route literal {lit!r} contains a quote or backslash"
-                )
-
-
-# Route specs as (prefix, suffixes) data — the SINGLE source of truth for
-# both the builders' filters (via _route_spec) and the presence-pruning
-# maps (BLOCK_TABLE_ROUTES below). A route added to a builder without its
-# spec constant cannot desynchronize the pruning map, because the builder
-# and the map read the same tuple — the silent-data-loss hazard a
-# hand-duplicated map would carry.
-#
-# The *_BULK routes are gated on the reference's LITERAL prefix check
-# HasPrefix("/emissions.v1") (process_tx.go:120-131, 144-155) —
-# reproduced exactly, including its quirk: the prefix also matches
-# /emissions.v1x.* families (v10, v11, ...), which the reference routes
-# through the v1 bulk schema. Matching a stricter "/emissions.v1." here
-# would silently DROP a v1x bulk payload the reference processes.
-TOPIC_ROUTE = ("/emissions.v", ("MsgCreateNewTopic", "CreateNewTopicRequest"))
-REGISTER_ROUTE = ("/emissions.v", ("MsgRegister", "RegisterRequest"))
-SEND_ROUTE = ("/cosmos.bank.v1beta1", ("MsgSend",))
-FUND_ROUTE = (
-    "/emissions.v",
-    ("MsgFundTopic", "FundTopicRequest", "MsgAddStake", "AddStakeRequest"),
-)
-WORKER_SINGLE_ROUTE = (
-    "/emissions.v",
-    ("MsgInsertWorkerPayload", "InsertWorkerPayloadRequest"),
-)
-WORKER_BULK_ROUTE = ("/emissions.v1", ("MsgInsertBulkWorkerPayload",))
-REPUTER_SINGLE_ROUTE = (
-    "/emissions.v",
-    ("MsgInsertReputerPayload", "InsertReputerPayloadRequest"),
-)
-REPUTER_BULK_ROUTE = ("/emissions.v1", ("MsgInsertBulkReputerPayload",))
-_check_route_literals(
-    TOPIC_ROUTE, REGISTER_ROUTE, SEND_ROUTE, FUND_ROUTE,
-    WORKER_SINGLE_ROUTE, WORKER_BULK_ROUTE,
-    REPUTER_SINGLE_ROUTE, REPUTER_BULK_ROUTE,
-)
-
-
 def _route_spec(msgs: DataFrame, spec: tuple) -> DataFrame:
+    """Route by one of the schemas.*_ROUTE (prefix, suffixes) tuples —
+    the same tuples the table specs' presence rules read."""
     prefix, suffixes = spec
     return _route(msgs, *suffixes, prefix=prefix)
 
@@ -426,7 +364,7 @@ def topics(
     # WASM-logic fields (loss_logic, preward_*, ...) exist only for
     # v0.2.14-era heights; modern epochs declare them away.
     parsed = with_versioned_parse(
-        _route_spec(msgs, TOPIC_ROUTE),
+        _route_spec(msgs, schemas.TOPIC_ROUTE),
         F.col("data"),
         F.col("decoder_version"),
         schemas.MSG_CREATE_NEW_TOPIC_SCHEMAS,
@@ -527,7 +465,7 @@ def worker_registrations(msgs: DataFrame) -> DataFrame:
     WASM-era lib_p2p_key field exists only for v0.2.14-era heights
     (schemas.MSG_REGISTER_SCHEMAS); modern epochs null it by declaration."""
     parsed = with_versioned_parse(
-        _route_spec(msgs, REGISTER_ROUTE),
+        _route_spec(msgs, schemas.REGISTER_ROUTE),
         F.col("data"),
         F.col("decoder_version"),
         schemas.MSG_REGISTER_SCHEMAS,
@@ -548,7 +486,7 @@ def transfers(msgs: DataFrame) -> DataFrame:
     process_tx.go:558-586) ∪ FundTopic/AddStake (denom fixed 'uallo',
     insertMsgFundTopic process_tx.go:526-557)."""
     send_ddl = schemas.ddl(msgs.sparkSession, schemas.MSG_SEND_SCHEMA)
-    send = _route_spec(msgs, SEND_ROUTE).selectExpr(
+    send = _route_spec(msgs, schemas.SEND_ROUTE).selectExpr(
         "height",
         "message_id",
         f"from_json(data, '{send_ddl}') AS m",
@@ -565,7 +503,7 @@ def transfers(msgs: DataFrame) -> DataFrame:
     # schemas.MSG_FUND_TOPIC_SCHEMAS); MsgSend stays single-schema, it is
     # a cosmos-sdk bank message outside the emissions versioning domain.
     fund = with_versioned_parse(
-        _route_spec(msgs, FUND_ROUTE),
+        _route_spec(msgs, schemas.FUND_ROUTE),
         F.col("data"),
         F.col("decoder_version"),
         schemas.MSG_FUND_TOPIC_SCHEMAS,
@@ -597,7 +535,7 @@ def addresses(msgs: DataFrame, raw: DataFrame | None = None) -> DataFrame:
     without the versioned dispatch the field-drifting builders need."""
     spark = msgs.sparkSession
     send_ddl = schemas.ddl(spark, schemas.MSG_SEND_SCHEMA)
-    send = _route_spec(msgs, SEND_ROUTE).selectExpr(
+    send = _route_spec(msgs, schemas.SEND_ROUTE).selectExpr(
         f"from_json(data, '{send_ddl}') AS m"
     )
     reg_ddl = schemas.ddl(spark, schemas.MSG_REGISTER_SCHEMA)
@@ -605,10 +543,10 @@ def addresses(msgs: DataFrame, raw: DataFrame | None = None) -> DataFrame:
     outs = [
         send.selectExpr("m.from_address AS address"),
         send.selectExpr("m.to_address AS address"),
-        _route_spec(msgs, REGISTER_ROUTE).selectExpr(
+        _route_spec(msgs, schemas.REGISTER_ROUTE).selectExpr(
             f"from_json(data, '{reg_ddl}').sender AS address"
         ),
-        _route_spec(msgs, FUND_ROUTE).selectExpr(
+        _route_spec(msgs, schemas.FUND_ROUTE).selectExpr(
             f"from_json(data, '{fund_ddl}').sender AS address"
         ),
         # topic CREATOR rows (insertAddress in insertMsgCreateNewTopic,
@@ -618,7 +556,7 @@ def addresses(msgs: DataFrame, raw: DataFrame | None = None) -> DataFrame:
         # divergence), so the creator row is inserted for every create —
         # a superset of the reference on unreconciled creates, matching
         # the documented policy
-        _route_spec(msgs, TOPIC_ROUTE).selectExpr(
+        _route_spec(msgs, schemas.TOPIC_ROUTE).selectExpr(
             "from_json(data, 'STRUCT<creator: STRING>').creator AS address"
         ),
     ]
@@ -662,7 +600,7 @@ def _worker_bundles(msgs: DataFrame) -> DataFrame:
     Bulk messages carry the nonce at the message level, singles at the
     bundle level — coalesced here."""
     single = with_versioned_parse(
-        _route_spec(msgs, WORKER_SINGLE_ROUTE),
+        _route_spec(msgs, schemas.WORKER_SINGLE_ROUTE),
         F.col("data"),
         F.col("decoder_version"),
         schemas.MSG_WORKER_PAYLOAD_SCHEMAS,
@@ -676,7 +614,7 @@ def _worker_bundles(msgs: DataFrame) -> DataFrame:
     bulk_ddl = schemas.ddl(
         msgs.sparkSession, schemas.MSG_BULK_WORKER_PAYLOAD_SCHEMA
     )
-    bulk = _route_spec(msgs, WORKER_BULK_ROUTE).selectExpr(
+    bulk = _route_spec(msgs, schemas.WORKER_BULK_ROUTE).selectExpr(
         "height",
         "message_id",
         f"from_json(data, '{bulk_ddl}') AS m",
@@ -794,7 +732,7 @@ def _reputer_bundles_raw(msgs: DataFrame) -> DataFrame:
     """Single + bulk reputer payloads → exploded (bundle_idx, pubkey,
     signature, value_bundle) stream (process_tx.go:175-290)."""
     single = with_versioned_parse(
-        _route_spec(msgs, REPUTER_SINGLE_ROUTE),
+        _route_spec(msgs, schemas.REPUTER_SINGLE_ROUTE),
         F.col("data"),
         F.col("decoder_version"),
         schemas.MSG_REPUTER_PAYLOAD_SCHEMAS,
@@ -811,7 +749,7 @@ def _reputer_bundles_raw(msgs: DataFrame) -> DataFrame:
     bulk_ddl = schemas.ddl(
         msgs.sparkSession, schemas.MSG_BULK_REPUTER_PAYLOAD_SCHEMA
     )
-    bulk = _route_spec(msgs, REPUTER_BULK_ROUTE).selectExpr(
+    bulk = _route_spec(msgs, schemas.REPUTER_BULK_ROUTE).selectExpr(
         "height",
         "message_id",
         f"from_json(data, '{bulk_ddl}') AS m",
@@ -901,7 +839,7 @@ def _unpivot_value_bundle(df: DataFrame, vb: str, key_cols: list[str]) -> DataFr
     Generate explodes them — 6 scans of the bundle subtree collapse into
     1, and the whole projection is a single selectExpr (the driver-side
     plan-construction cost is what made this the most expensive builder,
-    see functions/events.py's SQL-twins note). Branch arrays are
+    see functions/events.py's module note). Branch arrays are
     coalesced to array() so a NULL field contributes nothing instead of
     nulling the concat. Row multiset is identical (per-branch emission
     order within a row is not part of any contract — every consumer
@@ -984,11 +922,9 @@ def events_table(fev: DataFrame) -> DataFrame:
     )
 
 
-def _attr_int(key: str) -> Column:
-    return strip_quotes(F.col("attr").getItem(key)).cast("int")
-
-
 def _attr_int_sql(key: str) -> str:
+    """An attribute's quoted integer as SQL text (Column callers wrap it
+    in ``F.expr``)."""
     return f"CAST({strip_quotes_sql(f_attr(key))} AS INT)"
 
 
@@ -1295,97 +1231,19 @@ def reward_current_block_emission(fev: DataFrame) -> DataFrame:
 # The streaming sinks submit one write job per table per micro-batch; at the
 # reference's 1-block/5 s steady state (main.go:251) most of the ~24 jobs
 # carry provably-empty deltas, and the fixed per-job local floor — not data —
-# set the commit p50. These maps recover, from ONE bounded driver read of a
-# persisted parse root, exactly which tables a batch can touch, so empty
-# deltas are never submitted. They MUST mirror the builders' routing: a
-# missing entry here silently drops a table's writes (data loss), which is
-# why tests/test_ingest.py pins "non-empty table ⇒ marked present" over the
-# full reference-shaped fixture feed.
-
-_WORKER_ROUTES = (WORKER_SINGLE_ROUTE, WORKER_BULK_ROUTE)
-_REPUTER_ROUTES = (REPUTER_SINGLE_ROUTE, REPUTER_BULK_ROUTE)
-_FUND_ROUTES = (SEND_ROUTE, FUND_ROUTE)
-_REGISTER_ROUTES = (REGISTER_ROUTE,)
-
-# tx-side tables → the @type routes that can feed them — the SAME tuples
-# the builders filter with (_route_spec), so map and builders cannot
-# drift (block_info and messages are handled structurally: block_info
-# has a row per BLOCK and messages a row per message, independent of
-# routing)
-BLOCK_TABLE_ROUTES: dict[str, tuple[tuple[str, tuple[str, ...]], ...]] = {
-    "topics": (TOPIC_ROUTE,),
-    "worker_registrations": _REGISTER_ROUTES,
-    "transfers": _FUND_ROUTES,
-    "addresses": _FUND_ROUTES + _REGISTER_ROUTES + _REPUTER_ROUTES
-    + (TOPIC_ROUTE,),
-    "inferences": _WORKER_ROUTES,
-    "forecasts": _WORKER_ROUTES,
-    "forecast_values": _WORKER_ROUTES,
-    "reputer_payload": _REPUTER_ROUTES,
-    "reputer_bundles": _REPUTER_ROUTES,
-    "bundle_values": _REPUTER_ROUTES,
-}
-
-# event-side tables → the whitelist family that feeds them (flat_events
-# routes exactly one family per event; `events` keeps every whitelisted row)
-EVENT_TABLE_FAMILIES: dict[str, str] = {
-    "scores": "score",
-    "rewards": "reward",
-    "networklosses": "network_loss",
-    "networkloss_bundle_values": "network_loss",
-    "topic_forecasting_scores": "forecast_task_score",
-    "last_commit_values": "actor_last_commit",
-    "ema_scores": "ema_score",
-    "topic_rewards": "topic_reward",
-    "tokenomics": "tokenomics",
-    "ecosystem_token_mint": "ecosystem_token_mint",
-    "reward_current_block_emission": "reward_current_block_emission",
-}
-
-
-# Tables whose probe-prune column (warehouse._prune_col over TABLE_KEYS)
-# is DERIVED FROM THE FEED'S BLOCK HEIGHT, so a micro-batch's block-height
-# span COVERS every row's prune value and may be passed to
-# write_insert_if_absent(key_span=...) in place of the per-table min/max
-# aggregation (~3 local jobs each). Derivations, per builder:
-# block_info/messages/events: height IS the feed height; *_height
-# message tables: message_height = CAST(height); event scalar tables:
-# height_tx = the result feed's height. Deliberately ABSENT: topics
-# (prune col `id` — a creation-order rank), addresses (`addr_key`, a
-# string identity), and networklosses/networkloss_bundle_values (their
-# keys carry BOTH height_tx and `height`, and _PRUNE_PREFERENCE picks
-# `height` — the event's block_height ATTRIBUTE, a nonce-like value the
-# feed span does not cover). Upsert tables (UPSERT_ORDER) never take
-# spans — write_keep_one buckets by key hash instead. The covering
-# invariant is pinned by
-# tests/test_ingest.py::test_block_span_covers_prune_columns.
-BLOCK_HEIGHT_SPAN_TABLES = frozenset(
-    {
-        "block_info",
-        "messages",
-        "worker_registrations",
-        "transfers",
-        "inferences",
-        "forecasts",
-        "forecast_values",
-        "reputer_payload",
-        "reputer_bundles",
-        "bundle_values",
-        "events",
-        "tokenomics",
-        "topic_rewards",
-        "topic_forecasting_scores",
-        "ecosystem_token_mint",
-        "reward_current_block_emission",
-    }
-)
+# set the commit p50. The table specs' presence rules (schemas.TableSpec)
+# recover, from ONE bounded driver read of a persisted parse root, exactly
+# which tables a batch can touch, so empty deltas are never submitted. A
+# block-feed rule names the same route tuples its builder filters with, so
+# rule and builder cannot drift; tests/test_ingest.py pins "non-empty table
+# ⇒ marked present" over the full reference-shaped fixture feed.
 
 
 def batch_height_span(batch_df: DataFrame) -> tuple | None:
     """(lo, hi) of the micro-batch's block heights — ONE bounded job that
-    replaces the per-table span aggregations for every
-    BLOCK_HEIGHT_SPAN_TABLES member. None when the batch has no usable
-    heights (callers then fall back to per-table aggregation)."""
+    replaces the per-table span aggregations for every span-covered table
+    (schemas.TableSpec.span). None when the batch has no usable heights
+    (callers then fall back to per-table aggregation)."""
     row = batch_df.agg(
         F.min("height").alias("lo"), F.max("height").alias("hi")
     ).first()
@@ -1405,20 +1263,26 @@ def _type_matches(t: str, routes) -> bool:
     )
 
 
+def _present(feed: str, vocab, fed) -> set[str]:
+    """The ``feed`` tables a batch whose root holds ``vocab`` (its distinct
+    @types or families) can give rows, by each spec's presence rule: an
+    ``always`` table always; otherwise none on an empty root, and else
+    those ``fed(spec)`` accepts."""
+    return {
+        s.name
+        for s in schemas.TABLE_SPECS.values()
+        if s.feed == feed and (s.always or (bool(vocab) and fed(s)))
+    }
+
+
 def present_block_tables(msgs: DataFrame) -> set[str]:
     """Tx-side tables that CAN be non-empty for this batch, from one
     bounded job: the distinct @type vocabulary of the (persisted) message
-    root — dozens of values at most, never data rows. ``block_info`` is
-    always present (a row per block exists even for empty blocks);
-    ``messages`` whenever any message row exists."""
+    root — dozens of values at most, never data rows."""
     types = [r[0] for r in msgs.select("type").distinct().collect()]
-    out = {"block_info"}
-    if types:
-        out.add("messages")
-    for table, routes in BLOCK_TABLE_ROUTES.items():
-        if any(t is not None and _type_matches(t, routes) for t in types):
-            out.add(table)
-    return out
+    return _present("block", types, lambda s: not s.routes or any(
+        t is not None and _type_matches(t, s.routes) for t in types
+    ))
 
 
 def present_event_tables(fev: DataFrame) -> set[str]:
@@ -1426,13 +1290,9 @@ def present_event_tables(fev: DataFrame) -> set[str]:
     the (persisted) flat-events root: the distinct routing families (≤ 11
     values by the whitelist)."""
     fams = {r[0] for r in fev.select("family").distinct().collect()}
-    out: set[str] = set()
-    if fams:
-        out.add("events")
-    for table, fam in EVENT_TABLE_FAMILIES.items():
-        if fam in fams:
-            out.add(table)
-    return out
+    return _present(
+        "event", fams, lambda s: s.family is None or s.family in fams
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1628,7 +1488,7 @@ def numeric_quarantine(fev: DataFrame) -> DataFrame:
         parsed = fev.filter(F.col("family") == family).select(
             F.col("height").alias("height_tx"),
             F.lit(family).alias("family"),
-            _attr_int("topic_id").alias("topic_id"),
+            F.expr(_attr_int_sql("topic_id")).alias("topic_id"),
             F.from_json(F.col("attr.addresses"), "array<string>").alias("addresses"),
             F.from_json(F.col("attr").getItem(value_key), "array<string>")
             .alias("vals"),
@@ -1659,9 +1519,9 @@ def numeric_quarantine(fev: DataFrame) -> DataFrame:
             "family",
             "topic_id",
             F.col("z.addresses").alias("address"),
-            strip_quotes(F.col("z.vals")).alias("value_raw"),
+            F.expr(strip_quotes_sql("z.vals")).alias("value_raw"),
         )
-        out.append(rows.filter(is_invalid_numeric(F.col("value_raw"))))
+        out.append(rows.filter(F.expr(is_invalid_numeric_sql("value_raw"))))
         out.append(mismatched)
     # the two remaining silent-drop guards, surfaced the same way:
     # topic_rewards' tids/rewards zip drops the whole event on a length
@@ -1688,7 +1548,7 @@ def numeric_quarantine(fev: DataFrame) -> DataFrame:
     )
     ema = fev.filter(F.col("family") == "ema_score").select(
         F.col("height").alias("height_tx"),
-        _attr_int("topic_id").alias("topic_id"),
+        F.expr(_attr_int_sql("topic_id")).alias("topic_id"),
         F.from_json(F.col("attr.addresses"), "array<string>").alias("addresses"),
         F.from_json(F.col("attr.is_active"), "array<boolean>").alias("actives"),
     )

@@ -8,10 +8,12 @@ ON CONFLICT on Postgres (T3). On a Spark warehouse the same contract is:
 - K5/K6 (upsert / keep-latest): union existing + incoming, keep one row per
   key by the ordering column, rewrite.
 
-Backing store here is parquet directories (one per table) because this
-container has no Delta; on Delta/Iceberg both writers become a single
-``MERGE INTO`` on ``TABLE_KEYS[name]`` and the swap dance disappears. The
-writer API is the seam where that substitution happens.
+Backing store here is parquet files under a per-table manifest because
+this container has no Delta; on Delta/Iceberg both writers become a single
+``MERGE INTO`` on the table spec's natural keys
+(``schemas.TABLE_SPECS[name].keys``, which also picks the writer) and the
+manifest dance disappears. The writer API is the seam where that
+substitution happens.
 """
 
 from __future__ import annotations
@@ -38,7 +40,7 @@ from allora_indexer_spark.plans.storage import (  # noqa: F401 — re-exports
     _atomic_write_json,
     _cas_section,
 )
-from allora_indexer_spark.schemas import ENUM_DOMAINS, TABLE_KEYS
+from allora_indexer_spark.schemas import TABLE_KEYS, TABLE_SPECS
 
 # The storage-backend seam (plans/storage.py): every `_CURRENT` read and
 # every publish/flip goes through this object. Default is the POSIX
@@ -83,16 +85,11 @@ STORAGE = PosixManifestStorage()
 # section collapses into MERGE INTO + snapshot manifests; this is that
 # contract on plain parquet.
 
-UPSERT_BUCKETS = 32  # default; fixed per table at creation (stored in meta)
-# Per-table overrides for deployment sizing: pick ~(table size / healthy
-# rewrite quantum). At 100 TB the large event tables (scores/rewards) want
-# thousands of buckets so one batch rewrites megabytes, not gigabytes; the
-# two-row last_commit_values wants few. The count is read back from the
-# table's manifest on every subsequent write, so resizing is an offline
-# rewrite (compact into a new table), never a silent mismatch.
-UPSERT_BUCKET_COUNTS: dict[str, int] = {
-    "last_commit_values": 4,
-}
+# Default bucket count, fixed per table at creation (stored in meta); a
+# table spec's ``buckets`` overrides it for deployment sizing — at 100 TB
+# the large event tables (scores/rewards) want thousands of buckets so one
+# batch rewrites megabytes, not gigabytes.
+UPSERT_BUCKETS = 32
 _BUCKET_COL = "_kb"
 _VERSIONS_DIR = "_versions"
 _GC_GRACE_SEC = 60.0
@@ -733,8 +730,8 @@ def existing_keys_in_range(
     every height-derived table, saving ~3 local jobs per table per
     trigger. Over-covering is safe (the probe merely reads more);
     under-covering would silently re-admit keys, which is why callers may
-    only pass spans for tables in ingest.BLOCK_HEIGHT_SPAN_TABLES (prune
-    column provably equal to the feed's block height —
+    only pass spans for span-covered tables (schemas.TableSpec.span: prune
+    column provably derived from the feed's block height —
     tests/test_ingest.py pins the covering invariant)."""
     keys = TABLE_KEYS[name]
     pc = _prune_col(keys)
@@ -1077,7 +1074,7 @@ def write_insert_if_absent(
         def _span_proves_absent(span: tuple | None) -> bool:
             # Footer high-watermark proof (see _prune_max_from_footers):
             # the caller's span covers every batch row's prune value
-            # (BLOCK_HEIGHT_SPAN_TABLES covering invariant, pinned by
+            # (TableSpec.span covering invariant, pinned by
             # tests/test_ingest.py), the prune column is part of the
             # natural key, and every existing row's prune value is
             # PROVABLY below span lo — so no existing row can equal any
@@ -1097,14 +1094,18 @@ def write_insert_if_absent(
         batch.unpersist()
 
 
+def _enum_domains(name: str) -> tuple:
+    spec = TABLE_SPECS.get(name)
+    return spec.enums if spec is not None else ()
+
+
 def enum_violations(df: DataFrame, name: str) -> DataFrame:
     """Rows violating the table's CHECK-style enum domains
-    (schemas.ENUM_DOMAINS — the Postgres ENUM analog, db.go:340-350,
+    (schemas.TableSpec.enums — the Postgres ENUM analog, db.go:340-350,
     442-452). NULL passes (a constraint on values, not presence)."""
-    domains = ENUM_DOMAINS.get(name, {})
     cond = F.lit(False)
-    for col, allowed in domains.items():
-        cond = cond | (F.col(col).isNotNull() & ~F.col(col).isin(allowed))
+    for col, allowed in _enum_domains(name):
+        cond = cond | (F.col(col).isNotNull() & ~F.col(col).isin(*allowed))
     return df.filter(cond)
 
 
@@ -1117,10 +1118,9 @@ def read_table_checked(
     errored, so a foreign tag cannot stall the pipeline."""
     df = read_table(spark, root, name)
     bad = enum_violations(df, name)
-    domains = ENUM_DOMAINS.get(name, {})
     good = df
-    for col, allowed in domains.items():
-        good = good.filter(F.col(col).isNull() | F.col(col).isin(allowed))
+    for col, allowed in _enum_domains(name):
+        good = good.filter(F.col(col).isNull() | F.col(col).isin(*allowed))
     return good, bad
 
 
@@ -1177,7 +1177,7 @@ def _write_keep_one_locked(
     path = _table_path(root, name)
     manifest = _manifest_read(path)
     if num_buckets is None:
-        num_buckets = UPSERT_BUCKET_COUNTS.get(name, UPSERT_BUCKETS)
+        num_buckets = TABLE_SPECS[name].buckets or UPSERT_BUCKETS
     if manifest is not None:
         num_buckets = manifest.get("buckets", num_buckets)
     batch = df.drop(_BUCKET_COL).withColumn(
@@ -1446,36 +1446,19 @@ def diff_table_versions(
     )
 
 
-# Ordering for the upsert tables: which row wins on key collision.
-# (column, descending) specs — materialized lazily, a SparkSession may not
-# exist at import time.
-UPSERT_ORDER: dict[str, list[tuple[str, bool]]] = {
-    "last_commit_values": [("height_tx", True), ("height", True)],
-    # ascending raw-value tiebreaks mirror the BUILDERS' deterministic
-    # same-height_tx survivor (ingest.scores/rewards/ema_scores): the
-    # write-side merge must keep the same row the builder would, or a
-    # replayed batch carrying a key whose height_tx ties the stored
-    # row's could flip the survivor arbitrarily between runs
-    "ema_scores": [
-        ("height_tx", True), ("score_raw", False), ("is_active", False),
-    ],
-    "scores": [("height_tx", True), ("value_raw", False)],
-    "rewards": [("height_tx", True), ("value_raw", False)],
-}
-
-
-def _order_cols(spec: list[tuple[str, bool]]) -> list[Column]:
+def _order_cols(spec) -> list[Column]:
+    """(column, descending) pairs — a table spec's ``keep_one`` — as
+    sort Columns, built at call time (a SparkSession may not exist at
+    import time)."""
     return [F.desc(c) if d else F.asc(c) for c, d in spec]
 
 
 def _fk_levels(names) -> list[list[str]]:
-    """Partition table names into FK dependency levels (schemas.TABLE_FKS
-    restricted to the given set): level 0 has no in-set parents, level
-    n+1 depends only on lower levels. Writing level-by-level preserves
-    the parents-before-children crash contract while freeing every table
-    WITHIN a level to write concurrently."""
-    from allora_indexer_spark.schemas import TABLE_FKS
-
+    """Partition table names into FK dependency levels (the table specs'
+    ``fks`` restricted to the given set): level 0 has no in-set parents,
+    level n+1 depends only on lower levels. Writing level-by-level
+    preserves the parents-before-children crash contract while freeing
+    every table WITHIN a level to write concurrently."""
     names = list(names)
     if not names:  # empty batch dict: no levels, not max()-on-empty
         return []
@@ -1487,7 +1470,7 @@ def _fk_levels(names) -> list[list[str]]:
             return levels[n]
         parents = {
             p
-            for _, p, _ in TABLE_FKS.get(n, ())
+            for _, p, _ in TABLE_SPECS[n].fks
             if p in present and p != n and p not in seen
         }
         lv = (
@@ -1514,7 +1497,7 @@ def write_tables(
     key_spans: dict[str, tuple] | None = None,
 ) -> None:
     """Write a full build_tables() result idempotently. Parents before
-    children per-TABLE (schemas.TABLE_FKS), which eliminates the
+    children per-TABLE (the table specs' ``fks``), which eliminates the
     reference's waitCreation FK retry loop (A4/T4) — every table is
     submitted to one shared pool and waits only on ITS OWN in-set
     parents, the engine's analog of the reference's 32-connection pool
@@ -1536,17 +1519,14 @@ def write_tables(
 
     def _write(name: str) -> None:
         df = tables[name]
-        if name in UPSERT_ORDER:
-            write_keep_one(
-                spark, df, root, name, _order_cols(UPSERT_ORDER[name])
-            )
+        order = TABLE_SPECS[name].keep_one
+        if order:
+            write_keep_one(spark, df, root, name, _order_cols(order))
         else:
             write_insert_if_absent(
                 spark, df, root, name,
                 key_span=(key_spans or {}).get(name),
             )
-
-    from allora_indexer_spark.schemas import TABLE_FKS
 
     present = set(tables.keys())
     # _fk_levels supplies the topological order AND the cycle-break: the
@@ -1560,7 +1540,7 @@ def write_tables(
     parents = {
         n: {
             p
-            for _, p, _ in TABLE_FKS.get(n, ())
+            for _, p, _ in TABLE_SPECS[n].fks
             if p in present and p != n and level[p] < level[n]
         }
         for n in present
@@ -2159,10 +2139,10 @@ def integrity_report(
     the commented-out FOREIGN KEYs db.go:359-389, ENUM domains
     db.go:340-350). Checks:
 
-    - ``key_unique``     duplicate natural keys (TABLE_KEYS)
+    - ``key_unique``     duplicate natural keys (TableSpec.keys)
     - ``key_nulls``      rows with a NULL natural-key column
-    - ``enum_domain``    values outside ENUM_DOMAINS
-    - ``fk_orphans:<p>`` child keys with no parent row (TABLE_FKS);
+    - ``enum_domain``    values outside TableSpec.enums
+    - ``fk_orphans:<p>`` child keys with no parent row (TableSpec.fks);
                          NULL child keys are exempt, SQL-style
 
     Fully lazy: every check is a 1-row aggregate (uniqueness via one
@@ -2171,11 +2151,9 @@ def integrity_report(
     runs all checks; at 100 TB each is a well-shaped distributed job, and
     a scheduled run of this IS the lake-warehouse answer to `ALTER TABLE
     .. ADD CONSTRAINT`. A healthy warehouse reports all zeros."""
-    from allora_indexer_spark.schemas import TABLE_FKS
-
     present = {
         t
-        for t in (tables if tables is not None else TABLE_KEYS)
+        for t in (tables if tables is not None else TABLE_SPECS)
         if _exists(_table_path(root, t))
     }
     checks: list[DataFrame] = []
@@ -2191,7 +2169,7 @@ def integrity_report(
 
     for t in sorted(present):
         df = read_table(spark, root, t)
-        keys = TABLE_KEYS[t]
+        keys = TABLE_SPECS[t].keys
         # Null-safe duplicate count: groupBy treats NULL as a regular group
         # value, so rows with NULL keys are counted as duplicates only when
         # they actually repeat.  (count_distinct drops any tuple containing
@@ -2219,7 +2197,7 @@ def integrity_report(
                 F.sum(F.when(null_key, 1).otherwise(0)).alias("violations")
             ),
         )
-        if t in ENUM_DOMAINS:
+        if TABLE_SPECS[t].enums:
             add(
                 t,
                 "enum_domain",
@@ -2227,7 +2205,7 @@ def integrity_report(
                     F.count("*").alias("violations")
                 ),
             )
-        for child_cols, parent, parent_cols in TABLE_FKS.get(t, []):
+        for child_cols, parent, parent_cols in TABLE_SPECS[t].fks:
             if parent not in present:
                 continue
             child = df
@@ -2239,7 +2217,7 @@ def integrity_report(
                     for cc, pc in zip(child_cols, parent_cols)
                 ]
             ).distinct()
-            orphans = child.join(pdf, child_cols, "left_anti")
+            orphans = child.join(pdf, list(child_cols), "left_anti")
             add(
                 t,
                 f"fk_orphans:{parent}",
@@ -2318,8 +2296,8 @@ def table_health(root: str) -> list[dict]:
         #   "degraded"  — an "all" base exists with no covering layout.
         # Fix for the last two: one bare compact().
         probe_pruning = None
-        if name in TABLE_KEYS and not bucketed:
-            pc = _prune_col(TABLE_KEYS[name])
+        if name in TABLE_SPECS and not bucketed:
+            pc = _prune_col(TABLE_SPECS[name].keys)
             lay = m.get("layout") or {}
             laid = (
                 lay.get("range_by")

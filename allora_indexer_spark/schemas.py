@@ -22,6 +22,8 @@ applies (/root/reference/db.go:1715-1717) runs before every cast.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -192,9 +194,6 @@ MSG_CREATE_NEW_TOPIC_SCHEMAS = {
     "v0.5.0": MSG_CREATE_NEW_TOPIC_MODERN_SCHEMA,
     "v0.6.0": MSG_CREATE_NEW_TOPIC_MODERN_SCHEMA,
 }
-
-# Union alias kept for schema-on-read callers (DDL export, tests).
-MSG_CREATE_NEW_TOPIC_SCHEMA = MSG_CREATE_NEW_TOPIC_LEGACY_SCHEMA
 
 MSG_SEND_SCHEMA = _s(
     _f("@type", StringType()),
@@ -370,21 +369,55 @@ MSG_REPUTER_PAYLOAD_SCHEMAS = {
     v: MSG_REPUTER_PAYLOAD_SCHEMA for v in _ALL_EPOCHS
 }
 
-# Message @type suffixes → route names (process_tx.go:66-170 dispatch).
-MSG_ROUTES = {
-    "MsgCreateNewTopic": "create_new_topic",
-    "MsgFundTopic": "fund_topic",
-    "MsgAddStake": "add_stake",
-    "MsgSend": "send",
-    "MsgRegister": "register",
-    "MsgInsertBulkWorkerPayload": "bulk_worker_payload",
-    "MsgInsertWorkerPayload": "worker_payload",
-    "MsgInsertBulkReputerPayload": "bulk_reputer_payload",
-    "MsgInsertReputerPayload": "reputer_payload",
-}
+# ---------------------------------------------------------------------------
+# Message routes (process_tx.go:66-170 dispatch) as (prefix, suffixes) data.
+# The builders' @type filters (ingest._route_spec) and the spec rows'
+# presence rules below read the SAME tuples, so the two cannot drift.
+#
+# The *_BULK routes are gated on the reference's LITERAL prefix check
+# HasPrefix("/emissions.v1") (process_tx.go:120-131, 144-155) —
+# reproduced exactly, including its quirk: the prefix also matches
+# /emissions.v1x.* families (v10, v11, ...), which the reference routes
+# through the v1 bulk schema. Matching a stricter "/emissions.v1." here
+# would silently DROP a v1x bulk payload the reference processes.
+# ---------------------------------------------------------------------------
 
-# The 23 output tables (db.go:54-78); used by the warehouse writers and the
-# idempotence keys (unique constraints db.go:1654-1686 → natural merge keys).
+TOPIC_ROUTE = ("/emissions.v", ("MsgCreateNewTopic", "CreateNewTopicRequest"))
+REGISTER_ROUTE = ("/emissions.v", ("MsgRegister", "RegisterRequest"))
+SEND_ROUTE = ("/cosmos.bank.v1beta1", ("MsgSend",))
+FUND_ROUTE = (
+    "/emissions.v",
+    ("MsgFundTopic", "FundTopicRequest", "MsgAddStake", "AddStakeRequest"),
+)
+WORKER_SINGLE_ROUTE = (
+    "/emissions.v",
+    ("MsgInsertWorkerPayload", "InsertWorkerPayloadRequest"),
+)
+WORKER_BULK_ROUTE = ("/emissions.v1", ("MsgInsertBulkWorkerPayload",))
+REPUTER_SINGLE_ROUTE = (
+    "/emissions.v",
+    ("MsgInsertReputerPayload", "InsertReputerPayloadRequest"),
+)
+REPUTER_BULK_ROUTE = ("/emissions.v1", ("MsgInsertBulkReputerPayload",))
+
+
+def _check_route_literals(*specs: tuple) -> None:
+    """Raise ValueError for a route literal that would break out of the
+    SQL string literal ingest._route inlines it into."""
+    for prefix, suffixes in specs:
+        for lit in (prefix, *suffixes):
+            if any(c in lit for c in "'\"\\"):
+                raise ValueError(
+                    f"route literal {lit!r} contains a quote or backslash"
+                )
+
+
+_check_route_literals(
+    TOPIC_ROUTE, REGISTER_ROUTE, SEND_ROUTE, FUND_ROUTE,
+    WORKER_SINGLE_ROUTE, WORKER_BULK_ROUTE,
+    REPUTER_SINGLE_ROUTE, REPUTER_BULK_ROUTE,
+)
+
 # Postgres ENUM domain for bundle-value type tags (reputerValueType /
 # networklossBundleValueType, db.go:340-350, 442-452). The DDL declares 5
 # labels, but the reference's own inserts write a 6th
@@ -399,122 +432,188 @@ VALUE_BUNDLE_TAGS = [
     "OneOutInfererForecasterValues",
 ]
 
-# CHECK-style column domains per table (Spark has no enum type; the MERGE
-# keys + these expectations replace Postgres constraints — K8).
-ENUM_DOMAINS: dict[str, dict[str, list[str]]] = {
-    "bundle_values": {"reputer_value_type": VALUE_BUNDLE_TAGS},
-    "networkloss_bundle_values": {"reputer_value_type": VALUE_BUNDLE_TAGS},
-}
 
-TABLE_KEYS: dict[str, list[str]] = {
-    "block_info": ["height"],
-    "consensus_params": ["height"],
+# ---------------------------------------------------------------------------
+# The output tables of the reference's model (db.go:54-78), one row
+# each: the ingest builders' tables plus consensus_params. A row is
+# everything the engine knows about a table apart from its builder (the
+# two per-feed builder dicts in plans/ingest.py), and every consumer
+# iterates this list: presence pruning, the span set, the writer choice
+# and bucket count in warehouse.write_tables, the FK write order,
+# integrity_report, table_health, precreation and both streaming sinks.
+# tests/test_ingest.py::test_table_specs_agree_with_builders checks the
+# rows against the builders' frames.
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class TableSpec:
+    """One output table.
+
+    - ``keys``: the natural key (the reference's unique constraints,
+      db.go:1654-1686, become merge keys); non-null by construction.
+    - ``feed``: the streaming sink that writes it, "block" or "event";
+      None for a table no sink writes.
+    - presence (which batches CAN give the table rows; an under-
+      approximation silently drops writes, an over-approximation only
+      wastes an empty one): ``always`` — every batch, a row per block
+      even for an empty block; else ``routes`` — the @type routes that
+      feed a block-feed table; else ``family`` — the whitelist family
+      that feeds an event-feed table (flat_events routes exactly one
+      family per event); with none of these, any batch with a root row.
+    - ``span``: the table's probe-prune column (warehouse._prune_col
+      over ``keys``) is DERIVED FROM THE FEED'S BLOCK HEIGHT, so a
+      micro-batch's block-height span covers every row's prune value and
+      may stand in for the per-table min/max aggregation
+      (write_insert_if_absent(key_span=...)). Pinned by
+      tests/test_ingest.py::test_block_span_covers_prune_columns.
+    - ``keep_one``: (column, descending) order that picks the row kept on
+      key collision — the table is written by warehouse.write_keep_one
+      (ON CONFLICT DO UPDATE, K5/K6) and never takes a span. Empty: the
+      table is insert-if-absent (ON CONFLICT DO NOTHING, K1/K4).
+    - ``buckets``: key-hash bucket count of a keep-one table at creation
+      (None: warehouse.UPSERT_BUCKETS). Pick ~(table size / healthy
+      rewrite quantum); the count is read back from the table's manifest
+      on every later write, so resizing is an offline rewrite.
+    - ``fks``: (child_cols, parent, parent_cols) logical foreign keys —
+      the relationships the reference's DDL declares (db.go:359-389;
+      Postgres enforcement is commented out there, the ingest order is
+      what really guarantees them) plus the parent/child cascades the
+      builders create (K7). Nothing enforces them at write time:
+      parents-before-children ordering in write_tables() is the
+      operational guarantee, and warehouse.integrity_report() AUDITS
+      them. NULL child keys are exempt (SQL FK semantics — F7's
+      quarantine rows must not read as orphans).
+    - ``enums``: (column, allowed values) CHECK-style domains (Spark has
+      no enum type; the merge keys + these expectations replace the
+      Postgres constraints — K8). NULL passes.
+    """
+
+    name: str
+    keys: tuple[str, ...]
+    feed: str | None = None
+    always: bool = False
+    routes: tuple[tuple[str, tuple[str, ...]], ...] = ()
+    family: str | None = None
+    span: bool = False
+    keep_one: tuple[tuple[str, bool], ...] = ()
+    buckets: int | None = None
+    fks: tuple[tuple[tuple[str, ...], str, tuple[str, ...]], ...] = ()
+    enums: tuple[tuple[str, tuple[str, ...]], ...] = ()
+
+
+_WORKER_ROUTES = (WORKER_SINGLE_ROUTE, WORKER_BULK_ROUTE)
+_REPUTER_ROUTES = (REPUTER_SINGLE_ROUTE, REPUTER_BULK_ROUTE)
+_BUNDLE = ("message_height", "message_id", "bundle_idx")
+_NETWORKLOSS = ("height_tx", "height", "topic_id")
+_BLOCK_FK = ((("height",), "block_info", ("height",)),)
+_MESSAGE_FK = (
+    (("message_height", "message_id"), "messages", ("height", "message_id")),
+)
+_TOPIC_FK = ((("topic_id",), "topics", ("id",)),)
+_VALUE_TYPE_ENUM = (("reputer_value_type", tuple(VALUE_BUNDLE_TAGS)),)
+# ascending raw-value tiebreaks mirror the BUILDERS' deterministic
+# same-height_tx survivor (ingest.scores/rewards/ema_scores): the
+# write-side merge must keep the same row the builder would, or a
+# replayed batch carrying a key whose height_tx ties the stored row's
+# could flip the survivor arbitrarily between runs
+_SCORE_ORDER = (("height_tx", True), ("value_raw", False))
+
+TABLE_SPECS: dict[str, TableSpec] = {s.name: s for s in (
+    # --- block feed (the tx path), in sink write order. block_info and
+    # messages are present structurally: a row per block, a row per
+    # message, whatever the routing. *_height message tables are span-
+    # covered: message_height = CAST(height).
+    TableSpec("block_info", ("height",), "block", always=True, span=True),
     # UNIQUE(height, hash) per db.go:1662-1668 — an in-block duplicate tx
     # is ONE message row (tx_idx/msg_idx of the first occurrence survive
     # as ordinary columns)
-    "messages": ["height", "hash"],
-    "topics": ["id"],
-    # addr_key = coalesce(address, pub_key): the table holds BOTH
-    # address rows and reputer-bundle pubkey-only rows (address NULL,
-    # process_tx.go:202/252), and natural keys must be non-null.
-    "addresses": ["addr_key"],
-    "worker_registrations": ["message_height", "message_id", "topic_id"],
-    "transfers": ["message_height", "message_id"],
-    "inferences": ["message_height", "message_id", "bundle_idx"],
-    "forecasts": ["message_height", "message_id", "bundle_idx"],
-    "forecast_values": ["message_height", "message_id", "bundle_idx", "element_idx"],
-    "reputer_payload": ["message_height", "message_id", "bundle_idx"],
-    "reputer_bundles": ["message_height", "message_id", "bundle_idx"],
-    "bundle_values": [
-        "message_height", "message_id", "bundle_idx", "reputer_value_type", "value_idx"
-    ],
-    "events": ["height", "hash", "type"],
-    "scores": ["height", "topic_id", "type", "address"],
-    "rewards": ["height", "topic_id", "type", "address"],
-    "networklosses": ["height_tx", "height", "topic_id"],
-    "networkloss_bundle_values": [
-        "height_tx", "height", "topic_id", "reputer_value_type", "value_idx"
-    ],
-    "ema_scores": ["topic_id", "type", "address", "height"],
-    "last_commit_values": ["topic_id", "is_worker"],
-    "tokenomics": ["height_tx"],
-    "topic_rewards": ["topic_id", "height_tx"],
-    "topic_forecasting_scores": ["topic_id", "height_tx"],
-    "ecosystem_token_mint": ["height_tx", "block_height"],
-    "reward_current_block_emission": ["height_tx", "block_height"],
-}
+    TableSpec("messages", ("height", "hash"), "block", span=True,
+              fks=_BLOCK_FK),
+    # not span-covered: the prune column `id` is a creation-order rank
+    TableSpec("topics", ("id",), "block", routes=(TOPIC_ROUTE,)),
+    # addr_key = coalesce(address, pub_key): the table holds BOTH address
+    # rows and reputer-bundle pubkey-only rows (address NULL,
+    # process_tx.go:202/252), and natural keys must be non-null. Not
+    # span-covered: addr_key is a string identity.
+    TableSpec("addresses", ("addr_key",), "block", routes=(
+        SEND_ROUTE, FUND_ROUTE, REGISTER_ROUTE, *_REPUTER_ROUTES,
+        TOPIC_ROUTE,
+    )),
+    TableSpec("worker_registrations",
+              ("message_height", "message_id", "topic_id"), "block",
+              routes=(REGISTER_ROUTE,), span=True,
+              fks=_MESSAGE_FK + _TOPIC_FK),
+    TableSpec("transfers", ("message_height", "message_id"), "block",
+              routes=(SEND_ROUTE, FUND_ROUTE), span=True, fks=_MESSAGE_FK),
+    TableSpec("inferences", _BUNDLE, "block", routes=_WORKER_ROUTES,
+              span=True, fks=_MESSAGE_FK),
+    TableSpec("forecasts", _BUNDLE, "block", routes=_WORKER_ROUTES,
+              span=True, fks=_MESSAGE_FK),
+    TableSpec("forecast_values", _BUNDLE + ("element_idx",), "block",
+              routes=_WORKER_ROUTES, span=True,
+              fks=((_BUNDLE, "forecasts", _BUNDLE),)),
+    TableSpec("reputer_payload", _BUNDLE, "block", routes=_REPUTER_ROUTES,
+              span=True, fks=_MESSAGE_FK),
+    TableSpec("reputer_bundles", _BUNDLE, "block", routes=_REPUTER_ROUTES,
+              span=True, fks=((_BUNDLE, "reputer_payload", _BUNDLE),)),
+    TableSpec("bundle_values", _BUNDLE + ("reputer_value_type", "value_idx"),
+              "block", routes=_REPUTER_ROUTES, span=True,
+              fks=((_BUNDLE, "reputer_bundles", _BUNDLE),),
+              enums=_VALUE_TYPE_ENUM),
+    # --- event feed, in sink write order. `events` keeps every
+    # whitelisted row; height (events) and height_tx (the scalar tables)
+    # are the result feed's height, hence span-covered.
+    TableSpec("events", ("height", "hash", "type"), "event", span=True,
+              fks=_BLOCK_FK),
+    TableSpec("scores", ("height", "topic_id", "type", "address"), "event",
+              family="score", keep_one=_SCORE_ORDER, fks=_TOPIC_FK),
+    TableSpec("rewards", ("height", "topic_id", "type", "address"), "event",
+              family="reward", keep_one=_SCORE_ORDER, fks=_TOPIC_FK),
+    # networklosses and its bundle values are not span-covered: their
+    # keys carry BOTH height_tx and `height`, and _prune_col picks
+    # `height` — the event's block_height ATTRIBUTE, a nonce-like value
+    # the feed span does not cover
+    TableSpec("networklosses", _NETWORKLOSS, "event", family="network_loss",
+              fks=_TOPIC_FK),
+    TableSpec("networkloss_bundle_values",
+              _NETWORKLOSS + ("reputer_value_type", "value_idx"), "event",
+              family="network_loss",
+              fks=((_NETWORKLOSS, "networklosses", _NETWORKLOSS),),
+              enums=_VALUE_TYPE_ENUM),
+    TableSpec("ema_scores", ("topic_id", "type", "address", "height"),
+              "event", family="ema_score", keep_one=(
+                  ("height_tx", True), ("score_raw", False),
+                  ("is_active", False),
+              ), fks=_TOPIC_FK),
+    # a two-row latest-state table: few buckets
+    TableSpec("last_commit_values", ("topic_id", "is_worker"), "event",
+              family="actor_last_commit",
+              keep_one=(("height_tx", True), ("height", True)), buckets=4,
+              fks=_TOPIC_FK),
+    TableSpec("topic_rewards", ("topic_id", "height_tx"), "event",
+              family="topic_reward", span=True, fks=_TOPIC_FK),
+    TableSpec("topic_forecasting_scores", ("topic_id", "height_tx"), "event",
+              family="forecast_task_score", span=True, fks=_TOPIC_FK),
+    TableSpec("tokenomics", ("height_tx",), "event", family="tokenomics",
+              span=True),
+    TableSpec("ecosystem_token_mint", ("height_tx", "block_height"), "event",
+              family="ecosystem_token_mint", span=True),
+    TableSpec("reward_current_block_emission", ("height_tx", "block_height"),
+              "event", family="reward_current_block_emission", span=True),
+    # --- the one-shot chain-state snapshot (ingest.read_consensus_params)
+    TableSpec("consensus_params", ("height",)),
+)}
 
-
-# Logical foreign keys between the 23 tables — the relationships the
-# reference's DDL declares (db.go:359-389; Postgres enforcement is
-# commented out there, the ingest order is what really guarantees them)
-# plus the parent/child cascades the builders create (K7). On a lake
-# warehouse nothing enforces these at write time — parents-before-children
-# ordering in write_tables() is the operational guarantee — so
-# warehouse.integrity_report() exists to AUDIT them, the after-the-fact
-# twin of a constraint. Each entry: child → [(child_cols, parent,
-# parent_cols), ...]. NULL child keys are exempt (SQL FK semantics — F7's
-# quarantine rows must not read as orphans).
-TABLE_FKS: dict[str, list[tuple[list[str], str, list[str]]]] = {
-    "messages": [(["height"], "block_info", ["height"])],
-    "events": [(["height"], "block_info", ["height"])],
-    "inferences": [
-        (["message_height", "message_id"], "messages", ["height", "message_id"])
-    ],
-    "forecasts": [
-        (["message_height", "message_id"], "messages", ["height", "message_id"])
-    ],
-    "reputer_payload": [
-        (["message_height", "message_id"], "messages", ["height", "message_id"])
-    ],
-    "transfers": [
-        (["message_height", "message_id"], "messages", ["height", "message_id"])
-    ],
-    "worker_registrations": [
-        (["message_height", "message_id"], "messages", ["height", "message_id"]),
-        (["topic_id"], "topics", ["id"]),
-    ],
-    "forecast_values": [
-        (
-            ["message_height", "message_id", "bundle_idx"],
-            "forecasts",
-            ["message_height", "message_id", "bundle_idx"],
-        )
-    ],
-    "reputer_bundles": [
-        (
-            ["message_height", "message_id", "bundle_idx"],
-            "reputer_payload",
-            ["message_height", "message_id", "bundle_idx"],
-        )
-    ],
-    "bundle_values": [
-        (
-            ["message_height", "message_id", "bundle_idx"],
-            "reputer_bundles",
-            ["message_height", "message_id", "bundle_idx"],
-        )
-    ],
-    "networkloss_bundle_values": [
-        (
-            ["height_tx", "height", "topic_id"],
-            "networklosses",
-            ["height_tx", "height", "topic_id"],
-        )
-    ],
-    "scores": [(["topic_id"], "topics", ["id"])],
-    "rewards": [(["topic_id"], "topics", ["id"])],
-    "ema_scores": [(["topic_id"], "topics", ["id"])],
-    "networklosses": [(["topic_id"], "topics", ["id"])],
-    "topic_rewards": [(["topic_id"], "topics", ["id"])],
-    "topic_forecasting_scores": [(["topic_id"], "topics", ["id"])],
-    "last_commit_values": [(["topic_id"], "topics", ["id"])],
+# natural keys by table, as the lists the writers' Spark calls take
+TABLE_KEYS: dict[str, list[str]] = {
+    n: list(s.keys) for n, s in TABLE_SPECS.items()
 }
 
 
 # ---------------------------------------------------------------------------
 # DDL export (round 17): the ingest builders batch their projections into
-# single selectExpr calls (see functions/events.py's SQL-twins note), and
+# single selectExpr calls (see functions/events.py's module note), and
 # an inline `from_json(col, '<ddl>')` needs the schema as DDL text. The
 # conversion goes through the JVM's own StructType.toDDL — the StructType
 # object above stays the single source of truth — and is cached per

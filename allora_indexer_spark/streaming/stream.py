@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from allora_indexer_spark import schemas
+from allora_indexer_spark.functions.events import is_reputer_last_commit_sql
 from allora_indexer_spark.plans import ingest, warehouse
 
 
@@ -55,28 +56,67 @@ def read_block_results_stream(
     return ingest.with_result_height(reader.json(results_dir))
 
 
-# the two sinks' table fan-outs, module-level so schema precreation and
-# the per-batch processors can never disagree about the set
+# the two sinks' table fan-outs: views over the table specs, so schema
+# precreation and the per-batch processors can never disagree about the set
 BLOCK_SINK_TABLES = [
-    "block_info", "messages", "topics", "addresses",
-    "worker_registrations", "transfers", "inferences", "forecasts",
-    "forecast_values", "reputer_payload", "reputer_bundles",
-    "bundle_values",
+    s.name for s in schemas.TABLE_SPECS.values() if s.feed == "block"
 ]
 EVENT_SINK_TABLES = [
-    "events", "scores", "rewards", "networklosses",
-    "networkloss_bundle_values", "ema_scores", "last_commit_values",
-    "topic_rewards", "topic_forecasting_scores", "tokenomics",
-    "ecosystem_token_mint", "reward_current_block_emission",
+    s.name for s in schemas.TABLE_SPECS.values() if s.feed == "event"
 ]
 
 
-def _precreate_tables(
-    spark: SparkSession,
-    warehouse_root: str,
-    names: list[str],
-    build_empty,
-) -> None:
+def _build_block_tables(spark, warehouse_root, batch_df, msgs, wanted):
+    # topic ids must CONTINUE across micro-batches (they key the idempotent
+    # writer): pass the current topics table so numbering offsets past
+    # earlier-height creates — without this every batch restarts at id 1
+    # and later creates are silently dropped by the anti-join. Replays
+    # recompute identical ids (see ingest.topics). Existence is probed
+    # EXPLICITLY instead of catching Exception around the read: a bare
+    # except also swallowed transient read failures (manifest I/O hiccup,
+    # corrupt JSON), silently falling back to batch-local numbering whose
+    # ids collide with written rows — the anti-join then drops the new
+    # creates (data loss). With the probe, a real read failure fails the
+    # batch (inside the sink's try, so the persisted root is released)
+    # and the checkpoint retries it.
+    existing = None
+    if "topics" in wanted and warehouse.table_exists(
+        warehouse_root, "topics"
+    ):
+        existing = warehouse.read_table(spark, warehouse_root, "topics")
+    return ingest.build_tables_for_blocks(
+        batch_df, msgs=msgs, existing_topics=existing, only=wanted
+    )
+
+
+def _build_event_tables(spark, warehouse_root, batch_df, fev, wanted):
+    return ingest.build_tables_for_events(batch_df, fev=fev, only=wanted)
+
+
+# What differs between the two sinks, as data: the feed's raw schema and
+# height gate, its parse root, the root's presence probe, and the table
+# builder. The ingest functions are looked up on the module at CALL time
+# (hence the lambdas), so a wrapper installed on `ingest` — a tracer, a
+# test counter — sees every sink call.
+_SINK_FEEDS = {
+    "block": (
+        schemas.RAW_BLOCK_SCHEMA,
+        lambda df: ingest.with_block_height(df),
+        lambda df: ingest.messages(df),
+        lambda root: ingest.present_block_tables(root),
+        _build_block_tables,
+    ),
+    "event": (
+        schemas.RAW_BLOCK_RESULTS_SCHEMA,
+        lambda df: ingest.with_result_height(df),
+        lambda df: ingest.flat_events(df),
+        lambda root: ingest.present_event_tables(root),
+        _build_event_tables,
+    ),
+}
+
+
+def _precreate(spark: SparkSession, warehouse_root: str, feed: str) -> None:
     """Create every MISSING sink table's empty schema (data dir +
     manifest) before the stream starts — the analog of the reference
     running its DDL migrations at process startup (db.go), never inside
@@ -87,12 +127,15 @@ def _precreate_tables(
     writer path as the stream (empty frame, same schemas/manifests), so
     a crash between precreation and the first commit changes nothing:
     replays see the tables existing, exactly as they would mid-stream."""
+    names = BLOCK_SINK_TABLES if feed == "block" else EVENT_SINK_TABLES
     missing = [
         n for n in names if not warehouse.table_exists(warehouse_root, n)
     ]
     if not missing:
         return
-    built = build_empty(set(missing))
+    raw_schema, with_height, decode, _, build = _SINK_FEEDS[feed]
+    empty = with_height(spark.createDataFrame([], schema=raw_schema))
+    built = build(spark, warehouse_root, empty, decode(empty), set(missing))
     warehouse.write_tables(
         spark,
         {k: built[k] for k in missing if k in built},
@@ -101,25 +144,72 @@ def _precreate_tables(
 
 
 def precreate_block_tables(spark: SparkSession, warehouse_root: str) -> None:
-    def build_empty(only: set[str]) -> dict[str, DataFrame]:
-        empty = ingest.with_block_height(
-            spark.createDataFrame([], schema=schemas.RAW_BLOCK_SCHEMA)
-        )
-        return ingest.build_tables_for_blocks(empty, only=only)
-
-    _precreate_tables(spark, warehouse_root, BLOCK_SINK_TABLES, build_empty)
+    _precreate(spark, warehouse_root, "block")
 
 
 def precreate_event_tables(spark: SparkSession, warehouse_root: str) -> None:
-    def build_empty(only: set[str]) -> dict[str, DataFrame]:
-        empty = ingest.with_result_height(
-            spark.createDataFrame(
-                [], schema=schemas.RAW_BLOCK_RESULTS_SCHEMA
-            )
-        )
-        return ingest.build_tables_for_events(empty, only=only)
+    _precreate(spark, warehouse_root, "event")
 
-    _precreate_tables(spark, warehouse_root, EVENT_SINK_TABLES, build_empty)
+
+def _start_sink(
+    spark: SparkSession,
+    feed: str,
+    stream: DataFrame,
+    warehouse_root: str,
+    checkpoint_dir: str,
+    available_now: bool,
+    poll_interval: str,
+) -> StreamingQuery:
+    names = BLOCK_SINK_TABLES if feed == "block" else EVENT_SINK_TABLES
+    _, _, decode, presence, build = _SINK_FEEDS[feed]
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        # one decode per micro-batch: the parse root (exploded messages,
+        # flattened events) feeds 12 tables, so pin it instead of
+        # re-parsing the batch per table
+        root = decode(batch_df).persist()
+        try:
+            # presence pruning: ONE bounded probe on the persisted root
+            # (distinct @type / family vocabulary) says which tables this
+            # batch can touch — a caught-up 1-block batch then BUILDS and
+            # writes 3-5 tables instead of 12. Both halves matter for the
+            # 5 s cadence: the skipped write jobs (~0.3 s fixed local
+            # floor each) AND the skipped plan construction (~2-3 s of
+            # py4j work for the full fan-out). A table is still
+            # built+written while it does not exist yet, so the first
+            # batch creates every schema exactly as before.
+            present = presence(root)
+            wanted = {
+                k
+                for k in names
+                if k in present
+                or not warehouse.table_exists(warehouse_root, k)
+            }
+            tables = build(spark, warehouse_root, batch_df, root, wanted)
+            # one block-height span job stands in for every span-covered
+            # table's probe aggregation (~3 jobs each); skipped entirely
+            # when no span-covered table is being written
+            spanned = {k for k in wanted if schemas.TABLE_SPECS[k].span}
+            span = ingest.batch_height_span(batch_df) if spanned else None
+            warehouse.write_tables(
+                spark,
+                {k: tables[k] for k in names if k in tables},
+                warehouse_root,
+                key_spans=(
+                    {k: span for k in spanned} if span is not None else None
+                ),
+            )
+        finally:
+            root.unpersist()
+
+    writer = stream.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=poll_interval)
+    return writer.start()
 
 
 def start_block_ingest(
@@ -133,85 +223,14 @@ def start_block_ingest(
 ) -> StreamingQuery:
     """Stream the block feed into the tx-derived tables. Missing sink
     schemas are created BEFORE the stream starts (see
-    :func:`_precreate_tables`), so no micro-batch ever pays the
-    all-schema creation fan-out inside its timed trigger."""
+    :func:`_precreate`), so no micro-batch ever pays the all-schema
+    creation fan-out inside its timed trigger."""
     precreate_block_tables(spark, warehouse_root)
     stream = read_block_stream(spark, blocks_dir, max_files_per_trigger)
-
-    block_tables = BLOCK_SINK_TABLES
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # one decode per micro-batch: the exploded-message root feeds 12
-        # tables, so pin it instead of re-parsing the batch per table
-        msgs = ingest.messages(batch_df).persist()
-        try:
-            # topic ids must CONTINUE across micro-batches (they key the
-            # idempotent writer): pass the current topics table so
-            # numbering offsets past earlier-height creates — without
-            # this every batch restarts at id 1 and later creates are
-            # silently dropped by the anti-join. Replays recompute
-            # identical ids (see ingest.topics).
-            # Probe existence EXPLICITLY instead of catching Exception
-            # around the read: a bare except here also swallowed
-            # transient read failures (manifest I/O hiccup, corrupt
-            # JSON), silently falling back to batch-local numbering
-            # whose ids collide with written rows — the anti-join then
-            # drops the new creates (data loss). With the probe, a real
-            # read failure fails the batch (INSIDE this try, so the
-            # persisted msgs cache entry is released) and the checkpoint
-            # retries it.
-            # presence pruning: ONE bounded probe on the persisted msgs
-            # root (distinct @type vocabulary) says which tables this
-            # batch can touch — a caught-up 1-block batch then BUILDS
-            # and writes 3-5 tables instead of 12. Both halves matter
-            # for the 5 s cadence: the skipped write jobs (~0.3 s fixed
-            # local floor each) AND the skipped plan construction
-            # (~2-3 s of py4j work for the full fan-out). A table is
-            # still built+written while it does not exist yet, so the
-            # first batch creates every schema exactly as before.
-            present = ingest.present_block_tables(msgs)
-            wanted = {
-                k
-                for k in block_tables
-                if k in present
-                or not warehouse.table_exists(warehouse_root, k)
-            }
-            existing = None
-            if "topics" in wanted and warehouse.table_exists(
-                warehouse_root, "topics"
-            ):
-                existing = warehouse.read_table(
-                    spark, warehouse_root, "topics"
-                )
-            tables = ingest.build_tables_for_blocks(
-                batch_df, msgs=msgs, existing_topics=existing, only=wanted
-            )
-            # one block-height span job stands in for every height-
-            # derived table's probe aggregation (~3 jobs each); skipped
-            # entirely when no span-covered table is being written
-            spanned = wanted & ingest.BLOCK_HEIGHT_SPAN_TABLES
-            span = (
-                ingest.batch_height_span(batch_df) if spanned else None
-            )
-            warehouse.write_tables(
-                spark,
-                {k: tables[k] for k in block_tables if k in tables},
-                warehouse_root,
-                key_spans=(
-                    {k: span for k in spanned} if span is not None else None
-                ),
-            )
-        finally:
-            msgs.unpersist()
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_sink(
+        spark, "block", stream, warehouse_root, checkpoint_dir,
+        available_now, poll_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=poll_interval)
-    return writer.start()
 
 
 def start_event_ingest(
@@ -225,53 +244,15 @@ def start_event_ingest(
 ) -> StreamingQuery:
     """Stream the block_results feed into the event-derived tables.
     Missing sink schemas are created BEFORE the stream starts (see
-    :func:`_precreate_tables`)."""
+    :func:`_precreate`)."""
     precreate_event_tables(spark, warehouse_root)
     stream = read_block_results_stream(
         spark, results_dir, max_files_per_trigger
     )
-
-    event_tables = EVENT_SINK_TABLES
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        fev = ingest.flat_events(batch_df).persist()
-        try:
-            # same presence pruning as the block sink: one bounded
-            # distinct-family probe on the persisted fev root replaces
-            # 12 mostly-empty plan constructions + write jobs per batch
-            present = ingest.present_event_tables(fev)
-            wanted = {
-                k
-                for k in event_tables
-                if k in present
-                or not warehouse.table_exists(warehouse_root, k)
-            }
-            tables = ingest.build_tables_for_events(
-                batch_df, fev=fev, only=wanted
-            )
-            spanned = wanted & ingest.BLOCK_HEIGHT_SPAN_TABLES
-            span = (
-                ingest.batch_height_span(batch_df) if spanned else None
-            )
-            warehouse.write_tables(
-                spark,
-                {k: tables[k] for k in event_tables if k in tables},
-                warehouse_root,
-                key_spans=(
-                    {k: span for k in spanned} if span is not None else None
-                ),
-            )
-        finally:
-            fev.unpersist()
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_sink(
+        spark, "event", stream, warehouse_root, checkpoint_dir,
+        available_now, poll_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=poll_interval)
-    return writer.start()
 
 
 def start_block_window_stats(
@@ -346,9 +327,10 @@ def start_last_commit_state_stream(
     stream = read_block_results_stream(spark, results_dir)
     fev = ingest.flat_events(stream)
     commits = fev.filter(F.col("family") == "actor_last_commit").select(
-        ingest._attr_int("topic_id").alias("topic_id"),
-        (~ingest.is_reputer_last_commit(F.col("type"))).alias("is_worker"),
-        ingest._attr_int("block_height").alias("height_tx"),
+        F.expr(ingest._attr_int_sql("topic_id")).alias("topic_id"),
+        F.expr(f"NOT {is_reputer_last_commit_sql('type')}")
+        .alias("is_worker"),
+        F.expr(ingest._attr_int_sql("block_height")).alias("height_tx"),
         F.from_json(F.col("attr.nonce"), "STRUCT<block_height: STRING>")
         .getField("block_height").cast("int").alias("height"),
     ).filter(

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from allora_indexer_spark import schemas
 from allora_indexer_spark.plans.ingest import (
-    decoder_version,
+    decoder_version_sql,
     inferences,
     reputer_payload,
     topics,
@@ -44,7 +44,7 @@ EPOCH_CASES = [
 def test_decoder_version_epoch_boundaries(spark):
     df = spark.createDataFrame(
         [(h,) for h, _ in EPOCH_CASES], "height long"
-    ).withColumn("ver", decoder_version(F.col("height")))
+    ).withColumn("ver", F.expr(decoder_version_sql("height")))
     got = {r.height: r.ver for r in df.collect()}
     assert got == {h: v for h, v in EPOCH_CASES}
 
@@ -83,7 +83,7 @@ def _msgs_at(spark, heights):
         "height long, tx_idx int, msg_idx int, message_id long, type string,"
         " sender string, data string, hash long",
     )
-    return df.withColumn("decoder_version", decoder_version(F.col("height")))
+    return df.withColumn("decoder_version", F.expr(decoder_version_sql("height")))
 
 
 def test_same_payload_parses_by_epoch(spark):
@@ -135,7 +135,7 @@ def _typed_msgs_at(spark, rows):
         "height long, tx_idx int, msg_idx int, message_id long, type string,"
         " sender string, data string, hash long",
     )
-    return df.withColumn("decoder_version", decoder_version(F.col("height")))
+    return df.withColumn("decoder_version", F.expr(decoder_version_sql("height")))
 
 
 REGISTER_JSON = json.dumps(

@@ -4,12 +4,10 @@ reference ships, so they pin the F1-F3 semantics exactly."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from allora_indexer_spark.functions.events import (
     EVENT_WHITELIST,
-    base_event_type,
-    is_whitelisted,
+    base_event_type_sql,
+    is_whitelisted_sql,
 )
 
 
@@ -17,16 +15,14 @@ def _base_types(spark, types_: list[str]) -> list[str]:
     df = spark.createDataFrame([(t,) for t in types_], ["type"])
     return [
         r["base"]
-        for r in df.select(base_event_type(F.col("type")).alias("base")).collect()
+        for r in df.selectExpr(f"{base_event_type_sql('type')} AS base")
+        .collect()
     ]
 
 
 def _filtered(spark, types_: list[str]) -> list[str]:
     df = spark.createDataFrame([(t,) for t in types_], ["type"])
-    return [
-        r["type"]
-        for r in df.filter(is_whitelisted(F.col("type"))).collect()
-    ]
+    return [r["type"] for r in df.filter(is_whitelisted_sql("type")).collect()]
 
 
 def test_get_base_event_type(spark):

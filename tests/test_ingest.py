@@ -667,30 +667,76 @@ def test_presence_pruning_empty_batch(spark):
 
 
 def test_block_span_covers_prune_columns(spark, fixture_dir, tables):
-    """BLOCK_HEIGHT_SPAN_TABLES safety: for every whitelisted table, the
-    feed's block-height span covers every row's probe-prune value — an
+    """TableSpec.span safety: for every span-covered table, the feed's
+    block-height span covers every row's probe-prune value — an
     under-covering span would silently re-admit keys on replay, so this
     is the invariant that licenses skipping the per-table span job."""
-    from allora_indexer_spark.plans.warehouse import TABLE_KEYS, _prune_col
+    from allora_indexer_spark.plans.warehouse import _prune_col
+    from allora_indexer_spark.schemas import TABLE_SPECS
 
     blocks = ingest.read_blocks(spark, f"{fixture_dir}/blocks")
     results = ingest.read_block_results(spark, f"{fixture_dir}/block_results")
     spans = {
-        "b": ingest.batch_height_span(blocks),
-        "e": ingest.batch_height_span(results),
+        "block": ingest.batch_height_span(blocks),
+        "event": ingest.batch_height_span(results),
     }
-    block_side = set(
-        ingest.BLOCK_TABLE_ROUTES
-    ) | {"block_info", "messages"}
-    for name in ingest.BLOCK_HEIGHT_SPAN_TABLES:
-        assert name in TABLE_KEYS
-        lo, hi = spans["b" if name in block_side else "e"]
-        pc = _prune_col(TABLE_KEYS[name])
-        df = tables[name]
+    for spec in TABLE_SPECS.values():
+        if not spec.span:
+            continue
+        lo, hi = spans[spec.feed]
+        pc = _prune_col(spec.keys)
+        df = tables[spec.name]
         bad = df.filter(
             F.col(pc).isNotNull() & ~F.col(pc).between(F.lit(lo), F.lit(hi))
         )
-        assert bad.count() == 0, f"{name}.{pc} escapes the feed span"
+        assert bad.count() == 0, f"{spec.name}.{pc} escapes the feed span"
+
+
+def test_table_specs_agree_with_builders(spark, tmp_path):
+    """schemas.TABLE_SPECS is the one list every consumer iterates, so
+    each row must describe its builder's frame: per feed, the spec's
+    tables are exactly the builder's tables (in sink order); every key,
+    FK, keep-one order and enum column a row names exists on the built
+    frame; every FK parent is itself a spec row; and each presence rule
+    sits on the feed that can evaluate it."""
+    from allora_indexer_spark import schemas
+    from allora_indexer_spark.functions.events import EVENT_WHITELIST
+
+    specs = schemas.TABLE_SPECS
+    built = {
+        "block": ingest.build_tables_for_blocks(ingest.with_block_height(
+            spark.createDataFrame([], schemas.RAW_BLOCK_SCHEMA)
+        )),
+        "event": ingest.build_tables_for_events(ingest.with_result_height(
+            spark.createDataFrame([], schemas.RAW_BLOCK_RESULTS_SCHEMA)
+        )),
+    }
+    for feed, frames in built.items():
+        assert [s.name for s in specs.values() if s.feed == feed] == list(
+            frames
+        ), feed
+    cp = tmp_path / "consensus_params.jsonl"
+    cp.write_text("")
+    columns = {
+        n: set(df.columns) for frames in built.values()
+        for n, df in frames.items()
+    }
+    columns["consensus_params"] = set(
+        ingest.read_consensus_params(spark, str(cp)).columns
+    )
+    assert set(columns) == set(specs)
+    for s in specs.values():
+        named = {*s.keys, *(c for c, _ in s.keep_one), *(c for c, _ in s.enums)}
+        for child_cols, parent, parent_cols in s.fks:
+            assert parent in specs, (s.name, parent)
+            assert set(parent_cols) <= columns[parent], (s.name, parent)
+            named |= set(child_cols)
+        assert named <= columns[s.name], (s.name, named - columns[s.name])
+        assert not s.routes or s.feed == "block", s.name
+        assert s.family is None or (
+            s.feed == "event" and s.family in EVENT_WHITELIST.values()
+        ), s.name
+        assert not (s.span and s.keep_one), s.name
 
 
 def test_write_insert_if_absent_key_span_replay(spark, tmp_path):
@@ -871,6 +917,8 @@ def test_route_without_suffixes_routes_nothing(spark):
     ],
 )
 def test_route_literals_with_quotes_are_rejected(spec):
+    from allora_indexer_spark import schemas
+
     with pytest.raises(ValueError, match="quote"):
-        ingest._check_route_literals(spec)
+        schemas._check_route_literals(spec)
 

@@ -17,10 +17,10 @@ from pyspark.sql import functions as F
 
 from allora_indexer_spark.functions.events import (
     EVENT_WHITELIST,
-    base_event_type,
-    is_invalid_numeric,
-    is_whitelisted,
-    strip_quotes,
+    base_event_type_sql,
+    is_invalid_numeric_sql,
+    is_whitelisted_sql,
+    strip_quotes_sql,
 )
 
 # One Spark round-trip per hypothesis batch would be seconds per example;
@@ -47,9 +47,9 @@ _TYPE_CHARS = st.text(
 )
 
 
-def _eval_column(spark, values: list[str], col_fn):
+def _eval_sql(spark, values: list[str], sql_fn):
     df = spark.createDataFrame([(v,) for v in values], ["v"])
-    return [r["out"] for r in df.select(col_fn(F.col("v")).alias("out")).collect()]
+    return [r["out"] for r in df.selectExpr(f"{sql_fn('v')} AS out").collect()]
 
 
 @settings(max_examples=_ex(30), deadline=None, suppress_health_check=list(HealthCheck))
@@ -58,7 +58,7 @@ def test_base_type_model(spark, types):
     """base type == last '.'-segment when a dot exists, else 'invalid' —
     the getBaseEventType contract (process_events.go:148-154) for ALL
     strings, not just the 9 table-driven Go cases."""
-    got = _eval_column(spark, types, base_event_type)
+    got = _eval_sql(spark, types, base_event_type_sql)
     for t, g in zip(types, got):
         expected = t.split(".")[-1] if "." in t else "invalid"
         assert g == expected, (t, g, expected)
@@ -81,7 +81,7 @@ def test_whitelist_is_version_agnostic(spark, triples):
     whitelisted — for every version number, incl. multi-digit (the
     process_events_test.go:110-131 `v12` case generalized)."""
     types = [f"{m}{v}.{b}" for m, v, b in triples]
-    got = _eval_column(spark, types, is_whitelisted)
+    got = _eval_sql(spark, types, is_whitelisted_sql)
     for (m, v, b), g in zip(triples, got):
         assert g == (b in EVENT_WHITELIST), (m, v, b, g)
 
@@ -103,7 +103,7 @@ def test_whitelist_is_version_agnostic(spark, triples):
 def test_numeric_guard_model(spark, values):
     """is_invalid_numeric == case-insensitive substring match for
     infinity/nan (db.go:1715-1717) on arbitrary numeric-ish strings."""
-    got = _eval_column(spark, values, is_invalid_numeric)
+    got = _eval_sql(spark, values, is_invalid_numeric_sql)
     for v, g in zip(values, got):
         low = v.lower()
         assert g == ("infinity" in low or "nan" in low), (v, g)
@@ -116,7 +116,7 @@ def test_strip_quotes_model(spark, values):
     quote — strings.Trim semantics differ (Trim strips runs); the
     reference only ever sees single-quoted JSON scalars, for which the
     two agree. The property pins OUR contract on all strings."""
-    got = _eval_column(spark, values, strip_quotes)
+    got = _eval_sql(spark, values, strip_quotes_sql)
     for v, g in zip(values, got):
         expected = v
         if expected.startswith('"'):
@@ -166,13 +166,13 @@ def test_versioned_parse_never_crashes_and_gates_by_epoch(spark, rows):
 
     from allora_indexer_spark import schemas
     from allora_indexer_spark.plans.ingest import (
-        decoder_version,
+        decoder_version_sql,
         with_versioned_parse,
     )
 
     df = spark.createDataFrame(
         [(h, _json.dumps(d)) for h, d in rows], "height long, data string"
-    ).withColumn("decoder_version", decoder_version(FF.col("height")))
+    ).withColumn("decoder_version", FF.expr(decoder_version_sql("height")))
     got = (
         with_versioned_parse(
             df,

@@ -18,6 +18,7 @@ import threading
 import pytest
 
 from allora_indexer_spark.plans import storage, warehouse
+from allora_indexer_spark.schemas import TABLE_SPECS
 
 
 def _mem(monkeypatch) -> storage.InMemoryManifestStorage:
@@ -215,7 +216,7 @@ def test_lockfree_upserts_on_memory_backend(spark, tmp_path, monkeypatch):
     _mem(monkeypatch)
     monkeypatch.setattr(warehouse, "LOCK_MODE", "none")
     root = str(tmp_path / "wh")
-    order = warehouse._order_cols(warehouse.UPSERT_ORDER["scores"])
+    order = warehouse._order_cols(TABLE_SPECS["scores"].keep_one)
 
     def mk(rows):
         from pyspark.sql import functions as F

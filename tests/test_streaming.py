@@ -1006,6 +1006,74 @@ def test_precreate_creates_all_sink_schemas_idempotently(spark, tmp_path):
     assert files() == before
 
 
+@pytest.mark.parametrize("feed", ["block", "event"])
+def test_sink_layers_are_looked_up_per_trigger(
+    spark, tmp_path, monkeypatch, feed
+):
+    """The benchmark traces each sink layer by replacing module attributes
+    (decode, presence, build, span, write_tables, the writers and the
+    probe), so the shared sink loop must look them up at call time, call
+    each per-batch layer once per trigger, and hand the writers
+    (root, name) positionally."""
+    import json
+
+    from allora_indexer_spark.sources.fixtures import (
+        build_block_results,
+        build_blocks,
+    )
+
+    rows = build_blocks() if feed == "block" else build_block_results()
+    src = tmp_path / "feed"
+    src.mkdir()
+    for i, part in enumerate((rows[:3], rows[3:])):
+        (src / f"part-{i:03d}.jsonl").write_text(
+            "".join(json.dumps(r) + "\n" for r in part)
+        )
+    wh = str(tmp_path / "wh")
+    ingest_layers = {
+        "block": ["messages", "present_block_tables", "build_tables_for_blocks"],
+        "event": ["flat_events", "present_event_tables", "build_tables_for_events"],
+    }[feed] + ["batch_height_span"]
+    writers = ["write_insert_if_absent", "write_keep_one", "existing_keys_in_range"]
+    per_trigger = ingest_layers + ["write_tables"]
+    precreate = f"precreate_{feed}_tables"
+    getattr(stream, precreate)(spark, wh)  # its calls are not per-trigger
+
+    calls: dict[str, list] = {}
+
+    def wrap(mod, name):
+        inner = getattr(mod, name)
+
+        def counted(*args, **kwargs):
+            calls.setdefault(name, []).append((args, kwargs))
+            return inner(*args, **kwargs)
+
+        monkeypatch.setattr(mod, name, counted)
+
+    for name in ingest_layers:
+        wrap(ingest, name)
+    for name in ["write_tables"] + writers:
+        wrap(warehouse, name)
+    wrap(stream, precreate)
+    start = getattr(stream, f"start_{feed}_ingest")
+    q = start(spark, str(src), wh, str(tmp_path / "ckpt"),
+              max_files_per_trigger=1)
+    assert q.awaitTermination(300), "stream did not drain in 300s"
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 2
+    assert len(calls[precreate]) == 1
+    for name in per_trigger:
+        assert len(calls.get(name, [])) == 2, name
+    sink = stream.BLOCK_SINK_TABLES if feed == "block" else stream.EVENT_SINK_TABLES
+    for args, _ in calls["write_tables"]:
+        assert args[2] == wh and set(args[1]) <= set(sink)
+    assert calls["write_insert_if_absent"] and calls["existing_keys_in_range"]
+    assert bool(calls.get("write_keep_one")) == (feed == "event")
+    for name in writers:
+        for args, kwargs in calls.get(name, []):
+            assert args[2] == wh and args[3] in sink, (name, args[2:4])
+            assert not {"root", "name"} & set(kwargs), name
+
+
 @pytest.mark.soak
 def test_stream_on_precreated_warehouse_matches_fresh(
     spark, fixture_dir, tmp_path

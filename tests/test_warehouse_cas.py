@@ -26,6 +26,7 @@ import time
 import pytest
 
 from allora_indexer_spark.plans import warehouse
+from allora_indexer_spark.schemas import TABLE_SPECS
 
 
 def _mk_scores(spark, rows):
@@ -36,12 +37,12 @@ def _mk_scores(spark, rows):
         "height int, topic_id int, type string, address string,"
         " height_tx long, value double",
     )
-    # value_raw mirrors the real scores schema (UPSERT_ORDER tiebreak)
+    # value_raw mirrors the real scores schema (keep-one order tiebreak)
     return df.withColumn("value_raw", F.col("value").cast("string"))
 
 
 def _score_order():
-    return warehouse._order_cols(warehouse.UPSERT_ORDER["scores"])
+    return warehouse._order_cols(TABLE_SPECS["scores"].keep_one)
 
 
 # ---------------------------------------------------------------------------

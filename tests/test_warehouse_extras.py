@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from allora_indexer_spark.plans import ingest, warehouse
+from allora_indexer_spark.schemas import TABLE_SPECS
 from allora_indexer_spark.sources.fixtures import write_consensus_params, write_fixtures
 
 
@@ -234,7 +235,7 @@ def test_enum_readback_validation(spark, tmp_path):
 
 def _mk_scores(spark, rows):
     # value_raw mirrors the real scores schema — it is now part of
-    # UPSERT_ORDER's deterministic tiebreak, so synthetic frames carry it
+    # the scores spec's keep-one order tiebreak, so synthetic frames carry it
     df = spark.createDataFrame(
         rows,
         "height int, topic_id int, type string, address string,"
@@ -244,7 +245,7 @@ def _mk_scores(spark, rows):
 
 
 def _score_order():
-    return warehouse._order_cols(warehouse.UPSERT_ORDER["scores"])
+    return warehouse._order_cols(TABLE_SPECS["scores"].keep_one)
 
 
 def _bucket_map(path):
@@ -440,7 +441,7 @@ def test_version_gc_deletes_expired_and_keeps_live(spark, tmp_path, monkeypatch)
 
 
 def test_keep_one_respects_per_table_bucket_count(spark, tmp_path):
-    """The sizing knob: a table in UPSERT_BUCKET_COUNTS is created with its
+    """The sizing knob: a table spec with ``buckets`` is created with its
     configured bucket count, persisted in the meta, and honored (not the
     caller default) on subsequent writes."""
     import os
@@ -456,7 +457,7 @@ def test_keep_one_respects_per_table_bucket_count(spark, tmp_path):
         rows,
         root,
         "last_commit_values",
-        warehouse._order_cols(warehouse.UPSERT_ORDER["last_commit_values"]),
+        warehouse._order_cols(TABLE_SPECS["last_commit_values"].keep_one),
     )
     path = os.path.join(root, "last_commit_values")
     m = warehouse._manifest_read(path)
@@ -473,7 +474,7 @@ def test_keep_one_respects_per_table_bucket_count(spark, tmp_path):
         ),
         root,
         "last_commit_values",
-        warehouse._order_cols(warehouse.UPSERT_ORDER["last_commit_values"]),
+        warehouse._order_cols(TABLE_SPECS["last_commit_values"].keep_one),
     )
     m2 = warehouse._manifest_read(path)
     assert m2["buckets"] == 4

@@ -21,6 +21,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from allora_indexer_spark.plans import warehouse
+from allora_indexer_spark.schemas import TABLE_SPECS
 
 
 @pytest.fixture(scope="module")
@@ -76,7 +77,7 @@ def _mk_rows(spark, batch):
 def test_upsert_table_matches_model(spark, tmp_root, ops):
     root = f"{tmp_root}/wh_{uuid.uuid4().hex[:8]}"
     model: dict[tuple, tuple] = {}
-    order = warehouse._order_cols(warehouse.UPSERT_ORDER["scores"])
+    order = warehouse._order_cols(TABLE_SPECS["scores"].keep_one)
     for op, arg in ops:
         if op == "upsert":
             warehouse.write_keep_one(

@@ -12,8 +12,8 @@ append-path machinery is out of scope by construction). Sides alternate
 A,B,A,B,... so slow machine drift cancels; run this under LOW LOAD (no
 concurrent soak/pytest).
 
-Usage:
-  python tools/ab_ingest.py                # HEAD vs 5fc2369, 2x4 reps/side
+Usage (--ref is required: the side HEAD is compared against):
+  python tools/ab_ingest.py --ref <sha>    # HEAD vs <sha>, 2x4 reps/side
   python tools/ab_ingest.py --ref <sha> --rounds 2 --reps 4
 
 Prints one JSON line with per-side samples/median/IQR and a verdict:
@@ -83,7 +83,7 @@ def iqr(xs: list[float]) -> float:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--ref", default="5fc2369")
+    ap.add_argument("--ref", required=True)
     ap.add_argument("--rounds", type=int, default=2)
     ap.add_argument("--reps", type=int, default=4)
     args = ap.parse_args()

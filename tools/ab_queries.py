@@ -14,8 +14,8 @@ one full 12-query sweep total (the committed series' unit), so per-query
 jitter averages out inside each sample. No ingest fixture, no streaming,
 no concurrent work in the timed window.
 
-Usage:
-  python tools/ab_queries.py                 # HEAD vs 8edce7f (r11), 2x4
+Usage (--ref is required: the side HEAD is compared against):
+  python tools/ab_queries.py --ref <sha>     # HEAD vs <sha>, 2x4 reps/side
   python tools/ab_queries.py --ref <sha> --rounds 2 --reps 4
 
 Prints one JSON line with per-side samples/median/IQR and a verdict:
@@ -93,7 +93,7 @@ def iqr(xs: list[float]) -> float:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--ref", default="8edce7f")  # r11 snapshot
+    ap.add_argument("--ref", required=True)
     ap.add_argument("--rounds", type=int, default=2)
     ap.add_argument("--reps", type=int, default=4)
     args = ap.parse_args()
