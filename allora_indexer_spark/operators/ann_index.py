@@ -495,15 +495,21 @@ def append_to_ivf_index(
     # spends two top-k slots on the same neighbor
     assigned = assigned.dropDuplicates(["vec_id"])
     corpus_dir = os.path.join(index_dir, "corpus")
-    from allora_indexer_spark.plans.warehouse import _append_data, _table_lock
+    from allora_indexer_spark.plans.warehouse import (
+        _append_data,
+        _manifest_read,
+        _retry_cas,
+    )
 
-    # probe + append under ONE table lock (append_dir would re-acquire
-    # it): two concurrent appends of the same batch must not both pass
-    # the existence probe and double-write (TOCTOU)
-    with _table_lock(corpus_dir):
-        touched = [
-            r[0] for r in assigned.select("cell").distinct().collect()
-        ]
+    touched = [r[0] for r in assigned.select("cell").distinct().collect()]
+
+    # probe + append as ONE CAS cycle (write_insert_if_absent's): two
+    # concurrent appends of the same batch must not both pass the
+    # existence probe and double-write (TOCTOU). The basis is captured
+    # before the probe and the publish is conditional on it, so a rival
+    # that lands rows in between makes the whole probe+append rerun.
+    def cycle() -> None:
+        basis = _manifest_read(corpus_dir)
         existing = (
             read_dir(spark, corpus_dir)
             .filter(F.col("cell").isin(touched))
@@ -511,7 +517,14 @@ def append_to_ivf_index(
             .distinct()
         )
         novel = assigned.join(existing, "vec_id", "left_anti")
-        _append_data(novel, corpus_dir, ["cell"])
+        _append_data(
+            novel,
+            corpus_dir,
+            ["cell"],
+            expect=basis["version"] if basis is not None else None,
+        )
+
+    _retry_cas(cycle)
 
 
 # ---------------------------------------------------------------------------

@@ -13,9 +13,9 @@ Two implementations of the seam:
 - :class:`PosixManifestStorage` (the default): atomic object writes are
   temp-file + ``os.replace``; check-and-flip atomicity comes from a
   few-millisecond flock(2) micro-lock (``_cas_section``) around the
-  read → If-Match check → history write → pointer replace. This is NOT
-  the writer mutex (writers may run with ``LOCK_MODE="none"``); it only
-  guards the pointer swap itself.
+  read → If-Match check → history write → pointer replace. It is not a
+  writer mutex (writers hold no lock across their read-merge-publish
+  cycle); it only guards the pointer swap itself.
 
 - :class:`InMemoryManifestStorage`: conditional-PUT semantics over an
   in-process dict — the shape of an object-store adapter (S3
@@ -88,11 +88,12 @@ def _atomic_write_json(target: str, obj: dict) -> None:
 @contextlib.contextmanager
 def _cas_section(path: str):
     """The few-millisecond critical section that makes check+flip of
-    `_CURRENT` atomic on POSIX. This micro-lock is NOT the writer mutex
-    (writers may run with LOCK_MODE="none"); it only guards the pointer
-    swap itself. On an object store the entire section is replaced by a
-    single conditional PUT (If-Match / x-amz-copy-source-if-match on
-    `_CURRENT`), which is why it is isolated here."""
+    `_CURRENT` atomic on POSIX. This micro-lock is not a writer mutex
+    (writers hold no lock across their read-merge-publish cycle); it
+    only guards the pointer swap itself. On an object store the entire
+    section is replaced by a single conditional PUT (If-Match /
+    x-amz-copy-source-if-match on `_CURRENT`), which is why it is
+    isolated here."""
     import fcntl
 
     parent = os.path.dirname(os.path.normpath(path)) or "."

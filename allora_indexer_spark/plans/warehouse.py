@@ -76,8 +76,10 @@ STORAGE = PosixManifestStorage()
 # store is a manifest table from its first write (append tables hold one
 # data entry per appended version instead of key buckets), so there is
 # one commit path — the `_CURRENT` CAS publish — for all of them.
-# WRITERS additionally serialize per table through `_table_lock` (reads
-# never lock) — see the lock note below.
+# That CAS is also the only concurrency control: nothing locks. A writer
+# records the version its merge was based on, the publish refuses the
+# flip if `_CURRENT` moved, and the writer redoes its read-merge-publish
+# cycle (:func:`_retry_cas`).
 # Underscore-prefixed names are invisible to Spark's file listing, so a
 # stray direct read of the table path sees no half-state. Replaced
 # versions are garbage-collected per-bucket-directory after a grace period
@@ -98,107 +100,18 @@ _GC_GRACE_SEC = 60.0
 # writer warns (and table_health flags needs_compaction) until compact()
 # folds the versions back to O(1) entries.
 APPEND_MANIFEST_WARN = 64
-# Lock-free (LOCK_MODE="none") growth envelope: with piggybacked GC
-# skipped, `_manifests/` history files and `_versions/` dirs grow one per
-# publish until vacuum() runs. Past this bound table_health raises its
-# `needs_vacuum` flag. Sizing: under flock-mode piggybacked GC the soak
-# plateaus around retention + (grace window x publish rate) ≈ 150 files
-# at WARN=8; lock-free should vacuum well before ~2x that envelope.
+# Growth envelope of `_manifests/` history files and `_versions/` dirs.
+# Publish-time GC holds both near retention + (grace window x publish
+# rate) — the soak plateaus around 150 files at WARN=8 — but it never
+# touches a version dir no manifest names (a crash orphan looks exactly
+# like a rival's in-flight write), so orphans pile up until vacuum()
+# runs. Past this bound table_health raises its `needs_vacuum` flag.
 HISTORY_VACUUM_WARN = 256
 
 # Monotone manifest timestamp: os.replace + a strictly increasing counter
 # keep (created, version) a total order even when two writes land within
 # one clock tick.
 _write_seq = 0
-
-# Writer serialization. READS never lock (they pin a manifest and go), but
-# two concurrent WRITERS would race the read-manifest → merge → publish
-# window: the second `_CURRENT` flip wins wholesale and silently drops the
-# first writer's bucket pointers. The reference gets this serialization for
-# free from Postgres row locks (db.go's ON CONFLICT upserts run inside
-# transactions); here every public writer takes a per-table mutex for the
-# duration of its read-merge-publish cycle. Locally that is kernel
-# flock(2) on a permanent lock file — held only by a live process, so a
-# crashed holder's lock releases instantly and no staleness heuristic or
-# reclaim exists at all; on an object store (no flock) the same contract
-# is the CAS publish below: the writer records the manifest version its
-# merge was based on and `_publish_manifest` refuses the flip if
-# `_CURRENT` moved (conditional-PUT / ETag semantics), with the public
-# writers retrying the whole read-merge-publish cycle on conflict.
-_LOCK_FILE = ".__lock"
-# How long a writer waits for the lock before erroring loudly. Generous
-# on purpose: with flock (below) a lock is held ONLY by a live process —
-# a crashed holder's lock releases instantly — so a long wait means a
-# real writer is really working (e.g. a large compact), and waiting is
-# the correct behavior. Per-call override: the ``lock_timeout`` parameter
-# on compact/fold_appends/vacuum (a maintenance job that would rather
-# fail fast than queue behind a multi-hour compact passes a short one).
-_LOCK_TIMEOUT_SEC = 3600.0
-
-# Writer-exclusion mode. "flock" (default) serializes writers per table
-# through kernel flock(2) — the fast path: a merge never has to be
-# redone. "none" disables the mutex entirely and relies on the CAS
-# publish (ManifestConflictError + writer retry) for correctness — the
-# mode an object-store deployment runs in, where flock does not exist
-# and `_publish_manifest`'s conditional flip becomes a conditional PUT
-# (If-Match on `_CURRENT`'s ETag). Correctness contract in "none" mode:
-# lost updates are prevented by the version check — table creation
-# included, since a table's first manifest is a CAS against "no
-# manifest" — and writers SKIP their piggybacked GC (see
-# _gc_after_publish): space reclamation is vacuum()-only, run quiesced
-# or with `grace` sized above the longest in-flight write.
-LOCK_MODE = "flock"
-
-
-@contextlib.contextmanager
-def _table_lock(path: str, timeout: float | None = None):
-    # The lock lives BESIDE the table (`<path>.__lock` in the parent), so
-    # acquiring it never has to create or touch the table dir itself,
-    # which does not exist yet before the table's first write.
-    #
-    # Mutual exclusion is kernel flock(2) on the lock file, NOT the
-    # file's existence: the kernel releases the lock the instant the
-    # holding process dies, so there is no staleness heuristic, no
-    # reclaim race, and no release race — the file itself is a permanent
-    # harmless marker that is never deleted (deleting it would reopen an
-    # unlink/reopen race between waiters). On an object store, where no
-    # flock exists, the same seam becomes a conditional PUT / ETag check
-    # on `_CURRENT` (optimistic concurrency) instead of a mutex.
-    if LOCK_MODE == "none":
-        # lock-free mode: correctness comes from the CAS publish alone
-        yield
-        return
-    import fcntl
-
-    if timeout is None:
-        timeout = _LOCK_TIMEOUT_SEC
-    parent = os.path.dirname(os.path.normpath(path)) or "."
-    os.makedirs(parent, exist_ok=True)
-    lock = os.path.normpath(path) + _LOCK_FILE
-    fd = os.open(lock, os.O_CREAT | os.O_RDWR)
-    deadline = time.time() + timeout
-    try:
-        while True:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                break
-            except OSError:
-                if time.time() > deadline:
-                    raise TimeoutError(
-                        f"{lock}: writer lock held past "
-                        f"{timeout:.0f}s — another writer is "
-                        "genuinely stuck (a crashed holder would have "
-                        "released automatically)"
-                    )
-                time.sleep(0.05)
-        yield
-    finally:
-        try:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-        except OSError:
-            pass
-        os.close(fd)
-
 
 def _table_path(root: str, name: str) -> str:
     return os.path.join(root, name)
@@ -222,10 +135,9 @@ def _data_dirs(path: str, manifest: dict) -> list[str]:
     ]
 
 
-# Backoff of a public writer that lost a CAS race (LOCK_MODE="none";
-# under "flock" conflicts are impossible). The pause doubles per lost
-# attempt, from _CAS_BACKOFF_SEC up to _CAS_BACKOFF_MAX_SEC, with equal
-# jitter (each pause is U(0.5, 1) x the nominal delay), and the writer
+# Backoff of a public writer that lost a CAS race. The pause doubles per
+# lost attempt, from _CAS_BACKOFF_SEC up to _CAS_BACKOFF_MAX_SEC, with
+# equal jitter (each pause is U(0.5, 1) x the nominal delay), and the writer
 # gives up loudly once the next pause would end past _CAS_DEADLINE_SEC
 # from its first attempt. A deadline, not an attempt count: a writer on
 # a hot table keeps its turn as long as rivals keep committing, while a
@@ -243,8 +155,7 @@ def _publish_manifest(path: str, manifest: dict, expect=_ANY) -> None:
     given, the flip happens only if `_CURRENT` still names that version;
     otherwise ManifestConflictError — the writer's merge is stale and
     blindly flipping would drop the other writer's pointers wholesale
-    (the lost-update window the flock mutex closes on one host, closed
-    here for hosts that share only the storage).
+    (the lost-update window).
 
     EVERY flip — including the unconditional ``expect=_ANY`` form — runs
     inside `_cas_section`, so all `_CURRENT` writes serialize through one
@@ -347,15 +258,26 @@ def _refuse_plain_dir(path: str) -> None:
         )
 
 
-def _discard_refused_write(path: str, verdir: str) -> None:
-    """Leave a refused plain dir as it was: remove the refused write's
-    version dir and the `_versions/` dir it created, if nothing else is
-    in it."""
-    shutil.rmtree(verdir, ignore_errors=True)
+@contextlib.contextmanager
+def _own_version_dir(path: str, verdir: str):
+    """Wrap the publish of a freshly written version dir. A publish that
+    loses the CAS race removes ``verdir``: no manifest will ever name it,
+    and publish-time GC leaves unnamed dirs alone (they look like a
+    rival's in-flight write). A refused first write over a plain dir
+    (:func:`_refuse_plain_dir`) also removes the `_versions/` dir it
+    created, if nothing else is in it, leaving the plain dir as it was."""
     try:
-        os.rmdir(os.path.join(path, _VERSIONS_DIR))
-    except OSError:
-        pass
+        yield
+    except ManifestConflictError:
+        shutil.rmtree(verdir, ignore_errors=True)
+        raise
+    except PlainDirectoryError:
+        shutil.rmtree(verdir, ignore_errors=True)
+        try:
+            os.rmdir(os.path.join(path, _VERSIONS_DIR))
+        except OSError:
+            pass
+        raise
 
 
 def _schema_json(df: DataFrame) -> str:
@@ -416,6 +338,13 @@ def list_versions(path: str) -> list[tuple[str, float]]:
     ``mf`` in the returned tuples is the storage backend's opaque
     history entry id (POSIX: the manifest file's path) — valid input
     for :func:`read_table_version` and the storage history APIs."""
+    return [(eid, float(m.get("created", 0.0))) for eid, m in _history(path)]
+
+
+def _history(path: str) -> list[tuple[str, dict]]:
+    """:func:`list_versions`' entries with each manifest's content, as
+    (entry_id, manifest) — the listing already carries it, so GC reads
+    no history entry a second time."""
     # Read `_CURRENT` BEFORE listing history (ADVICE r9): the publish
     # persists the history entry before flipping `_CURRENT` inside the
     # CAS section, so a version observed here is guaranteed present in
@@ -423,26 +352,34 @@ def list_versions(path: str) -> list[tuple[str, float]]:
     # the listing and this read, drop the live version from by_ver, and
     # silently collapse the whole chain walk to the timestamp fallback.
     cur = _manifest_read(path)
-    by_ver: dict[str, tuple[str, float, int, str | None]] = {}
-    for eid, m in STORAGE.list_history(path):
-        by_ver[m.get("version", eid)] = (
-            eid,
-            float(m.get("created", 0.0)),
-            m.get("seq", 0),
-            m.get("parent"),
-        )
-    chain: list[str] = []
+    by_ver: dict[str, tuple[str, dict]] = {
+        m.get("version", eid): (eid, m)
+        for eid, m in STORAGE.list_history(path)
+    }
+    # Walk FORWARD from the observed `_CURRENT` first: a flip that lands
+    # between that read and the listing puts newer manifests in the
+    # listing, and each names the one before it as its parent. Leaving
+    # them off the chain would rank the newest table version behind the
+    # retention horizon, where a concurrent GC could reclaim its dirs.
+    child = {m.get("parent"): ver for ver, (_, m) in by_ver.items()}
     v = cur.get("version") if cur is not None else None
+    ahead: set[str] = set()
+    while v in child and child[v] not in ahead:
+        v = child[v]
+        ahead.add(v)
+    chain: list[str] = []
     seen: set[str] = set()
     while v is not None and v in by_ver and v not in seen:
         seen.add(v)
         chain.append(v)
-        v = by_ver[v][3]
-    rest = sorted(
-        (ver for ver in by_ver if ver not in seen),
-        key=lambda ver: (-by_ver[ver][1], -by_ver[ver][2], by_ver[ver][0]),
-    )
-    return [(by_ver[v][0], by_ver[v][1]) for v in chain + rest]
+        v = by_ver[v][1].get("parent")
+
+    def newest_first(ver: str) -> tuple:
+        eid, m = by_ver[ver]
+        return (-float(m.get("created", 0.0)), -m.get("seq", 0), eid)
+
+    rest = sorted((ver for ver in by_ver if ver not in seen), key=newest_first)
+    return [by_ver[v] for v in chain + rest]
 
 
 def _load_manifest_file(mf: str) -> dict:
@@ -459,65 +396,63 @@ def _version_paths(path: str) -> list[str]:
     return [os.path.join(vdir, d) for d in os.listdir(vdir)]
 
 
-def _gc_after_publish(path: str, keep: set[str]) -> None:
-    """The GC writers piggyback on their publish. SKIPPED entirely under
-    LOCK_MODE="none": piggybacked GC would run with no writer exclusion,
-    and a rival writer's in-flight version whose files landed more than
-    the grace period before its publish (big version, slow driver-side
-    planning) could be reclaimed out from under it. Lock-free deployments
-    reclaim space out-of-band with :func:`vacuum` instead — quiesced, or
-    with ``grace`` sized above the longest in-flight write."""
-    if LOCK_MODE == "none":
-        return
-    _gc_versions(path, keep=keep)
-
-
 def _gc_versions(
     path: str,
     keep: set[str] | None = None,
     retain: int | None = None,
     grace: float | None = None,
+    unpublished: bool = False,
 ) -> None:
     """Reclaim data directories no retained manifest references, but only
     once they are older than a grace period — an in-flight reader that
     loaded `_CURRENT` just before a flip keeps a consistent file set until
     it is implausibly old. The ``retain`` newest manifests (default
     UPSERT_RETAIN_VERSIONS) survive as the time-travel horizon; ``keep``
-    pins additional data dirs (by path) or manifest files regardless of
-    age. ``grace`` overrides _GC_GRACE_SEC (a lock-free vacuum sizes it
-    above the longest in-flight write). Deletion granularity is the
-    bucket directory: a version dir whose buckets are all still carried
-    by live manifests keeps them and loses only the superseded ones."""
+    pins additional data dirs (by path) regardless of age. ``grace``
+    overrides _GC_GRACE_SEC. Deletion granularity is the bucket
+    directory: a version dir whose buckets are all still carried by live
+    manifests keeps them and loses only the superseded ones.
+
+    Every publish runs this with no writer lock, which two rules make
+    safe:
+
+    - Only a version dir that some history manifest names is
+      reclaimable. A dir no manifest names is unpublished: a rival's
+      in-flight write (a `_retry_cas` loop can hold one past any grace
+      window) or a crash orphan. Only ``unpublished=True`` — what
+      :func:`vacuum` passes — reclaims those, under the same grace.
+    - A history manifest beyond the horizon is deleted only once every
+      dir it names outside the retained set is gone. Deleting it first
+      would leave a grace-pending dir that no manifest names, which only
+      vacuum would reclaim."""
     if retain is None:
         retain = UPSERT_RETAIN_VERSIONS
     if grace is None:
         grace = _GC_GRACE_SEC
     keep = {os.path.realpath(p) for p in (keep or set())}
     now = time.time()
-    manifests = list_versions(path)
-    retained: list[dict] = []
-    for idx, (mf, _) in enumerate(manifests):
-        if idx < retain or os.path.realpath(mf) in keep:
-            try:
-                retained.append(_load_manifest_file(mf))
-            except (OSError, ValueError, KeyError):
-                # KeyError: the seam's read_history on an entry a rival
-                # vacuum deleted between list and read (the memory/
-                # object-store backend's listed-then-gone race) — same
-                # skip semantics as a POSIX unlink race
-                continue
-    referenced = {
-        os.path.realpath(os.path.join(path, rel))
-        for m in retained
-        for rel in m.get("data", {}).values()
-    }
-    # prune unreferenced, aged-out data dirs (per bucket directory). A
-    # manifest may reference a whole VERSION dir (compact()'s {"all": ...}
-    # layout) or individual bucket dirs inside one; an entry is live when
-    # it IS a referenced path, lies INSIDE one (descendant of a whole-dir
-    # reference), or CONTAINS one (ancestor of a referenced bucket dir).
-    protected = referenced | keep
+    # one realpath for the table, then plain joins: manifest entries are
+    # engine-written relative paths, and a realpath per entry per history
+    # manifest would lstat every path component on every publish
+    root = os.path.realpath(path)
+    vroot = os.path.join(root, _VERSIONS_DIR)
+    history = _history(path)
 
+    def refs(m: dict) -> set[str]:
+        return {
+            os.path.normpath(os.path.join(root, rel))
+            for rel in m.get("data", {}).values()
+        }
+
+    protected = keep.union(*(refs(m) for _, m in history[:retain]))
+    named = set().union(*(refs(m) for _, m in history))
+    published = {os.path.relpath(r, vroot).split(os.sep)[0] for r in named}
+
+    # A manifest may reference a whole VERSION dir (compact()'s {"all":
+    # ...} layout) or individual bucket dirs inside one; an entry is live
+    # when it IS a referenced path, lies INSIDE one (descendant of a
+    # whole-dir reference), or CONTAINS one (ancestor of a referenced
+    # bucket dir).
     def _live(rp: str) -> bool:
         return any(
             rp == k
@@ -526,10 +461,11 @@ def _gc_versions(
             for k in protected
         )
 
-    for vdir in _version_paths(path):
-        if not os.path.isdir(vdir):
+    for vname in os.listdir(vroot) if os.path.isdir(vroot) else ():
+        vdir = os.path.join(vroot, vname)
+        if vname not in published and not unpublished:
             continue
-        if os.path.realpath(vdir) in protected:
+        if vdir in protected or not os.path.isdir(vdir):
             continue  # whole version dir referenced: nothing inside may go
         try:
             # the version dir's own mtime, captured BEFORE any deletion
@@ -542,8 +478,7 @@ def _gc_versions(
             continue
         for d in os.listdir(vdir):
             sub = os.path.join(vdir, d)
-            rp = os.path.realpath(sub)
-            if _live(rp):
+            if _live(sub):
                 continue
             try:
                 age_ref = max(os.path.getmtime(sub), vdir_mtime)
@@ -566,15 +501,26 @@ def _gc_versions(
                 os.rmdir(vdir)
         except OSError:
             pass
+
+    def pending(r: str) -> bool:
+        # a dir this manifest names that GC has not reclaimed yet and no
+        # retained manifest carries
+        a = r
+        while a.startswith(vroot + os.sep):
+            if a in protected:
+                return False
+            a = os.path.dirname(a)
+        return os.path.exists(r)
+
     # prune manifest history beyond the retained horizon (entry ids are
     # backend-opaque; age/delete go through the storage seam)
-    for mf, _ in manifests[retain:]:
-        if os.path.realpath(mf) in keep:
+    for eid, m in history[retain:]:
+        if any(map(pending, refs(m))):
             continue
         try:
-            if now - STORAGE.history_age_ref(mf) < grace:
+            if now - STORAGE.history_age_ref(eid) < grace:
                 continue
-            STORAGE.delete_history(mf)
+            STORAGE.delete_history(eid)
         except (OSError, KeyError):
             continue
 
@@ -660,11 +606,10 @@ def read_dir(spark: SparkSession, path: str) -> DataFrame:
 def append_dir(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    """Append to a standalone table directory under its writer lock — the
-    public face of :func:`_append_data` for streaming stores (the first
-    append creates the table)."""
-    with _table_lock(path):
-        _append_data(df, path, partition_by)
+    """Append to a standalone table directory — the public face of
+    :func:`_append_data` for streaming stores (the first append creates
+    the table)."""
+    _append_data(df, path, partition_by)
 
 
 def table_exists(root: str, name: str) -> bool:
@@ -788,14 +733,14 @@ def _append_data(
     (streaming replays are the common case).
 
     CAS: the version dir is written ONCE; a publish that loses the race
-    (LOCK_MODE="none") only re-reads the manifest and re-points — pure
-    appends commute, so no data is rewritten on retry. Callers whose
-    SEMANTICS depend on the manifest state they probed (the anti-join in
-    write_insert_if_absent) pass ``expect=`` the version id their probe
-    was based on (None = "table had no manifest"); the publish is then a
-    single attempt whose ManifestConflictError propagates, and the
-    caller redoes the probe — appending under a fresh manifest here
-    would silently re-admit keys the winner just landed."""
+    only re-reads the manifest and re-points — pure appends commute, so
+    no data is rewritten on retry. Callers whose SEMANTICS depend on the
+    manifest state they probed (the anti-join in write_insert_if_absent)
+    pass ``expect=`` the version id their probe was based on (None =
+    "table had no manifest"); the publish is then a single attempt whose
+    ManifestConflictError propagates, and the caller redoes the probe —
+    appending under a fresh manifest here would silently re-admit keys
+    the winner just landed."""
     ver = _new_version_id()
     verdir = os.path.join(path, _VERSIONS_DIR, ver)
     writer = df.write.mode("overwrite")
@@ -840,18 +785,12 @@ def _append_data(
         )
         return len(data)
 
-    try:
+    with _own_version_dir(path, verdir):
         n_entries = _retry_cas(publish) if expect is _ANY else publish()
-    except ManifestConflictError:
-        shutil.rmtree(verdir, ignore_errors=True)  # never referenced
-        raise
-    except PlainDirectoryError:
-        _discard_refused_write(path, verdir)
-        raise
     if n_entries is None:
         shutil.rmtree(verdir, ignore_errors=True)
         return
-    _gc_after_publish(path, keep={verdir})
+    _gc_versions(path, keep={verdir})
     if n_entries > APPEND_MANIFEST_WARN:
         # every append adds one data-map entry, one
         # version dir, and one manifest-history file; left unchecked the
@@ -876,7 +815,7 @@ def _append_data(
             # default on keyed tables (probe_pruning stuck at
             # 'tiers_only' until a manual compact)
             _retry_cas(
-                lambda: _fold_appends_locked(
+                lambda: _fold_appends_once(
                     df.sparkSession,
                     path,
                     partition_by=pb,
@@ -902,7 +841,7 @@ def _append_data(
                 # own partition_by rides along; being a base rewrite, it
                 # is honestly recorded with by="compact".
                 _retry_cas(
-                    lambda: _compact_locked(
+                    lambda: _compact_once(
                         df.sparkSession, path, partition_cols=pb
                     )
                 )
@@ -1046,12 +985,11 @@ def write_insert_if_absent(
     path = _table_path(root, name)
     batch = df.dropDuplicates(keys).persist()
     try:
-        # lock spans probe + append: a concurrent writer landing the same
-        # keys between the two would defeat the idempotence contract.
-        # Under LOCK_MODE="none" the same contract comes from the CAS:
-        # the basis version is captured BEFORE the probe and the publish
-        # is conditional on it, so a concurrent writer landing rows
-        # between probe and publish raises here and the whole
+        # A concurrent writer landing the same keys between probe and
+        # append would defeat the idempotence contract. The CAS closes
+        # that window: the basis version is captured BEFORE the probe and
+        # the publish is conditional on it, so a concurrent writer
+        # landing rows between probe and publish raises here and the whole
         # probe+append redoes against the winner's manifest — the
         # anti-join always ran against (a superset of) the state it
         # published over, which is what keeps keys exactly-once.
@@ -1079,8 +1017,8 @@ def write_insert_if_absent(
             # natural key, and every existing row's prune value is
             # PROVABLY below span lo — so no existing row can equal any
             # batch row's key and the anti-join is an identity. Runs
-            # under the same table lock / CAS cycle as the probe it
-            # replaces, against the exact current file set.
+            # inside the same CAS cycle as the probe it replaces,
+            # against the exact current file set.
             if span is None or span[0] is None:
                 return False
             mx = _prune_max_from_footers(path, _prune_col(keys))
@@ -1088,8 +1026,7 @@ def write_insert_if_absent(
                 return False
             return mx is None or mx < span[0]
 
-        with _table_lock(path):
-            _retry_cas(cycle)
+        _retry_cas(cycle)
     finally:
         batch.unpersist()
 
@@ -1155,17 +1092,14 @@ def write_keep_one(
     rewritten into the bucketed layout by its first upsert, then stays
     incremental. On Delta this whole function is MERGE WHEN MATCHED
     UPDATE."""
-    with _table_lock(_table_path(root, name)):
-        # under LOCK_MODE="none" a lost CAS race redoes the whole merge
-        # against the winner's manifest (optimistic concurrency)
-        _retry_cas(
-            lambda: _write_keep_one_locked(
-                spark, df, root, name, order, num_buckets
-            )
-        )
+    # a lost CAS race redoes the whole merge against the winner's
+    # manifest (optimistic concurrency)
+    _retry_cas(
+        lambda: _write_keep_one_once(spark, df, root, name, order, num_buckets)
+    )
 
 
-def _write_keep_one_locked(
+def _write_keep_one_once(
     spark: SparkSession,
     df: DataFrame,
     root: str,
@@ -1196,10 +1130,32 @@ def _write_keep_one_locked(
         and all(k.isdigit() for k in manifest["data"])
     )
 
-    if not bucketed_manifest:
+    merged = batch
+    if bucketed_manifest:
+        affected = sorted(
+            r[0] for r in batch.select(_BUCKET_COL).distinct().collect()
+        )
+        if not affected:  # empty batch
+            return
+        # bucket pruning by construction: the merge scan lists ONLY the
+        # affected buckets' data dirs out of the pinned manifest
+        existing_dirs = [
+            os.path.join(path, manifest["data"][str(b)])
+            for b in affected
+            if str(b) in manifest["data"]
+        ]
+        if existing_dirs:
+            existing = (
+                spark.read.schema(_pinned_schema(manifest))
+                .parquet(*existing_dirs)
+                .drop(_BUCKET_COL)
+                .withColumn(_BUCKET_COL, _bucket_expr(keys, num_buckets))
+            )
+            merged = existing.unionByName(batch)
+        data = dict(manifest["data"])  # untouched buckets carried by reference
+    else:
         # fresh table, or one-time rewrite of a non-bucketed manifest
         # into the bucketed layout
-        merged = batch
         if manifest is not None:
             merged = (
                 _read_manifest_data(spark, path, manifest)
@@ -1207,72 +1163,25 @@ def _write_keep_one_locked(
                 .withColumn(_BUCKET_COL, _bucket_expr(keys, num_buckets))
                 .unionByName(batch)
             )
-        result = _keep_first(merged, keys, order)
-        result.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(
-            verdir
-        )
-        data = {
-            d.split("=", 1)[1]: os.path.join(_VERSIONS_DIR, ver, d)
-            for d in os.listdir(verdir)
-            if d.startswith(_BUCKET_COL + "=")
-        }
-        try:
-            _publish_manifest(
-                path,
-                {
-                    "version": ver,
-                    "buckets": num_buckets,
-                    "keys": keys,
-                    "data": data,
-                    "schema": _schema_json(result),
-                },
-                expect=manifest["version"] if manifest is not None else None,
-            )
-        except PlainDirectoryError:
-            _discard_refused_write(path, verdir)
-            raise
-        _gc_after_publish(path, keep={verdir})
-        return
-
-    affected = sorted(
-        r[0] for r in batch.select(_BUCKET_COL).distinct().collect()
-    )
-    if not affected:  # empty batch
-        return
-    # bucket pruning by construction: the merge scan lists ONLY the
-    # affected buckets' data dirs out of the pinned manifest
-    existing_dirs = [
-        os.path.join(path, manifest["data"][str(b)])
-        for b in affected
-        if str(b) in manifest["data"]
-    ]
-    merged = batch
-    if existing_dirs:
-        existing = (
-            spark.read.schema(_pinned_schema(manifest))
-            .parquet(*existing_dirs)
-            .drop(_BUCKET_COL)
-            .withColumn(_BUCKET_COL, _bucket_expr(keys, num_buckets))
-        )
-        merged = existing.unionByName(batch)
+        data = {}
     result = _keep_first(merged, keys, order)
     result.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(verdir)
-    data = dict(manifest["data"])  # untouched buckets carried by reference
     for d in os.listdir(verdir):  # rewritten buckets point at the new dir
         if d.startswith(_BUCKET_COL + "="):
             data[d.split("=", 1)[1]] = os.path.join(_VERSIONS_DIR, ver, d)
-    _publish_manifest(
-        path,
-        {
-            "version": ver,
-            "buckets": num_buckets,
-            "keys": keys,
-            "data": data,
-            "schema": _schema_json(result),
-        },
-        expect=manifest["version"],
-    )
-    _gc_after_publish(path, keep={verdir})
+    with _own_version_dir(path, verdir):
+        _publish_manifest(
+            path,
+            {
+                "version": ver,
+                "buckets": num_buckets,
+                "keys": keys,
+                "data": data,
+                "schema": _schema_json(result),
+            },
+            expect=manifest["version"] if manifest is not None else None,
+        )
+    _gc_versions(path, keep={verdir})
 
 
 def seed_manifest_store(
@@ -1291,10 +1200,8 @@ def seed_manifest_store(
     carry more than data and schema (rollup ledgers, near-dup
     signature/pairs stores): a later stamp would leave a window with a
     manifest missing its markers. No-op if the store already has a
-    manifest. A lost seed
-    CAS reclaims its own version dir before retrying (a seed-loser dir
-    is invisible to GC — no _gc_after_publish runs on the early-return
-    path)."""
+    manifest. A lost seed CAS removes its own version dir before
+    retrying (:func:`_own_version_dir`)."""
 
     def once() -> None:
         if _manifest_read(path) is not None:
@@ -1312,17 +1219,10 @@ def seed_manifest_store(
         )
         if layout:
             m["layout"] = layout
-        try:
+        with _own_version_dir(path, verdir):
             _publish_manifest(path, m, expect=None)
-        except ManifestConflictError:
-            shutil.rmtree(verdir, ignore_errors=True)
-            raise
-        except PlainDirectoryError:
-            _discard_refused_write(path, verdir)
-            raise
 
-    with _table_lock(path):
-        _retry_cas(once)
+    _retry_cas(once)
 
 
 def read_table_version(
@@ -1509,7 +1409,7 @@ def write_tables(
     FK chain. Tasks are submitted in topological order into a FIFO
     pool, so when a child starts its parents have already STARTED
     (finished or running — never queued behind it): parent waits cannot
-    deadlock the pool. Per-table writer locks are per-path, so
+    deadlock the pool. Each table commits by its own `_CURRENT` CAS, so
     concurrent writes to DIFFERENT tables never contend; a failed write
     propagates (its children fail with it, and the streaming checkpoint
     retries the batch), preserving the parents-before-children crash
@@ -1685,16 +1585,17 @@ def bootstrap_from_snapshot(
                 for d in os.listdir(verdir)
                 if d.startswith(_BUCKET_COL + "=")
             }
-            _publish_manifest(
-                dst,
-                {
-                    "version": ver,
-                    "data": data,
-                    "schema": _schema_json(df),
-                    **meta,
-                },
-                expect=None,
-            )
+            with _own_version_dir(dst, verdir):
+                _publish_manifest(
+                    dst,
+                    {
+                        "version": ver,
+                        "data": data,
+                        "schema": _schema_json(df),
+                        **meta,
+                    },
+                    expect=None,
+                )
         else:
             _append_data(df, dst, expect=None)
         restored.append(name)
@@ -1707,7 +1608,6 @@ def compact(
     target_partitions: int | None = None,
     partition_cols: list[str] | None = None,
     cluster_by: list[str] | None = None,
-    lock_timeout: float | None = None,
     range_by: list[str] | None = None,
 ) -> None:
     """Small-file compaction: streaming ingest appends a few rows per
@@ -1769,16 +1669,15 @@ def compact(
         raise ValueError(
             "partition_cols, cluster_by and range_by are exclusive"
         )
-    with _table_lock(path, timeout=lock_timeout):
-        _retry_cas(
-            lambda: _compact_locked(
-                spark, path, target_partitions, partition_cols, cluster_by,
-                range_by,
-            )
+    _retry_cas(
+        lambda: _compact_once(
+            spark, path, target_partitions, partition_cols, cluster_by,
+            range_by,
         )
+    )
 
 
-def _compact_locked(
+def _compact_once(
     spark: SparkSession,
     path: str,
     target_partitions: int | None = None,
@@ -1862,7 +1761,7 @@ def _compact_locked(
     # structural keys this rewrite owns): stores ride state INSIDE the
     # manifest so it flips atomically with the data — the heavy-hitter
     # store's n_total/last_batch/batch_fps, the rollup ledger's
-    # content_key_encoding. _append_data and _fold_appends_locked already
+    # content_key_encoding. _append_data and _fold_appends_once already
     # preserve them (dict(cur) + update); a full compact rebuilding from
     # scratch silently dropped them, so one out-of-band compact() on the
     # hh store would reset its count state — the exact loss the manifest
@@ -1909,8 +1808,9 @@ def _compact_locked(
         pass  # operator flattened the table: drop the recorded layout
     elif "layout" in manifest:
         m["layout"] = manifest["layout"]
-    _publish_manifest(path, m, expect=manifest["version"])
-    _gc_after_publish(path, keep={verdir})
+    with _own_version_dir(path, verdir):
+        _publish_manifest(path, m, expect=manifest["version"])
+    _gc_versions(path, keep={verdir})
 
 
 def fold_appends(
@@ -1919,7 +1819,6 @@ def fold_appends(
     partition_by: list[str] | None = None,
     target_partitions: int | None = None,
     cluster_by: list[str] | None = None,
-    lock_timeout: float | None = None,
     range_by: list[str] | None = None,
 ) -> bool:
     """Incremental compaction of a manifest-layout APPEND table: fold
@@ -1935,16 +1834,15 @@ def fold_appends(
         raise ValueError(
             "partition_by, cluster_by and range_by are exclusive"
         )
-    with _table_lock(path, timeout=lock_timeout):
-        return _retry_cas(
-            lambda: _fold_appends_locked(
-                spark, path, partition_by, target_partitions, cluster_by,
-                range_by,
-            )
+    return _retry_cas(
+        lambda: _fold_appends_once(
+            spark, path, partition_by, target_partitions, cluster_by,
+            range_by,
         )
+    )
 
 
-def _fold_appends_locked(
+def _fold_appends_once(
     spark: SparkSession,
     path: str,
     partition_by: list[str] | None = None,
@@ -1975,7 +1873,7 @@ def _fold_appends_locked(
         range_by = lay.get("range_by")
         if target_partitions is None:
             target_partitions = lay.get("target_partitions")
-        # same keyed-table default as _compact_locked: a never-compacted
+        # same keyed-table default as _compact_once: a never-compacted
         # keyed table's auto-fold must not flatten the contiguous delta
         # spans its own probe pruning relies on (applied after the delta
         # frame is built — the default is column-guarded)
@@ -2056,31 +1954,28 @@ def _fold_appends_locked(
             manifest["layout"] = {"range_by": range_by, "by": "fold"}
         elif partition_by:
             manifest["layout"] = {"partition_by": partition_by, "by": "fold"}
-    _publish_manifest(path, manifest, expect=m["version"])
-    _gc_after_publish(path, keep={verdir})
+    with _own_version_dir(path, verdir):
+        _publish_manifest(path, manifest, expect=m["version"])
+    _gc_versions(path, keep={verdir})
     return True
 
 
 def vacuum(
     path: str,
     retain: int | None = None,
-    lock_timeout: float | None = None,
     grace: float | None = None,
 ) -> None:
     """Out-of-band space reclamation for a manifest table: run the same
-    grace-period / retention GC the writers piggyback on their publishes
-    — for tables that have STOPPED receiving writes (a table's superseded
-    versions otherwise linger until its next write). ``retain`` overrides
-    UPSERT_RETAIN_VERSIONS for this pass (e.g. ``retain=1`` keeps only
-    the current snapshot). Takes the writer lock: vacuuming concurrently
-    with a writer could delete the version a mid-cycle publish is about
-    to carry by reference. Under LOCK_MODE="none" the lock is a no-op and
-    vacuum is the ONLY reclamation path (writers skip piggybacked GC
-    entirely — see _gc_after_publish): run it quiesced, or pass ``grace``
-    sized above the longest in-flight write so a slow rival's unpublished
-    version cannot be reclaimed."""
-    with _table_lock(path, timeout=lock_timeout):
-        _gc_versions(path, retain=retain, grace=grace)
+    grace-period / retention GC every publish runs — for tables that have
+    STOPPED receiving writes (a table's superseded versions otherwise
+    linger until its next write) — and also reclaim version dirs no
+    manifest names. Those are crash orphans or a rival's in-flight write,
+    which publish-time GC never touches; table_health's ``needs_vacuum``
+    flags their growth. ``retain`` overrides UPSERT_RETAIN_VERSIONS for
+    this pass (e.g. ``retain=1`` keeps only the current snapshot). Run it
+    quiesced, or pass ``grace`` sized above the longest in-flight write
+    so a slow rival's unpublished version is not reclaimed."""
+    _gc_versions(path, retain=retain, grace=grace, unpublished=True)
 
 
 def evolve_append(
@@ -2094,14 +1989,11 @@ def evolve_append(
     with typed nulls from that pinned schema. No ALTER, no rewrite, no
     downtime; on Delta this is mergeSchema=true on write."""
     path = _table_path(root, name)
-    with _table_lock(path):
-        m = _manifest_read(path)
-        for field in _pinned_schema(m).fields if m is not None else ():
-            if field.name not in df.columns:
-                df = df.withColumn(
-                    field.name, F.lit(None).cast(field.dataType)
-                )
-        _append_data(df, path)
+    m = _manifest_read(path)
+    for field in _pinned_schema(m).fields if m is not None else ():
+        if field.name not in df.columns:
+            df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
+    _append_data(df, path)
 
 
 def table_ddl(
@@ -2269,10 +2161,9 @@ def table_health(root: str) -> list[dict]:
         n_entries = len(m["data"])
         # count history through the STORAGE seam — an os.listdir here
         # would always see 0 on a non-POSIX backend (silencing the
-        # lock-free needs_vacuum flag this report exists to raise) and
-        # miscount .__tmp_* partials as history on POSIX. count_history
-        # is a name count (one listdir), NOT the parse-every-manifest
-        # listing: in lock-free mode history grows O(appends), and a
+        # needs_vacuum flag this report exists to raise) and miscount
+        # .__tmp_* partials as history on POSIX. count_history is a name
+        # count (one listdir), NOT the parse-every-manifest listing: a
         # cron health check must not read hundreds of MB of manifest
         # JSON to produce one integer
         n_history = STORAGE.count_history(path)
@@ -2330,18 +2221,12 @@ def table_health(root: str) -> list[dict]:
                 "needs_compaction": (
                     not bucketed and n_entries > APPEND_MANIFEST_WARN
                 ),
-                # lock-free deployments skip the piggybacked GC, so
-                # history files and superseded version dirs grow
-                # O(appends) until an operator runs vacuum() — surface
-                # the growth instead of letting it silently accumulate
-                # (ADVICE r9). In flock mode the publish-time GC bounds
-                # both, so the flag stays off.
+                # publish-time GC leaves version dirs no manifest names
+                # (crash orphans) to vacuum() — surface their growth
+                # instead of letting it silently accumulate (ADVICE r9)
                 "needs_vacuum": (
-                    LOCK_MODE == "none"
-                    and (
-                        n_history > HISTORY_VACUUM_WARN
-                        or n_versions > HISTORY_VACUUM_WARN
-                    )
+                    n_history > HISTORY_VACUUM_WARN
+                    or n_versions > HISTORY_VACUUM_WARN
                 ),
                 "probe_pruning": probe_pruning,
             }

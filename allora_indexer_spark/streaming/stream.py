@@ -1371,13 +1371,13 @@ def _merge_heavy_hitter_batch(
 
     from allora_indexer_spark.plans.warehouse import (
         _VERSIONS_DIR,
-        _gc_after_publish,
+        _gc_versions,
         _manifest_read,
         _new_version_id,
+        _own_version_dir,
         _publish_manifest,
         _read_manifest_data,
         _retry_cas,
-        _table_lock,
     )
 
     # one tokenize pass per trigger: counts is the only aggregate built
@@ -1409,12 +1409,10 @@ def _merge_heavy_hitter_batch(
         # version, so even that corner records its fingerprint; an empty
         # REPLAY still no-ops (fp 0 == recorded 0).
 
-        # writer lock spans read-manifest → merge → publish, same
-        # contract as the warehouse writers; under LOCK_MODE="none" the
-        # lock is a no-op and the CAS guard below (expect=prev version,
-        # conflict → re-read + re-merge) closes the lost-update window —
-        # an unconditional flip would clobber a concurrent merger's
-        # counts wholesale
+        # same contract as the warehouse writers: the CAS guard below
+        # (expect=prev version, conflict → re-read + re-merge) closes the
+        # lost-update window — an unconditional flip would clobber a
+        # concurrent merger's counts wholesale
         def merge_once() -> None:
             prev = _manifest_read(store_dir)
             n_total = prev.get("n_total", 0) if prev else 0
@@ -1495,7 +1493,7 @@ def _merge_heavy_hitter_batch(
                     },
                     expect=prev["version"],
                 )
-                _gc_after_publish(store_dir, keep=set())
+                _gc_versions(store_dir)
                 return
             merged = pruned
             if prev is not None:
@@ -1508,21 +1506,21 @@ def _merge_heavy_hitter_batch(
             ver = _new_version_id()
             verdir = os.path.join(store_dir, _VERSIONS_DIR, ver)
             merged.coalesce(1).write.mode("overwrite").parquet(verdir)
-            _publish_manifest(
-                store_dir,
-                {
-                    "version": ver,
-                    "data": {"all": os.path.join(_VERSIONS_DIR, ver)},
-                    "n_total": n_total + batch_n,
-                    "last_batch": batch_id,
-                    "batch_fps": fps,
-                },
-                expect=prev["version"] if prev is not None else None,
-            )
-            _gc_after_publish(store_dir, keep={verdir})
+            with _own_version_dir(store_dir, verdir):
+                _publish_manifest(
+                    store_dir,
+                    {
+                        "version": ver,
+                        "data": {"all": os.path.join(_VERSIONS_DIR, ver)},
+                        "n_total": n_total + batch_n,
+                        "last_batch": batch_id,
+                        "batch_fps": fps,
+                    },
+                    expect=prev["version"] if prev is not None else None,
+                )
+            _gc_versions(store_dir, keep={verdir})
 
-        with _table_lock(store_dir):
-            _retry_cas(merge_once)
+        _retry_cas(merge_once)
     finally:
         counts.unpersist()
 

@@ -237,6 +237,39 @@ def test_ivfpq_end_to_end_recall_and_pruning(spark, sf_dir, tmp_path):
     assert mean_recall >= 0.4, f"IVFPQ recall@5 too low: {recalls}"
 
 
+def test_ivf_append_stays_exactly_once_under_a_lost_race(
+    spark, tmp_path, monkeypatch
+):
+    """Two appends of the same batch race: the rival lands inside the
+    first append's publish. The first append's probe ran against the
+    manifest the rival replaced, so it must redo probe and append
+    together — re-pointing its already-probed rows at the rival's
+    manifest would land every new vec_id twice."""
+    import os
+
+    from allora_indexer_spark.operators import ann_index
+    from allora_indexer_spark.plans import storage
+
+    st = storage.InMemoryManifestStorage()
+    monkeypatch.setattr(warehouse, "STORAGE", st)
+    emb = spark.createDataFrame(
+        [(i, [float(i % 4), float(i // 4), 1.0]) for i in range(24)],
+        "vec_id long, embedding array<float>",
+    )
+    idx = str(tmp_path / "ivf")
+    ann_index.build_ivf_index(spark, emb.filter("vec_id < 16"), idx, n_cells=2)
+    batch = emb.filter("vec_id >= 12")  # 12..15 are already indexed
+    st.interleave = lambda: ann_index.append_to_ivf_index(spark, batch, idx)
+    ann_index.append_to_ivf_index(spark, batch, idx)
+    ids = sorted(
+        r["vec_id"]
+        for r in warehouse.read_dir(spark, os.path.join(idx, "corpus"))
+        .select("vec_id")
+        .collect()
+    )
+    assert ids == list(range(24))
+
+
 @pytest.mark.soak
 def test_ivf_incremental_append(spark, sf_dir, tmp_path):
     """append_to_ivf_index: new vectors are assigned to existing

@@ -209,12 +209,10 @@ def test_memory_backend_list_versions_and_history_gc(tmp_path, monkeypatch):
 
 def test_lockfree_upserts_on_memory_backend(spark, tmp_path, monkeypatch):
     """write_keep_one end-to-end with manifests in the memory backend and
-    parquet data on disk, LOCK_MODE='none' — the deployment shape of an
-    object store (conditional-PUT pointer, dumb blob data). Concurrent
-    writers' rows must all survive, same as the POSIX variant in
-    test_warehouse_cas.py."""
+    parquet data on disk — the deployment shape of an object store
+    (conditional-PUT pointer, dumb blob data). Concurrent writers' rows
+    must all survive, same as the POSIX variant in test_warehouse_cas.py."""
     _mem(monkeypatch)
-    monkeypatch.setattr(warehouse, "LOCK_MODE", "none")
     root = str(tmp_path / "wh")
     order = warehouse._order_cols(TABLE_SPECS["scores"].keep_one)
 

@@ -59,7 +59,7 @@ def test_rollup_ledger_stamped_with_encoding_version(spark, tmp_path):
     _run_rollup(spark, feed, rollup, str(tmp_path / "ckpt"))
     m2 = _manifest_read(ledger)
     assert m2["content_key_encoding"] == stream.CONTENT_KEY_ENCODING
-    # ...and a full out-of-band compact (carry-forward in _compact_locked)
+    # ...and a full out-of-band compact (carry-forward in _compact_once)
     warehouse.compact(spark, ledger, target_partitions=1)
     m3 = _manifest_read(ledger)
     assert m3["content_key_encoding"] == stream.CONTENT_KEY_ENCODING

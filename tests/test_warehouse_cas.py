@@ -1,18 +1,17 @@
-"""CAS publish seam, lock-free (object-store) writer mode, cross-process
-flock exclusion, auto-maintenance fold, and per-call lock timeouts.
+"""CAS publish seam, lock-free concurrent writers (threads and
+processes), lost-race cleanup, and the auto-maintenance fold.
 
 The reference serializes writers through Postgres row locks + ON CONFLICT
 (/root/reference/db.go:1118-1185). This engine's parquet manifest layout
-offers two interchangeable implementations of the same contract:
+gets the same contract from one mechanism, with no writer mutex:
+`_publish_manifest(expect=...)` refuses a flip when `_CURRENT` moved
+(ManifestConflictError) and the public writers retry the whole
+read-merge-publish cycle — the optimistic-concurrency loop an object
+store runs with conditional PUTs, and on POSIX the same loop over a
+flock micro-lock around the pointer swap.
 
-- LOCK_MODE="flock": kernel flock(2) writer mutex (single host / shared
-  POSIX fs) — merges never redo;
-- LOCK_MODE="none": no mutex at all; `_publish_manifest(expect=...)`
-  refuses a flip when `_CURRENT` moved (ManifestConflictError) and the
-  public writers retry the whole read-merge-publish cycle — the
-  optimistic-concurrency loop an object store runs with conditional PUTs.
-
-These tests pin both: lost updates must be impossible in either mode.
+These tests pin it: lost updates must be impossible, and a publish that
+loses its race must leave no unreferenced version dir behind.
 """
 
 from __future__ import annotations
@@ -118,11 +117,10 @@ def test_retry_cas_reruns_cycle_until_publish_lands(tmp_path, seam_backend):
 
 
 def test_lockfree_concurrent_upserts_no_lost_update(spark, tmp_path, monkeypatch):
-    """Two writers whose locks don't exclude (LOCK_MODE='none') upsert
-    disjoint key sets concurrently; every row from both must survive —
-    the CAS publish is the only thing preventing the second `_CURRENT`
-    flip from wholesale-dropping the first writer's buckets."""
-    monkeypatch.setattr(warehouse, "LOCK_MODE", "none")
+    """Two writers upsert disjoint key sets concurrently; every row from
+    both must survive — the CAS publish is the only thing preventing the
+    second `_CURRENT` flip from wholesale-dropping the first writer's
+    buckets."""
     root = str(tmp_path / "wh")
     errors: list[Exception] = []
 
@@ -156,11 +154,10 @@ def test_lockfree_concurrent_upserts_no_lost_update(spark, tmp_path, monkeypatch
 
 
 def test_lockfree_concurrent_inserts_stay_idempotent(spark, tmp_path, monkeypatch):
-    """write_insert_if_absent under LOCK_MODE='none': two writers land
-    OVERLAPPING key ranges concurrently. The CAS forces the loser to
+    """write_insert_if_absent: two writers land OVERLAPPING key ranges
+    concurrently. The CAS forces the loser to
     redo its existence probe against the winner's manifest, so the
     union lands exactly once — no lost rows AND no duplicate keys."""
-    monkeypatch.setattr(warehouse, "LOCK_MODE", "none")
     root = str(tmp_path / "wh")
 
     from pyspark.sql import functions as F
@@ -218,7 +215,6 @@ def test_table_creation_is_a_cas(spark, tmp_path, monkeypatch):
 
     st = storage.InMemoryManifestStorage()
     monkeypatch.setattr(warehouse, "STORAGE", st)
-    monkeypatch.setattr(warehouse, "LOCK_MODE", "none")
     root = str(tmp_path / "wh")
     path = os.path.join(root, "block_info")
 
@@ -243,7 +239,7 @@ def test_table_creation_is_a_cas(spark, tmp_path, monkeypatch):
 
 
 def test_cas_retry_outlasts_a_run_of_lost_races(spark, tmp_path, monkeypatch):
-    """A lock-free writer whose first 12 publishes each lose to a rival
+    """A writer whose first 12 publishes each lose to a rival
     still lands: the backoff between attempts grows exponentially and the
     writer keeps retrying until a deadline, not for a fixed attempt
     count (8 attempts with ~0.85 s of sleep in total gave up here)."""
@@ -251,7 +247,6 @@ def test_cas_retry_outlasts_a_run_of_lost_races(spark, tmp_path, monkeypatch):
 
     st = storage.InMemoryManifestStorage()
     monkeypatch.setattr(warehouse, "STORAGE", st)
-    monkeypatch.setattr(warehouse, "LOCK_MODE", "none")
     root = str(tmp_path / "wh")
     path = os.path.join(root, "scores")
     warehouse.write_keep_one(
@@ -310,29 +305,12 @@ def test_cas_retry_outlasts_a_run_of_lost_races(spark, tmp_path, monkeypatch):
 # ---------------------------------------------------------------------------
 
 
-def _flock_rmw_worker(path: str, wid: int, n_iters: int) -> None:
-    """Read-modify-write cycles under the flock table lock — the exact
-    shape of every public writer's critical section, minus Spark."""
-    from allora_indexer_spark.plans import warehouse as wh
-
-    for i in range(n_iters):
-        with wh._table_lock(path):
-            m = wh._manifest_read(path)
-            data = dict(m["data"])
-            data[f"w{wid}_{i}"] = f"_versions/w{wid}_{i}"
-            time.sleep(0.002)  # widen the race window: without real
-            # cross-process exclusion this loses updates almost surely
-            wh._publish_manifest(
-                path, dict(m, version=f"vw{wid}_{i}", data=data)
-            )
-
-
 def _cas_rmw_worker(path: str, wid: int, n_iters: int) -> None:
-    """The same cycles with NO mutex at all (LOCK_MODE='none'): only the
+    """Read-modify-write cycles — the exact shape of every public
+    writer's cycle, minus Spark — with no mutex at all: only the
     conditional publish + retry keeps them serializable."""
     from allora_indexer_spark.plans import warehouse as wh
 
-    wh.LOCK_MODE = "none"
     for i in range(n_iters):
 
         def attempt():
@@ -349,15 +327,13 @@ def _cas_rmw_worker(path: str, wid: int, n_iters: int) -> None:
         wh._retry_cas(attempt)
 
 
-@pytest.mark.parametrize(
-    "worker", [_flock_rmw_worker, _cas_rmw_worker], ids=["flock", "cas"]
-)
+@pytest.mark.parametrize("worker", [_cas_rmw_worker], ids=["cas"])
 def test_two_processes_no_lost_update(tmp_path, worker):
     """TWO OS PROCESSES hammer one table's manifest with read-modify-write
     cycles; every update from both must survive and the manifest history
     must stay well-formed. Pins the cross-process claim the thread-based
-    lock tests cannot: flock exclusion across processes (left) and the
-    CAS retry loop with no exclusion at all (right)."""
+    tests cannot: the CAS retry loop with no exclusion at all, across
+    processes."""
     path = str(tmp_path / "t")
     os.makedirs(path)
     warehouse._publish_manifest(path, {"version": "v0", "data": {}})
@@ -384,37 +360,74 @@ def test_two_processes_no_lost_update(tmp_path, worker):
     assert os.path.isfile(os.path.join(path, "_CURRENT"))
 
 
-def _lock_holder_worker(path: str, hold_sec: float, started) -> None:
-    from allora_indexer_spark.plans import warehouse as wh
-
-    with wh._table_lock(path):
-        started.set()
-        time.sleep(hold_sec)
+# ---------------------------------------------------------------------------
+# A lost publish removes its own version dir
+# ---------------------------------------------------------------------------
 
 
-def test_lock_timeout_per_call(tmp_path):
-    """A waiter with a short per-call timeout raises the documented loud
-    TimeoutError while another PROCESS holds the table lock — the
-    maintenance-job knob (verdict r7 item 7): fail fast instead of
-    queueing behind a multi-hour compact."""
-    path = str(tmp_path / "t")
-    os.makedirs(path)
-    ctx = multiprocessing.get_context("spawn")
-    started = ctx.Event()
-    p = ctx.Process(target=_lock_holder_worker, args=(path, 6.0, started))
-    p.start()
-    try:
-        assert started.wait(30), "holder never acquired"
-        t0 = time.time()
-        with pytest.raises(TimeoutError, match="writer lock held past"):
-            with warehouse._table_lock(path, timeout=0.3):
-                pass  # pragma: no cover
-        assert time.time() - t0 < 5.0  # failed fast, not after an hour
-        # vacuum threads the same knob through its public signature
-        with pytest.raises(TimeoutError):
-            warehouse.vacuum(path, lock_timeout=0.3)
-    finally:
-        p.join(30)
+def _unnamed_version_dirs(path: str) -> list[str]:
+    """Version dirs no manifest in the table's history names: publish-time
+    GC treats them as in flight and leaves them to vacuum()."""
+    named = {
+        rel.split(os.sep)[1]
+        for mf, _ in warehouse.list_versions(path)
+        for rel in warehouse._load_manifest_file(mf)["data"].values()
+    }
+    vroot = os.path.join(path, warehouse._VERSIONS_DIR)
+    return sorted(set(os.listdir(vroot)) - named)
+
+
+def test_lost_keep_one_publish_removes_its_version_dir(
+    spark, tmp_path, monkeypatch
+):
+    """A rival upsert lands inside write_keep_one's publish: the loser
+    redoes its merge and lands, and the version dir of its lost attempt
+    is gone — nothing but vacuum() would ever reclaim it."""
+    from allora_indexer_spark.plans import storage
+
+    st = storage.InMemoryManifestStorage()
+    monkeypatch.setattr(warehouse, "STORAGE", st)
+    root = str(tmp_path / "wh")
+
+    def upsert(h: int) -> None:
+        warehouse.write_keep_one(
+            spark, _mk_scores(spark, [(h, 1, "inferer", "a", h, 1.0)]),
+            root, "scores", _score_order(),
+        )
+
+    upsert(1)
+    st.interleave = lambda: upsert(2)
+    upsert(3)
+    heights = sorted(
+        r["height"]
+        for r in warehouse.read_table(spark, root, "scores").collect()
+    )
+    assert heights == [1, 2, 3]
+    assert _unnamed_version_dirs(os.path.join(root, "scores")) == []
+
+
+def test_lost_fold_publish_removes_its_version_dir(
+    spark, tmp_path, monkeypatch
+):
+    """A rival append lands inside fold_appends' publish: the fold redoes
+    itself over the rival's manifest, no row is lost, and the lost
+    attempt's fold output is gone."""
+    from allora_indexer_spark.plans import storage
+
+    st = storage.InMemoryManifestStorage()
+    monkeypatch.setattr(warehouse, "STORAGE", st)
+    path = str(tmp_path / "store")
+
+    def append(i: int) -> None:
+        warehouse.append_dir(spark.createDataFrame([(i,)], "id long"), path)
+
+    for i in range(3):
+        append(i)
+    st.interleave = lambda: append(9)
+    assert warehouse.fold_appends(spark, path)
+    got = sorted(r["id"] for r in warehouse.read_dir(spark, path).collect())
+    assert got == [0, 1, 2, 9]
+    assert _unnamed_version_dirs(path) == []
 
 
 # ---------------------------------------------------------------------------
@@ -424,7 +437,7 @@ def test_lock_timeout_per_call(tmp_path):
 
 def test_auto_fold_keeps_append_manifest_bounded(spark, tmp_path, monkeypatch):
     """Default behavior: when an append pushes the manifest past
-    APPEND_MANIFEST_WARN entries, the SAME locked write folds the deltas
+    APPEND_MANIFEST_WARN entries, the SAME write folds the deltas
     (O(deltas), base carried by reference) — batch tables can no longer
     silently degrade when nobody schedules compact(). The fold must honor
     the table's recorded cluster_by layout."""

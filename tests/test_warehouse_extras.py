@@ -641,6 +641,40 @@ def test_table_health_reports_files_and_versions(spark, tmp_path):
     assert health["rewards"]["mean_file_bytes"] > 0
 
 
+def test_needs_vacuum_flags_orphan_dirs_until_vacuum(
+    spark, tmp_path, monkeypatch
+):
+    """Publish-time GC never touches a version dir no manifest names, so
+    crash orphans pile up until vacuum() runs: table_health raises
+    needs_vacuum once they pass HISTORY_VACUUM_WARN, and vacuum() clears
+    it without touching the table's rows."""
+    import os
+    import time
+
+    monkeypatch.setattr(warehouse, "HISTORY_VACUUM_WARN", 3)
+    root = str(tmp_path / "wh")
+    path = os.path.join(root, "block_info")
+    warehouse.write_insert_if_absent(
+        spark, _mk_blocks(spark, [1, 2]), root, "block_info"
+    )
+
+    def needs_vacuum() -> bool:
+        health = {h["table"]: h for h in warehouse.table_health(root)}
+        return health["block_info"]["needs_vacuum"]
+
+    assert not needs_vacuum()
+    old = time.time() - 3600
+    for i in range(warehouse.HISTORY_VACUUM_WARN + 1):
+        d = os.path.join(path, warehouse._VERSIONS_DIR, f"v_orphan{i}")
+        os.makedirs(d)
+        os.utime(d, (old, old))
+    assert needs_vacuum()
+    warehouse.vacuum(path)
+    assert not needs_vacuum()
+    assert len(warehouse._version_paths(path)) == 1
+    assert warehouse.read_table(spark, root, "block_info").count() == 2
+
+
 # ---------------------------------------------------------------------------
 # Non-bucketed manifest → bucketed upsert, and the append-manifest
 # compaction-cadence contract
@@ -789,14 +823,15 @@ def test_snapshot_latest_pointer_round_trip(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Writer serialization (_table_lock)
+# Writer serialization (the `_CURRENT` CAS)
 # ---------------------------------------------------------------------------
 
 
 def test_concurrent_writers_serialize_and_lose_nothing(spark, tmp_path):
     """Two upserts with DISJOINT key sets racing on the same table: the
-    read-merge-publish cycles must serialize — without the per-table
-    writer lock, whichever `_CURRENT` flip lands second clobbers the
+    read-merge-publish cycles must serialize — without the CAS publish
+    (on POSIX: the flock micro-lock around the pointer swap, plus the
+    writer's retry), whichever `_CURRENT` flip lands second clobbers the
     other's bucket pointers wholesale and its rows vanish."""
     import threading
 
@@ -838,47 +873,6 @@ def test_concurrent_writers_serialize_and_lose_nothing(spark, tmp_path):
         "a concurrent writer's rows were clobbered by the racing flip"
     )
     assert got.count() == 41
-
-
-def test_crashed_lock_file_does_not_block_and_failure_releases(
-    spark, tmp_path
-):
-    """The lock is kernel flock state, not file existence: a lock FILE
-    left behind by a crashed writer holds no lock (the kernel released
-    it with the process), so the next writer proceeds immediately; and a
-    writer that FAILS mid-cycle releases on the way out — a subsequent
-    write acquires without waiting."""
-    import os
-
-    root = str(tmp_path / "wh")
-    os.makedirs(root)
-    path = os.path.join(root, "scores")
-    lock = path + ".__lock"
-    with open(lock, "w") as fh:
-        fh.write("leftover from a crashed writer")
-    os.utime(lock, (1, 1))  # ancient — age must not matter either way
-    warehouse.write_keep_one(
-        spark,
-        _mk_scores(spark, [(1, 1, "inferer", "x", 10, 1.0)]),
-        root,
-        "scores",
-        _score_order(),
-    )
-    assert warehouse.read_table(spark, root, "scores").count() == 1
-
-    # failure path: a batch missing the key columns blows up in analysis,
-    # inside the locked section — the NEXT write must not block on it
-    bad = spark.createDataFrame([(1,)], "height int")
-    with pytest.raises(Exception):
-        warehouse.write_keep_one(spark, bad, root, "scores", _score_order())
-    warehouse.write_keep_one(
-        spark,
-        _mk_scores(spark, [(2, 2, "inferer", "y", 20, 2.0)]),
-        root,
-        "scores",
-        _score_order(),
-    )
-    assert warehouse.read_table(spark, root, "scores").count() == 2
 
 
 def test_vacuum_reclaims_without_a_write(spark, tmp_path, monkeypatch):

@@ -1,8 +1,8 @@
 """Round-9 hardening of the manifest/CAS seam: unified `_CURRENT`
 serialization (the _ANY path goes through `_cas_section` too), the
-parent-pointer manifest linearization behind `list_versions`, vacuum-only
-GC in lock-free mode, the footer-based empty-append probe, and the
-compact() layout-clearing sentinel.
+parent-pointer manifest linearization behind `list_versions`, the
+publish-time GC rule that needs no writer lock, the footer-based
+empty-append probe, and the compact() layout-clearing sentinel.
 
 Reference semantic throughout: Postgres serializes the reference's writers
 for free (ON CONFLICT inside transactions, /root/reference/db.go:1118-1185)
@@ -117,10 +117,42 @@ def test_list_versions_orders_by_parent_chain_not_clock(tmp_path):
     assert got == ["vB", "vA", "v0"], got
 
 
+def test_list_versions_ranks_a_flip_during_the_listing_first(
+    tmp_path, monkeypatch
+):
+    """A flip that lands between list_versions' `_CURRENT` read and its
+    history listing must still rank newest: GC keeps only the first
+    UPSERT_RETAIN_VERSIONS entries, and running with no writer lock it
+    would otherwise treat the live table version as superseded."""
+    from allora_indexer_spark.plans import storage
+
+    st = storage.InMemoryManifestStorage()
+    monkeypatch.setattr(warehouse, "STORAGE", st)
+    path = str(tmp_path / "t")
+    warehouse._publish_manifest(path, {"version": "v0", "data": {}})
+    warehouse._publish_manifest(
+        path, {"version": "vA", "data": {}}, expect="v0"
+    )
+    listing = st.list_history
+
+    def flip_then_list(p):
+        monkeypatch.setattr(st, "list_history", listing)
+        warehouse._publish_manifest(
+            path, {"version": "vB", "data": {}}, expect="vA"
+        )
+        return listing(p)
+
+    monkeypatch.setattr(st, "list_history", flip_then_list)
+    got = [
+        warehouse._load_manifest_file(mf)["version"]
+        for mf, _ in warehouse.list_versions(path)
+    ]
+    assert got == ["vB", "vA", "v0"], got
+
+
 def _rapid_publish_worker(path: str, wid: int, n_iters: int) -> None:
     from allora_indexer_spark.plans import warehouse as wh
 
-    wh.LOCK_MODE = "none"
     for i in range(n_iters):
 
         def attempt():
@@ -176,56 +208,88 @@ def test_two_process_rapid_publish_history_matches_expect_chain(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Lock-free mode: vacuum-only GC (verdict r8 "what's wrong" #2)
+# Publish-time GC without a writer lock
 # ---------------------------------------------------------------------------
 
 
-def test_lockfree_writers_skip_piggyback_gc(spark, tmp_path, monkeypatch):
-    """Under LOCK_MODE='none' a rival writer's in-flight version older
-    than the grace window must survive other writers' publishes (no
-    piggybacked GC at all); vacuum() remains the reclamation path."""
-    monkeypatch.setattr(warehouse, "_GC_GRACE_SEC", 0.0)
-    monkeypatch.setattr(warehouse, "LOCK_MODE", "none")
-    path = str(tmp_path / "store")
-    warehouse.append_dir(spark.createDataFrame([(1,)], "id long"), path)
-    warehouse.compact(spark, path, target_partitions=1)
-    # a rival's in-flight (unpublished, unreferenced) version, already
-    # older than the zero grace
-    inflight = os.path.join(path, warehouse._VERSIONS_DIR, "v_inflight")
-    os.makedirs(inflight)
-    with open(os.path.join(inflight, "part-0.parquet"), "wb") as fh:
+def _plant_unpublished(path: str) -> str:
+    """A version dir no manifest names — a rival's in-flight write or a
+    crash orphan — with itself and its file an hour old."""
+    d = os.path.join(path, warehouse._VERSIONS_DIR, "v_unpublished")
+    os.makedirs(d)
+    f = os.path.join(d, "part-0.parquet")
+    with open(f, "wb") as fh:
         fh.write(b"x")
     old = time.time() - 3600
-    os.utime(inflight, (old, old))
-    for i in range(2, 5):
-        warehouse.append_dir(
-            spark.createDataFrame([(i,)], "id long"), path
-        )
-    assert os.path.isdir(inflight), (
-        "lock-free append reclaimed a rival's in-flight version"
-    )
-    # vacuum with a grace ABOVE the version's age keeps it...
-    warehouse.vacuum(path, grace=7200.0)
-    assert os.path.isdir(inflight)
-    # ...and the default (zero, monkeypatched) grace reclaims it
-    warehouse.vacuum(path)
-    assert not os.path.isdir(inflight)
+    os.utime(f, (old, old))
+    os.utime(d, (old, old))
+    return f
 
 
-def test_flock_mode_still_gcs_on_publish(spark, tmp_path, monkeypatch):
-    """Default mode keeps the piggybacked GC (writers hold the mutex, so
-    reclamation on publish is safe) — the lock-free skip must not leak
-    into it."""
+def _assert_gc_state(path: str, planted: str) -> None:
+    """The planted file survived, and every other version dir is named by
+    a retained manifest: GC reclaimed everything else, so nothing leaks."""
+    assert os.path.isfile(planted), "publish-time GC reclaimed an unpublished dir"
+    retained = [
+        warehouse._load_manifest_file(mf)
+        for mf, _ in warehouse.list_versions(path)[
+            : warehouse.UPSERT_RETAIN_VERSIONS
+        ]
+    ]
+    named = {
+        rel.split(os.sep)[1] for m in retained for rel in m["data"].values()
+    }
+    others = set(os.listdir(os.path.join(path, warehouse._VERSIONS_DIR)))
+    others.discard(os.path.basename(os.path.dirname(planted)))
+    assert others <= named, f"leaked version dirs: {sorted(others - named)}"
+
+
+def test_publish_gc_spares_unpublished_dirs_and_leaks_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """Every publish runs GC with no writer lock, so it may only reclaim
+    dirs some manifest names: a version dir older than the grace window
+    that no manifest names (a rival's write still in its CAS retry loop)
+    must survive appends, a fold, a compact and keep-one upserts, while
+    every superseded dir still goes. vacuum() alone reclaims the
+    unpublished dir, and only once it is older than its grace."""
+    from pyspark.sql import functions as F
+
     monkeypatch.setattr(warehouse, "_GC_GRACE_SEC", 0.0)
-    path = str(tmp_path / "store")
-    warehouse.append_dir(spark.createDataFrame([(1,)], "id long"), path)
-    warehouse.compact(spark, path, target_partitions=1)
-    orphan = os.path.join(path, warehouse._VERSIONS_DIR, "v_orphan")
-    os.makedirs(orphan)
-    old = time.time() - 3600
-    os.utime(orphan, (old, old))
-    warehouse.append_dir(spark.createDataFrame([(2,)], "id long"), path)
-    assert not os.path.isdir(orphan)
+
+    store = str(tmp_path / "store")
+    warehouse.append_dir(spark.createDataFrame([(1,)], "id long"), store)
+    planted = _plant_unpublished(store)
+    for i in range(2, 6):
+        warehouse.append_dir(spark.createDataFrame([(i,)], "id long"), store)
+        _assert_gc_state(store, planted)
+    warehouse.fold_appends(spark, store)
+    _assert_gc_state(store, planted)
+    warehouse.compact(spark, store)
+    _assert_gc_state(store, planted)
+    got = sorted(r["id"] for r in warehouse.read_dir(spark, store).collect())
+    assert got == [1, 2, 3, 4, 5]
+
+    root = str(tmp_path / "wh")
+    lcv = os.path.join(root, "last_commit_values")
+    planted_lcv = None
+    for h in range(12):
+        batch = spark.createDataFrame(
+            [(h % 5, h % 2 == 0, h)],
+            "topic_id int, is_worker boolean, height long",
+        )
+        warehouse.write_keep_one(
+            spark, batch, root, "last_commit_values", [F.desc("height")]
+        )
+        planted_lcv = planted_lcv or _plant_unpublished(lcv)
+        _assert_gc_state(lcv, planted_lcv)
+    assert warehouse.read_table(spark, root, "last_commit_values").count() == 10
+
+    for path, f in ((store, planted), (lcv, planted_lcv)):
+        warehouse.vacuum(path, grace=7200.0)
+        assert os.path.isfile(f)
+        warehouse.vacuum(path)
+        assert not os.path.exists(os.path.dirname(f))
 
 
 # ---------------------------------------------------------------------------
