@@ -594,10 +594,7 @@ def _built_index(spark: SparkSession, sf_dir: str, kind: str) -> str:
     call is a pure read — the build-once/query-many contract, kept
     visible to the gate (a fresh process rebuilds deterministically:
     fixed seeds). Scratch dirs are reclaimed at interpreter exit."""
-    from allora_indexer_spark.plans.warehouse import (
-        _BUCKET_COL,
-        _read_manifest_data,
-    )
+    from allora_indexer_spark.plans.warehouse import _read_manifest_data
 
     # ONE manifest read (via _corpus_manifest) feeds both the cache key
     # and the reader choice: reading it twice opened a TOCTOU where a
@@ -613,9 +610,7 @@ def _built_index(spark: SparkSession, sf_dir: str, kind: str) -> str:
         return idx
     idx = tempfile.mkdtemp(prefix=f"ann_{kind}_")
     if m is not None:
-        # same internal-column hygiene as read_table/load_table: a
-        # bucket-converted corpus must not leak _kb into the builders
-        emb = _read_manifest_data(spark, target, m).drop(_BUCKET_COL)
+        emb = _read_manifest_data(spark, target, m)
     else:
         emb = load_table(spark, sf_dir, "embeddings")
     try:

@@ -49,50 +49,44 @@ from allora_indexer_spark.schemas import TABLE_KEYS, TABLE_SPECS
 # template) without touching any writer above the seam.
 STORAGE = PosixManifestStorage()
 
-# --- key-bucketed, versioned upsert layout (manifest flip) ----------------
+# --- versioned manifest layout (manifest flip) ------------------------------
 #
-# Upsert tables (K5/K6) are hive-partitioned on an internal column `_kb` =
-# pmod(xxhash64(natural key), UPSERT_BUCKETS): every row of a key lives in
-# exactly one bucket directory, so an upsert batch only has to merge-rewrite
-# the buckets its keys hash into — O(batch), not O(table history), the
-# parquet twin of the reference's per-row ON CONFLICT upsert
-# (/root/reference/db.go:1118-1185, 1246-1350). Which files constitute the
-# CURRENT table is decided by a MANIFEST: the table directory holds
+# Which files constitute the CURRENT table is decided by a MANIFEST: the
+# table directory holds
 #
 #   _CURRENT                    the live manifest (one atomic file replace)
 #   _manifests/v<hex>.json      manifest history = the time-travel catalog
-#   _versions/v<hex>/_kb=N/…    data files written BY that version
+#   _versions/v<hex>/…          data files written BY that version
 #
-# A write lands only the rewritten buckets as new files under its own
-# version directory; every untouched bucket is CARRIED by reference — the
-# new manifest simply keeps pointing at the older version's bucket path.
-# Publishing is one single-file replace of `_CURRENT`, so concurrent
-# readers see either the old or the new manifest in full, never a mix, and
-# no data is ever copied, linked, or moved for a carry. Everything is
-# plain files + one atomic single-object write — the layout works the same
-# on POSIX and on object stores (S3-style single-PUT atomicity; reference
-# semantic parity: the store-agnostic ON CONFLICT upsert, the reference's
-# db.go:1118-1185). It is the ONLY layout: every table and
-# store is a manifest table from its first write (append tables hold one
-# data entry per appended version instead of key buckets), so there is
-# one commit path — the `_CURRENT` CAS publish — for all of them.
-# That CAS is also the only concurrency control: nothing locks. A writer
-# records the version its merge was based on, the publish refuses the
-# flip if `_CURRENT` moved, and the writer redoes its read-merge-publish
-# cycle (:func:`_retry_cas`).
+# A write lands its files under its own version directory; every earlier
+# data dir is CARRIED by reference — the new manifest simply keeps
+# pointing at it. Publishing is one single-file replace of `_CURRENT`, so
+# concurrent readers see either the old or the new manifest in full,
+# never a mix, and no data is ever copied, linked, or moved for a carry.
+# Everything is plain files + one atomic single-object write — the layout
+# works the same on POSIX and on object stores (S3-style single-PUT
+# atomicity). It is the ONLY layout: every table and store is a manifest
+# table from its first write, so there is one commit path — the
+# `_CURRENT` CAS publish — for all of them. That CAS is also the only
+# concurrency control: nothing locks. A writer records the version its
+# merge was based on, the publish refuses the flip if `_CURRENT` moved,
+# and the writer redoes its read-merge-publish cycle (:func:`_retry_cas`).
+#
+# Upsert (keep-one, K5/K6) tables are MERGE-ON-READ: an upsert appends the
+# batch's per-key winners like any append, and every read keeps one row
+# per natural key under the table spec's ``keep_one`` order
+# (:func:`_resolved`) — the parquet twin of the reference's per-row
+# ON CONFLICT upsert (/root/reference/db.go:1118-1185, 1246-1350) at
+# O(batch) write cost. The survivor is chosen by that order, never by
+# arrival, so appends commute and a replay is a no-op on read; fold and
+# compact drop superseded rows from what they rewrite.
 # Underscore-prefixed names are invisible to Spark's file listing, so a
 # stray direct read of the table path sees no half-state. Replaced
-# versions are garbage-collected per-bucket-directory after a grace period
-# once no retained manifest references them. On Delta/Iceberg the whole
-# section collapses into MERGE INTO + snapshot manifests; this is that
-# contract on plain parquet.
+# versions are garbage-collected after a grace period once no retained
+# manifest references them. On Delta/Iceberg the whole section collapses
+# into MERGE INTO + snapshot manifests; this is that contract on plain
+# parquet.
 
-# Default bucket count, fixed per table at creation (stored in meta); a
-# table spec's ``buckets`` overrides it for deployment sizing — at 100 TB
-# the large event tables (scores/rewards) want thousands of buckets so one
-# batch rewrites megabytes, not gigabytes.
-UPSERT_BUCKETS = 32
-_BUCKET_COL = "_kb"
 _VERSIONS_DIR = "_versions"
 _GC_GRACE_SEC = 60.0
 # Compaction-cadence contract for manifest-layout APPEND tables: each
@@ -258,17 +252,36 @@ def _refuse_plain_dir(path: str) -> None:
         )
 
 
+class BucketedLayoutError(RuntimeError):
+    """A table was written in the key-hash bucket layout of earlier
+    releases."""
+
+
+def _refuse_bucketed(path: str, manifest: dict) -> None:
+    """Refuse to read or write a table whose manifest still carries
+    ``buckets``: earlier releases stored keep-one tables in key-hash
+    bucket dirs, and this release neither reads nor converts them."""
+    if "buckets" in manifest:
+        raise BucketedLayoutError(
+            f"{path}: written in the key-hash bucket layout of an earlier "
+            "release, which this release no longer reads or writes. "
+            "Re-ingest the table into a fresh path."
+        )
+
+
 @contextlib.contextmanager
 def _own_version_dir(path: str, verdir: str):
     """Wrap the publish of a freshly written version dir. A publish that
     loses the CAS race removes ``verdir``: no manifest will ever name it,
     and publish-time GC leaves unnamed dirs alone (they look like a
-    rival's in-flight write). A refused first write over a plain dir
-    (:func:`_refuse_plain_dir`) also removes the `_versions/` dir it
-    created, if nothing else is in it, leaving the plain dir as it was."""
+    rival's in-flight write); so does a write refused over a table in
+    the bucket layout (:func:`_refuse_bucketed`). A refused first write
+    over a plain dir (:func:`_refuse_plain_dir`) also removes the
+    `_versions/` dir it created, if nothing else is in it, leaving the
+    plain dir as it was."""
     try:
         yield
-    except ManifestConflictError:
+    except (ManifestConflictError, BucketedLayoutError):
         shutil.rmtree(verdir, ignore_errors=True)
         raise
     except PlainDirectoryError:
@@ -280,44 +293,27 @@ def _own_version_dir(path: str, verdir: str):
         raise
 
 
-def _schema_json(df: DataFrame) -> str:
-    """The logical table schema a manifest pins (minus the internal `_kb`
-    partition column, which data files never contain)."""
-    from pyspark.sql.types import StructType
-
-    return StructType(
-        [f for f in df.schema.fields if f.name != _BUCKET_COL]
-    ).json()
-
-
 def _merged_schema_json(old_json: str | None, df: DataFrame) -> str:
     """Widen a manifest's pinned schema with any NEW columns ``df``
     carries (existing columns keep their recorded order and type — a
     batch is never allowed to silently narrow or retype the table)."""
     from pyspark.sql.types import StructType
 
-    new_fields = [f for f in df.schema.fields if f.name != _BUCKET_COL]
     if not old_json:
-        return StructType(new_fields).json()
+        return df.schema.json()
     old = StructType.fromJson(json.loads(old_json))
     names = {f.name for f in old.fields}
     return StructType(
-        list(old.fields) + [f for f in new_fields if f.name not in names]
+        list(old.fields) + [f for f in df.schema.fields if f.name not in names]
     ).json()
-
-
-def _bucket_expr(keys: list[str], num_buckets: int) -> Column:
-    return F.pmod(
-        F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)
-    ).cast("int")
 
 
 # How many of the newest manifests survive GC beyond the writer's own
 # keep-set. 2 = current + previous (the minimum the atomic-flip contract
 # needs). Raise it to keep a time-travel horizon: every retained manifest
 # is a full consistent table snapshot readable via read_table_version /
-# diffable via diff_table_versions — carried-by-reference buckets mean N
-# retained versions cost far less than N copies.
+# diffable via diff_table_versions — carried-by-reference data dirs mean
+# N retained versions cost far less than N copies.
 UPSERT_RETAIN_VERSIONS = 2
 
 
@@ -409,9 +405,9 @@ def _gc_versions(
     it is implausibly old. The ``retain`` newest manifests (default
     UPSERT_RETAIN_VERSIONS) survive as the time-travel horizon; ``keep``
     pins additional data dirs (by path) regardless of age. ``grace``
-    overrides _GC_GRACE_SEC. Deletion granularity is the bucket
-    directory: a version dir whose buckets are all still carried by live
-    manifests keeps them and loses only the superseded ones.
+    overrides _GC_GRACE_SEC. Deletion granularity is the entry below a
+    version dir: a version dir whose subdirectories are still carried by
+    live manifests keeps them and loses only the superseded ones.
 
     Every publish runs this with no writer lock, which two rules make
     safe:
@@ -448,11 +444,10 @@ def _gc_versions(
     named = set().union(*(refs(m) for _, m in history))
     published = {os.path.relpath(r, vroot).split(os.sep)[0] for r in named}
 
-    # A manifest may reference a whole VERSION dir (compact()'s {"all":
-    # ...} layout) or individual bucket dirs inside one; an entry is live
-    # when it IS a referenced path, lies INSIDE one (descendant of a
-    # whole-dir reference), or CONTAINS one (ancestor of a referenced
-    # bucket dir).
+    # A manifest may reference a whole VERSION dir or a subdirectory
+    # inside one; an entry is live when it IS a referenced path, lies
+    # INSIDE one (descendant of a whole-dir reference), or CONTAINS one
+    # (ancestor of a referenced subdirectory).
     def _live(rp: str) -> bool:
         return any(
             rp == k
@@ -539,10 +534,8 @@ def _pinned_schema(manifest: dict):
 def _read_manifest_data(
     spark: SparkSession, path: str, manifest: dict
 ) -> DataFrame:
-    """Read the rows a manifest references. The `_kb` hive column is not
-    inferred (each bucket dir is its own read root), which is exactly what
-    the logical schema wants; writers that need `_kb` recompute it from
-    the manifest's keys — bit-identical by construction.
+    """Read the rows a manifest references (raw: a keep-one table's
+    superseded rows included — :func:`_resolved` drops them).
 
     Manifests carry the table's logical schema, written (and widened) at
     publish time: pinning it here (a) skips footer sampling at plan
@@ -552,6 +545,7 @@ def _read_manifest_data(
     narrower version read back with typed nulls for the newer columns
     instead of silently steering inference to whichever file was sampled
     first."""
+    _refuse_bucketed(path, manifest)
     dirs = _data_dirs(path, manifest)
     schema = _pinned_schema(manifest)
     if len(dirs) > 1 and any(_has_hive_entries(d) for d in dirs):
@@ -627,9 +621,26 @@ def read_table(spark: SparkSession, root: str, name: str) -> DataFrame:
     """Read a table, pinned to its CURRENT version: the manifest is loaded
     once here, so the query's file listing references the version data
     dirs directly — a flip mid-query cannot yank files out from under
-    running tasks (grace-period GC keeps them alive). Raises
+    running tasks (grace-period GC keeps them alive). A keep-one table
+    reads back one row per natural key (:func:`_resolved`). Raises
     FileNotFoundError for a table that does not exist."""
-    return read_dir(spark, _table_path(root, name)).drop(_BUCKET_COL)
+    return _resolved(read_dir(spark, _table_path(root, name)), name)
+
+
+def _resolved(df: DataFrame, name: str) -> DataFrame:
+    """Merge-on-read: the rows of table ``name`` with one row per natural
+    key under its spec's ``keep_one`` order; ``df`` unchanged for any
+    other table. Every keep-one read resolves — no writer keeps an
+    on-disk one-row-per-key invariant a shortcut could rely on. Guarded
+    like :func:`_keyed_default_range_by`: data stored under a spec's
+    name by other code, without the spec's key or order columns, reads
+    and compacts as stored instead of failing."""
+    spec = TABLE_SPECS.get(name)
+    if spec is None or not spec.keep_one:
+        return df
+    if not {*spec.keys, *(c for c, _ in spec.keep_one)} <= set(df.columns):
+        return df
+    return _keep_first(df, list(spec.keys), _order_cols(spec.keep_one))
 
 
 # Preferred range-pruning column per key set: the ingest-monotone one.
@@ -646,13 +657,19 @@ def _prune_col(keys: list[str]) -> str:
     return keys[0]
 
 
+def _name_of(path: str) -> str:
+    """The table name of a table path: its basename, which is how
+    maintenance (compact, fold) finds the table's spec."""
+    return os.path.basename(path.rstrip("/"))
+
+
 def _keyed_default_range_by(path: str, columns) -> list[str] | None:
     """The probe-preserving layout default, single-sourced for compact
     AND fold: a KEYED append table with no chosen layout range-clusters
     on its monotone probe column — guarded on the column actually being
     present (a table evolved without it keeps the flat rewrite instead
     of crashing mid-maintenance)."""
-    name = os.path.basename(path.rstrip("/"))
+    name = _name_of(path)
     if name in TABLE_KEYS:
         pc = _prune_col(TABLE_KEYS[name])
         if pc in columns:
@@ -760,6 +777,8 @@ def _append_data(
             raise ManifestConflictError(
                 f"{path}: manifest {expect!r} disappeared under a writer"
             )
+        if cur is not None:
+            _refuse_bucketed(path, cur)
         if cur is not None and empty:
             # fully-deduped replay (streaming's common case): no version
             # churn. "All keys already present" cannot be invalidated by
@@ -1076,112 +1095,23 @@ def write_keep_one(
     root: str,
     name: str,
     order: list[Column],
-    num_buckets: int | None = None,
 ) -> None:
-    """K5/K6: upsert — merge incoming with existing, keep the first row per
-    natural key under ``order`` (e.g. desc(height_tx) = keep latest).
+    """K5/K6: upsert — keep the first row per natural key under ``order``
+    (e.g. desc(height_tx) = keep latest).
 
-    Cost is O(batch): only the key-hash buckets the batch touches are read
-    (the merge scan lists exactly those buckets' directories out of the
-    manifest) and rewritten; every other bucket is carried into the next
-    table version BY REFERENCE — the new manifest keeps pointing at the
-    older version's bucket path, no copy, link, or move. Publishing is one
-    atomic single-file replace of `_CURRENT` (see the layout note at the
-    top of this module) — portable to object stores. A table whose
-    manifest is not bucketed (one created by appends or a restore) is
-    rewritten into the bucketed layout by its first upsert, then stays
-    incremental. On Delta this whole function is MERGE WHEN MATCHED
-    UPDATE."""
-    # a lost CAS race redoes the whole merge against the winner's
-    # manifest (optimistic concurrency)
-    _retry_cas(
-        lambda: _write_keep_one_once(spark, df, root, name, order, num_buckets)
+    Merge-on-read: the batch's per-key winners are APPENDED as a new
+    version (:func:`_append_data`) — one write of batch-sized files, no
+    read of stored rows, so the cost is O(batch) — and every read keeps
+    one row per key under the table spec's ``keep_one`` order
+    (:func:`_resolved`). ``order`` must agree with that spec order, as
+    :func:`write_tables` guarantees by passing it. Appends commute, so a
+    lost CAS race only re-points the manifest, and a replayed batch adds
+    rows that lose (or tie identically) on read; the fold cadence and
+    compact() drop superseded rows from disk. On Delta this whole
+    function is MERGE WHEN MATCHED UPDATE."""
+    _append_data(
+        _keep_first(df, TABLE_KEYS[name], order), _table_path(root, name)
     )
-
-
-def _write_keep_one_once(
-    spark: SparkSession,
-    df: DataFrame,
-    root: str,
-    name: str,
-    order: list[Column],
-    num_buckets: int | None = None,
-) -> None:
-    keys = TABLE_KEYS[name]
-    path = _table_path(root, name)
-    manifest = _manifest_read(path)
-    if num_buckets is None:
-        num_buckets = TABLE_SPECS[name].buckets or UPSERT_BUCKETS
-    if manifest is not None:
-        num_buckets = manifest.get("buckets", num_buckets)
-    batch = df.drop(_BUCKET_COL).withColumn(
-        _BUCKET_COL, _bucket_expr(keys, num_buckets)
-    )
-    ver = _new_version_id()
-    verdir = os.path.join(path, _VERSIONS_DIR, ver)
-
-    # Incremental upserts need a manifest whose data map is keyed by
-    # bucket id; the {"all": ...} / per-version manifests that compact()
-    # and appends publish take the one-time full rewrite below and stay
-    # incremental after.
-    bucketed_manifest = (
-        manifest is not None
-        and "buckets" in manifest
-        and all(k.isdigit() for k in manifest["data"])
-    )
-
-    merged = batch
-    if bucketed_manifest:
-        affected = sorted(
-            r[0] for r in batch.select(_BUCKET_COL).distinct().collect()
-        )
-        if not affected:  # empty batch
-            return
-        # bucket pruning by construction: the merge scan lists ONLY the
-        # affected buckets' data dirs out of the pinned manifest
-        existing_dirs = [
-            os.path.join(path, manifest["data"][str(b)])
-            for b in affected
-            if str(b) in manifest["data"]
-        ]
-        if existing_dirs:
-            existing = (
-                spark.read.schema(_pinned_schema(manifest))
-                .parquet(*existing_dirs)
-                .drop(_BUCKET_COL)
-                .withColumn(_BUCKET_COL, _bucket_expr(keys, num_buckets))
-            )
-            merged = existing.unionByName(batch)
-        data = dict(manifest["data"])  # untouched buckets carried by reference
-    else:
-        # fresh table, or one-time rewrite of a non-bucketed manifest
-        # into the bucketed layout
-        if manifest is not None:
-            merged = (
-                _read_manifest_data(spark, path, manifest)
-                .drop(_BUCKET_COL)
-                .withColumn(_BUCKET_COL, _bucket_expr(keys, num_buckets))
-                .unionByName(batch)
-            )
-        data = {}
-    result = _keep_first(merged, keys, order)
-    result.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(verdir)
-    for d in os.listdir(verdir):  # rewritten buckets point at the new dir
-        if d.startswith(_BUCKET_COL + "="):
-            data[d.split("=", 1)[1]] = os.path.join(_VERSIONS_DIR, ver, d)
-    with _own_version_dir(path, verdir):
-        _publish_manifest(
-            path,
-            {
-                "version": ver,
-                "buckets": num_buckets,
-                "keys": keys,
-                "data": data,
-                "schema": _schema_json(result),
-            },
-            expect=manifest["version"] if manifest is not None else None,
-        )
-    _gc_versions(path, keep={verdir})
 
 
 def seed_manifest_store(
@@ -1228,12 +1158,13 @@ def seed_manifest_store(
 def read_table_version(
     spark: SparkSession, root: str, name: str, version: str | int
 ) -> DataFrame:
-    """Time-travel read: a PAST snapshot of an upsert table. ``version``
-    is a manifest file path from :func:`list_versions` or an index into
-    that list (0 = newest). Every manifest is a complete consistent table
-    listing (the flip is whole-manifest atomic), so this is a plain
-    parquet read of the paths it references — the lake-table ``VERSION AS
-    OF`` without a transaction log, bounded by UPSERT_RETAIN_VERSIONS.
+    """Time-travel read: a PAST snapshot of a table. ``version`` is a
+    manifest file path from :func:`list_versions` or an index into that
+    list (0 = newest). Every manifest is a complete consistent table
+    listing (the flip is whole-manifest atomic), so this is a parquet
+    read of the paths it references, resolved like :func:`read_table` —
+    the lake-table ``VERSION AS OF`` without a transaction log, bounded
+    by UPSERT_RETAIN_VERSIONS.
     Raises IndexError/FileNotFoundError for a version the GC already
     reclaimed."""
     path = _table_path(root, name)
@@ -1251,7 +1182,7 @@ def read_table_version(
         m = _load_manifest_file(version)
     except KeyError as e:
         raise FileNotFoundError(version) from e
-    return _read_manifest_data(spark, path, m).drop(_BUCKET_COL)
+    return _resolved(_read_manifest_data(spark, path, m), name)
 
 
 def diff_table_versions(
@@ -1268,63 +1199,21 @@ def diff_table_versions(
     not logged: a full-outer join of the two snapshots on TABLE_KEYS
     comparing an md5 over the canonicalized non-key columns.
 
-    Scale: between two BUCKETED manifests with the same bucket count,
-    buckets whose manifest entries are IDENTICAL are bit-identical by
-    construction (carry-by-reference — same path, same files), so only
-    the buckets whose entries differ are read at all: diffing adjacent
-    micro-batch versions costs O(changed buckets), not O(table). Both
-    sides then carry only (keys, 32-byte state hash) into the join —
-    never full rows — and the join keys are the table's natural keys, so
-    AQE can split any skew; unchanged keys drop out with a filter before
-    anything is returned."""
+    Both sides are read by :func:`read_table_version` (one row per key
+    on a keep-one table), then carry only (keys, 32-byte state hash) into
+    the join — never full rows — and the join keys are the table's
+    natural keys, so AQE can split any skew; unchanged keys drop out with
+    a filter before anything is returned."""
     keys = TABLE_KEYS[name]
-    path = _table_path(root, name)
-    versions = list_versions(path)
-    if isinstance(old, int):
-        old = versions[old][0]
-    if isinstance(new, int):
-        new = versions[new][0]
-    om = _load_manifest_file(old)
-    nm = _load_manifest_file(new)
-    if (
-        om.get("buckets")
-        and om.get("buckets") == nm.get("buckets")
-        and all(k.isdigit() for k in om["data"])
-        and all(k.isdigit() for k in nm["data"])
-    ):
-        # bucket-pruned CDC: restrict both reads to the differing buckets
-        changed = sorted(
-            b
-            for b in set(om["data"]) | set(nm["data"])
-            if om["data"].get(b) != nm["data"].get(b)
+    # one listing resolves both indices, so a publish between them
+    # cannot shift one side
+    versions = list_versions(_table_path(root, name))
+    o, n = (
+        read_table_version(
+            spark, root, name, versions[v][0] if isinstance(v, int) else v
         )
-        if not changed:  # identical data maps: a no-op diff, typed empty
-            return (
-                _read_manifest_data(spark, path, nm)
-                .drop(_BUCKET_COL)
-                .select(*keys)
-                .withColumn("change_type", F.lit(None).cast("string"))
-                .limit(0)
-            )
-        om_pruned = {b: om["data"][b] for b in changed if b in om["data"]}
-        nm_pruned = {b: nm["data"][b] for b in changed if b in nm["data"]}
-
-        # a side whose changed buckets are all NEW on the other side
-        # prunes to zero dirs — a zero-path parquet read is an error, so
-        # stand in a typed empty relation built from the pinned schema
-        # (its rows all diff as added/removed, which is exactly right)
-        def _side(mm: dict, pruned: dict) -> DataFrame:
-            if pruned:
-                return _read_manifest_data(
-                    spark, path, dict(mm, data=pruned)
-                ).drop(_BUCKET_COL)
-            return spark.createDataFrame([], _pinned_schema(mm))
-
-        o = _side(om, om_pruned)
-        n = _side(nm, nm_pruned)
-    else:
-        o = _read_manifest_data(spark, path, om).drop(_BUCKET_COL)
-        n = _read_manifest_data(spark, path, nm).drop(_BUCKET_COL)
+        for v in (old, new)
+    )
     val_cols = sorted(c for c in n.columns if c not in keys)
 
     def hashed(df: DataFrame, alias: str) -> DataFrame:
@@ -1543,11 +1432,10 @@ def bootstrap_from_snapshot(
     Existing tables are left untouched so a restart after a partial
     bootstrap is safe: each table is restored by one manifest publish,
     so it either exists in full or not at all. A snapshot table may be a
-    manifest table (what :func:`publish_snapshot` writes) or a plain
-    parquet dir from outside the engine. An upsert table's snapshot
-    (its manifest carries bucket meta) restores into the bucketed layout
-    so the first post-restore upsert stays O(batch); every other table
-    restores through the first-write publish of :func:`_append_data`."""
+    manifest table (what :func:`publish_snapshot` writes; read like
+    :func:`read_table`, so a keep-one table restores one row per key) or
+    a plain parquet dir from outside the engine. Every table restores
+    through the first-write publish of :func:`_append_data`."""
     snapshot_root = resolve_snapshot_root(snapshot_root)
     os.makedirs(warehouse_root, exist_ok=True)
     restored = []
@@ -1560,44 +1448,12 @@ def bootstrap_from_snapshot(
         dst = _table_path(warehouse_root, name)
         if _exists(dst):
             continue
-        src_manifest = _manifest_read(src)
         df = (
-            _read_manifest_data(spark, src, src_manifest)
-            if src_manifest is not None
+            read_table(spark, snapshot_root, name)
+            if _exists(src)
             else spark.read.parquet(src)
-        ).drop(_BUCKET_COL)
-        if src_manifest is not None and {"buckets", "keys"} <= set(
-            src_manifest
-        ):
-            meta = {k: src_manifest[k] for k in ("buckets", "keys")}
-            ver = _new_version_id()
-            verdir = os.path.join(dst, _VERSIONS_DIR, ver)
-            (
-                df.withColumn(
-                    _BUCKET_COL, _bucket_expr(meta["keys"], meta["buckets"])
-                )
-                .write.mode("overwrite")
-                .partitionBy(_BUCKET_COL)
-                .parquet(verdir)
-            )
-            data = {
-                d.split("=", 1)[1]: os.path.join(_VERSIONS_DIR, ver, d)
-                for d in os.listdir(verdir)
-                if d.startswith(_BUCKET_COL + "=")
-            }
-            with _own_version_dir(dst, verdir):
-                _publish_manifest(
-                    dst,
-                    {
-                        "version": ver,
-                        "data": data,
-                        "schema": _schema_json(df),
-                        **meta,
-                    },
-                    expect=None,
-                )
-        else:
-            _append_data(df, dst, expect=None)
+        )
+        _append_data(df, dst, expect=None)
         restored.append(name)
     return restored
 
@@ -1615,8 +1471,9 @@ def compact(
     the classic small-file problem that destroys scan throughput (every
     file is a task + an open/close). Rewrite the table at a target
     partition count (repartition by the layout key when given, so files
-    align with bucket pruning). Publishing is the same atomic `_CURRENT`
-    manifest flip as the upsert writer, so readers racing a compaction
+    align with the layout key's pruning). A keep-one table is resolved to
+    one row per key first. Publishing is the same atomic `_CURRENT`
+    manifest flip as every writer, so readers racing a compaction
     always see a full table; the replaced files are GC'd after the grace
     period. Raises FileNotFoundError for a path that holds no table. Run
     out-of-band, like VACUUM/OPTIMIZE.
@@ -1694,18 +1551,12 @@ def _compact_once(
     manifest = _manifest_read(path)
     if manifest is None:
         raise FileNotFoundError(f"{path}: no table (no {_CURRENT_FILE})")
-    meta = {k: manifest[k] for k in ("buckets", "keys") if k in manifest}
-    df = _read_manifest_data(spark, path, manifest)
-    if meta and _BUCKET_COL not in df.columns:
-        df = df.withColumn(
-            _BUCKET_COL, _bucket_expr(meta["keys"], meta["buckets"])
-        )
+    # a keep-one table compacts to exactly one row per key on disk
+    df = _resolved(_read_manifest_data(spark, path, manifest), _name_of(path))
     no_layout_args = (
         partition_cols is None and cluster_by is None and range_by is None
     )
-    if no_layout_args and _BUCKET_COL in df.columns:
-        partition_cols = [_BUCKET_COL]
-    elif no_layout_args and not reset_layout:
+    if no_layout_args and not reset_layout:
         # an argument-less compact must not flatten a chosen layout:
         # apply the recorded one, else default a KEYED append table to
         # range-clustering on its monotone probe column — the layout
@@ -1749,14 +1600,7 @@ def _compact_once(
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(verdir)
-    if partition_cols and partition_cols[0] == _BUCKET_COL:
-        data = {
-            d.split("=", 1)[1]: os.path.join(_VERSIONS_DIR, ver, d)
-            for d in os.listdir(verdir)
-            if d.startswith(_BUCKET_COL + "=")
-        }
-    else:
-        data = {"all": os.path.join(_VERSIONS_DIR, ver)}
+    data = {"all": os.path.join(_VERSIONS_DIR, ver)}
     # carry APP-LEVEL manifest keys forward (everything outside the
     # structural keys this rewrite owns): stores ride state INSIDE the
     # manifest so it flips atomically with the data — the heavy-hitter
@@ -1772,16 +1616,13 @@ def _compact_once(
         if k not in ("version", "data", "schema", "layout")
     }
     m.update({"version": ver, "data": data})
-    if meta:
-        m.update(meta)
     # compaction changes files, never content: carry the pinned logical
     # schema forward (or establish it from the compacted output)
     m["schema"] = _merged_schema_json(manifest.get("schema"), out)
     # record the table's file LAYOUT so maintenance that runs without
     # the caller's arguments (the auto-fold in _append_data) keeps the
     # clustering/partitioning the operator chose — a bucket-clustered
-    # signature store must never be flattened by an automatic fold. The
-    # internal _kb bucketing is manifest-keyed, not a layout.
+    # signature store must never be flattened by an automatic fold.
     # "by" records PROVENANCE: a compact-written layout means the BASE
     # was rewritten under it (probe pruning holds table-wide); a
     # fold-written one covers delta tiers only — table_health's
@@ -1798,7 +1639,7 @@ def _compact_once(
             "target_partitions": target_partitions,
             "by": "compact",
         }
-    elif partition_cols and partition_cols != [_BUCKET_COL]:
+    elif partition_cols:
         m["layout"] = {
             "partition_by": partition_cols,
             "target_partitions": target_partitions,
@@ -1901,7 +1742,11 @@ def _fold_appends_once(
     # append table whose values look numeric with per-root inference
     # would retype them ('04' -> int 4) in the fold output, the exact
     # corruption compact()'s docstring defends against.
-    df = _read_manifest_data(spark, path, dict(m, data=deltas))
+    # a keep-one table's superseded rows among the deltas drop here;
+    # rows superseded across tiers wait for the next compact()
+    df = _resolved(
+        _read_manifest_data(spark, path, dict(m, data=deltas)), _name_of(path)
+    )
     if want_keyed_default:
         range_by = _keyed_default_range_by(path, df.columns)
     if partition_by:
@@ -2168,10 +2013,8 @@ def table_health(root: str) -> list[dict]:
         # JSON to produce one integer
         n_history = STORAGE.count_history(path)
         n_versions = len(_version_paths(path))
-        # bucketed upsert manifests hold exactly `buckets` entries by
-        # construction — growth-by-append only afflicts append manifests
-        bucketed = "buckets" in m and all(k.isdigit() for k in m["data"])
-        # probe-pruning status for KEYED append tables: the idempotent
+        # probe-pruning status for KEYED insert-if-absent tables (a
+        # keep-one table has no probe, so None): the idempotent
         # writer's anti-join probe stays O(batch) only while min/max
         # stats on the prune column actually skip files.
         #   "natural"   — no compacted "all" base: raw deltas carry
@@ -2187,7 +2030,7 @@ def table_health(root: str) -> list[dict]:
         #   "degraded"  — an "all" base exists with no covering layout.
         # Fix for the last two: one bare compact().
         probe_pruning = None
-        if name in TABLE_SPECS and not bucketed:
+        if name in TABLE_SPECS and not TABLE_SPECS[name].keep_one:
             pc = _prune_col(TABLE_SPECS[name].keys)
             lay = m.get("layout") or {}
             laid = (
@@ -2218,9 +2061,7 @@ def table_health(root: str) -> list[dict]:
                 "manifest_history": n_history,
                 # the compaction-cadence flag: appends past the bound mean
                 # per-write overhead is growing — schedule compact()
-                "needs_compaction": (
-                    not bucketed and n_entries > APPEND_MANIFEST_WARN
-                ),
+                "needs_compaction": n_entries > APPEND_MANIFEST_WARN,
                 # publish-time GC leaves version dirs no manifest names
                 # (crash orphans) to vacuum() — surface their growth
                 # instead of letting it silently accumulate (ADVICE r9)

@@ -439,7 +439,7 @@ VALUE_BUNDLE_TAGS = [
 # everything the engine knows about a table apart from its builder (the
 # two per-feed builder dicts in plans/ingest.py), and every consumer
 # iterates this list: presence pruning, the span set, the writer choice
-# and bucket count in warehouse.write_tables, the FK write order,
+# in warehouse.write_tables, merge-on-read resolution, the FK write order,
 # integrity_report, table_health, precreation and both streaming sinks.
 # tests/test_ingest.py::test_table_specs_agree_with_builders checks the
 # rows against the builders' frames.
@@ -469,12 +469,11 @@ class TableSpec:
       tests/test_ingest.py::test_block_span_covers_prune_columns.
     - ``keep_one``: (column, descending) order that picks the row kept on
       key collision — the table is written by warehouse.write_keep_one
-      (ON CONFLICT DO UPDATE, K5/K6) and never takes a span. Empty: the
-      table is insert-if-absent (ON CONFLICT DO NOTHING, K1/K4).
-    - ``buckets``: key-hash bucket count of a keep-one table at creation
-      (None: warehouse.UPSERT_BUCKETS). Pick ~(table size / healthy
-      rewrite quantum); the count is read back from the table's manifest
-      on every later write, so resizing is an offline rewrite.
+      (ON CONFLICT DO UPDATE, K5/K6), which appends each batch's per-key
+      winners, and every read, fold and compact keeps the first row per
+      key under this order (merge-on-read); it never takes a span.
+      Empty: the table is insert-if-absent (ON CONFLICT DO NOTHING,
+      K1/K4).
     - ``fks``: (child_cols, parent, parent_cols) logical foreign keys —
       the relationships the reference's DDL declares (db.go:359-389;
       Postgres enforcement is commented out there, the ingest order is
@@ -497,7 +496,6 @@ class TableSpec:
     family: str | None = None
     span: bool = False
     keep_one: tuple[tuple[str, bool], ...] = ()
-    buckets: int | None = None
     fks: tuple[tuple[tuple[str, ...], str, tuple[str, ...]], ...] = ()
     enums: tuple[tuple[str, tuple[str, ...]], ...] = ()
 
@@ -586,10 +584,9 @@ TABLE_SPECS: dict[str, TableSpec] = {s.name: s for s in (
                   ("height_tx", True), ("score_raw", False),
                   ("is_active", False),
               ), fks=_TOPIC_FK),
-    # a two-row latest-state table: few buckets
     TableSpec("last_commit_values", ("topic_id", "is_worker"), "event",
               family="actor_last_commit",
-              keep_one=(("height_tx", True), ("height", True)), buckets=4,
+              keep_one=(("height_tx", True), ("height", True)),
               fks=_TOPIC_FK),
     TableSpec("topic_rewards", ("topic_id", "height_tx"), "event",
               family="topic_reward", span=True, fks=_TOPIC_FK),

@@ -67,11 +67,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # appends) keeps its files under _versions/, which a plain parquet
     # read cannot see. The manifest probe is a driver-local JSON read and
     # falls back to the plain parquet read — pushdown on plain sources is
-    # untouched. The internal _kb bucket column of a bucket-converted
-    # source must not leak into query-visible schemas (same drop
-    # read_table does); drop() on plain sources is a no-op.
+    # untouched.
     from allora_indexer_spark.plans.warehouse import (
-        _BUCKET_COL,
         _manifest_read,
         _read_manifest_data,
     )
@@ -88,7 +85,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = spark.read.parquet(path)
             if sig is not None:
                 _SCHEMA_CACHE[path] = (sig, df.schema)
-    df = df.drop(_BUCKET_COL)
     # Parquet TIMESTAMP(NANOS) columns arrive as long nanos (see session.py);
     # truncate to micros exactly like DuckDB's scan does.
     from pyspark.sql import functions as F

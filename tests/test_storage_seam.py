@@ -332,7 +332,7 @@ def test_keep_one_and_health_metadata_ops_envelope(
     spark, tmp_path, monkeypatch, seam_backend
 ):
     """keep_one upsert: one conditional PUT per batch, constant reads —
-    cost tracks touched buckets (data plane), never manifest history.
+    cost tracks the batch (data plane), never manifest history.
     table_health: read-only (1 manifest read + 1 history COUNT, no list,
     no parses) — safe to cron across hundreds of tables."""
     from pyspark.sql import functions as F

@@ -120,7 +120,7 @@ def test_lockfree_concurrent_upserts_no_lost_update(spark, tmp_path, monkeypatch
     """Two writers upsert disjoint key sets concurrently; every row from
     both must survive — the CAS publish is the only thing preventing the
     second `_CURRENT` flip from wholesale-dropping the first writer's
-    buckets."""
+    data entries."""
     root = str(tmp_path / "wh")
     errors: list[Exception] = []
 
@@ -381,8 +381,9 @@ def test_lost_keep_one_publish_removes_its_version_dir(
     spark, tmp_path, monkeypatch
 ):
     """A rival upsert lands inside write_keep_one's publish: the loser
-    redoes its merge and lands, and the version dir of its lost attempt
-    is gone — nothing but vacuum() would ever reclaim it."""
+    re-points its append at the winner's manifest and lands, and no
+    version dir is left that no manifest names — nothing but vacuum()
+    would ever reclaim it."""
     from allora_indexer_spark.plans import storage
 
     st = storage.InMemoryManifestStorage()

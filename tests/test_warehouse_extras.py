@@ -229,7 +229,7 @@ def test_enum_readback_validation(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# K5/K6 keep-one upsert: O(batch) bucket rewrite + atomic version flip
+# K5/K6 keep-one upsert: O(batch) merge-on-read append + atomic version flip
 # ---------------------------------------------------------------------------
 
 
@@ -248,21 +248,16 @@ def _score_order():
     return warehouse._order_cols(TABLE_SPECS["scores"].keep_one)
 
 
-def _bucket_map(path):
-    """bucket id -> (manifest-relative dir, sorted parquet file list) from
-    the LIVE manifest — the ledger the carry-by-reference contract is
+def _entry_files(path, m):
+    """data entry -> (manifest-relative dir, sorted parquet file list) of
+    manifest ``m`` — the ledger the carry-by-reference contract is
     checked against."""
     import os
 
-    m = warehouse._manifest_read(path)
-    out = {}
-    for b, rel in m["data"].items():
-        d = os.path.join(path, rel)
-        out[int(b)] = (
-            rel,
-            sorted(f for f in os.listdir(d) if f.endswith(".parquet")),
-        )
-    return out
+    return {
+        k: (rel, sorted(warehouse.data_files_under(os.path.join(path, rel))))
+        for k, rel in m["data"].items()
+    }
 
 
 def _assert_no_symlinks(root):
@@ -275,17 +270,19 @@ def _assert_no_symlinks(root):
             ), f"symlink at {os.path.join(dirpath, n)}"
 
 
-def test_keep_one_upsert_rewrites_only_affected_buckets(spark, tmp_path):
-    """The r3 verdict's last 100 TB scale-killer: upsert cost must track
-    BATCH size, not table history. Proof at the manifest: after a 2-key
-    batch lands in a 20k-row table, every untouched bucket's manifest
-    entry still points at the SAME path with the SAME file list (carried
-    by reference into the new version — no data written, copied, or
-    moved), only the batch's hash buckets resolve into the new version
-    dir, and that dir contains nothing but the affected buckets."""
+def test_keep_one_upsert_writes_only_the_batch(spark, tmp_path):
+    """Upsert cost must track BATCH size, not table size. A 500-key batch
+    (half updates, half new keys) lands in a 20,000-row table: the new
+    version's files hold at most the batch's 500 rows (parquet footers),
+    every earlier data entry is carried into the new manifest unchanged,
+    the latest height_tx wins on read, and a replay of the same batch
+    leaves the table's rows as they were. The batch's keys spread over
+    all 32 values of pmod(xxhash64(key), 32), so a layout that rewrites
+    per key-hash bucket rewrites the whole table here."""
     import os
 
     root = str(tmp_path / "wh")
+    keys = ["height", "topic_id", "type", "address"]
     base = spark.range(20_000).selectExpr(
         "cast(id as int) as height",
         "cast(id % 10 as int) as topic_id",
@@ -297,63 +294,47 @@ def test_keep_one_upsert_rewrites_only_affected_buckets(spark, tmp_path):
     )
     warehouse.write_keep_one(spark, base, root, "scores", _score_order())
     path = os.path.join(root, "scores")
-    assert os.path.isfile(
-        os.path.join(path, "_CURRENT")
-    ), "upsert table must use the manifest layout"
     _assert_no_symlinks(path)
     m_before = warehouse._manifest_read(path)
-    before = _bucket_map(path)
-    assert len(before) > 10  # keys actually spread over many buckets
+    before = _entry_files(path, m_before)
 
-    batch = _mk_scores(
-        spark,
-        [
-            (5, 5, "inferer", "a5", 10_000_000, 99.0),
-            (7, 7, "inferer", "a7", 10_000_000, 98.0),
-        ],
+    # 250 updates of existing keys (ids 0, 80, ..., 19920) at a newer
+    # height_tx, and 250 keys the table does not hold yet
+    batch = spark.range(500).selectExpr(
+        "cast(if(id < 250, id * 80, 20000 + id) as int) as height",
+        "cast(if(id < 250, id * 80, 20000 + id) % 10 as int) as topic_id",
+        "'inferer' as type",
+        "concat('a', if(id < 250, id * 80, 20000 + id) % 50) as address",
+        "10000000 + id as height_tx",
+        "cast(-id as double) as value",
+        "cast(-id as string) as value_raw",
     )
+    spread = batch.select(
+        F.pmod(F.xxhash64(*keys), F.lit(32)).alias("h")
+    ).distinct().count()
+    assert spread == 32
     warehouse.write_keep_one(spark, batch, root, "scores", _score_order())
     m_after = warehouse._manifest_read(path)
     assert m_after["version"] != m_before["version"]
-    after = _bucket_map(path)
-    keys = ["height", "topic_id", "type", "address"]
-    affected = {
-        r["_kb"]
-        for r in batch.withColumn(
-            "_kb", warehouse._bucket_expr(keys, warehouse.UPSERT_BUCKETS)
-        ).collect()
-    }
-    new_prefix = os.path.join("_versions", m_after["version"])
-    for b, (rel, files) in before.items():
-        if b in affected:
-            assert after[b][0] != rel, f"bucket {b}: not rewritten"
-            assert after[b][0].startswith(
-                new_prefix
-            ), f"bucket {b}: rewrite landed outside the new version dir"
-        else:
-            assert after[b] == (rel, files), (
-                f"bucket {b}: untouched bucket not carried by reference "
-                f"(path or file list changed)"
-            )
 
-    # O(batch) at the filesystem: the new version dir holds ONLY the
-    # affected buckets' directories — nothing else was written
-    new_verdir = os.path.join(path, new_prefix)
-    written = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(new_verdir)
-        if d.startswith("_kb=")
-    }
-    assert written == affected
+    new_verdir = os.path.join(path, "_versions", m_after["version"])
+    assert warehouse._footer_row_count(new_verdir) <= 500
+    after = _entry_files(path, m_after)
+    for k, entry in before.items():
+        assert after.get(k) == entry, f"data entry {k} was not carried"
 
-    # semantics: latest row won, nothing lost, replay is a no-op
     t = warehouse.read_table(spark, root, "scores")
-    assert t.count() == 20_000
-    assert "_kb" not in t.columns
-    row = t.filter("height = 5 AND address = 'a5'").collect()[0]
-    assert row["height_tx"] == 10_000_000 and row["value"] == 99.0
+    assert t.count() == 20_250
+    updated = t.filter("height = 80 AND address = 'a30'").collect()
+    assert len(updated) == 1
+    assert updated[0]["height_tx"] == 10_000_001
+    assert updated[0]["value"] == -1.0
+    rows = sorted(t.collect())
+
     warehouse.write_keep_one(spark, batch, root, "scores", _score_order())
-    assert warehouse.read_table(spark, root, "scores").count() == 20_000
+    again = warehouse.read_table(spark, root, "scores")
+    assert again.count() == 20_250
+    assert sorted(again.collect()) == rows
 
 
 def test_version_swap_is_atomic_for_concurrent_readers(spark, tmp_path):
@@ -420,11 +401,14 @@ def test_version_gc_deletes_expired_and_keeps_live(spark, tmp_path, monkeypatch)
     for i in range(3):
         batch = _mk_scores(spark, [(1, 1, "inferer", "x", 100 + i, 5.0)])
         warehouse.write_keep_one(spark, batch, root, "scores", _score_order())
-    versions = warehouse._version_paths(os.path.join(root, "scores"))
-    assert len(versions) == 4  # grace period holds every replaced version
+    path = os.path.join(root, "scores")
+    assert len(warehouse._version_paths(path)) == 4  # every upsert is live
+    # a compaction supersedes them; the grace period holds them
+    warehouse.compact(spark, path)
+    assert len(warehouse._version_paths(path)) == 5
 
-    # age everything out and trigger one more write: only current+previous
-    # survive, and the data is intact
+    # age everything out and trigger one more write: only the dirs of the
+    # current and previous manifests survive, and the data is intact
     monkeypatch.setattr(warehouse, "_GC_GRACE_SEC", 0.0)
     warehouse.write_keep_one(
         spark,
@@ -433,52 +417,11 @@ def test_version_gc_deletes_expired_and_keeps_live(spark, tmp_path, monkeypatch)
         "scores",
         _score_order(),
     )
-    remaining = warehouse._version_paths(os.path.join(root, "scores"))
-    assert len(remaining) == 2
+    remaining = warehouse._version_paths(path)
+    assert len(remaining) == 2  # the compacted base and the last upsert
     t = warehouse.read_table(spark, root, "scores")
     got = {(r["height"], r["height_tx"]) for r in t.collect()}
     assert got == {(1, 102), (2, 999)}
-
-
-def test_keep_one_respects_per_table_bucket_count(spark, tmp_path):
-    """The sizing knob: a table spec with ``buckets`` is created with its
-    configured bucket count, persisted in the meta, and honored (not the
-    caller default) on subsequent writes."""
-    import os
-
-    root = str(tmp_path / "wh")
-    rows = spark.createDataFrame(
-        [(1, False, 10, 10, "5.0"), (2, True, 10, 10, "6.0")],
-        "topic_id int, is_worker boolean, height_tx long, height long,"
-        " value string",
-    )
-    warehouse.write_keep_one(
-        spark,
-        rows,
-        root,
-        "last_commit_values",
-        warehouse._order_cols(TABLE_SPECS["last_commit_values"].keep_one),
-    )
-    path = os.path.join(root, "last_commit_values")
-    m = warehouse._manifest_read(path)
-    assert m["buckets"] == 4
-    assert m["data"] and all(int(b) < 4 for b in m["data"])
-    # and a follow-up write keeps honoring the manifest's count, not the
-    # caller default
-    warehouse.write_keep_one(
-        spark,
-        spark.createDataFrame(
-            [(3, False, 11, 11, "7.0")],
-            "topic_id int, is_worker boolean, height_tx long, height long,"
-            " value string",
-        ),
-        root,
-        "last_commit_values",
-        warehouse._order_cols(TABLE_SPECS["last_commit_values"].keep_one),
-    )
-    m2 = warehouse._manifest_read(path)
-    assert m2["buckets"] == 4
-    assert all(int(b) < 4 for b in m2["data"])
 
 
 def test_time_travel_read_and_version_diff(spark, tmp_path, monkeypatch):
@@ -517,8 +460,7 @@ def test_time_travel_read_and_version_diff(spark, tmp_path, monkeypatch):
     d2 = warehouse.diff_table_versions(spark, root, "scores", old=0, new=1)
     changes2 = {(r["height"], r["change_type"]) for r in d2.collect()}
     assert changes2 == {(1, "changed"), (3, "removed")}
-    # self-diff short-circuits on identical manifest data maps (the
-    # bucket-pruned CDC fast path): zero rows, schema intact
+    # a self-diff: zero rows, schema intact
     d3 = warehouse.diff_table_versions(spark, root, "scores", old=0, new=0)
     assert d3.count() == 0
     assert "change_type" in d3.columns
@@ -676,16 +618,16 @@ def test_needs_vacuum_flags_orphan_dirs_until_vacuum(
 
 
 # ---------------------------------------------------------------------------
-# Non-bucketed manifest → bucketed upsert, and the append-manifest
-# compaction-cadence contract
+# Merge-on-read over compacted tables, the bucket-layout refusal, and the
+# append-manifest compaction-cadence contract
 # ---------------------------------------------------------------------------
 
 
-def test_compacted_plain_table_upsert_migrates_to_buckets(spark, tmp_path):
+def test_upsert_over_a_compacted_table_keeps_latest(spark, tmp_path):
     """compact() on an append-created table publishes the {"all": ...}
-    manifest; the first upsert after that must do the one-time full
-    rewrite into the bucketed layout — keeping every row and the
-    keep-latest contract — and stay incremental from then on."""
+    manifest; an upsert after that appends its batch beside the base,
+    the read keeps the latest row per key, and the next compact leaves
+    exactly one row per key on disk."""
     import os
 
     root = str(tmp_path / "wh")
@@ -697,19 +639,91 @@ def test_compacted_plain_table_upsert_migrates_to_buckets(spark, tmp_path):
     )
     warehouse.append_dir(base, path)
     warehouse.compact(spark, path, target_partitions=1)
-    m = warehouse._manifest_read(path)
-    assert m is not None and "buckets" not in m  # the {"all": ...} layout
+    base_entry = warehouse._manifest_read(path)["data"]["all"]
 
     batch = _mk_scores(spark, [(1, 1, "inferer", "x", 99, 9.0)])
     warehouse.write_keep_one(spark, batch, root, "scores", _score_order())
-    m2 = warehouse._manifest_read(path)
-    assert m2["buckets"] == warehouse.UPSERT_BUCKETS
-    assert all(k.isdigit() for k in m2["data"])
-    got = sorted(
-        (r["height"], r["height_tx"], r["value"])
-        for r in warehouse.read_table(spark, root, "scores").collect()
+    m = warehouse._manifest_read(path)
+    assert m["data"]["all"] == base_entry and len(m["data"]) == 2
+    want = [(1, 99, 9.0), (2, 20, 2.0)]
+
+    def got(df):
+        return sorted((r["height"], r["height_tx"], r["value"]) for r in df.collect())
+
+    assert got(warehouse.read_table(spark, root, "scores")) == want
+    assert warehouse.read_dir(spark, path).count() == 3  # raw, unresolved
+    warehouse.compact(spark, path)
+    assert got(warehouse.read_dir(spark, path)) == want
+
+
+def test_bucketed_layout_table_is_refused(spark, tmp_path):
+    """A table whose manifest still carries ``buckets`` (the key-hash
+    bucket layout of earlier releases) is refused by reads, upserts and
+    compaction with an error that names the fix, and a refused upsert
+    leaves no version dir behind."""
+    import os
+
+    root = str(tmp_path / "wh")
+    path = os.path.join(root, "scores")
+    warehouse.write_keep_one(
+        spark, _mk_scores(spark, [(1, 1, "inferer", "x", 10, 1.0)]), root,
+        "scores", _score_order(),
     )
-    assert got == [(1, 99, 9.0), (2, 20, 2.0)]
+    m = warehouse._manifest_read(path)
+    warehouse._publish_manifest(
+        path, dict(m, buckets=32, version="vbucketed"), expect=m["version"]
+    )
+    n_dirs = len(warehouse._version_paths(path))
+    with pytest.raises(warehouse.BucketedLayoutError, match="Re-ingest"):
+        warehouse.read_table(spark, root, "scores")
+    with pytest.raises(warehouse.BucketedLayoutError, match="Re-ingest"):
+        warehouse.read_table_version(spark, root, "scores", 0)
+    with pytest.raises(warehouse.BucketedLayoutError, match="Re-ingest"):
+        warehouse.compact(spark, path)
+    with pytest.raises(warehouse.BucketedLayoutError, match="Re-ingest"):
+        warehouse.write_keep_one(
+            spark, _mk_scores(spark, [(2, 2, "inferer", "y", 20, 2.0)]),
+            root, "scores", _score_order(),
+        )
+    assert len(warehouse._version_paths(path)) == n_dirs
+
+
+def test_keep_one_table_health_flags_and_clears_compaction(
+    spark, tmp_path, monkeypatch
+):
+    """A keep-one table is an append table on disk: past
+    APPEND_MANIFEST_WARN upserts table_health flags needs_compaction
+    (it has no insert probe, so probe_pruning is None), and compact()
+    clears the flag and leaves one row per key on disk."""
+    import os
+
+    monkeypatch.setattr(warehouse, "APPEND_MANIFEST_WARN", 3)
+    monkeypatch.setattr(warehouse, "AUTO_FOLD_ON_APPEND", False)
+    root = str(tmp_path / "wh")
+    path = os.path.join(root, "scores")
+
+    def health():
+        return {h["table"]: h for h in warehouse.table_health(root)}["scores"]
+
+    for i in range(3):
+        warehouse.write_keep_one(
+            spark, _mk_scores(spark, [(1, 1, "inferer", "x", 10 + i, 1.0)]),
+            root, "scores", _score_order(),
+        )
+    assert not health()["needs_compaction"]
+    with pytest.warns(RuntimeWarning, match="compact"):
+        warehouse.write_keep_one(
+            spark, _mk_scores(spark, [(1, 1, "inferer", "x", 13, 1.0)]),
+            root, "scores", _score_order(),
+        )
+    h = health()
+    assert h["needs_compaction"] and h["manifest_entries"] == 4
+    assert h["probe_pruning"] is None
+    warehouse.compact(spark, path)
+    h = health()
+    assert not h["needs_compaction"] and h["manifest_entries"] == 1
+    rows = warehouse.read_dir(spark, path).collect()
+    assert [r["height_tx"] for r in rows] == [13]
 
 
 def test_append_manifest_growth_warns_and_flags(spark, tmp_path, monkeypatch):
@@ -756,10 +770,10 @@ def test_append_manifest_growth_warns_and_flags(spark, tmp_path, monkeypatch):
 
 
 def test_manifest_schema_pin_fills_missing_columns(spark, tmp_path):
-    """Bucketed manifests pin the table's logical schema: a bucket dir
-    carried from an older, NARROWER version reads back with typed nulls
-    for newer columns instead of schema inference silently dropping them
-    (the read-side schema-evolution gap on upsert tables)."""
+    """Manifests pin the table's logical schema: a data dir carried from
+    an older, NARROWER version reads back with typed nulls for newer
+    columns instead of schema inference silently dropping them (the
+    read-side schema-evolution gap on upsert tables)."""
     import json as _json
     import os
 
@@ -777,7 +791,6 @@ def test_manifest_schema_pin_fills_missing_columns(spark, tmp_path):
     m = warehouse._manifest_read(path)
     assert "schema" in m  # published by the writer
     sch = StructType.fromJson(_json.loads(m["schema"]))
-    assert "_kb" not in [f.name for f in sch.fields]
     widened = dict(m)
     widened["schema"] = sch.add("confidence", "double").json()
     rows = warehouse._read_manifest_data(spark, path, widened).collect()
@@ -829,10 +842,10 @@ def test_snapshot_latest_pointer_round_trip(spark, tmp_path):
 
 def test_concurrent_writers_serialize_and_lose_nothing(spark, tmp_path):
     """Two upserts with DISJOINT key sets racing on the same table: the
-    read-merge-publish cycles must serialize — without the CAS publish
-    (on POSIX: the flock micro-lock around the pointer swap, plus the
-    writer's retry), whichever `_CURRENT` flip lands second clobbers the
-    other's bucket pointers wholesale and its rows vanish."""
+    publishes must serialize — without the CAS publish (on POSIX: the
+    flock micro-lock around the pointer swap, plus the writer's retry),
+    whichever `_CURRENT` flip lands second drops the other's data entry
+    and its rows vanish."""
     import threading
 
     root = str(tmp_path / "wh")
@@ -892,6 +905,11 @@ def test_vacuum_reclaims_without_a_write(spark, tmp_path, monkeypatch):
         )
     path = os.path.join(root, "scores")
     assert len(warehouse._version_paths(path)) == 4
+    # two compactions supersede the upserts' dirs and then the first
+    # compaction's; the grace window keeps them all past both publishes
+    warehouse.compact(spark, path)
+    warehouse.compact(spark, path)
+    assert len(warehouse._version_paths(path)) == 6
     before = warehouse._manifest_read(path)
     monkeypatch.setattr(warehouse, "_GC_GRACE_SEC", 0.0)
     warehouse.vacuum(path)

@@ -154,13 +154,15 @@ def test_layout_modes_are_mutually_exclusive(spark, tmp_path):
 
 
 def test_table_health_reports_probe_pruning_status(spark, tmp_path):
+    # probe_pruning is reported for insert-if-absent tables only (a
+    # keep-one table has no probe), so these status tests use block_info
     root = str(tmp_path)
     for b in range(3):
-        W.write_insert_if_absent(spark, _scores_batch(spark, b), root, "scores")
-    path = os.path.join(root, "scores")
+        W.write_insert_if_absent(spark, _scores_batch(spark, b), root, "block_info")
+    path = os.path.join(root, "block_info")
 
     def status():
-        (h,) = [r for r in W.table_health(root) if r["table"] == "scores"]
+        (h,) = [r for r in W.table_health(root) if r["table"] == "block_info"]
         return h["probe_pruning"]
 
     # plain append dir: raw contiguous-span deltas only
@@ -210,22 +212,22 @@ def test_autofold_applies_keyed_default_without_recording(
     The honest status here stays "degraded": the flat base dominates
     probe cost until the next bare compact rewrites it."""
     root = str(tmp_path)
-    path = os.path.join(root, "scores")
+    path = os.path.join(root, "block_info")
     for b in range(2):
-        W.write_insert_if_absent(spark, _scores_batch(spark, b), root, "scores")
+        W.write_insert_if_absent(spark, _scores_batch(spark, b), root, "block_info")
     W.compact(spark, path, target_partitions=1, range_by=[])  # flat base
     monkeypatch.setattr(W, "APPEND_MANIFEST_WARN", 3)
     for b in range(2, 9):
-        W.write_insert_if_absent(spark, _scores_batch(spark, b), root, "scores")
+        W.write_insert_if_absent(spark, _scores_batch(spark, b), root, "block_info")
     m = W._manifest_read(path)
     assert "layout" not in m  # the default is applied, never recorded
     # every fold tier is physically range-clustered regardless
     for k, rel in m["data"].items():
         if k.startswith("fold_"):
             assert _disjoint(_file_spans(path, {"data": {"x": rel}}))
-    (h,) = [r for r in W.table_health(root) if r["table"] == "scores"]
+    (h,) = [r for r in W.table_health(root) if r["table"] == "block_info"]
     assert h["probe_pruning"] == "degraded"  # flat base still dominates
-    assert W.read_table(spark, root, "scores").count() == 9 * 500
+    assert W.read_table(spark, root, "block_info").count() == 9 * 500
 
 
 def test_fold_created_layout_reports_tiers_only(spark, tmp_path):
@@ -234,22 +236,22 @@ def test_fold_created_layout_reports_tiers_only(spark, tmp_path):
     must report 'tiers_only', not 'clustered' — the flat base predates
     the layout and probes still scan it whole."""
     root = str(tmp_path)
-    path = os.path.join(root, "scores")
+    path = os.path.join(root, "block_info")
     for b in range(3):
-        W.write_insert_if_absent(spark, _scores_batch(spark, b), root, "scores")
+        W.write_insert_if_absent(spark, _scores_batch(spark, b), root, "block_info")
     W.compact(spark, path, target_partitions=2, range_by=[])  # flat base
     for b in range(3, 6):
-        W.write_insert_if_absent(spark, _scores_batch(spark, b), root, "scores")
+        W.write_insert_if_absent(spark, _scores_batch(spark, b), root, "block_info")
     assert W.fold_appends(spark, path, range_by=["height"])
     m = W._manifest_read(path)
     assert m.get("layout") == {"range_by": ["height"], "by": "fold"}
-    (h,) = [r for r in W.table_health(root) if r["table"] == "scores"]
+    (h,) = [r for r in W.table_health(root) if r["table"] == "block_info"]
     assert h["probe_pruning"] == "tiers_only"
     # one bare compact rewrites the base under the layout and clears it
     W.compact(spark, path, target_partitions=2)
-    (h,) = [r for r in W.table_health(root) if r["table"] == "scores"]
+    (h,) = [r for r in W.table_health(root) if r["table"] == "block_info"]
     assert h["probe_pruning"] == "clustered"
-    assert W.read_table(spark, root, "scores").count() == 3000
+    assert W.read_table(spark, root, "block_info").count() == 3000
 
 
 def test_bare_maintenance_compact_preserves_recorded_sizing(spark, tmp_path):

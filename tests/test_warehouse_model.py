@@ -1,19 +1,20 @@
 """Model-based property test for the manifest warehouse writers.
 
 The manifest layout (plans/warehouse.py) is the engine's most state-heavy
-component: upserts carry untouched buckets by reference across versions,
-compact() changes the physical layout without changing content, and
-fold_appends() rewrites only delta versions. This test drives RANDOM
-operation sequences against a table and checks after every sequence that
-``read_table`` equals a trivial in-memory model — the executable form of
-the layout's contract ("any interleaving of writers and maintenance
-preserves exactly the logical rows"). Reference semantic being modeled:
+component: upserts append their batch and every read resolves one row per
+key (merge-on-read), compact() changes the physical layout without
+changing content, and fold_appends() rewrites only delta versions. This
+test drives RANDOM operation sequences against a table and checks after
+every operation that ``read_table`` equals a trivial in-memory model — the
+executable form of the layout's contract ("any interleaving of writers,
+replays and maintenance preserves exactly the logical rows"). Reference semantic being modeled:
 the store-agnostic ON CONFLICT upsert + idempotent append
 (/root/reference/db.go:1118-1185, 1654-1686).
 """
 
 from __future__ import annotations
 
+import os
 import uuid
 
 import pytest
@@ -51,11 +52,24 @@ _upsert_batch = st.lists(
 _upsert_ops = st.lists(
     st.one_of(
         st.tuples(st.just("upsert"), _upsert_batch),
+        # re-upsert an earlier batch (index taken modulo the batches so far)
+        st.tuples(st.just("replay"), st.integers(min_value=0, max_value=5)),
         st.tuples(st.just("compact"), st.just(None)),
+        st.tuples(st.just("fold"), st.just(None)),
     ),
     min_size=1,
-    max_size=5,
+    max_size=6,
 )
+
+
+def _state(df):
+    return {
+        (r["height"], r["topic_id"], r["type"], r["address"]): (
+            r["height_tx"],
+            r["value"],
+        )
+        for r in df.collect()
+    }
 
 
 def _mk_rows(spark, batch):
@@ -76,29 +90,39 @@ def _mk_rows(spark, batch):
 @given(ops=_upsert_ops)
 def test_upsert_table_matches_model(spark, tmp_root, ops):
     root = f"{tmp_root}/wh_{uuid.uuid4().hex[:8]}"
+    path = os.path.join(root, "scores")
     model: dict[tuple, tuple] = {}
+    batches: list[list] = []
     order = warehouse._order_cols(TABLE_SPECS["scores"].keep_one)
     for op, arg in ops:
+        before = dict(model)
+        if op == "replay" and batches:
+            op, arg = "upsert", batches[arg % len(batches)]
         if op == "upsert":
             warehouse.write_keep_one(
                 spark, _mk_rows(spark, arg), root, "scores", order
             )
+            batches.append(arg)
             for (h, t, ty, a), htx in arg:
                 k = (h, t, ty, a)
                 if k not in model or htx >= model[k][0]:
                     model[k] = (htx, float(htx) + h)
-        elif model:  # compact a table only once it exists
-            warehouse.compact(spark, f"{root}/scores", target_partitions=1)
+        elif op == "compact" and model:
+            warehouse.compact(spark, path, target_partitions=1)
+            # compaction leaves exactly one row per key on disk
+            raw = warehouse.read_dir(spark, path)
+            assert raw.count() == len(model)
+            assert _state(raw) == model
+        elif op == "fold":
+            warehouse.fold_appends(spark, path)
         if not model:
             continue
-        got = {
-            (r["height"], r["topic_id"], r["type"], r["address"]): (
-                r["height_tx"],
-                r["value"],
-            )
-            for r in warehouse.read_table(spark, root, "scores").collect()
-        }
-        assert got == model
+        assert _state(warehouse.read_table(spark, root, "scores")) == model
+        if op == "upsert" and before:
+            # every upsert publishes one version: the one before it is
+            # the model's state before this write
+            old = warehouse.read_table_version(spark, root, "scores", 1)
+            assert _state(old) == before
 
 
 # -- append table (block_info, insert-if-absent) ----------------------------

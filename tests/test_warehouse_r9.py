@@ -275,11 +275,12 @@ def test_publish_gc_spares_unpublished_dirs_and_leaks_nothing(
     planted_lcv = None
     for h in range(12):
         batch = spark.createDataFrame(
-            [(h % 5, h % 2 == 0, h)],
-            "topic_id int, is_worker boolean, height long",
+            [(h % 5, h % 2 == 0, h, h)],
+            "topic_id int, is_worker boolean, height_tx long, height long",
         )
         warehouse.write_keep_one(
-            spark, batch, root, "last_commit_values", [F.desc("height")]
+            spark, batch, root, "last_commit_values",
+            [F.desc("height_tx"), F.desc("height")],
         )
         planted_lcv = planted_lcv or _plant_unpublished(lcv)
         _assert_gc_state(lcv, planted_lcv)

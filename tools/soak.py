@@ -18,6 +18,11 @@ recorded curve:
                   SIGKILLed mid-run; the parent re-runs the same range
                   and asserts exact convergence (no loss, no dupes) —
                   the crash-resume contract at soak scale;
+  phase "upsert"  120 write_keep_one micro-batches into `scores`
+                  (merge-on-read: each batch appends its per-key
+                  winners, reads keep the latest row per key), 1 batch
+                  in 10 replaying an earlier one; the table must read
+                  back equal to a dict model of the latest row per key;
   phase "sig"     a few hundred batches through the incremental near-dup
                   signature store (streaming/stream.py:_merge_near_dup_batch)
                   with its cadenced fold + major compact, recording the
@@ -35,8 +40,11 @@ recorded curve:
 
 Pass/fail: per-phase, the median per-batch wall time of the LAST quarter
 must stay under --flat-bound (default 2.0) x the median of the first
-quarter (warmup excluded) AND manifest entries must stay bounded. Writes
-one JSON report (default SOAK_r9.json) and exits non-zero on regression.
+quarter (warmup excluded) AND manifest entries must stay bounded. Every
+phase reports its table's manifest entries, `_manifests/` history count
+and `_versions/` dir count at the end of the phase ("final"). Writes one
+JSON report (default soak_report.json in the system temp dir, path
+printed at the end) and exits non-zero on regression.
 
 Usage:
   python tools/soak.py                         # full soak (~10-15 min)
@@ -241,6 +249,7 @@ def soak_kill(spark, root: str, lo: int, rows_per_batch: int) -> dict:
         "rows_after_resume": total,
         "duplicates": total - distinct,
         "max_manifest_entries_during_operatorless_resume": max_entries,
+        "final": _manifest_stats(tpath),
         # the TRIGGER is K x WARN; the observable post-write invariant is
         # one higher (the delta that lands before the next maintenance
         # fires) — same bound the pinning test asserts
@@ -254,6 +263,76 @@ def soak_kill(spark, root: str, lo: int, rows_per_batch: int) -> dict:
             if wh.AUTO_COMPACT_FACTOR
             else None
         ),
+    }
+
+
+# ---------------------------------------------------------------------------
+# phase: keep-one upsert
+# ---------------------------------------------------------------------------
+
+
+UPSERT_BATCHES = 120
+
+
+def soak_upsert(spark, root: str, n_batches: int, keys_per_batch: int) -> dict:
+    """write_keep_one micro-batches into `scores` over a 200-key domain,
+    each batch a newer height_tx for ``keys_per_batch`` keys; every 10th
+    batch replays an earlier batch (its rows lose, or tie identically,
+    on read). Same operator loop as soak_append. The table must read
+    back equal to a dict model of the latest row per key."""
+    from allora_indexer_spark.plans import warehouse as wh
+    from allora_indexer_spark.schemas import TABLE_SPECS
+
+    order = wh._order_cols(TABLE_SPECS["scores"].keep_one)
+    path = os.path.join(root, "scores")
+    rng = random.Random(7)
+    model: dict[tuple, tuple] = {}
+    sent: list[list[tuple]] = []
+    times: list[float] = []
+    series: list[dict] = []
+    majors: list[int] = []
+    for i in range(n_batches):
+        if i % 10 == 9:
+            rows = sent[rng.randrange(len(sent))]
+        else:
+            rows = [
+                (k, k % 5, "inferer", f"a{k}", i, float(i), str(float(i)))
+                for k in rng.sample(range(200), keys_per_batch)
+            ]
+            sent.append(rows)
+        batch = spark.createDataFrame(
+            rows,
+            "height int, topic_id int, type string, address string,"
+            " height_tx long, value double, value_raw string",
+        )
+        t0 = time.perf_counter()
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always", RuntimeWarning)
+            wh.write_keep_one(spark, batch, root, "scores", order)
+            escalated = any("compact" in str(w.message) for w in caught)
+        if escalated:
+            wh.compact(spark, path, target_partitions=1)
+            majors.append(i)
+        times.append(time.perf_counter() - t0)
+        for r in rows:
+            if r[:4] not in model or r[4] >= model[r[:4]][0]:
+                model[r[:4]] = (r[4], r[5])
+        if (i + 1) % 10 == 0 or escalated:
+            series.append({"batch": i + 1, "sec": round(times[-1], 4), **_manifest_stats(path)})
+    got = {
+        (r["height"], r["topic_id"], r["type"], r["address"]): (r["height_tx"], r["value"])
+        for r in wh.read_table(spark, root, "scores").collect()
+    }
+    assert got == model, (
+        f"upsert read-back differs from the model on "
+        f"{len(set(got.items()) ^ set(model.items()))} rows"
+    )
+    return {
+        "summary": _summarize(times),
+        "majors_at": majors,
+        "final": _manifest_stats(path),
+        "rows": len(got),
+        "series": series,
     }
 
 
@@ -314,7 +393,7 @@ def soak_sig(
     )
     return {
         "summary": _summarize(times, warmup=5),
-        "final_sig": _manifest_stats(sig_dir),
+        "final": _manifest_stats(sig_dir),
         "docs_in_store": n_docs,
         "series": series,
     }
@@ -407,7 +486,7 @@ def soak_hash_sig(
     assert not missed, f"planted cross-batch twins missed: {sorted(missed)[:5]}"
     return {
         "summary": _summarize(times, warmup=5),
-        "final_sig": _manifest_stats(sig_dir),
+        "final": _manifest_stats(sig_dir),
         "docs_in_store": n_docs,
         "planted_pairs": len(planted),
         "planted_found": len(planted) - len(missed),
@@ -437,7 +516,9 @@ def main() -> int:
                          "store (stress), 'bounded' keeps it constant "
                          "(realistic corpus)")
     ap.add_argument("--flat-bound", type=float, default=2.0)
-    ap.add_argument("--out", default=os.path.join(REPO, "SOAK_r10.json"))
+    ap.add_argument(
+        "--out", default=os.path.join(tempfile.gettempdir(), "soak_report.json")
+    )
     ap.add_argument("--skip-kill", action="store_true")
     args = ap.parse_args()
 
@@ -490,6 +571,13 @@ def main() -> int:
                 meter.delta(ops0), report["kill"]["n_child_batches"]
             )
         ops0 = meter.snapshot()
+        report["upsert"] = soak_upsert(
+            spark, os.path.join(work, "wh"), UPSERT_BATCHES, 20
+        )
+        report["upsert"]["storage_ops"] = _ops_per_batch(
+            meter.delta(ops0), UPSERT_BATCHES
+        )
+        ops0 = meter.snapshot()
         report["sig"] = soak_sig(
             spark, os.path.join(work, "sig"), args.sig_batches,
             args.docs_per_batch, workload=args.sig_workload,
@@ -515,7 +603,7 @@ def main() -> int:
             meter.delta(ops0), args.video_sig_batches
         )
         report["wall_sec"] = round(time.time() - t0, 1)
-        for phase in ("append", "sig", "hash_sig", "video_sig"):
+        for phase in ("append", "upsert", "sig", "hash_sig", "video_sig"):
             s = report[phase]["summary"]
             ratio = s["median_last_quarter"] / max(s["median_first_quarter"], 1e-9)
             report[phase]["flatness_ratio"] = round(ratio, 3)
