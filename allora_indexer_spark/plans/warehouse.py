@@ -25,7 +25,6 @@ import random
 import shutil
 import time
 import uuid
-import warnings
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -80,6 +79,14 @@ STORAGE = PosixManifestStorage()
 # O(batch) write cost. The survivor is chosen by that order, never by
 # arrival, so appends commute and a replay is a no-op on read; fold and
 # compact drop superseded rows from what they rewrite.
+#
+# Maintenance is the writer's, like Postgres autovacuum: there is one
+# rule (:func:`_append_data`) and one rewrite (:func:`_rewrite`). A
+# publish that leaves more than APPEND_MANIFEST_WARN entries folds the
+# raw deltas into one tier; when the base and tiers alone fill the
+# bound, it compacts the whole table instead. Both rewrites lay rows out
+# under the table's one layout (:func:`_layout`): the one recorded at
+# creation, or the keyed range_by default.
 # Underscore-prefixed names are invisible to Spark's file listing, so a
 # stray direct read of the table path sees no half-state. Replaced
 # versions are garbage-collected after a grace period once no retained
@@ -89,10 +96,10 @@ STORAGE = PosixManifestStorage()
 
 _VERSIONS_DIR = "_versions"
 _GC_GRACE_SEC = 60.0
-# Compaction-cadence contract for manifest-layout APPEND tables: each
-# non-empty micro-batch adds one manifest data entry; past this bound the
-# writer warns (and table_health flags needs_compaction) until compact()
-# folds the versions back to O(1) entries.
+# Manifest bound: each non-empty append adds one manifest data entry,
+# and no write leaves more than this many — past it the writer folds or
+# compacts (see _append_data). table_health flags a table over it
+# (needs_compaction), which only a writer with a larger bound leaves.
 APPEND_MANIFEST_WARN = 64
 # Growth envelope of `_manifests/` history files and `_versions/` dirs.
 # Publish-time GC holds both near retention + (grace window x publish
@@ -569,13 +576,13 @@ def _has_hive_entries(d: str) -> bool:
 
 def _union_dirs(spark: SparkSession, dirs: list[str], schema=None) -> DataFrame:
     """Per-dir read + unionByName for manifests whose data dirs a single
-    multi-root read refuses: hive-partitioned version dirs (compact()
-    with partition_cols) mixed with plain append dirs, or several
-    partitioned roots outright. ``schema`` (the manifest's pinned logical
-    schema) is applied per root, which also pins hive partition-value
-    types against per-root inference. Bounded: append manifests hold at
-    most ~APPEND_MANIFEST_WARN dirs between compactions, and AQE
-    coalesces the per-dir scans."""
+    multi-root read refuses: several hive-partitioned roots (a table
+    created with ``partition_by``), or such roots mixed with plain
+    dirs. ``schema`` (the manifest's pinned logical schema) is applied
+    per root, which also pins hive partition-value types against
+    per-root inference. Bounded: no write leaves more than
+    APPEND_MANIFEST_WARN dirs in a manifest, and AQE coalesces the
+    per-dir scans."""
 
     reader = spark.read if schema is None else spark.read.schema(schema)
     out = reader.parquet(dirs[0])
@@ -632,9 +639,9 @@ def _resolved(df: DataFrame, name: str) -> DataFrame:
     key under its spec's ``keep_one`` order; ``df`` unchanged for any
     other table. Every keep-one read resolves — no writer keeps an
     on-disk one-row-per-key invariant a shortcut could rely on. Guarded
-    like :func:`_keyed_default_range_by`: data stored under a spec's
-    name by other code, without the spec's key or order columns, reads
-    and compacts as stored instead of failing."""
+    like :func:`_layout`: data stored under a spec's name by other code,
+    without the spec's key or order columns, reads and compacts as
+    stored instead of failing."""
     spec = TABLE_SPECS.get(name)
     if spec is None or not spec.keep_one:
         return df
@@ -663,18 +670,36 @@ def _name_of(path: str) -> str:
     return os.path.basename(path.rstrip("/"))
 
 
-def _keyed_default_range_by(path: str, columns) -> list[str] | None:
-    """The probe-preserving layout default, single-sourced for compact
-    AND fold: a KEYED append table with no chosen layout range-clusters
-    on its monotone probe column — guarded on the column actually being
-    present (a table evolved without it keeps the flat rewrite instead
-    of crashing mid-maintenance)."""
-    name = _name_of(path)
-    if name in TABLE_KEYS:
-        pc = _prune_col(TABLE_KEYS[name])
-        if pc in columns:
-            return [pc]
-    return None
+def _layout(path: str, layout: dict, columns) -> tuple[str, list[str], int]:
+    """The file layout every rewrite of a table applies, as (mode,
+    columns, target_partitions); mode "" is a flat rewrite.
+
+    The columns are the ones recorded at the table's creation
+    (:func:`seed_manifest_store`, or a first :func:`_append_data` with
+    ``partition_by``), in one of three modes: ``partition_by`` lays
+    files out as hive directories (directory pruning, but partition-
+    value inference retypes numeric-looking strings on a plain read —
+    the pinned schema guards engine reads); ``cluster_by`` clusters and
+    sorts rows by columns kept IN the files, so row-group min/max stats
+    prune; ``range_by`` range-partitions and sorts, so every FILE covers
+    a disjoint key span. With none recorded, a KEYED table whose rows
+    carry its monotone probe column range-clusters on it: the
+    idempotent writer's anti-join probe is range-pruned on that column
+    (:func:`existing_keys_in_range`), and a round-robin rewrite makes
+    every file span the whole key range — measured: 6 contiguous-span
+    appends and one compact to 4 files left each file spanning every
+    height, so the O(batch) probe became O(table). The guard on the
+    column keeps a table evolved without it on the flat rewrite instead
+    of failing mid-maintenance. Sizing is the recorded
+    ``target_partitions`` (:func:`compact` records it), else 1."""
+    n = layout.get("target_partitions", 1)
+    for mode in ("partition_by", "cluster_by", "range_by"):
+        if layout.get(mode):
+            return mode, list(layout[mode]), n
+    keys = TABLE_KEYS.get(_name_of(path))
+    if keys and _prune_col(keys) in columns:
+        return "range_by", [_prune_col(keys)], n
+    return "", [], n
 
 
 def existing_keys_in_range(
@@ -704,33 +729,6 @@ def existing_keys_in_range(
     return probe.select(*keys).distinct()
 
 
-# Auto-maintenance: when an append pushes the manifest past
-# APPEND_MANIFEST_WARN entries, the SAME locked write runs an
-# incremental fold_appends (bounded: O(deltas since the last fold)) so
-# batch tables cannot silently degrade when no out-of-band scheduler is
-# running — the autovacuum analog, mirroring the streaming stores'
-# self-fold cadence. The fold honors the table's recorded ``layout``
-# (see compact/fold_appends), so a bucket-clustered store stays
-# clustered. Set False to restore flag-and-warn-only behavior (an
-# operator-scheduled maintenance window).
-AUTO_FOLD_ON_APPEND = True
-
-# Writer-side escalation for OPERATOR-LESS long runs: the bounded fold
-# collapses raw deltas but accumulates one fold tier per cadence, so an
-# unattended week-long backfill (nobody reading warnings, nobody running
-# compact()) still degrades — measured in the 1,000-batch soak's
-# kill-phase resume, where 200 operator-less batches piled up ~99
-# manifest entries. Past AUTO_COMPACT_FACTOR x APPEND_MANIFEST_WARN live
-# entries the append escalates its fold to an INLINE major compact (the
-# autovacuum-without-a-DBA property: maintenance must not depend on an
-# operator reading warnings). The major is O(table) but amortized: tiers
-# reach the bound once per ~FACTOR x WARN^2 appends, and the rewrite
-# applies the recorded layout — sizing included — or the keyed range_by
-# default, so probe pruning comes back clustered. Set to 0/None to
-# restore fold+warn-only behavior (an operator-scheduled major window).
-AUTO_COMPACT_FACTOR = 4
-
-
 def _append_data(
     df: DataFrame,
     path: str,
@@ -747,7 +745,16 @@ def _append_data(
     creating one table race like any other two publishes. It is
     published even for an EMPTY batch, which is how precreating a table
     from an empty frame creates it. Later empty batches publish nothing
-    (streaming replays are the common case).
+    (streaming replays are the common case). A first write with
+    ``partition_by`` records it as the table's layout, so every fold and
+    compact keeps the hive directories (the IVF corpus's ``cell=``).
+
+    Maintenance: a publish that leaves more than APPEND_MANIFEST_WARN
+    entries folds the raw deltas (O(deltas), base and fold tiers carried
+    by reference), or — when the base and tiers alone would fill the
+    bound, so a fold cannot get the count back within it — compacts the
+    whole table (O(table), about once per WARN^2/2 appends). No write
+    leaves more than WARN entries, with no operator in the loop.
 
     CAS: the version dir is written ONCE; a publish that loses the race
     only re-reads the manifest and re-points — pure appends commute, so
@@ -771,7 +778,7 @@ def _append_data(
     # time on every 5 s micro-batch.
     empty = _footer_row_count(verdir) == 0
 
-    def publish() -> int | None:
+    def publish() -> dict | None:
         cur = _manifest_read(path)
         if cur is None and expect not in (_ANY, None):
             raise ManifestConflictError(
@@ -798,91 +805,28 @@ def _append_data(
                 "schema": _merged_schema_json(manifest.get("schema"), df),
             }
         )
+        if cur is None and partition_by:
+            manifest["layout"] = {"partition_by": list(partition_by)}
         basis = cur["version"] if cur is not None else None
         _publish_manifest(
             path, manifest, expect=basis if expect is _ANY else expect
         )
-        return len(data)
+        return data
 
     with _own_version_dir(path, verdir):
-        n_entries = _retry_cas(publish) if expect is _ANY else publish()
-    if n_entries is None:
+        data = _retry_cas(publish) if expect is _ANY else publish()
+    if data is None:
         shutil.rmtree(verdir, ignore_errors=True)
         return
     _gc_versions(path, keep={verdir})
-    if n_entries > APPEND_MANIFEST_WARN:
-        # every append adds one data-map entry, one
-        # version dir, and one manifest-history file; left unchecked the
-        # manifest itself becomes the small-file problem (O(appends) live
-        # entries, O(appends^2) cumulative history bytes, and a GC walk
-        # over every version dir per write). The incremental fold resets
-        # the delta entries in O(deltas); with auto-maintenance off, the
-        # warning is the loud signal that a compaction cadence was
-        # forgotten (table_health flags the same bound).
-        if AUTO_FOLD_ON_APPEND:
-            m2 = _manifest_read(path)
-            lay = (m2.get("layout") or {}) if m2 is not None else {}
-            # None args resolve from the recorded layout inside the fold;
-            # only a layout-less table falls back to the append's own
-            # partitioning
-            pb = None if lay else partition_by
-            # record_layout=False: the append's own partition_by is a
-            # per-fold SHAPING hint here, not an operator layout choice —
-            # without the flag, automatic maintenance would CREATE a
-            # durable {'by': 'fold'} record the operator never chose,
-            # permanently pre-empting the probe-preserving range_by
-            # default on keyed tables (probe_pruning stuck at
-            # 'tiers_only' until a manual compact)
-            _retry_cas(
-                lambda: _fold_appends_once(
-                    df.sparkSession,
-                    path,
-                    partition_by=pb,
-                    record_layout=False,
-                )
-            )
-            m3 = _manifest_read(path)
-            n_entries = len(m3["data"]) if m3 is not None else 0
-            if (
-                AUTO_COMPACT_FACTOR
-                and n_entries > AUTO_COMPACT_FACTOR * APPEND_MANIFEST_WARN
-            ):
-                # the fold tiers themselves saturated the escalation
-                # bound: run the major inline (see AUTO_COMPACT_FACTOR).
-                # Argument-less => recorded layout (columns AND sizing)
-                # or the keyed range_by default, so the rewrite restores
-                # clustered probe pruning rather than flattening it. A
-                # layout-record-less HIVE store (record_layout=False
-                # means auto-folds never created one) must keep its
-                # partition shape through the major too — a bare rewrite
-                # would flatten e.g. a cell-partitioned ANN corpus and
-                # silently kill its partition pruning — so the append's
-                # own partition_by rides along; being a base rewrite, it
-                # is honestly recorded with by="compact".
-                _retry_cas(
-                    lambda: _compact_once(
-                        df.sparkSession, path, partition_cols=pb
-                    )
-                )
-                m4 = _manifest_read(path)
-                n_entries = len(m4["data"]) if m4 is not None else 0
+    if len(data) > APPEND_MANIFEST_WARN:
+        spark = df.sparkSession
+        n_entries = len(data)
+        tiers = sum(k == "all" or k.startswith("fold_") for k in data)
+        if tiers < APPEND_MANIFEST_WARN:
+            n_entries = _retry_cas(lambda: _rewrite(spark, path, major=False))
         if n_entries > APPEND_MANIFEST_WARN:
-            # either auto-maintenance is off, or the fold tiers
-            # themselves saturated the bound (one tier accumulates per
-            # auto-fold, ~WARN appends each) — the bounded-work fold
-            # cannot reduce further and the occasional O(table) major
-            # compact is due. That is an operator/scheduler decision
-            # (it would stall a 5 s micro-batch cadence), so the hook
-            # escalates loudly instead of silently degrading — with the
-            # exact call to run.
-            warnings.warn(
-                f"{path}: manifest carries {n_entries} data dirs "
-                f"(> {APPEND_MANIFEST_WARN}); run compact(spark, "
-                f"{path!r}, target_partitions=...) — per-append "
-                "overhead grows with every version until then",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+            _retry_cas(lambda: _rewrite(spark, path, major=True))
 
 
 # Footer-stat high-watermark probe (round 17): per-file max of a table's
@@ -1106,11 +1050,24 @@ def write_keep_one(
     (:func:`_resolved`). ``order`` must agree with that spec order, as
     :func:`write_tables` guarantees by passing it. Appends commute, so a
     lost CAS race only re-points the manifest, and a replayed batch adds
-    rows that lose (or tie identically) on read; the fold cadence and
-    compact() drop superseded rows from disk. On Delta this whole
-    function is MERGE WHEN MATCHED UPDATE."""
+    rows that lose (or tie identically) on read; fold and compact drop
+    superseded rows from disk. On Delta this whole function is MERGE
+    WHEN MATCHED UPDATE.
+
+    Raises ValueError for a batch without the spec's key or ``keep_one``
+    columns: reads could not resolve its rows to one per key."""
+    spec = TABLE_SPECS[name]
+    missing = [
+        c for c in (*spec.keys, *(c for c, _ in spec.keep_one))
+        if c not in df.columns
+    ]
+    if missing:
+        raise ValueError(
+            f"write_keep_one({name!r}): the batch lacks the table's key or "
+            f"keep_one columns {missing}"
+        )
     _append_data(
-        _keep_first(df, TABLE_KEYS[name], order), _table_path(root, name)
+        _keep_first(df, list(spec.keys), order), _table_path(root, name)
     )
 
 
@@ -1122,8 +1079,10 @@ def seed_manifest_store(
 ) -> None:
     """Create a brand-new manifest store as ONE atomic publish: seed data
     (normally an empty frame — the SCHEMA is the payload), optional
-    recorded ``layout`` (so automatic folds keep the clustering the
-    operator chose, exactly as a compact() would have recorded), and any
+    recorded ``layout`` (``{"cluster_by": [...]}``, ``{"range_by":
+    [...]}`` or ``{"partition_by": [...]}``, optionally with
+    ``target_partitions``: what every fold and compact of the store
+    applies, see :func:`_layout`), and any
     ``extra`` app-level manifest keys (e.g. the rollup ledger's
     content_key_encoding) all flip together. It is the first-write
     publish of :func:`_append_data` for stores whose first manifest must
@@ -1278,11 +1237,14 @@ def _fk_levels(names) -> list[list[str]]:
     return out
 
 
+# Table writes one write_tables call runs at once (its thread pool).
+_WRITE_PARALLELISM = 8
+
+
 def write_tables(
     spark: SparkSession,
     tables: dict[str, DataFrame],
     root: str,
-    max_parallel: int = 8,
     key_spans: dict[str, tuple] | None = None,
 ) -> None:
     """Write a full build_tables() result idempotently. Parents before
@@ -1351,7 +1313,7 @@ def write_tables(
         _write(name)
 
     with ThreadPoolExecutor(
-        max_workers=min(max_parallel, len(topo))
+        max_workers=min(_WRITE_PARALLELISM, len(topo))
     ) as pool:
         for n in topo:
             futures[n] = pool.submit(_write_after_parents, n)
@@ -1462,347 +1424,105 @@ def compact(
     spark: SparkSession,
     path: str,
     target_partitions: int | None = None,
-    partition_cols: list[str] | None = None,
-    cluster_by: list[str] | None = None,
-    range_by: list[str] | None = None,
 ) -> None:
-    """Small-file compaction: streaming ingest appends a few rows per
-    micro-batch, and a year of 5-second batches is millions of tiny files —
-    the classic small-file problem that destroys scan throughput (every
-    file is a task + an open/close). Rewrite the table at a target
-    partition count (repartition by the layout key when given, so files
-    align with the layout key's pruning). A keep-one table is resolved to
-    one row per key first. Publishing is the same atomic `_CURRENT`
-    manifest flip as every writer, so readers racing a compaction
-    always see a full table; the replaced files are GC'd after the grace
-    period. Raises FileNotFoundError for a path that holds no table. Run
-    out-of-band, like VACUUM/OPTIMIZE.
-
-    ``partition_cols`` lays files out as hive directories — directory-
-    level pruning, but hive partition-VALUE inference types the column on
-    read, which silently corrupts string columns whose values look
-    numeric ('04' -> int 4 -> '4'). ``cluster_by`` instead keeps the
-    column IN the data files and clusters+sorts rows by it, so parquet
-    row-group min/max stats prune almost as well with none of the
-    inference hazard — prefer it for string-typed layout keys (the LSH
-    signature store's hex bucket). Mutually exclusive.
-
-    ``range_by`` RANGE-partitions on the key and sorts within each
-    partition, so every output FILE covers a disjoint key span — the
-    right mode for a monotone column (height): a height-range probe
-    then prunes whole files, not just row groups. This is the DEFAULT
-    for a keyed append table (schemas.TABLE_KEYS) when no layout is
-    given or recorded: the idempotent writer's anti-join probe is
-    range-pruned on the table's monotone key
-    (:func:`existing_keys_in_range`), and a bare ``repartition(n)``
-    rewrite round-robins rows so every post-compact file spans the FULL
-    key range — min/max pruning dies and the O(batch) probe silently
-    becomes O(table) (measured: 6 contiguous-span appends, one bare
-    compact(4), every file's height span = the whole table).
-
-    A recorded ``layout`` persists across plain compacts AND is now
-    APPLIED by them (None means "keep what the operator chose" — both
-    the auto-fold and an argument-less operator compact rely on it; a
-    bare compact previously kept the layout metadata while physically
-    flattening the rows). To deliberately FLATTEN a
-    clustered/partitioned table, pass the explicit empty list
-    (``cluster_by=[]``, ``partition_cols=[]`` or ``range_by=[]``): the
-    rewrite is flat and the recorded layout is cleared, so auto-folds
-    stop re-clustering deltas. For a KEYED append table the clearing is
-    one-shot: with no recorded layout, the next argument-less compact
-    or fold re-applies the probe-preserving ``range_by`` default (the
-    O(batch) writer-probe contract outranks a standing flatten); pin an
-    explicit ``cluster_by``/``partition_cols`` to choose a different
-    durable layout instead.
-
-    ``target_partitions=None`` (the default) resolves from the recorded
-    layout's sizing, falling back to 1 — so a plain maintenance
-    ``compact(spark, path)`` on a table recorded with
-    ``{cluster_by: [...], target_partitions: 8}`` preserves BOTH the
-    clustering and the sizing instead of silently rewriting (and
-    re-recording) the table to 1 partition. An explicit value still wins
-    and, being a base rewrite, is durably re-recorded."""
-    if sum(map(bool, (partition_cols, cluster_by, range_by))) > 1:
-        raise ValueError(
-            "partition_cols, cluster_by and range_by are exclusive"
-        )
-    _retry_cas(
-        lambda: _compact_once(
-            spark, path, target_partitions, partition_cols, cluster_by,
-            range_by,
-        )
-    )
-
-
-def _compact_once(
-    spark: SparkSession,
-    path: str,
-    target_partitions: int | None = None,
-    partition_cols: list[str] | None = None,
-    cluster_by: list[str] | None = None,
-    range_by: list[str] | None = None,
-) -> None:
-    # the explicit empty list is the layout-clearing sentinel (flatten +
-    # forget); normalize to None so the rest treats it as "no layout key"
-    reset_layout = partition_cols == [] or cluster_by == [] or range_by == []
-    partition_cols = partition_cols or None
-    cluster_by = cluster_by or None
-    range_by = range_by or None
-    manifest = _manifest_read(path)
-    if manifest is None:
+    """Major compaction: rewrite the whole table as one version under its
+    layout (:func:`_layout`) — the small-file fix for a table that
+    streaming ingest built from many tiny appends (every file is a task
+    and an open/close). A keep-one table is resolved to one row per key
+    first. The writer runs this itself when folds can no longer keep the
+    manifest within APPEND_MANIFEST_WARN (:func:`_append_data`); call it
+    out-of-band, like VACUUM/OPTIMIZE, to size the table:
+    ``target_partitions`` is recorded into the layout, so every later
+    rewrite keeps it. Publishing is the same atomic `_CURRENT` flip as
+    every writer, so readers racing a compaction always see a full
+    table; the replaced files are GC'd after the grace period. Raises
+    FileNotFoundError for a path that holds no table."""
+    n = _retry_cas(lambda: _rewrite(spark, path, True, target_partitions))
+    if n == 0:
         raise FileNotFoundError(f"{path}: no table (no {_CURRENT_FILE})")
-    # a keep-one table compacts to exactly one row per key on disk
-    df = _resolved(_read_manifest_data(spark, path, manifest), _name_of(path))
-    no_layout_args = (
-        partition_cols is None and cluster_by is None and range_by is None
-    )
-    if no_layout_args and not reset_layout:
-        # an argument-less compact must not flatten a chosen layout:
-        # apply the recorded one, else default a KEYED append table to
-        # range-clustering on its monotone probe column — the layout
-        # the idempotent writer's range-pruned anti-join depends on
-        # (see compact()'s range_by note)
-        lay = manifest.get("layout") or {}
-        if lay:
-            partition_cols = lay.get("partition_by")
-            cluster_by = lay.get("cluster_by")
-            range_by = lay.get("range_by")
-        else:
-            range_by = _keyed_default_range_by(path, df.columns)
-    if target_partitions is None:
-        # an omitted target_partitions resolves from the recorded
-        # layout's sizing WHATEVER columns were passed — a maintenance
-        # compact, and equally an operator re-cluster that left sizing
-        # unset, must not rewrite (and durably re-record) a table the
-        # operator sized at N down to 1 partition
-        target_partitions = (manifest.get("layout") or {}).get(
-            "target_partitions"
-        )
-    if target_partitions is None:
-        target_partitions = 1
-    if partition_cols:
-        out = df.repartition(target_partitions, *partition_cols)
-    elif cluster_by:
-        out = df.repartition(
-            target_partitions, *cluster_by
-        ).sortWithinPartitions(*cluster_by)
-    elif range_by:
-        # disjoint per-FILE key spans: range shuffle + in-file sort, so
-        # parquet footer min/max prunes whole files on the probe column
-        out = df.repartitionByRange(
-            target_partitions, *range_by
-        ).sortWithinPartitions(*range_by)
-    else:
-        out = df.repartition(target_partitions)
-    ver = _new_version_id()
-    verdir = os.path.join(path, _VERSIONS_DIR, ver)
-    writer = out.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(verdir)
-    data = {"all": os.path.join(_VERSIONS_DIR, ver)}
-    # carry APP-LEVEL manifest keys forward (everything outside the
-    # structural keys this rewrite owns): stores ride state INSIDE the
-    # manifest so it flips atomically with the data — the heavy-hitter
-    # store's n_total/last_batch/batch_fps, the rollup ledger's
-    # content_key_encoding. _append_data and _fold_appends_once already
-    # preserve them (dict(cur) + update); a full compact rebuilding from
-    # scratch silently dropped them, so one out-of-band compact() on the
-    # hh store would reset its count state — the exact loss the manifest
-    # placement exists to prevent.
-    m = {
-        k: v
-        for k, v in manifest.items()
-        if k not in ("version", "data", "schema", "layout")
-    }
-    m.update({"version": ver, "data": data})
-    # compaction changes files, never content: carry the pinned logical
-    # schema forward (or establish it from the compacted output)
-    m["schema"] = _merged_schema_json(manifest.get("schema"), out)
-    # record the table's file LAYOUT so maintenance that runs without
-    # the caller's arguments (the auto-fold in _append_data) keeps the
-    # clustering/partitioning the operator chose — a bucket-clustered
-    # signature store must never be flattened by an automatic fold.
-    # "by" records PROVENANCE: a compact-written layout means the BASE
-    # was rewritten under it (probe pruning holds table-wide); a
-    # fold-written one covers delta tiers only — table_health's
-    # probe_pruning distinguishes the two
-    if cluster_by:
-        m["layout"] = {
-            "cluster_by": cluster_by,
-            "target_partitions": target_partitions,
-            "by": "compact",
-        }
-    elif range_by:
-        m["layout"] = {
-            "range_by": range_by,
-            "target_partitions": target_partitions,
-            "by": "compact",
-        }
-    elif partition_cols:
-        m["layout"] = {
-            "partition_by": partition_cols,
-            "target_partitions": target_partitions,
-            "by": "compact",
-        }
-    elif reset_layout:
-        pass  # operator flattened the table: drop the recorded layout
-    elif "layout" in manifest:
-        m["layout"] = manifest["layout"]
-    with _own_version_dir(path, verdir):
-        _publish_manifest(path, m, expect=manifest["version"])
-    _gc_versions(path, keep={verdir})
 
 
-def fold_appends(
+def fold_appends(spark: SparkSession, path: str) -> bool:
+    """Incremental compaction: fold ONLY the version dirs appended since
+    the last compact/fold into one new tier under the table's layout,
+    carrying the base ``"all"`` entry and earlier tiers by reference —
+    cost is O(deltas since the last fold), never O(table), which is what
+    lets the writer fold on every bound crossing when the base holds a
+    100 TB store. Returns False for a path that holds no table and True
+    otherwise, including the nothing-to-fold case. Same atomic
+    `_CURRENT` flip; a crash leaves the previous manifest live."""
+    return _retry_cas(lambda: _rewrite(spark, path, False)) > 0
+
+
+def _rewrite(
     spark: SparkSession,
     path: str,
-    partition_by: list[str] | None = None,
+    major: bool,
     target_partitions: int | None = None,
-    cluster_by: list[str] | None = None,
-    range_by: list[str] | None = None,
-) -> bool:
-    """Incremental compaction of a manifest-layout APPEND table: fold
-    ONLY the version dirs appended since the last compact/fold into one
-    new version, carrying the base ``"all"`` entry by reference — cost is
-    O(deltas since last fold), never O(table), which is what makes a
-    per-N-batches cadence affordable when the base holds a 100 TB store
-    (a full :func:`compact` there re-writes everything). Returns False
-    for a path that holds no table and True otherwise, including the
-    nothing-to-fold case. Same atomic `_CURRENT` flip; a crash leaves
-    the previous manifest live."""
-    if sum(map(bool, (partition_by, cluster_by, range_by))) > 1:
-        raise ValueError(
-            "partition_by, cluster_by and range_by are exclusive"
-        )
-    return _retry_cas(
-        lambda: _fold_appends_once(
-            spark, path, partition_by, target_partitions, cluster_by,
-            range_by,
-        )
-    )
-
-
-def _fold_appends_once(
-    spark: SparkSession,
-    path: str,
-    partition_by: list[str] | None = None,
-    target_partitions: int | None = None,
-    cluster_by: list[str] | None = None,
-    range_by: list[str] | None = None,
-    record_layout: bool = True,
-) -> bool:
+) -> int:
+    """One attempt at the one maintenance rewrite (run it under
+    :func:`_retry_cas`): read some of the table's manifest entries,
+    write their rows as one new version under :func:`_layout`, and
+    publish it in their place by CAS against the manifest read. A FOLD
+    (``major=False``) reads the raw per-append deltas and carries the
+    base ``"all"`` and the ``fold_*`` tiers by reference; a MAJOR reads
+    every entry and leaves the single entry ``"all"``. A keep-one
+    table's superseded rows among what is read drop here; rows
+    superseded across tiers wait for the next major. Everything else in
+    the manifest is carried: app-level keys (the heavy-hitter store's
+    counts, the rollup ledger's encoding) ride in the manifest so they
+    flip atomically with the data, the pinned schema is widened, never
+    narrowed, and the recorded layout gains ``target_partitions`` when
+    given. Returns the number of entries the table is left with: 0 when
+    the path holds no table, and the current count when a fold finds
+    fewer than two deltas."""
     m = _manifest_read(path)
     if m is None:
-        return False
-    explicit_cols = (
-        partition_by is not None
-        or cluster_by is not None
-        or range_by is not None
-    )
-    want_keyed_default = False
-    if not explicit_cols:
-        # argument-less folds (incl. the auto-fold) maintain the recorded
-        # layout — a clustered store must never be flattened by cadence
-        # maintenance. An EXPLICIT target_partitions still wins (the
-        # caller is sizing this ONE fold's output; only unset values
-        # resolve from the layout, and a fold never writes its sizing
-        # back into the record).
-        lay = m.get("layout") or {}
-        partition_by = lay.get("partition_by")
-        cluster_by = lay.get("cluster_by")
-        range_by = lay.get("range_by")
-        if target_partitions is None:
-            target_partitions = lay.get("target_partitions")
-        # same keyed-table default as _compact_once: a never-compacted
-        # keyed table's auto-fold must not flatten the contiguous delta
-        # spans its own probe pruning relies on (applied after the delta
-        # frame is built — the default is column-guarded)
-        want_keyed_default = not lay
-    if target_partitions is None:
-        target_partitions = 1
-    # tiering: raw per-batch deltas fold at the cadence; prior FOLD
-    # outputs ("fold_*") and the compact base ("all") are carried by
-    # reference, never re-read — so each fold costs O(deltas since the
-    # LAST FOLD), not O(everything since the last full compact). Fold
-    # entries accumulate one per cadence; table_health's needs_compaction
-    # bound is the signal to run the occasional full compact() that
-    # resets them (the LSM minor/major compaction split).
+        return 0
     carried = {
         k: rel
         for k, rel in m["data"].items()
-        if k == "all" or k.startswith("fold_")
+        if not major and (k == "all" or k.startswith("fold_"))
     }
-    deltas = {k: rel for k, rel in m["data"].items() if k not in carried}
-    if len(deltas) < 2:
-        return True  # manifest-managed and already folded tight
-    # The deltas read under the manifest's PINNED schema: _append_data
-    # widens it on every append, so it covers all deltas, and pinning
-    # also fixes hive partition-value TYPES — folding a partition_by
-    # append table whose values look numeric with per-root inference
-    # would retype them ('04' -> int 4) in the fold output, the exact
-    # corruption compact()'s docstring defends against.
-    # a keep-one table's superseded rows among the deltas drop here;
-    # rows superseded across tiers wait for the next compact()
+    read = {k: rel for k, rel in m["data"].items() if k not in carried}
+    if not major and len(read) < 2:
+        return len(m["data"])
+    layout = dict(m.get("layout") or {})
+    if target_partitions is not None:
+        layout["target_partitions"] = target_partitions
+    # the read pins the manifest's schema, which also fixes hive
+    # partition-value TYPES: per-root inference would retype '04' to the
+    # int 4 in the rewritten files
     df = _resolved(
-        _read_manifest_data(spark, path, dict(m, data=deltas)), _name_of(path)
+        _read_manifest_data(spark, path, dict(m, data=read)), _name_of(path)
     )
-    if want_keyed_default:
-        range_by = _keyed_default_range_by(path, df.columns)
-    if partition_by:
-        df = df.repartition(target_partitions, *partition_by)
-    elif cluster_by:
-        # cluster+sort instead of hive dirs: row-group stats prune, and
-        # the layout key stays a typed data column (see compact's note)
-        df = df.repartition(
-            target_partitions, *cluster_by
-        ).sortWithinPartitions(*cluster_by)
-    elif range_by:
-        # disjoint per-file key spans (see compact's range_by note)
-        df = df.repartitionByRange(
-            target_partitions, *range_by
-        ).sortWithinPartitions(*range_by)
+    mode, cols, n = _layout(path, layout, df.columns)
+    if mode == "range_by":
+        out = df.repartitionByRange(n, *cols)
     else:
-        df = df.repartition(target_partitions)
+        out = df.repartition(n, *cols)
+    if mode in ("cluster_by", "range_by"):
+        out = out.sortWithinPartitions(*cols)
     ver = _new_version_id()
     verdir = os.path.join(path, _VERSIONS_DIR, ver)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
+    writer = out.write.mode("overwrite")
+    if mode == "partition_by":
+        writer = writer.partitionBy(*cols)
     writer.parquet(verdir)
     data = dict(carried)
-    data["fold_" + ver] = os.path.join(_VERSIONS_DIR, ver)
-    manifest = dict(m)
-    manifest.update(
-        {
-            "version": ver,
-            "data": data,
-            "schema": _merged_schema_json(m.get("schema"), df),
-        }
+    data["all" if major else "fold_" + ver] = os.path.join(_VERSIONS_DIR, ver)
+    new = dict(
+        m,
+        version=ver,
+        data=data,
+        schema=_merged_schema_json(m.get("schema"), out),
     )
-    # layout recording is compact's job (a compact rewrites the BASE
-    # under the layout; a fold only shapes delta tiers): folds carry the
-    # existing record forward untouched — never overwriting its sizing
-    # with a one-off override — and only CREATE a record when the caller
-    # chose explicit columns on a record-less table, marked "by": "fold"
-    # so table_health knows the base was not rewritten under it. The
-    # keyed default is derived fresh each fold and never recorded.
-    # record_layout=False (the auto-fold in _append_data) downgrades
-    # explicit columns to a per-fold shaping hint: automatic maintenance
-    # must never create durable layout records the operator did not
-    # choose (on a keyed table such a record would also pre-empt the
-    # probe-preserving range_by default).
-    if record_layout and explicit_cols and "layout" not in m:
-        if cluster_by:
-            manifest["layout"] = {"cluster_by": cluster_by, "by": "fold"}
-        elif range_by:
-            manifest["layout"] = {"range_by": range_by, "by": "fold"}
-        elif partition_by:
-            manifest["layout"] = {"partition_by": partition_by, "by": "fold"}
+    if layout:
+        new["layout"] = layout
     with _own_version_dir(path, verdir):
-        _publish_manifest(path, manifest, expect=m["version"])
+        _publish_manifest(path, new, expect=m["version"])
     _gc_versions(path, keep={verdir})
-    return True
+    return len(data)
 
 
 def vacuum(
@@ -2018,38 +1738,27 @@ def table_health(root: str) -> list[dict]:
         # writer's anti-join probe stays O(batch) only while min/max
         # stats on the prune column actually skip files.
         #   "natural"   — no compacted "all" base: raw deltas carry
-        #                 contiguous spans by construction and fold tiers
-        #                 ride the keyed range_by default;
-        #   "clustered" — a COMPACT-written layout covers the prune
-        #                 column, so the base itself was rewritten under
-        #                 it (layout "by" provenance; legacy records
-        #                 without the marker were compact-written);
-        #   "tiers_only"— a fold-created layout covers the column but the
-        #                 "all" base predates it and stays flat — probes
-        #                 still scan the whole base;
-        #   "degraded"  — an "all" base exists with no covering layout.
-        # Fix for the last two: one bare compact().
+        #                 contiguous spans by construction;
+        #   "clustered" — the table's layout (:func:`_layout`), which
+        #                 the base was rewritten under, covers the prune
+        #                 column;
+        #   "degraded"  — an "all" base laid out by columns that miss
+        #                 the prune column: probes scan the whole base.
         probe_pruning = None
-        if name in TABLE_SPECS and not TABLE_SPECS[name].keep_one:
-            pc = _prune_col(TABLE_SPECS[name].keys)
-            lay = m.get("layout") or {}
-            laid = (
-                lay.get("range_by")
-                or lay.get("cluster_by")
-                or lay.get("partition_by")
-                or []
-            )
-            covered = pc in laid
-            base_rewritten = covered and lay.get("by", "compact") == "compact"
-            has_all = "all" in m["data"]
-            if not has_all:
+        spec = TABLE_SPECS.get(name)
+        if spec is not None and not spec.keep_one:
+            if "all" not in m["data"]:
                 probe_pruning = "natural"
-            elif base_rewritten:
-                probe_pruning = "clustered"
-            elif covered:
-                probe_pruning = "tiers_only"
             else:
-                probe_pruning = "degraded"
+                schema = _pinned_schema(m)
+                _, cols, _ = _layout(
+                    path, m.get("layout") or {},
+                    schema.fieldNames() if schema is not None else (),
+                )
+                probe_pruning = (
+                    "clustered" if _prune_col(spec.keys) in cols
+                    else "degraded"
+                )
         out.append(
             {
                 "table": name,
@@ -2059,8 +1768,8 @@ def table_health(root: str) -> list[dict]:
                 "n_versions": n_versions,
                 "manifest_entries": n_entries,
                 "manifest_history": n_history,
-                # the compaction-cadence flag: appends past the bound mean
-                # per-write overhead is growing — schedule compact()
+                # over the bound: a writer that ran with a larger bound
+                # left the table — compact() it
                 "needs_compaction": n_entries > APPEND_MANIFEST_WARN,
                 # publish-time GC leaves version dirs no manifest names
                 # (crash orphans) to vacuum() — surface their growth

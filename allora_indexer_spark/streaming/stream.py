@@ -627,12 +627,10 @@ def start_continuous_rollup(
     (warehouse.py) folds old partials into one row per window out-of-band.
 
     Scale: the ledger anti-join is a shuffle join pruned to the batch's
-    key range (with the ledger compacted ``range_by`` the key, that range
-    filter becomes file-level skipping), and the duplicate-partial
-    probe reads only this batch's windows — per-batch cost tracks batch
-    size, not total history. In the full pipeline the events fact table
-    plays the ledger's role, so the extra storage is only the standalone
-    form's."""
+    key range, and the duplicate-partial probe reads only this batch's
+    windows — per-batch cost tracks batch size, not total history. In
+    the full pipeline the events fact table plays the ledger's role, so
+    the extra storage is only the standalone form's."""
 
     from allora_indexer_spark.plans import warehouse as wh
 
@@ -723,8 +721,7 @@ def start_continuous_rollup(
                 part = part_cached
                 if wlo is not None:
                     # probe only this batch's window span — bounded by
-                    # batch size, not rollup history (file-skipped when
-                    # compacted into a range-sorted layout)
+                    # batch size, not rollup history
                     done = (
                         wh.read_dir(spark, rollup_dir)
                         .filter(F.col("window_start").between(wlo, whi))
@@ -890,7 +887,6 @@ def start_incremental_near_dup(
     sig_dir: str,
     checkpoint_dir: str,
     threshold: float = 0.5,
-    compact_every: int | None = 32,
 ) -> StreamingQuery:
     """Incremental near-duplicate detection: each micro-batch of NEW
     documents is LSH-banded, probed against the persisted signature store
@@ -902,12 +898,13 @@ def start_incremental_near_dup(
     - every signature carries a 2-hex-char band-hash ``bucket`` as a
       TYPED DATA column (never a hive partition dir — partition-value
       inference would retype an all-digit root, '04' -> int 4, and break
-      the probe filter); the cadenced fold/compact clusters and sorts the
-      store by it, so the probe's ``bucket.isin([...])`` prunes at the
-      parquet row-group level — probe cost tracks the batch's collision
-      neighborhood, never store size (the streaming twin of the K1
-      range-pruned ledger probe). Un-folded per-batch deltas are small
-      and scanned whole until the next fold;
+      the probe filter); the store is created with a recorded
+      ``cluster_by`` layout, so every fold and compact clusters and sorts
+      it by the bucket, and the probe's ``bucket.isin([...])`` prunes at
+      the parquet row-group level — probe cost tracks the batch's
+      collision neighborhood, never store size (the streaming twin of
+      the K1 range-pruned ledger probe). Un-folded per-batch deltas are
+      small and scanned whole until the next fold;
     - pairs are (least, greatest)-normalized and anti-joined against the
       already-emitted pair set pruned to the batch's doc span, so a
       crash-retry between the two appends below converges instead of
@@ -915,13 +912,13 @@ def start_incremental_near_dup(
     - re-delivered documents (at-least-once sources) are dropped by a
       doc_id anti-join against the store before they can pair with
       themselves or re-append signatures;
-    - the store grows one file set per batch; every ``compact_every``-th
-      batch the deltas are FOLDED (``warehouse.fold_appends`` — prior
-      folds and the compacted base carried by reference, O(deltas) per
-      fold), and when the accumulated fold tiers exceed the manifest
-      bound a full bucket-clustered ``compact()`` resets them — the LSM
-      minor/major split, so per-batch overhead stays flat over an
-      unbounded run. Reads and appends go through the stores'
+    - the store grows one file set per batch, and the writer's own
+      maintenance keeps it bounded (``warehouse._append_data``): past
+      ``APPEND_MANIFEST_WARN`` entries the deltas are folded (prior
+      folds and the base carried by reference, O(deltas) per fold), and
+      once the fold tiers fill the bound the store is compacted whole —
+      the LSM minor/major split, so per-batch overhead stays flat over
+      an unbounded run. Reads and appends go through the stores'
       manifests, so the stream keeps working across compactions.
     """
 
@@ -941,7 +938,6 @@ def start_incremental_near_dup(
             pairs_dir,
             sig_dir,
             threshold,
-            compact_every,
         )
 
     return (
@@ -959,7 +955,6 @@ def _merge_near_dup_batch(
     pairs_dir: str,
     sig_dir: str,
     threshold: float,
-    compact_every: int | None,
     signature_fn=None,
     verify_fn=None,
     carry_cols: tuple[str, ...] = ("s",),
@@ -969,8 +964,8 @@ def _merge_near_dup_batch(
     :func:`start_incremental_near_dup` for the scale design). Exposed
     module-level — like :func:`_merge_heavy_hitter_batch` — so replay
     idempotence and LONG maintenance soaks (tools/soak.py drives ~10^3
-    batches through the fold/compact cadence) are directly testable
-    without per-batch streaming-trigger overhead.
+    batches through the writer's fold/compact rule) are directly
+    testable without per-batch streaming-trigger overhead.
 
     The store/probe/fold machinery is MODALITY-GENERIC (round 15):
     ``signature_fn`` maps a (doc_id, text) batch to band rows
@@ -979,7 +974,7 @@ def _merge_near_dup_batch(
     pairs; the defaults are the text MinHash+Jaccard pipeline, and
     :func:`merge_hash_near_dup_batch` plugs in the image-dHash / audio-
     fingerprint family (popcount verify) — same bucket clustering, same
-    crash-retry convergence, same LSM fold cadence."""
+    crash-retry convergence, same store maintenance."""
 
     from allora_indexer_spark.operators.dedup import (
         banded_signatures,
@@ -1021,16 +1016,13 @@ def _merge_near_dup_batch(
         # dropped WHOLE by the retry's doc_id anti-join, and its missing
         # bands never written. The store is seeded with its recorded
         # layout in one atomic publish (same mechanism as the rollup
-        # ledger), so automatic folds keep it bucket-clustered.
+        # ledger), so the writer's folds and compactions keep it
+        # bucket-clustered.
         if wh._manifest_read(sig_dir) is None:
             wh.seed_manifest_store(
                 cached.limit(0),
                 sig_dir,
-                layout={
-                    "cluster_by": ["bucket"],
-                    "target_partitions": 1,
-                    "by": "compact",
-                },
+                layout={"cluster_by": ["bucket"]},
                 extra=seed_extra,
             )
         store = None
@@ -1070,18 +1062,14 @@ def _merge_near_dup_batch(
             .dropDuplicates(["doc_a", "doc_b"])
         )
         pairs = verify_fn(cand)
-        # seed the pairs store with a recorded range_by layout, so
-        # _append_data's auto-fold/escalation keep it bounded AND
-        # doc_a-clustered: the per-batch doc_a range probe file-prunes.
+        # seed the pairs store with a recorded range_by layout, so the
+        # writer's folds and compactions keep it doc_a-clustered: the
+        # per-batch doc_a range probe file-prunes.
         if wh._manifest_read(pairs_dir) is None:
             wh.seed_manifest_store(
                 pairs.limit(0),
                 pairs_dir,
-                layout={
-                    "range_by": ["doc_a"],
-                    "target_partitions": 1,
-                    "by": "compact",
-                },
+                layout={"range_by": ["doc_a"]},
             )
         pairs = pairs_cached = pairs.persist()
         lo, hi = pairs.agg(
@@ -1102,30 +1090,6 @@ def _merge_near_dup_batch(
         # clustered column give the pruning instead.
         wh.append_dir(pairs, pairs_dir)
         wh.append_dir(bands, sig_dir)
-        if (
-            compact_every
-            and batch_id > 0
-            and batch_id % compact_every == 0
-        ):
-            # fold the per-batch file sets back down — incremental
-            # (O(deltas since last fold), the base signature set is
-            # carried by reference, which matters when the store
-            # holds a corpus-sized signature history). Same atomic-flip
-            # machinery as the warehouse tables, so a crash mid-fold
-            # leaves the previous store intact.
-            wh.fold_appends(spark, sig_dir, cluster_by=["bucket"])
-            m = wh._manifest_read(sig_dir)
-            if len(m["data"]) > wh.APPEND_MANIFEST_WARN:
-                # fold tiers accumulated past the manifest bound: run
-                # the occasional FULL compact that resets them (the LSM
-                # major compaction — acting on the same signal
-                # table_health reports)
-                wh.compact(
-                    spark,
-                    sig_dir,
-                    target_partitions=max(1, len(m["data"]) // 8),
-                    cluster_by=["bucket"],
-                )
     finally:
         cached.unpersist()
         if pairs_cached is not None:
@@ -1142,7 +1106,6 @@ def merge_hash_near_dup_batch(
     sig_dir: str,
     modality: str = "image",
     tau: int = 3,
-    compact_every: int | None = 32,
     plan: dict | None = None,
 ) -> None:
     """One micro-batch of the per-modality HASH near-dup pipeline
@@ -1154,7 +1117,7 @@ def merge_hash_near_dup_batch(
     exact-popcount-verified at hamming <= tau, then appended. Rides
     :func:`_merge_near_dup_batch`'s store machinery verbatim — bucket
     clustering (first 2 hex chars of the band value), redelivery
-    anti-join, crash-retry pair convergence, LSM fold/compact cadence —
+    anti-join, crash-retry pair convergence, the writer's fold/compact —
     so every T3 (effectively-once) and flatness property the text store
     soaks already pin applies to this family by construction, plus the
     direct tests in tests/test_streaming.py.
@@ -1278,7 +1241,6 @@ def merge_hash_near_dup_batch(
         pairs_dir,
         sig_dir,
         0.0,  # threshold unused: verify() owns the hamming gate
-        compact_every,
         signature_fn=sig_fn,
         verify_fn=verify,
         carry_cols=carry,
@@ -1294,7 +1256,6 @@ def start_incremental_hash_near_dup(
     checkpoint_dir: str,
     modality: str = "image",
     tau: int = 3,
-    compact_every: int | None = 32,
     plan: dict | None = None,
     trigger: dict | None = None,
 ) -> StreamingQuery:
@@ -1323,7 +1284,7 @@ def start_incremental_hash_near_dup(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         merge_hash_near_dup_batch(
             spark, batch_df, batch_id, pairs_dir, sig_dir,
-            modality, tau, compact_every, plan=plan,
+            modality, tau, plan=plan,
         )
 
     return (

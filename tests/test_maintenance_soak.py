@@ -1,16 +1,14 @@
-"""Bounded in-suite soak of the append-path maintenance stack: ~100
+"""Bounded in-suite soak of the writer's maintenance rule: ~100
 micro-batches through write_insert_if_absent with a small manifest bound,
-so several auto-folds AND at least one fold-tier saturation -> operator
-major compact cycle land inside the test. Pins the three claims the LSM
-design makes (the full ~10^3-batch curve lives in tools/soak.py, run
-out-of-band and recorded in BASELINE.md):
+so several folds AND several whole-table compactions land inside the
+test, with no operator in the loop. Pins the three claims the LSM design
+makes (the full ~10^3-batch curve lives in tools/soak.py, run
+out-of-band):
 
 - per-batch cost stays FLAT (no O(appends) creep between maintenance);
-- the live manifest's data-entry count stays bounded by
-  APPEND_MANIFEST_WARN + accumulating fold tiers, never O(appends);
-- saturation escalates loudly at the predicted ~WARN^2/2 cadence and a
-  full compact() resets it — the autovacuum analog the reference gets
-  for free from Postgres.
+- no write leaves more than APPEND_MANIFEST_WARN manifest entries;
+- majors land at the predicted (WARN+2)(WARN-1)/2 + 1 cadence — the
+  autovacuum analog the reference gets for free from Postgres.
 """
 
 from __future__ import annotations
@@ -18,7 +16,6 @@ from __future__ import annotations
 import os
 import statistics
 import time
-import warnings as _warnings
 
 import pytest
 
@@ -48,37 +45,34 @@ def test_append_soak_flat_cost_bounded_manifest(spark, tmp_path, monkeypatch):
     times: list[float] = []
     majors: list[int] = []
     max_entries = 0
+    base = warehouse._manifest_read(path)["data"]["all"]
     for i in range(1, n_batches + 1):
         t0 = time.perf_counter()
-        with _warnings.catch_warnings(record=True) as caught:
-            _warnings.simplefilter("always", RuntimeWarning)
-            warehouse.write_insert_if_absent(
-                spark, _blocks(spark, i * rows, rows), root, "block_info"
-            )
-        if any("compact" in str(w.message) for w in caught):
-            # the escalation the saturated fold tiers demand: the
-            # operator's major compact resets them
-            warehouse.compact(spark, path, target_partitions=1)
-            majors.append(i)
+        warehouse.write_insert_if_absent(
+            spark, _blocks(spark, i * rows, rows), root, "block_info"
+        )
         times.append(time.perf_counter() - t0)
         m = warehouse._manifest_read(path)
         max_entries = max(max_entries, len(m["data"]))
+        if m["data"].get("all") != base:  # the writer compacted
+            base = m["data"]["all"]
+            majors.append(i)
 
     # no rows lost across ~100 maintenance-interleaved appends
     out = warehouse.read_table(spark, root, "block_info")
     assert out.count() == (n_batches + 1) * rows
     assert out.select("height").distinct().count() == (n_batches + 1) * rows
 
-    # manifest entries bounded: base + warn-many deltas + accumulated fold
-    # tiers (tiers reset at each major) — far below the 100+ an unmaintained
-    # table would carry
-    assert max_entries <= 2 * warehouse.APPEND_MANIFEST_WARN + 2, max_entries
+    # manifest entries bounded by the rule — far below the 100+ an
+    # unmaintained table would carry
+    assert max_entries <= warehouse.APPEND_MANIFEST_WARN, max_entries
 
-    # saturation cadence: majors happened, roughly every ~WARN^2/2 appends
-    # (generous band — fold/batch alignment shifts it)
-    assert majors, "fold tiers never saturated in 100 batches at WARN=5"
+    # major cadence: base + WARN-1 fold tiers fill the bound after
+    # (WARN+2)(WARN-1)/2 appends, and the next one compacts
+    w = warehouse.APPEND_MANIFEST_WARN
     cadences = [b - a for a, b in zip([0] + majors, majors)]
-    assert all(4 <= c <= 40 for c in cadences), (majors, cadences)
+    assert cadences == [(w + 2) * (w - 1) // 2 + 1] * len(majors), cadences
+    assert len(majors) >= 5, majors
 
     # flat per-batch cost: median of the last quarter within 2.5x of the
     # median of the first quarter (warmup excluded; the bound is loose
@@ -108,17 +102,16 @@ def test_append_soak_flat_cost_bounded_manifest(spark, tmp_path, monkeypatch):
 def test_operatorless_backfill_escalates_to_inline_major(
     spark, tmp_path, monkeypatch
 ):
-    """An unattended backfill with NO operator in the loop (nobody reads
-    warnings, nobody runs compact()) must keep manifest entries bounded:
-    past AUTO_COMPACT_FACTOR x APPEND_MANIFEST_WARN live entries the
-    append escalates its fold to an INLINE major compact. Pre-fix, the
-    1,000-batch soak's 200-batch operator-less resume piled up ~99
-    manifest entries with per-append probe overhead growing every
-    version. Also pins that the escalated major preserves the recorded
-    layout's sizing (it must not flatten the table to 1 partition) and
-    that the idempotent-writer contract survives the inline rewrites."""
+    """An unattended backfill with NO operator in the loop (nobody runs
+    compact()) must keep manifest entries bounded: once the fold tiers
+    fill APPEND_MANIFEST_WARN, the append compacts the whole table
+    INLINE. Before the writer compacted, the 1,000-batch soak's
+    200-batch operator-less resume piled up ~99 manifest entries with
+    per-append probe overhead growing every version. Also pins that the
+    inline major preserves the recorded sizing (it must not flatten the
+    table to 1 partition) and that the idempotent-writer contract
+    survives the inline rewrites."""
     monkeypatch.setattr(warehouse, "APPEND_MANIFEST_WARN", 3)
-    monkeypatch.setattr(warehouse, "AUTO_COMPACT_FACTOR", 2)
     root = str(tmp_path / "wh")
     path = os.path.join(root, "block_info")
     rows = 3
@@ -130,35 +123,25 @@ def test_operatorless_backfill_escalates_to_inline_major(
     n_batches = 60
     times: list[float] = []
     entries_after: list[int] = []
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("ignore", RuntimeWarning)
-        for i in range(1, n_batches + 1):
-            t0 = time.perf_counter()
-            warehouse.write_insert_if_absent(
-                spark, _blocks(spark, i * rows, rows), root, "block_info"
-            )
-            times.append(time.perf_counter() - t0)
-            m = warehouse._manifest_read(path)
-            entries_after.append(len(m["data"]))
+    for i in range(1, n_batches + 1):
+        t0 = time.perf_counter()
+        warehouse.write_insert_if_absent(
+            spark, _blocks(spark, i * rows, rows), root, "block_info"
+        )
+        times.append(time.perf_counter() - t0)
+        m = warehouse._manifest_read(path)
+        entries_after.append(len(m["data"]))
 
-    # bounded WITHOUT any operator action: never past the escalation
-    # bound (+1 for the delta that lands before the next maintenance)
-    bound = (
-        warehouse.AUTO_COMPACT_FACTOR * warehouse.APPEND_MANIFEST_WARN + 1
-    )
-    assert max(entries_after) <= bound, (max(entries_after), entries_after)
+    # bounded WITHOUT any operator action
+    assert max(entries_after) <= warehouse.APPEND_MANIFEST_WARN, entries_after
     # at least one inline major actually ran: only a major collapses the
     # manifest back to the single base entry mid-run
     assert any(e == 1 for e in entries_after[3:]), entries_after
 
-    # the escalated majors preserved the operator-chosen sizing (tp=2)
-    # and the probe-preserving layout — base rewritten under it
+    # the inline majors preserved the operator-chosen sizing (tp=2), and
+    # the base was rewritten under the probe-preserving range_by default
     m = warehouse._manifest_read(path)
-    assert m.get("layout") == {
-        "range_by": ["height"],
-        "target_partitions": 2,
-        "by": "compact",
-    }
+    assert m.get("layout") == {"target_partitions": 2}
     (h,) = [
         r for r in warehouse.table_health(root) if r["table"] == "block_info"
     ]

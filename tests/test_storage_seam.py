@@ -343,8 +343,8 @@ def test_keep_one_and_health_metadata_ops_envelope(
 
     def lc(h):
         return spark.createDataFrame(
-            [(1, True, h), (2, False, h)],
-            "topic_id int, is_worker boolean, height long",
+            [(1, True, h, h), (2, False, h, h)],
+            "topic_id int, is_worker boolean, height long, height_tx long",
         )
 
     warehouse.write_keep_one(spark, lc(100), root, "last_commit_values", order)

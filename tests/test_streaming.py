@@ -645,74 +645,59 @@ def test_streaming_heavy_hitters_guarantees_and_replay(spark, tmp_path):
     assert report2 == report
 
 
-def test_incremental_near_dup_store_compaction_keeps_probing(spark, tmp_path):
-    """The signature store stays correct ACROSS compactions: appends and
-    probes are manifest-aware, so a batch arriving after a compact() still
-    pairs against pre-compaction signatures, and the live file set is
-    folded back to one file per bucket — probe cost stays flat over an
-    unbounded run instead of growing with batch count."""
+def test_incremental_near_dup_store_compaction_keeps_probing(
+    spark, tmp_path, monkeypatch
+):
+    """The signature store stays correct ACROSS the writer's maintenance:
+    appends and probes are manifest-aware, so a batch arriving after a
+    fold still pairs against the folded signatures, a fold carries the
+    base by reference, and once the base and fold tiers fill the
+    manifest bound the writer compacts the store back to one file per
+    bucket — probe cost stays flat over an unbounded run instead of
+    growing with batch count."""
     import os
 
     from allora_indexer_spark.plans import warehouse
 
+    monkeypatch.setattr(warehouse, "APPEND_MANIFEST_WARN", 2)
     docs_dir = tmp_path / "docs"
     docs_dir.mkdir()
     pairs_dir = str(tmp_path / "pairs")
     sig_dir = str(tmp_path / "sigs")
     ckpt = str(tmp_path / "ckpt")
 
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    feeds = [
-        [(1, base), (2, "one two three four five six seven eight")],
-        [(3, "red orange yellow green blue indigo violet ultraviolet")],
-    ]
-    for i, rows in enumerate(feeds):
+    def run(i, rows):
         spark.createDataFrame(rows, "doc_id LONG, text STRING").coalesce(
             1
         ).write.parquet(str(docs_dir / f"b{i}"))
         q = stream.start_incremental_near_dup(
-            spark, str(docs_dir), pairs_dir, sig_dir, ckpt, compact_every=1
+            spark, str(docs_dir), pairs_dir, sig_dir, ckpt
         )
         q.awaitTermination(300)
-    # batch_id 1 triggered a compaction: the store is manifest-listed now
-    assert warehouse._manifest_read(sig_dir) is not None
+        return warehouse._manifest_read(sig_dir)["data"]
 
-    base_entry = warehouse._manifest_read(sig_dir)["data"]["all"]
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    data = run(0, [(1, base), (2, "one two three four five six seven eight")])
+    base_entry = data["all"]  # the store's seed
+    # batch 1 pushed the store past the bound: the writer folded the two
+    # deltas into one tier, carrying the base by reference
+    data = run(1, [(3, "red orange yellow green blue indigo violet ultraviolet")])
+    assert data["all"] == base_entry, "base was rewritten, not carried"
+    assert len(data) == 2 and any(k.startswith("fold_") for k in data)
 
-    # post-compaction batches must still pair against batch-0 signatures
-    spark.createDataFrame(
-        [(10, base.replace("kappa", "lambda"))], "doc_id LONG, text STRING"
-    ).coalesce(1).write.parquet(str(docs_dir / "b2"))
-    q = stream.start_incremental_near_dup(
-        spark, str(docs_dir), pairs_dir, sig_dir, ckpt, compact_every=1
-    )
-    q.awaitTermination(300)
+    # a post-fold batch must still pair against batch-0 signatures
+    data = run(2, [(10, base.replace("kappa", "lambda"))])
     pairs = {
         (r["doc_a"], r["doc_b"])
         for r in warehouse.read_dir(spark, pairs_dir).collect()
     }
-    assert (1, 10) in pairs, "cross-compaction near-dup missed"
+    assert (1, 10) in pairs, "cross-fold near-dup missed"
+    # its append left base + tier + delta: a fold cannot get under the
+    # bound, so the writer compacted the whole store
+    assert list(data) == ["all"] and data["all"] != base_entry
 
-    # one more batch makes two deltas since the compact — the cadence now
-    # FOLDS them (incrementally: the base entry is carried by reference,
-    # its path unchanged) instead of rewriting the whole store
-    spark.createDataFrame(
-        [(11, "gold silver bronze copper iron tin lead zinc")],
-        "doc_id LONG, text STRING",
-    ).coalesce(1).write.parquet(str(docs_dir / "b3"))
-    q = stream.start_incremental_near_dup(
-        spark, str(docs_dir), pairs_dir, sig_dir, ckpt, compact_every=1
-    )
-    q.awaitTermination(300)
+    # the live file set is compacted: one file per (entry, bucket)
     m = warehouse._manifest_read(sig_dir)
-    assert m["data"]["all"] == base_entry, "base was rewritten, not carried"
-    # manifest-from-birth: the base is the first-batch seed and each
-    # cadence round with >= 2 deltas adds ONE fold tier (batches 0-1
-    # folded at the batch-1 cadence, batches 2-3 at the batch-3 one) —
-    # entries stay O(folds), never O(batches)
-    assert len(m["data"]) == 3, f"deltas not folded: {sorted(m['data'])}"
-
-    # the live file set is fold-bounded: one file per (entry, bucket)
     live = [
         os.path.join(dp, f)
         for d in warehouse._data_dirs(sig_dir, m)
@@ -721,6 +706,7 @@ def test_incremental_near_dup_store_compaction_keeps_probing(spark, tmp_path):
         if f.endswith(".parquet")
     ]
     assert len(live) == len({os.path.dirname(p) for p in live})
+    run(3, [(11, "gold silver bronze copper iron tin lead zinc")])
     # and every signature ever written is still reachable
     assert (
         warehouse.read_dir(spark, sig_dir)
@@ -812,7 +798,7 @@ def test_incremental_near_dup_tiny_docs_never_grow_store(spark, tmp_path):
     for batch_id in range(3):  # deliver + redeliver twice
         _merge_near_dup_batch(
             spark, batch, batch_id, pairs_dir, sig_dir,
-            threshold=0.5, compact_every=None,
+            threshold=0.5,
         )
     from allora_indexer_spark.plans import warehouse as _wh
 
@@ -963,7 +949,7 @@ def test_near_dup_stores_are_manifest_from_first_batch(spark, tmp_path):
     )
     _merge_near_dup_batch(
         spark, docs, 0, pairs_dir, sig_dir,
-        threshold=0.3, compact_every=None,
+        threshold=0.3,
     )
     assert _manifest_read(sig_dir) is not None
     assert _manifest_read(pairs_dir) is not None

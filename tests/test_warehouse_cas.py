@@ -439,26 +439,25 @@ def test_lost_fold_publish_removes_its_version_dir(
 def test_auto_fold_keeps_append_manifest_bounded(spark, tmp_path, monkeypatch):
     """Default behavior: when an append pushes the manifest past
     APPEND_MANIFEST_WARN entries, the SAME write folds the deltas
-    (O(deltas), base carried by reference) — batch tables can no longer
-    silently degrade when nobody schedules compact(). The fold must honor
-    the table's recorded cluster_by layout."""
+    (O(deltas), base carried by reference), and compacts the whole table
+    once the fold tiers fill the bound — batch tables cannot silently
+    degrade when nobody schedules compact(), and nothing warns. Both
+    rewrites honor the store's recorded cluster_by layout."""
     monkeypatch.setattr(warehouse, "APPEND_MANIFEST_WARN", 3)
     path = str(tmp_path / "store")
+    layout = {"cluster_by": ["bucket"], "target_partitions": 1}
+    warehouse.seed_manifest_store(
+        spark.createDataFrame([], "id long, bucket string"), path,
+        layout=layout,
+    )
     base = spark.createDataFrame(
         [(1, "04"), (2, "0a")], "id long, bucket string"
     )
     warehouse.append_dir(base, path)
-    warehouse.compact(
-        spark, path, target_partitions=1, cluster_by=["bucket"]
-    )
-    m = warehouse._manifest_read(path)
-    assert m["layout"] == {
-            "cluster_by": ["bucket"],
-            "target_partitions": 1,
-            "by": "compact",
-        }
 
     import warnings as _warnings
+
+    import pyarrow.parquet as pq
 
     def append(i):
         delta = spark.createDataFrame(
@@ -466,37 +465,33 @@ def test_auto_fold_keeps_append_manifest_bounded(spark, tmp_path, monkeypatch):
         )
         warehouse.append_dir(delta, path)
 
-    # phase 1: folds keep the manifest bounded, silently
+    folded = compacted = False
     with _warnings.catch_warnings():
         _warnings.simplefilter("error", RuntimeWarning)  # no warn path
         for i in range(10, 20, 2):  # five appends
             append(i)
             m = warehouse._manifest_read(path)
-            assert len(m["data"]) <= warehouse.APPEND_MANIFEST_WARN + 1, (
+            assert len(m["data"]) <= warehouse.APPEND_MANIFEST_WARN, (
                 f"manifest grew unbounded: {sorted(m['data'])}"
             )
-    # layout survived the auto-folds and the fold output is clustered
+            folded |= any(k.startswith("fold_") for k in m["data"])
+            compacted |= list(m["data"]) == ["all"]
+    assert folded and compacted
+    # layout survived the folds and the major, and the rewrites are
+    # clustered
     m = warehouse._manifest_read(path)
-    assert m["layout"]["cluster_by"] == ["bucket"]
-    assert any(k.startswith("fold_") for k in m["data"])
+    assert m["layout"] == layout
+    for rel in m["data"].values():
+        for dp, _, fs in os.walk(os.path.join(path, rel)):
+            for f in fs:
+                if f.endswith(".parquet"):
+                    col = pq.read_table(
+                        os.path.join(dp, f), columns=["bucket"]
+                    ).column("bucket").to_pylist()
+                    assert col == sorted(col)
     out = warehouse.read_dir(spark, path)
     assert dict(out.dtypes)["bucket"] == "string"
     assert out.count() == 12
     assert out.select("id").distinct().count() == 12
-    health = {h["table"]: h for h in warehouse.table_health(str(tmp_path))}
-    assert not health["store"]["needs_compaction"]
-
-    # phase 2: fold tiers saturate the bound — the hook escalates loudly
-    # (major compaction is the operator's call), health flags it, and a
-    # full compact() resets everything with the layout intact
-    with pytest.warns(RuntimeWarning, match="compact"):
-        append(20)
-    health = {h["table"]: h for h in warehouse.table_health(str(tmp_path))}
-    assert health["store"]["needs_compaction"]
-    warehouse.compact(spark, path, target_partitions=1, cluster_by=["bucket"])
-    m = warehouse._manifest_read(path)
-    assert len(m["data"]) == 1
-    assert m["layout"]["cluster_by"] == ["bucket"]
-    assert warehouse.read_dir(spark, path).count() == 14
     health = {h["table"]: h for h in warehouse.table_health(str(tmp_path))}
     assert not health["store"]["needs_compaction"]

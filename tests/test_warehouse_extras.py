@@ -692,33 +692,33 @@ def test_keep_one_table_health_flags_and_clears_compaction(
     spark, tmp_path, monkeypatch
 ):
     """A keep-one table is an append table on disk: past
-    APPEND_MANIFEST_WARN upserts table_health flags needs_compaction
-    (it has no insert probe, so probe_pruning is None), and compact()
-    clears the flag and leaves one row per key on disk."""
+    APPEND_MANIFEST_WARN upserts the writer folds them, dropping the
+    superseded rows, so table_health never flags needs_compaction (it
+    has no insert probe, so probe_pruning is None), and compact()
+    leaves one row per key on disk."""
     import os
+    import warnings as _warnings
 
     monkeypatch.setattr(warehouse, "APPEND_MANIFEST_WARN", 3)
-    monkeypatch.setattr(warehouse, "AUTO_FOLD_ON_APPEND", False)
     root = str(tmp_path / "wh")
     path = os.path.join(root, "scores")
 
     def health():
         return {h["table"]: h for h in warehouse.table_health(root)}["scores"]
 
-    for i in range(3):
-        warehouse.write_keep_one(
-            spark, _mk_scores(spark, [(1, 1, "inferer", "x", 10 + i, 1.0)]),
-            root, "scores", _score_order(),
-        )
-    assert not health()["needs_compaction"]
-    with pytest.warns(RuntimeWarning, match="compact"):
-        warehouse.write_keep_one(
-            spark, _mk_scores(spark, [(1, 1, "inferer", "x", 13, 1.0)]),
-            root, "scores", _score_order(),
-        )
+    with _warnings.catch_warnings():
+        _warnings.simplefilter("error", RuntimeWarning)
+        for i in range(4):
+            warehouse.write_keep_one(
+                spark,
+                _mk_scores(spark, [(1, 1, "inferer", "x", 10 + i, 1.0)]),
+                root, "scores", _score_order(),
+            )
     h = health()
-    assert h["needs_compaction"] and h["manifest_entries"] == 4
+    assert not h["needs_compaction"] and h["manifest_entries"] == 1
     assert h["probe_pruning"] is None
+    rows = warehouse.read_dir(spark, path).collect()
+    assert [r["height_tx"] for r in rows] == [13]  # the fold resolved
     warehouse.compact(spark, path)
     h = health()
     assert not h["needs_compaction"] and h["manifest_entries"] == 1
@@ -727,31 +727,25 @@ def test_keep_one_table_health_flags_and_clears_compaction(
 
 
 def test_append_manifest_growth_warns_and_flags(spark, tmp_path, monkeypatch):
-    """The compaction-cadence contract on manifest-layout APPEND tables:
-    each micro-batch adds one manifest entry; past APPEND_MANIFEST_WARN
-    the writer warns loudly and table_health flags needs_compaction, and
-    compact() resets both. (Auto-maintenance disabled here to pin the
-    flag-and-warn path an operator-scheduled deployment runs with.)"""
+    """The manifest-growth contract on APPEND tables: each micro-batch
+    adds one manifest entry, and up to APPEND_MANIFEST_WARN entries the
+    writer leaves them and table_health does not flag
+    needs_compaction."""
     import os
 
-    monkeypatch.setattr(warehouse, "APPEND_MANIFEST_WARN", 3)
-    monkeypatch.setattr(warehouse, "AUTO_FOLD_ON_APPEND", False)
+    monkeypatch.setattr(warehouse, "APPEND_MANIFEST_WARN", 4)
     root = str(tmp_path / "wh")
     path = os.path.join(root, "block_info")
     warehouse.write_insert_if_absent(
         spark, _mk_blocks(spark, range(10)), root, "block_info"
     )
     warehouse.compact(spark, path, target_partitions=1)
-    for lo in (10, 15):  # entries: 2, 3 — at the bound, still quiet
+    for lo in (10, 15, 40):  # entries: 2, 3, 4 — at the bound, untouched
         warehouse.write_insert_if_absent(
             spark, _mk_blocks(spark, range(lo, lo + 5)), root, "block_info"
         )
-    with pytest.warns(RuntimeWarning, match="compact"):
-        warehouse.write_insert_if_absent(
-            spark, _mk_blocks(spark, range(40, 45)), root, "block_info"
-        )
     health = {h["table"]: h for h in warehouse.table_health(root)}
-    assert health["block_info"]["needs_compaction"]
+    assert not health["block_info"]["needs_compaction"]
     assert health["block_info"]["manifest_entries"] == 4
     # incremental fold: the three delta versions collapse into one new
     # entry while the base "all" entry is carried by reference — its
@@ -767,6 +761,59 @@ def test_append_manifest_growth_warns_and_flags(spark, tmp_path, monkeypatch):
     # idempotent: nothing left to fold
     assert warehouse.fold_appends(spark, path)
     assert len(warehouse._manifest_read(path)["data"]) == 2
+
+
+def test_writer_keeps_manifest_within_bound(spark, tmp_path, monkeypatch):
+    """The writer's one maintenance rule, with no operator in the loop:
+    after EVERY append the manifest holds at most APPEND_MANIFEST_WARN
+    entries (folds, then a whole-table compaction once the fold tiers
+    fill the bound), nothing warns, and rows and keys come out exact —
+    also after a replay of already-stored heights."""
+    import os
+    import warnings as _warnings
+
+    monkeypatch.setattr(warehouse, "APPEND_MANIFEST_WARN", 4)
+    root = str(tmp_path / "wh")
+    path = os.path.join(root, "block_info")
+    entries = []
+    with _warnings.catch_warnings():
+        _warnings.simplefilter("error", RuntimeWarning)
+        for b in range(40):
+            warehouse.write_insert_if_absent(
+                spark, _mk_blocks(spark, range(3 * b, 3 * b + 3)), root,
+                "block_info",
+            )
+            entries.append(len(warehouse._manifest_read(path)["data"]))
+        # replay: heights already stored publish nothing new
+        warehouse.write_insert_if_absent(
+            spark, _mk_blocks(spark, range(30, 60)), root, "block_info"
+        )
+    assert max(entries) <= warehouse.APPEND_MANIFEST_WARN, entries
+    assert 1 in entries[5:], entries  # a whole-table compaction ran
+    out = warehouse.read_table(spark, root, "block_info")
+    got = sorted((r["height"], r["block_hash"]) for r in out.collect())
+    assert got == [(h, f"hash{h}") for h in range(120)]
+
+
+def test_keep_one_refuses_batch_without_key_or_order_columns(spark, tmp_path):
+    """A keep-one batch must carry the spec's key and keep_one columns:
+    reads resolve one row per key by them, so a batch without them
+    (height but no height_tx into last_commit_values) would read back
+    every upsert of a key. Refused before anything is written."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "wh")
+    batch = spark.createDataFrame(
+        [(1, True, 100), (2, False, 100)],
+        "topic_id int, is_worker boolean, height long",
+    )
+    with pytest.raises(ValueError, match="height_tx"):
+        warehouse.write_keep_one(
+            spark, batch, root, "last_commit_values", [F.desc("height")]
+        )
+    assert not os.path.exists(os.path.join(root, "last_commit_values"))
 
 
 def test_manifest_schema_pin_fills_missing_columns(spark, tmp_path):
@@ -926,19 +973,19 @@ def test_vacuum_reclaims_without_a_write(spark, tmp_path, monkeypatch):
 
 
 def test_fold_appends_uses_pinned_schema_for_hive_deltas(spark, tmp_path):
-    """fold_appends(partition_by=...) must read the delta dirs under the
-    manifest's PINNED schema: hive-partitioned deltas whose partition
-    values look numeric would otherwise be retyped by per-root inference
-    ('04' -> int 4) in the rewritten fold files — after which the pinned
-    string-schema read errors or corrupts values (the hazard compact()'s
-    docstring defends against, here on the fold path)."""
+    """fold_appends on a table created with partition_by must read the
+    delta dirs under the manifest's PINNED schema: hive-partitioned
+    deltas whose partition values look numeric would otherwise be
+    retyped by per-root inference ('04' -> int 4) in the rewritten fold
+    files — after which the pinned string-schema read errors or
+    corrupts values."""
     import os
 
     path = str(tmp_path / "sigstore")
     base = spark.createDataFrame(
         [(1, "04"), (2, "10")], "id long, p string"
     )
-    warehouse.append_dir(base, path)  # p stays a typed data column
+    warehouse.append_dir(base, path, partition_by=["p"])  # records it
     warehouse.compact(spark, path, target_partitions=1)
     m = warehouse._manifest_read(path)
     assert m is not None and "schema" in m
@@ -951,7 +998,7 @@ def test_fold_appends_uses_pinned_schema_for_hive_deltas(spark, tmp_path):
         warehouse.append_dir(delta, path, partition_by=["p"])
     assert len(warehouse._manifest_read(path)["data"]) == 3
 
-    assert warehouse.fold_appends(spark, path, partition_by=["p"])
+    assert warehouse.fold_appends(spark, path)
     m2 = warehouse._manifest_read(path)
     assert len(m2["data"]) == 2  # base "all" + one fold tier
     out = warehouse.read_dir(spark, path)
@@ -1025,16 +1072,15 @@ def test_read_table_version_works_on_seam_backend(
 
 def test_seed_manifest_store_atomic_and_layout(spark, tmp_path):
     """seed_manifest_store: one publish carries schema + layout + extra
-    keys; a second seed is a no-op; the recorded layout matches what a
-    compact() would have written, so automatic folds keep it."""
+    keys; a second seed is a no-op; the recorded layout is the one every
+    fold and compact of the store applies."""
     import os
 
     path = str(tmp_path / "store")
     empty = spark.range(0).selectExpr(
         "cast(id as string) as bucket", "id as doc_id"
     )
-    layout = {"cluster_by": ["bucket"], "target_partitions": 1,
-              "by": "compact"}
+    layout = {"cluster_by": ["bucket"], "target_partitions": 1}
     warehouse.seed_manifest_store(
         empty, path, layout=layout, extra={"app_marker": 7}
     )

@@ -1,8 +1,8 @@
 """Round-9 hardening of the manifest/CAS seam: unified `_CURRENT`
 serialization (the _ANY path goes through `_cas_section` too), the
 parent-pointer manifest linearization behind `list_versions`, the
-publish-time GC rule that needs no writer lock, the footer-based
-empty-append probe, and the compact() layout-clearing sentinel.
+publish-time GC rule that needs no writer lock, and the footer-based
+empty-append probe.
 
 Reference semantic throughout: Postgres serializes the reference's writers
 for free (ON CONFLICT inside transactions, /root/reference/db.go:1118-1185)
@@ -324,38 +324,3 @@ def test_footer_row_count(spark, tmp_path):
     p2 = str(tmp_path / "e")
     spark.createDataFrame([], "id long").write.parquet(p2)
     assert warehouse._footer_row_count(p2) == 0
-
-
-# ---------------------------------------------------------------------------
-# compact() layout-clearing sentinel
-# ---------------------------------------------------------------------------
-
-
-def test_compact_empty_list_clears_recorded_layout(spark, tmp_path):
-    """cluster_by=[] flattens the table AND clears the recorded layout, so
-    subsequent auto-folds stop re-clustering deltas; plain compact (None)
-    keeps carrying the layout forward."""
-    path = str(tmp_path / "store")
-    warehouse.append_dir(
-        spark.createDataFrame([(1, "04"), (2, "0a")], "id long, bucket string"),
-        path,
-    )
-    warehouse.compact(spark, path, target_partitions=1, cluster_by=["bucket"])
-    assert warehouse._manifest_read(path)["layout"]["cluster_by"] == ["bucket"]
-    # plain compact: layout persists (the documented default)
-    warehouse.compact(spark, path, target_partitions=1)
-    assert warehouse._manifest_read(path)["layout"]["cluster_by"] == ["bucket"]
-    # explicit empty list: flatten + forget
-    warehouse.compact(spark, path, target_partitions=1, cluster_by=[])
-    m = warehouse._manifest_read(path)
-    assert "layout" not in m
-    out = warehouse.read_dir(spark, path)
-    assert out.count() == 2
-    assert dict(out.dtypes)["bucket"] == "string"
-    # partition_cols=[] is the same sentinel
-    warehouse.compact(
-        spark, path, target_partitions=1, partition_cols=["bucket"]
-    )
-    assert "layout" in warehouse._manifest_read(path)
-    warehouse.compact(spark, path, target_partitions=1, partition_cols=[])
-    assert "layout" not in warehouse._manifest_read(path)

@@ -1,19 +1,23 @@
-"""Maintenance-path soak: drive the manifest fold/compact/lock stack
+"""Maintenance-path soak: drive the writer's manifest fold/compact rule
 through ~10^3 micro-batches and MEASURE what the design argues.
 
 The reference never thinks about this — Postgres autovacuum keeps its
-tables healthy for free. This engine's LSM-style maintenance (per-batch
-append versions -> incremental fold tiers -> occasional full compact,
-plans/warehouse.py) makes the same promise: flat per-batch cost over an
-unbounded run. This script turns that from an asymptotic argument into a
-recorded curve:
+tables healthy for free. This engine's writer does the same with one
+LSM-style rule (plans/warehouse.py _append_data: per-batch append
+versions -> incremental fold tiers -> a whole-table compact once the
+tiers fill the bound), so no phase below plays an operator. It promises
+flat per-batch cost over an unbounded run and at most
+APPEND_MANIFEST_WARN manifest entries after any write. This script turns
+that from an asymptotic argument into a recorded curve; every phase
+reports the folds and majors the writer ran, read from its manifest
+after each write:
 
   phase "append"  ~1000 write_insert_if_absent micro-batches on a
                   manifest table, recording per-batch wall time, manifest
                   data-entry count, history file count, and the measured
-                  cadence of fold-tier saturation -> operator major
-                  compact (predicted ~WARN^2/2 appends; run with a small
-                  --warn so several majors land inside the soak);
+                  cadence of majors (predicted (WARN+2)(WARN-1)/2 + 1
+                  appends; run with a small --warn so several majors land
+                  inside the soak);
   phase "kill"    a CHILD PROCESS appends its own batch range and is
                   SIGKILLed mid-run; the parent re-runs the same range
                   and asserts exact convergence (no loss, no dupes) —
@@ -24,9 +28,8 @@ recorded curve:
                   in 10 replaying an earlier one; the table must read
                   back equal to a dict model of the latest row per key;
   phase "sig"     a few hundred batches through the incremental near-dup
-                  signature store (streaming/stream.py:_merge_near_dup_batch)
-                  with its cadenced fold + major compact, recording the
-                  same curve for the bucket-clustered store;
+                  signature store (streaming/stream.py:_merge_near_dup_batch),
+                  recording the same curve for the bucket-clustered store;
   phase "hash_sig" ~150 batches through the per-modality HASH signature
                   store (merge_hash_near_dup_batch, image dHash — the
                   round-15 streaming twin of q99zzd) with planted
@@ -64,7 +67,6 @@ import subprocess
 import sys
 import tempfile
 import time
-import warnings
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -102,6 +104,46 @@ def _manifest_stats(path: str) -> dict:
     }
 
 
+class _Maintenance:
+    """The writer's rewrites of one table, read from its manifest after
+    each write, against its state when the phase starts: a new
+    ``fold_*`` tier is a fold, a changed ``"all"`` base a major (a
+    store's seed creates its first base, not a major)."""
+
+    def __init__(self, path: str):
+        from allora_indexer_spark.plans import warehouse as wh
+
+        m = wh._manifest_read(path)
+        self.path = path
+        self.data: dict = m["data"] if m else {}
+        self.folds: list[int] = []
+        self.majors: list[int] = []
+        self.max_entries = 0
+
+    def observe(self, batch: int) -> None:
+        from allora_indexer_spark.plans import warehouse as wh
+
+        m = wh._manifest_read(self.path)
+        data = m["data"] if m else {}
+        if self.data and "all" in data and data["all"] != self.data.get("all"):
+            self.majors.append(batch)
+        elif any(k.startswith("fold_") and k not in self.data for k in data):
+            self.folds.append(batch)
+        self.data = data
+        self.max_entries = max(self.max_entries, len(data))
+
+    def report(self) -> dict:
+        return {
+            "folds": len(self.folds),
+            "majors": len(self.majors),
+            "majors_at": self.majors,
+            "major_cadence_batches": [
+                b - a for a, b in zip(self.majors, self.majors[1:])
+            ],
+            "max_entries_after_write": self.max_entries,
+        }
+
+
 def _summarize(times: list[float], warmup: int = 20) -> dict:
     # Always exclude SOME warmup (JVM/codegen) so short smoke runs use the
     # same rule as full runs instead of folding warmup into the first-quarter
@@ -126,10 +168,9 @@ def _summarize(times: list[float], warmup: int = 20) -> dict:
 
 
 def soak_append(spark, root: str, n_batches: int, rows_per_batch: int) -> dict:
-    """write_insert_if_absent micro-batches; the auto-fold keeps the
-    manifest bounded and this loop plays the OPERATOR: when the writer's
-    escalation warning fires (fold tiers saturated the manifest bound),
-    it runs the major compact() and records the cadence."""
+    """write_insert_if_absent micro-batches with no operator in the loop:
+    the writer's own folds and majors keep the manifest bounded, and
+    their cost rides in the batch that triggered them."""
     from allora_indexer_spark.plans import warehouse as wh
 
     path = os.path.join(root, "block_info")
@@ -137,33 +178,21 @@ def soak_append(spark, root: str, n_batches: int, rows_per_batch: int) -> dict:
 
     times: list[float] = []
     series: list[dict] = []
-    majors: list[int] = []
+    maint = _Maintenance(path)
     for i in range(1, n_batches + 1):
         batch = _mk_blocks(spark, i * rows_per_batch, rows_per_batch)
         t0 = time.perf_counter()
-        escalated = False
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always", RuntimeWarning)
-            wh.write_insert_if_absent(spark, batch, root, "block_info")
-            escalated = any("compact" in str(w.message) for w in caught)
-        if escalated:
-            # the operator response the warning asks for: a full compact
-            # resets the fold tiers; its cost rides in this batch's time
-            wh.compact(spark, path, target_partitions=1)
-            majors.append(i)
+        wh.write_insert_if_absent(spark, batch, root, "block_info")
         times.append(time.perf_counter() - t0)
-        if i % 25 == 0 or escalated:
+        maint.observe(i)
+        if i % 25 == 0 or maint.majors[-1:] == [i]:
             series.append({"batch": i, "sec": round(times[-1], 4), **_manifest_stats(path)})
-    from allora_indexer_spark.plans.warehouse import read_table
-
-    n_rows = read_table(spark, root, "block_info").count()
+    n_rows = wh.read_table(spark, root, "block_info").count()
     expected = (n_batches + 1) * rows_per_batch
     assert n_rows == expected, f"row loss: {n_rows} != {expected}"
-    cadence = [b - a for a, b in zip(majors, majors[1:])]
     return {
         "summary": _summarize(times),
-        "majors_at": majors,
-        "major_cadence_batches": cadence,
+        **maint.report(),
         "final": _manifest_stats(path),
         "rows": n_rows,
         "series": series,
@@ -180,6 +209,7 @@ sys.path.insert(0, __REPO__)
 from tools.soak import get_session, _mk_blocks
 from allora_indexer_spark.plans import warehouse as wh
 root, lo, n_batches, rows = sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), int(sys.argv[4])
+wh.APPEND_MANIFEST_WARN = int(sys.argv[5])
 spark = get_session(4)
 for i in range(n_batches):
     wh.write_insert_if_absent(
@@ -202,7 +232,8 @@ def soak_kill(spark, root: str, lo: int, rows_per_batch: int) -> dict:
         fh.write(_CHILD_CODE.replace("__REPO__", repr(REPO)))
         child_py = fh.name
     proc = subprocess.Popen(
-        [sys.executable, child_py, root, str(lo), str(n_child_batches), str(rows_per_batch)],
+        [sys.executable, child_py, root, str(lo), str(n_child_batches), str(rows_per_batch),
+         str(wh.APPEND_MANIFEST_WARN)],
         stdout=subprocess.PIPE,
         text=True,
         cwd=REPO,
@@ -222,22 +253,18 @@ def soak_kill(spark, root: str, lo: int, rows_per_batch: int) -> dict:
         os.unlink(child_py)
     assert acked >= 1, "child never committed a batch"
     # resume: re-run the child's ENTIRE range in this process
-    max_entries = 0
     resume_sec = 0.0
     tpath = os.path.join(root, "block_info")
+    maint = _Maintenance(tpath)
     for i in range(n_child_batches):
         t0 = time.perf_counter()
         wh.write_insert_if_absent(
             spark, _mk_blocks(spark, lo + i * rows_per_batch, rows_per_batch), root, "block_info"
         )
-        # probe OUTSIDE the timed window (same rule as soak_append's
-        # _manifest_stats call): resume_sec stays pure write-resume cost.
-        # This resume runs with NO operator in the loop — the phase that
-        # piled up ~99 manifest entries before the writer-side inline-
-        # major escalation (AUTO_COMPACT_FACTOR); record the bound it
-        # now actually holds
+        # observe OUTSIDE the timed window (same rule as soak_append):
+        # resume_sec stays pure write-resume cost
         resume_sec += time.perf_counter() - t0
-        max_entries = max(max_entries, _manifest_stats(tpath)["entries"])
+        maint.observe(i)
     out = wh.read_table(spark, root, "block_info")
     total = out.count()
     distinct = out.select("height").distinct().count()
@@ -248,21 +275,10 @@ def soak_kill(spark, root: str, lo: int, rows_per_batch: int) -> dict:
         "resume_sec": round(resume_sec, 1),
         "rows_after_resume": total,
         "duplicates": total - distinct,
-        "max_manifest_entries_during_operatorless_resume": max_entries,
+        **maint.report(),
         "final": _manifest_stats(tpath),
-        # the TRIGGER is K x WARN; the observable post-write invariant is
-        # one higher (the delta that lands before the next maintenance
-        # fires) — same bound the pinning test asserts
-        "escalation_trigger": (
-            wh.AUTO_COMPACT_FACTOR * wh.APPEND_MANIFEST_WARN
-            if wh.AUTO_COMPACT_FACTOR
-            else None
-        ),
-        "expected_entry_bound": (
-            wh.AUTO_COMPACT_FACTOR * wh.APPEND_MANIFEST_WARN + 1
-            if wh.AUTO_COMPACT_FACTOR
-            else None
-        ),
+        # no write leaves more entries than this
+        "expected_entry_bound": wh.APPEND_MANIFEST_WARN,
     }
 
 
@@ -278,8 +294,8 @@ def soak_upsert(spark, root: str, n_batches: int, keys_per_batch: int) -> dict:
     """write_keep_one micro-batches into `scores` over a 200-key domain,
     each batch a newer height_tx for ``keys_per_batch`` keys; every 10th
     batch replays an earlier batch (its rows lose, or tie identically,
-    on read). Same operator loop as soak_append. The table must read
-    back equal to a dict model of the latest row per key."""
+    on read). No operator, as in soak_append. The table must read back
+    equal to a dict model of the latest row per key."""
     from allora_indexer_spark.plans import warehouse as wh
     from allora_indexer_spark.schemas import TABLE_SPECS
 
@@ -290,7 +306,7 @@ def soak_upsert(spark, root: str, n_batches: int, keys_per_batch: int) -> dict:
     sent: list[list[tuple]] = []
     times: list[float] = []
     series: list[dict] = []
-    majors: list[int] = []
+    maint = _Maintenance(path)
     for i in range(n_batches):
         if i % 10 == 9:
             rows = sent[rng.randrange(len(sent))]
@@ -306,18 +322,13 @@ def soak_upsert(spark, root: str, n_batches: int, keys_per_batch: int) -> dict:
             " height_tx long, value double, value_raw string",
         )
         t0 = time.perf_counter()
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always", RuntimeWarning)
-            wh.write_keep_one(spark, batch, root, "scores", order)
-            escalated = any("compact" in str(w.message) for w in caught)
-        if escalated:
-            wh.compact(spark, path, target_partitions=1)
-            majors.append(i)
+        wh.write_keep_one(spark, batch, root, "scores", order)
         times.append(time.perf_counter() - t0)
+        maint.observe(i)
         for r in rows:
             if r[:4] not in model or r[4] >= model[r[:4]][0]:
                 model[r[:4]] = (r[4], r[5])
-        if (i + 1) % 10 == 0 or escalated:
+        if (i + 1) % 10 == 0 or maint.majors[-1:] == [i]:
             series.append({"batch": i + 1, "sec": round(times[-1], 4), **_manifest_stats(path)})
     got = {
         (r["height"], r["topic_id"], r["type"], r["address"]): (r["height_tx"], r["value"])
@@ -329,7 +340,7 @@ def soak_upsert(spark, root: str, n_batches: int, keys_per_batch: int) -> dict:
     )
     return {
         "summary": _summarize(times),
-        "majors_at": majors,
+        **maint.report(),
         "final": _manifest_stats(path),
         "rows": len(got),
         "series": series,
@@ -346,7 +357,7 @@ def soak_sig(
     workload: str = "cyclic",
 ) -> dict:
     """Drive the incremental near-dup signature store through its full
-    maintenance cycle (append -> cadenced fold -> occasional major
+    maintenance cycle (append -> writer's fold -> occasional major
     compact) for n_batches; per-batch cost must stay flat while the
     store accumulates every document ever seen.
 
@@ -365,6 +376,7 @@ def soak_sig(
     vocab = [f"tok{j}" for j in range(50)]
     times: list[float] = []
     series: list[dict] = []
+    maint = _Maintenance(sig_dir)
     for i in range(n_batches):
         rows = []
         for d in range(docs_per_batch):
@@ -381,10 +393,10 @@ def soak_sig(
         batch = spark.createDataFrame(rows, "doc_id long, text string")
         t0 = time.perf_counter()
         _merge_near_dup_batch(
-            spark, batch, i, pairs_dir, sig_dir,
-            threshold=0.5, compact_every=8,
+            spark, batch, i, pairs_dir, sig_dir, threshold=0.5,
         )
         times.append(time.perf_counter() - t0)
+        maint.observe(i)
         if (i + 1) % 10 == 0:
             series.append({"batch": i + 1, "sec": round(times[-1], 4), **_manifest_stats(sig_dir)})
     n_docs = wh.read_dir(spark, sig_dir).select("doc_id").distinct().count()
@@ -393,6 +405,7 @@ def soak_sig(
     )
     return {
         "summary": _summarize(times, warmup=5),
+        **maint.report(),
         "final": _manifest_stats(sig_dir),
         "docs_in_store": n_docs,
         "series": series,
@@ -410,8 +423,8 @@ def soak_hash_sig(
     bounded-neighborhood workload: every 4th doc is a one-char
     perturbation of a doc ~7 ids earlier, so cross-batch pairs arrive
     at a constant rate forever while the store accumulates every
-    signature ever seen. Per-batch cost must stay flat (same LSM
-    fold/compact machinery as the text store), and the planted twins
+    signature ever seen. Per-batch cost must stay flat (same writer
+    fold/compact rule as the text store), and the planted twins
     must ALL be found — a correctness invariant riding the soak; the
     video phase additionally requires every planted pair on BOTH
     sampled keyframes."""
@@ -435,6 +448,7 @@ def soak_hash_sig(
 
     times: list[float] = []
     series: list[dict] = []
+    maint = _Maintenance(sig_dir)
     for i in range(n_batches):
         rows = []
         for d in range(docs_per_batch):
@@ -449,10 +463,10 @@ def soak_hash_sig(
         batch = spark.createDataFrame(rows, "doc_id long, text string")
         t0 = time.perf_counter()
         merge_hash_near_dup_batch(
-            spark, batch, i, pairs_dir, sig_dir,
-            modality=modality, compact_every=8,
+            spark, batch, i, pairs_dir, sig_dir, modality=modality,
         )
         times.append(time.perf_counter() - t0)
+        maint.observe(i)
         if (i + 1) % 10 == 0:
             series.append(
                 {"batch": i + 1, "sec": round(times[-1], 4),
@@ -486,6 +500,7 @@ def soak_hash_sig(
     assert not missed, f"planted cross-batch twins missed: {sorted(missed)[:5]}"
     return {
         "summary": _summarize(times, warmup=5),
+        **maint.report(),
         "final": _manifest_stats(sig_dir),
         "docs_in_store": n_docs,
         "planted_pairs": len(planted),
@@ -505,9 +520,9 @@ def main() -> int:
     ap.add_argument("--docs-per-batch", type=int, default=4)
     ap.add_argument("--warn", type=int, default=8,
                     help="APPEND_MANIFEST_WARN override: small enough that "
-                         "fold-tier saturation and several operator major "
-                         "compacts land INSIDE the soak (prediction: majors "
-                         "every ~warn^2/2 appends)")
+                         "several of the writer's major compacts land INSIDE "
+                         "the soak (prediction: a major every "
+                         "(warn+2)(warn-1)/2 + 1 appends)")
     ap.add_argument("--cpus", type=int, default=8)
     ap.add_argument("--sig-workload", choices=["cyclic", "bounded"],
                     default="cyclic",
@@ -529,7 +544,9 @@ def main() -> int:
     work = tempfile.mkdtemp(prefix="soak_")
     report: dict = {
         "config": vars(args),
-        "predicted_major_cadence_batches": args.warn * args.warn // 2,
+        "predicted_major_cadence_batches": (
+            (args.warn + 2) * (args.warn - 1) // 2 + 1
+        ),
     }
     # meter the manifest METADATA plane (storage seam requests): at the
     # 100 TB design point the object store's request RATE is the
@@ -612,6 +629,11 @@ def main() -> int:
                 report[phase]["verdict"] = f"REGRESSION: {ratio:.2f}x > {args.flat_bound}x"
             else:
                 report[phase]["verdict"] = f"flat ({ratio:.2f}x)"
+        for phase in ("append", "kill", "upsert", "sig", "hash_sig", "video_sig"):
+            entries = report.get(phase, {}).get("max_entries_after_write", 0)
+            if entries > args.warn:
+                ok = False
+                report[phase]["verdict"] = f"UNBOUNDED: {entries} entries > {args.warn}"
     finally:
         shutil.rmtree(work, ignore_errors=True)
         with open(args.out, "w") as fh:
