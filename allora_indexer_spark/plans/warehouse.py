@@ -551,7 +551,8 @@ def _read_manifest_data(
     plain ``read_table``: data dirs carried by reference from an older,
     narrower version read back with typed nulls for the newer columns
     instead of silently steering inference to whichever file was sampled
-    first."""
+    first. A manifest with no data dirs (a table made by
+    :func:`create_table`) reads as an empty scan of the pinned schema."""
     _refuse_bucketed(path, manifest)
     dirs = _data_dirs(path, manifest)
     schema = _pinned_schema(manifest)
@@ -675,7 +676,7 @@ def _layout(path: str, layout: dict, columns) -> tuple[str, list[str], int]:
     columns, target_partitions); mode "" is a flat rewrite.
 
     The columns are the ones recorded at the table's creation
-    (:func:`seed_manifest_store`, or a first :func:`_append_data` with
+    (:func:`create_table`, or a first :func:`_append_data` with
     ``partition_by``), in one of three modes: ``partition_by`` lays
     files out as hive directories (directory pruning, but partition-
     value inference retypes numeric-looking strings on a plain read —
@@ -729,6 +730,40 @@ def existing_keys_in_range(
     return probe.select(*keys).distinct()
 
 
+def create_table(
+    path: str,
+    schema,
+    layout: dict | None = None,
+    extra: dict | None = None,
+) -> None:
+    """Create an empty table as ONE manifest publish, with no Spark job
+    and no data dir: the first manifest carries ``"data": {}``, the
+    pinned ``schema`` (a StructType), the recorded ``layout``
+    (``{"cluster_by": [...]}``, ``{"range_by": [...]}`` or
+    ``{"partition_by": [...]}``, optionally with ``target_partitions``:
+    what every fold and compact of the table applies, see
+    :func:`_layout`) and any ``extra`` app-level manifest keys (the
+    rollup ledger's content_key_encoding, a hash store's geometry), so
+    no crash can leave a manifest missing its markers. The publish is a
+    CAS against "no manifest" (``expect=None``), like every table's
+    first write; a table that already exists is left as it is. This is
+    the DDL of the warehouse (the reference's CREATE TABLE at startup,
+    db.go:178-525): metadata only, and readers see the table as empty
+    (:func:`_read_manifest_data`)."""
+    manifest = dict(extra or {})
+    manifest.update(
+        {"version": _new_version_id(), "data": {}, "schema": schema.json()}
+    )
+    if layout:
+        manifest["layout"] = layout
+
+    def once() -> None:
+        if _manifest_read(path) is None:
+            _publish_manifest(path, manifest, expect=None)
+
+    _retry_cas(once)
+
+
 def _append_data(
     df: DataFrame,
     path: str,
@@ -742,9 +777,10 @@ def _append_data(
     First write: on a path with no table yet, the same publish creates
     it. The table's first manifest is a CAS against "no manifest"
     (``expect=None``) and pins the batch's schema, so two writers
-    creating one table race like any other two publishes. It is
-    published even for an EMPTY batch, which is how precreating a table
-    from an empty frame creates it. Later empty batches publish nothing
+    creating one table race like any other two publishes. A first write
+    of an EMPTY batch creates the table by :func:`create_table` and
+    removes the version dir it wrote, so an empty table has one form: a
+    manifest with no data dirs. Later empty batches publish nothing
     (streaming replays are the common case). A first write with
     ``partition_by`` records it as the table's layout, so every fold and
     compact keeps the hive directories (the IVF corpus's ``cell=``).
@@ -776,9 +812,26 @@ def _append_data(
     # df.isEmpty() pre-probe, which would execute the batch's whole plan
     # (anti-join shuffles run to completion even under limit 1) a second
     # time on every 5 s micro-batch.
-    empty = _footer_row_count(verdir) == 0
+    if _footer_row_count(verdir) == 0:
+        # fully-deduped replay (streaming's common case): no version
+        # churn. "All keys already present" cannot be invalidated by a
+        # concurrent publish (rows are only ever added), so no CAS check
+        # is needed — and on a path with no table the batch only creates
+        # it.
+        with _own_version_dir(path, verdir):
+            cur = _manifest_read(path)
+            if cur is not None:
+                _refuse_bucketed(path, cur)
+            else:
+                create_table(
+                    path, df.schema,
+                    {"partition_by": list(partition_by)} if partition_by
+                    else None,
+                )
+        shutil.rmtree(verdir, ignore_errors=True)
+        return
 
-    def publish() -> dict | None:
+    def publish() -> dict:
         cur = _manifest_read(path)
         if cur is None and expect not in (_ANY, None):
             raise ManifestConflictError(
@@ -786,12 +839,6 @@ def _append_data(
             )
         if cur is not None:
             _refuse_bucketed(path, cur)
-        if cur is not None and empty:
-            # fully-deduped replay (streaming's common case): no version
-            # churn. "All keys already present" cannot be invalidated by
-            # a concurrent publish (rows are only ever added), so no CAS
-            # check is needed.
-            return None
         manifest = dict(cur or {})
         data = dict(manifest.get("data", {}))  # prior dirs by reference
         data[ver] = os.path.join(_VERSIONS_DIR, ver)
@@ -815,9 +862,6 @@ def _append_data(
 
     with _own_version_dir(path, verdir):
         data = _retry_cas(publish) if expect is _ANY else publish()
-    if data is None:
-        shutil.rmtree(verdir, ignore_errors=True)
-        return
     _gc_versions(path, keep={verdir})
     if len(data) > APPEND_MANIFEST_WARN:
         spark = df.sparkSession
@@ -1069,49 +1113,6 @@ def write_keep_one(
     _append_data(
         _keep_first(df, list(spec.keys), order), _table_path(root, name)
     )
-
-
-def seed_manifest_store(
-    empty_df: DataFrame,
-    path: str,
-    layout: dict | None = None,
-    extra: dict | None = None,
-) -> None:
-    """Create a brand-new manifest store as ONE atomic publish: seed data
-    (normally an empty frame — the SCHEMA is the payload), optional
-    recorded ``layout`` (``{"cluster_by": [...]}``, ``{"range_by":
-    [...]}`` or ``{"partition_by": [...]}``, optionally with
-    ``target_partitions``: what every fold and compact of the store
-    applies, see :func:`_layout`), and any
-    ``extra`` app-level manifest keys (e.g. the rollup ledger's
-    content_key_encoding) all flip together. It is the first-write
-    publish of :func:`_append_data` for stores whose first manifest must
-    carry more than data and schema (rollup ledgers, near-dup
-    signature/pairs stores): a later stamp would leave a window with a
-    manifest missing its markers. No-op if the store already has a
-    manifest. A lost seed CAS removes its own version dir before
-    retrying (:func:`_own_version_dir`)."""
-
-    def once() -> None:
-        if _manifest_read(path) is not None:
-            return  # a concurrent writer seeded first — nothing to do
-        ver = _new_version_id()
-        verdir = os.path.join(path, _VERSIONS_DIR, ver)
-        empty_df.coalesce(1).write.mode("overwrite").parquet(verdir)
-        m = dict(extra or {})
-        m.update(
-            {
-                "version": ver,
-                "data": {"all": os.path.join(_VERSIONS_DIR, ver)},
-                "schema": empty_df.schema.json(),
-            }
-        )
-        if layout:
-            m["layout"] = layout
-        with _own_version_dir(path, verdir):
-            _publish_manifest(path, m, expect=None)
-
-    _retry_cas(once)
 
 
 def read_table_version(
@@ -1435,10 +1436,11 @@ def compact(
     ``target_partitions`` is recorded into the layout, so every later
     rewrite keeps it. Publishing is the same atomic `_CURRENT` flip as
     every writer, so readers racing a compaction always see a full
-    table; the replaced files are GC'd after the grace period. Raises
+    table; the replaced files are GC'd after the grace period. An empty
+    table has nothing to rewrite and is left as it is. Raises
     FileNotFoundError for a path that holds no table."""
     n = _retry_cas(lambda: _rewrite(spark, path, True, target_partitions))
-    if n == 0:
+    if n is None:
         raise FileNotFoundError(f"{path}: no table (no {_CURRENT_FILE})")
 
 
@@ -1451,7 +1453,7 @@ def fold_appends(spark: SparkSession, path: str) -> bool:
     100 TB store. Returns False for a path that holds no table and True
     otherwise, including the nothing-to-fold case. Same atomic
     `_CURRENT` flip; a crash leaves the previous manifest live."""
-    return _retry_cas(lambda: _rewrite(spark, path, False)) > 0
+    return _retry_cas(lambda: _rewrite(spark, path, False)) is not None
 
 
 def _rewrite(
@@ -1459,7 +1461,7 @@ def _rewrite(
     path: str,
     major: bool,
     target_partitions: int | None = None,
-) -> int:
+) -> int | None:
     """One attempt at the one maintenance rewrite (run it under
     :func:`_retry_cas`): read some of the table's manifest entries,
     write their rows as one new version under :func:`_layout`, and
@@ -1473,19 +1475,20 @@ def _rewrite(
     counts, the rollup ledger's encoding) ride in the manifest so they
     flip atomically with the data, the pinned schema is widened, never
     narrowed, and the recorded layout gains ``target_partitions`` when
-    given. Returns the number of entries the table is left with: 0 when
-    the path holds no table, and the current count when a fold finds
-    fewer than two deltas."""
+    given. Returns the number of entries the table is left with (None
+    when the path holds no table): the current count, with nothing
+    published, when a fold finds fewer than two deltas or a major finds
+    an empty table."""
     m = _manifest_read(path)
     if m is None:
-        return 0
+        return None
     carried = {
         k: rel
         for k, rel in m["data"].items()
         if not major and (k == "all" or k.startswith("fold_"))
     }
     read = {k: rel for k, rel in m["data"].items() if k not in carried}
-    if not major and len(read) < 2:
+    if len(read) < (1 if major else 2):
         return len(m["data"])
     layout = dict(m.get("layout") or {})
     if target_partitions is not None:
@@ -1650,9 +1653,7 @@ def integrity_report(
         add(
             t,
             "key_nulls",
-            df.agg(
-                F.sum(F.when(null_key, 1).otherwise(0)).alias("violations")
-            ),
+            df.agg(F.count_if(null_key).alias("violations")),
         )
         if TABLE_SPECS[t].enums:
             add(
@@ -1698,7 +1699,8 @@ def table_health(root: str) -> list[dict]:
     classic small-file problem; a mean file size far below the HDFS/S3
     sweet spot means scans are paying per-file open cost). Pure local
     metadata walk — no Spark job, safe to run from a cron. Directories
-    without a manifest hold no table and are skipped."""
+    without a manifest hold no table and are skipped; an empty table
+    reports 0 files."""
     out = []
     if not os.path.isdir(root):
         return out
@@ -1721,8 +1723,6 @@ def table_health(root: str) -> list[dict]:
                             )
                         except OSError:
                             pass
-        if n_files == 0:
-            continue
         n_entries = len(m["data"])
         # count history through the STORAGE seam — an os.listdir here
         # would always see 0 on a non-POSIX backend (silencing the
@@ -1764,7 +1764,7 @@ def table_health(root: str) -> list[dict]:
                 "table": name,
                 "n_files": n_files,
                 "total_bytes": n_bytes,
-                "mean_file_bytes": n_bytes // n_files,
+                "mean_file_bytes": n_bytes // max(n_files, 1),
                 "n_versions": n_versions,
                 "manifest_entries": n_entries,
                 "manifest_history": n_history,

@@ -117,15 +117,15 @@ _SINK_FEEDS = {
 
 
 def _precreate(spark: SparkSession, warehouse_root: str, feed: str) -> None:
-    """Create every MISSING sink table's empty schema (data dir +
-    manifest) before the stream starts — the analog of the reference
-    running its DDL migrations at process startup (db.go), never inside
-    the poll loop. Without this, micro-batch 1 pays the full 12-table
-    plan-construction + write fan-out (the one >5 s outlier by
-    construction in every prior round's BENCH); with it, batch 1 is an
-    ordinary presence-pruned batch. Runs through the same idempotent
-    writer path as the stream (empty frame, same schemas/manifests), so
-    a crash between precreation and the first commit changes nothing:
+    """Create every MISSING sink table before the stream starts — the
+    analog of the reference running its DDL at process startup
+    (db.go:178-525), never inside the poll loop. Each table is one
+    manifest publish (:func:`warehouse.create_table`) of the schema its
+    builder gives over an empty feed frame, so the builders stay the one
+    source of truth for schemas, and no Spark job runs. Without this,
+    micro-batch 1 pays the full 12-table plan-construction + write
+    fan-out; with it, batch 1 is an ordinary presence-pruned batch. A
+    crash between precreation and the first commit changes nothing:
     replays see the tables existing, exactly as they would mid-stream."""
     names = BLOCK_SINK_TABLES if feed == "block" else EVENT_SINK_TABLES
     missing = [
@@ -136,11 +136,11 @@ def _precreate(spark: SparkSession, warehouse_root: str, feed: str) -> None:
     raw_schema, with_height, decode, _, build = _SINK_FEEDS[feed]
     empty = with_height(spark.createDataFrame([], schema=raw_schema))
     built = build(spark, warehouse_root, empty, decode(empty), set(missing))
-    warehouse.write_tables(
-        spark,
-        {k: built[k] for k in missing if k in built},
-        warehouse_root,
-    )
+    for k in missing:
+        if k in built:
+            warehouse.create_table(
+                os.path.join(warehouse_root, k), built[k].schema
+            )
 
 
 def precreate_block_tables(spark: SparkSession, warehouse_root: str) -> None:
@@ -577,22 +577,6 @@ def _check_ledger_encoding(ledger_manifest: dict, ledger_dir: str) -> None:
         )
 
 
-def _seed_ledger(empty_df: DataFrame, ledger_dir: str) -> None:
-    """Create a brand-new ledger as ONE atomic manifest publish that
-    already carries the encoding marker — seed data, pinned schema, and
-    CONTENT_KEY_ENCODING flip together through
-    warehouse.seed_manifest_store (as the near-dup sig/pairs stores are
-    seeded), so no crash can leave a ledger manifest without its
-    marker."""
-    from allora_indexer_spark.plans.warehouse import seed_manifest_store
-
-    seed_manifest_store(
-        empty_df,
-        ledger_dir,
-        extra={"content_key_encoding": CONTENT_KEY_ENCODING},
-    )
-
-
 def start_continuous_rollup(
     spark: SparkSession,
     feed_dir: str,
@@ -658,8 +642,14 @@ def start_continuous_rollup(
                     "CONTENT_KEY_ENCODING). Rebuild rollup + ledger + "
                     "checkpoint together from the feed."
                 )
-            # one atomic publish: seed data + schema + encoding marker
-            _seed_ledger(batch_df.select(key_col).limit(0), ledger_dir)
+            # one atomic publish: the pinned schema and the encoding
+            # marker flip together, so no crash can leave a ledger
+            # manifest without its marker
+            wh.create_table(
+                ledger_dir,
+                batch_df.select(key_col).schema,
+                extra={"content_key_encoding": CONTENT_KEY_ENCODING},
+            )
         else:
             _check_ledger_encoding(ledger_manifest, ledger_dir)
         # null-key rows are quarantined unconditionally (they could not be
@@ -934,7 +924,6 @@ def start_incremental_near_dup(
         _merge_near_dup_batch(
             spark,
             batch_df,
-            batch_id,
             pairs_dir,
             sig_dir,
             threshold,
@@ -951,7 +940,6 @@ def start_incremental_near_dup(
 def _merge_near_dup_batch(
     spark: SparkSession,
     batch_df: DataFrame,
-    batch_id: int,
     pairs_dir: str,
     sig_dir: str,
     threshold: float,
@@ -1014,14 +1002,14 @@ def _merge_near_dup_batch(
         # the signature store's appends are atomic version flips (all of
         # a doc's bands or none): a partially-visible doc would be
         # dropped WHOLE by the retry's doc_id anti-join, and its missing
-        # bands never written. The store is seeded with its recorded
+        # bands never written. The store is created with its recorded
         # layout in one atomic publish (same mechanism as the rollup
         # ledger), so the writer's folds and compactions keep it
         # bucket-clustered.
         if wh._manifest_read(sig_dir) is None:
-            wh.seed_manifest_store(
-                cached.limit(0),
+            wh.create_table(
                 sig_dir,
+                cached.schema,
                 layout={"cluster_by": ["bucket"]},
                 extra=seed_extra,
             )
@@ -1062,13 +1050,13 @@ def _merge_near_dup_batch(
             .dropDuplicates(["doc_a", "doc_b"])
         )
         pairs = verify_fn(cand)
-        # seed the pairs store with a recorded range_by layout, so the
+        # create the pairs store with a recorded range_by layout, so the
         # writer's folds and compactions keep it doc_a-clustered: the
         # per-batch doc_a range probe file-prunes.
         if wh._manifest_read(pairs_dir) is None:
-            wh.seed_manifest_store(
-                pairs.limit(0),
+            wh.create_table(
                 pairs_dir,
+                pairs.schema,
                 layout={"range_by": ["doc_a"]},
             )
         pairs = pairs_cached = pairs.persist()
@@ -1101,7 +1089,6 @@ def _merge_near_dup_batch(
 def merge_hash_near_dup_batch(
     spark: SparkSession,
     batch_df: DataFrame,
-    batch_id: int,
     pairs_dir: str,
     sig_dir: str,
     modality: str = "image",
@@ -1191,41 +1178,19 @@ def merge_hash_near_dup_batch(
         "carry": list(carry),
     }
     m = wh._manifest_read(sig_dir)
-    if m is not None:
-        rec = m.get("hash_geometry")
-        if rec is not None:
-            if (
-                rec.get("modality"),
-                rec.get("bands"),
-                rec.get("band_bits"),
-            ) != (modality, geometry["bands"], geometry["band_bits"]):
-                raise ValueError(
-                    f"hash signature store {sig_dir} was created with "
-                    f"geometry {rec}; reopening it with {geometry} "
-                    "would silently drop every old-vs-new candidate "
-                    "(null-padded carry columns) — re-dialing requires "
-                    "re-hashing history into a FRESH store"
-                )
-        else:
-            # pre-round-16 store with no recorded geometry: fall back
-            # to the schema — the carry columns it persisted must cover
-            # the requested plan's (modality is unrecoverable here, so
-            # only the column shape is checkable)
-            import json as _json
-
-            schema = m.get("schema")
-            if schema is not None:
-                cols = {
-                    f["name"] for f in _json.loads(schema)["fields"]
-                }
-                if not set(carry) <= cols:
-                    raise ValueError(
-                        f"hash signature store {sig_dir} persists "
-                        f"columns {sorted(cols)}, which lack the "
-                        f"requested geometry's carry columns "
-                        f"{sorted(carry)} — re-dialing requires a "
-                        "FRESH store"
-                    )
+    rec = (m or {}).get("hash_geometry")
+    if rec is not None and (
+        rec.get("modality"),
+        rec.get("bands"),
+        rec.get("band_bits"),
+    ) != (modality, geometry["bands"], geometry["band_bits"]):
+        raise ValueError(
+            f"hash signature store {sig_dir} was created with "
+            f"geometry {rec}; reopening it with {geometry} "
+            "would silently drop every old-vs-new candidate "
+            "(null-padded carry columns) — re-dialing requires "
+            "re-hashing history into a FRESH store"
+        )
 
     def verify(cand: DataFrame) -> DataFrame:
         return (
@@ -1237,7 +1202,6 @@ def merge_hash_near_dup_batch(
     _merge_near_dup_batch(
         spark,
         batch_df,
-        batch_id,
         pairs_dir,
         sig_dir,
         0.0,  # threshold unused: verify() owns the hamming gate
@@ -1283,8 +1247,7 @@ def start_incremental_hash_near_dup(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         merge_hash_near_dup_batch(
-            spark, batch_df, batch_id, pairs_dir, sig_dir,
-            modality, tau, plan=plan,
+            spark, batch_df, pairs_dir, sig_dir, modality, tau, plan=plan,
         )
 
     return (

@@ -651,7 +651,7 @@ def test_incremental_near_dup_store_compaction_keeps_probing(
     """The signature store stays correct ACROSS the writer's maintenance:
     appends and probes are manifest-aware, so a batch arriving after a
     fold still pairs against the folded signatures, a fold carries the
-    base by reference, and once the base and fold tiers fill the
+    earlier tiers by reference, and once the fold tiers fill the
     manifest bound the writer compacts the store back to one file per
     bucket — probe cost stays flat over an unbounded run instead of
     growing with batch count."""
@@ -677,24 +677,31 @@ def test_incremental_near_dup_store_compaction_keeps_probing(
         return warehouse._manifest_read(sig_dir)["data"]
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    data = run(0, [(1, base), (2, "one two three four five six seven eight")])
-    base_entry = data["all"]  # the store's seed
-    # batch 1 pushed the store past the bound: the writer folded the two
-    # deltas into one tier, carrying the base by reference
+    run(0, [(1, base), (2, "one two three four five six seven eight")])
     data = run(1, [(3, "red orange yellow green blue indigo violet ultraviolet")])
-    assert data["all"] == base_entry, "base was rewritten, not carried"
-    assert len(data) == 2 and any(k.startswith("fold_") for k in data)
+    assert len(data) == 2  # two raw deltas: within the bound
+    # batch 2 pushed the store past the bound: the writer folded the
+    # three deltas into one tier
+    data = run(2, [(4, "north south east west up down left right")])
+    assert len(data) == 1 and all(k.startswith("fold_") for k in data)
+    tier = dict(data)
 
     # a post-fold batch must still pair against batch-0 signatures
-    data = run(2, [(10, base.replace("kappa", "lambda"))])
+    data = run(3, [(10, base.replace("kappa", "lambda"))])
     pairs = {
         (r["doc_a"], r["doc_b"])
         for r in warehouse.read_dir(spark, pairs_dir).collect()
     }
     assert (1, 10) in pairs, "cross-fold near-dup missed"
-    # its append left base + tier + delta: a fold cannot get under the
+    # the next fold reads only the new deltas: the tier is carried
+    data = run(4, [(5, "mercury venus earth mars jupiter saturn uranus")])
+    assert len(data) == 2 and tier.items() <= data.items(), (
+        "tier was rewritten, not carried"
+    )
+    # its append left two tiers + a delta: a fold cannot get under the
     # bound, so the writer compacted the whole store
-    assert list(data) == ["all"] and data["all"] != base_entry
+    data = run(5, [(6, "spring summer autumn winter dawn noon dusk night")])
+    assert list(data) == ["all"]
 
     # the live file set is compacted: one file per (entry, bucket)
     m = warehouse._manifest_read(sig_dir)
@@ -706,14 +713,14 @@ def test_incremental_near_dup_store_compaction_keeps_probing(
         if f.endswith(".parquet")
     ]
     assert len(live) == len({os.path.dirname(p) for p in live})
-    run(3, [(11, "gold silver bronze copper iron tin lead zinc")])
+    run(6, [(11, "gold silver bronze copper iron tin lead zinc")])
     # and every signature ever written is still reachable
     assert (
         warehouse.read_dir(spark, sig_dir)
         .select("doc_id")
         .distinct()
         .count()
-        == 5
+        == 8
     )
 
 
@@ -797,7 +804,7 @@ def test_incremental_near_dup_tiny_docs_never_grow_store(spark, tmp_path):
     )
     for batch_id in range(3):  # deliver + redeliver twice
         _merge_near_dup_batch(
-            spark, batch, batch_id, pairs_dir, sig_dir,
+            spark, batch, pairs_dir, sig_dir,
             threshold=0.5,
         )
     from allora_indexer_spark.plans import warehouse as _wh
@@ -948,7 +955,7 @@ def test_near_dup_stores_are_manifest_from_first_batch(spark, tmp_path):
         "doc_id LONG, text STRING",
     )
     _merge_near_dup_batch(
-        spark, docs, 0, pairs_dir, sig_dir,
+        spark, docs, pairs_dir, sig_dir,
         threshold=0.3,
     )
     assert _manifest_read(sig_dir) is not None
@@ -1174,8 +1181,8 @@ def test_hash_near_dup_batch_replay_is_idempotent(spark, tmp_path):
     batch = spark.createDataFrame(
         [(1, text), (2, text)], "doc_id LONG, text STRING"
     )
-    merge_hash_near_dup_batch(spark, batch, 0, pairs_dir, sig_dir)
-    merge_hash_near_dup_batch(spark, batch, 0, pairs_dir, sig_dir)  # replay
+    merge_hash_near_dup_batch(spark, batch, pairs_dir, sig_dir)
+    merge_hash_near_dup_batch(spark, batch, pairs_dir, sig_dir)  # replay
     assert _wh.read_dir(spark, pairs_dir).count() == 1
     assert (
         _wh.read_dir(spark, sig_dir).select("doc_id").distinct().count() == 2
@@ -1262,7 +1269,7 @@ def test_hash_store_geometry_is_persisted_and_guarded(spark, tmp_path):
     batch = spark.createDataFrame(
         [(1, "x" * 1032), (2, "y" * 1032)], "doc_id LONG, text STRING"
     )
-    merge_hash_near_dup_batch(spark, batch, 0, pairs_dir, sig_dir)
+    merge_hash_near_dup_batch(spark, batch, pairs_dir, sig_dir)
     m = _wh._manifest_read(sig_dir)
     assert m is not None and m["hash_geometry"] == {
         "modality": "image",
@@ -1274,17 +1281,17 @@ def test_hash_store_geometry_is_persisted_and_guarded(spark, tmp_path):
     b2 = spark.createDataFrame([(3, "z" * 1032)], "doc_id LONG, text STRING")
     with pytest.raises(ValueError, match="band_bits.*16.*FRESH store"):
         merge_hash_near_dup_batch(
-            spark, b2, 1, pairs_dir, sig_dir, plan=_WIDE_PLAN
+            spark, b2, pairs_dir, sig_dir, plan=_WIDE_PLAN
         )
     # wrong modality under the SAME carry columns (hi/lo): equally loud —
     # an audio contour probed against image dHashes is a silent-wrong-
     # pairs regime, not a schema error
     with pytest.raises(ValueError, match="modality.*image"):
         merge_hash_near_dup_batch(
-            spark, b2, 1, pairs_dir, sig_dir, modality="audio"
+            spark, b2, pairs_dir, sig_dir, modality="audio"
         )
     # matching plan resumes normally
-    merge_hash_near_dup_batch(spark, b2, 1, pairs_dir, sig_dir)
+    merge_hash_near_dup_batch(spark, b2, pairs_dir, sig_dir)
     assert (
         _wh.read_dir(spark, sig_dir).select("doc_id").distinct().count()
         == 3
@@ -1292,17 +1299,8 @@ def test_hash_store_geometry_is_persisted_and_guarded(spark, tmp_path):
     # combination-key plans are a batch dial: rejected before any I/O
     with pytest.raises(ValueError, match="match_bands"):
         merge_hash_near_dup_batch(
-            spark, b2, 2, pairs_dir, str(tmp_path / "sigs2"),
+            spark, b2, pairs_dir, str(tmp_path / "sigs2"),
             plan=_COMBO_PLAN,
-        )
-    # a pre-round-16 store (no recorded geometry): the schema fallback
-    # still rejects a plan whose carry columns the store never persisted
-    legacy_m = dict(m)
-    legacy_m.pop("hash_geometry")
-    _wh._publish_manifest(sig_dir, legacy_m)
-    with pytest.raises(ValueError, match="carry columns"):
-        merge_hash_near_dup_batch(
-            spark, b2, 2, pairs_dir, sig_dir, plan=_WIDE_PLAN
         )
 
 

@@ -92,7 +92,7 @@ def test_every_written_table_is_a_manifest_table(spark, tmp_path):
         ],
         "doc_id LONG, text STRING",
     )
-    stream._merge_near_dup_batch(spark, docs, 0, pairs, sig, 0.5)
+    stream._merge_near_dup_batch(spark, docs, pairs, sig, 0.5)
 
     emb = spark.range(40).select(
         F.col("id").alias("vec_id"),

@@ -404,7 +404,6 @@ def test_video_store_rejects_wide_plans_and_wrong_modality(spark, tmp_path):
         stream.merge_hash_near_dup_batch(
             spark,
             spark.createDataFrame([(1, "x")], "doc_id LONG, text STRING"),
-            0,
             str(tmp_path / "p"),
             str(tmp_path / "s"),
             modality="video",
@@ -422,9 +421,9 @@ def test_video_store_rejects_wide_plans_and_wrong_modality(spark, tmp_path):
         [(1, "some video payload text!")], "doc_id LONG, text STRING"
     )
     stream.merge_hash_near_dup_batch(
-        spark, b, 0, pairs_dir, sig_dir, modality="video"
+        spark, b, pairs_dir, sig_dir, modality="video"
     )
     with pytest.raises(ValueError, match="geometry"):
         stream.merge_hash_near_dup_batch(
-            spark, b, 1, pairs_dir, sig_dir, modality="image"
+            spark, b, pairs_dir, sig_dir, modality="image"
         )

@@ -446,8 +446,8 @@ def test_auto_fold_keeps_append_manifest_bounded(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(warehouse, "APPEND_MANIFEST_WARN", 3)
     path = str(tmp_path / "store")
     layout = {"cluster_by": ["bucket"], "target_partitions": 1}
-    warehouse.seed_manifest_store(
-        spark.createDataFrame([], "id long, bucket string"), path,
+    warehouse.create_table(
+        path, spark.createDataFrame([], "id long, bucket string").schema,
         layout=layout,
     )
     base = spark.createDataFrame(
@@ -468,7 +468,7 @@ def test_auto_fold_keeps_append_manifest_bounded(spark, tmp_path, monkeypatch):
     folded = compacted = False
     with _warnings.catch_warnings():
         _warnings.simplefilter("error", RuntimeWarning)  # no warn path
-        for i in range(10, 20, 2):  # five appends
+        for i in range(10, 28, 2):  # nine appends
             append(i)
             m = warehouse._manifest_read(path)
             assert len(m["data"]) <= warehouse.APPEND_MANIFEST_WARN, (
@@ -491,7 +491,7 @@ def test_auto_fold_keeps_append_manifest_bounded(spark, tmp_path, monkeypatch):
                     assert col == sorted(col)
     out = warehouse.read_dir(spark, path)
     assert dict(out.dtypes)["bucket"] == "string"
-    assert out.count() == 12
-    assert out.select("id").distinct().count() == 12
+    assert out.count() == 20
+    assert out.select("id").distinct().count() == 20
     health = {h["table"]: h for h in warehouse.table_health(str(tmp_path))}
     assert not health["store"]["needs_compaction"]

@@ -1070,10 +1070,10 @@ def test_read_table_version_works_on_seam_backend(
         )
 
 
-def test_seed_manifest_store_atomic_and_layout(spark, tmp_path):
-    """seed_manifest_store: one publish carries schema + layout + extra
-    keys; a second seed is a no-op; the recorded layout is the one every
-    fold and compact of the store applies."""
+def test_create_table_atomic_and_layout(spark, tmp_path):
+    """create_table: one publish carries schema + layout + extra keys and
+    no data dir; a second create is a no-op; the recorded layout is the
+    one every fold and compact of the store applies."""
     import os
 
     path = str(tmp_path / "store")
@@ -1081,13 +1081,14 @@ def test_seed_manifest_store_atomic_and_layout(spark, tmp_path):
         "cast(id as string) as bucket", "id as doc_id"
     )
     layout = {"cluster_by": ["bucket"], "target_partitions": 1}
-    warehouse.seed_manifest_store(
-        empty, path, layout=layout, extra={"app_marker": 7}
+    warehouse.create_table(
+        path, empty.schema, layout=layout, extra={"app_marker": 7}
     )
     m = warehouse._manifest_read(path)
     assert m is not None and m["layout"] == layout
     assert m["app_marker"] == 7
+    assert m["data"] == {}
     ver0 = m["version"]
-    warehouse.seed_manifest_store(empty, path, layout=layout)
+    warehouse.create_table(path, empty.schema, layout=layout)
     assert warehouse._manifest_read(path)["version"] == ver0  # no-op
     assert warehouse.read_dir(spark, path).count() == 0

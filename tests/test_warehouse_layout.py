@@ -96,7 +96,7 @@ def test_autofold_maintains_range_layout(spark, tmp_path, monkeypatch):
 def _seed_cluster_layout(spark, path, layout):
     """Create ``path`` empty with a recorded layout, as the near-dup
     stores are created."""
-    W.seed_manifest_store(_scores_batch(spark, 0).limit(0), path, layout=layout)
+    W.create_table(path, _scores_batch(spark, 0).schema, layout=layout)
 
 
 def test_bare_compact_applies_recorded_cluster_layout(spark, tmp_path):

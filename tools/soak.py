@@ -393,7 +393,7 @@ def soak_sig(
         batch = spark.createDataFrame(rows, "doc_id long, text string")
         t0 = time.perf_counter()
         _merge_near_dup_batch(
-            spark, batch, i, pairs_dir, sig_dir, threshold=0.5,
+            spark, batch, pairs_dir, sig_dir, threshold=0.5,
         )
         times.append(time.perf_counter() - t0)
         maint.observe(i)
@@ -463,7 +463,7 @@ def soak_hash_sig(
         batch = spark.createDataFrame(rows, "doc_id long, text string")
         t0 = time.perf_counter()
         merge_hash_near_dup_batch(
-            spark, batch, i, pairs_dir, sig_dir, modality=modality,
+            spark, batch, pairs_dir, sig_dir, modality=modality,
         )
         times.append(time.perf_counter() - t0)
         maint.observe(i)
